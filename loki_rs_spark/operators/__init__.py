@@ -1,3 +1,4 @@
+from .arrow_matcher import make_arrow_matcher_udf
 from .filters import apply_exclusions, apply_size_filter
 from .hashes import with_hashes
 from .ioc_join import (
@@ -6,7 +7,6 @@ from .ioc_join import (
     filename_reason_array,
     hash_reason_array,
 )
-from .matcher import make_matcher_udf
 
 __all__ = [
     "apply_exclusions",
@@ -16,5 +16,5 @@ __all__ = [
     "c2_reason_array",
     "filename_reason_array",
     "hash_reason_array",
-    "make_matcher_udf",
+    "make_arrow_matcher_udf",
 ]

@@ -1,18 +1,20 @@
-"""Arrow-native multi-pattern matcher — the scale path for P5/J3.
+"""Arrow-native multi-pattern matcher — the one UDF matcher for P5/J3/J4.
 
-The pandas-UDF matcher (matcher.py) converts every row's text into a
-Python string object before matching; at tens of millions of rows per
-executor that object churn dominates and kills scaling. This variant stays
-in Arrow end to end:
+The matcher stays in Arrow end to end:
 
-* `df.mapInArrow` streams RecordBatches straight from the JVM;
+* a scalar `arrow_udf` (iterator form) ships only the text, tool and
+  packed ext_bits columns across the Python bridge;
 * per signature string, ONE `pyarrow.compute.match_substring[_regex]`
-  kernel call over the whole batch (C++-vectorized RE2 / literal scan,
-  zero Python objects in the hot path);
+  kernel call over the batch's unique values (C++-vectorized RE2 /
+  literal scan, zero Python objects in the hot path);
 * per-rule condition algebra on numpy boolean masks;
 * Python-level work (matched-string offsets, struct building) happens only
   for the sparse hit rows, and the output list<struct> arrays are built
   from offsets + flat values (no per-row Python lists for misses).
+
+The full matcher (`match_record_batch`) and the score-only one
+(`match_scores_record_batch`) share one mask pass (`_batch_masks`) and
+differ only in how they render the fired masks.
 
 Pattern-dialect note: the batch kernels use RE2, the per-hit offset
 extraction uses Python `re`. The supported signature subset (literal
@@ -21,7 +23,7 @@ identically under both; parity with the reference scanner is enforced by
 tests/test_pipeline.py.
 
 Mirrors the reference's compile-once automaton sharing (src/main.rs:780-851)
-via the same per-executor `_engine_for` cache as the pandas path.
+via the per-executor `matcher._engine_for` cache.
 """
 
 from typing import Iterator, Tuple
@@ -29,7 +31,7 @@ from typing import Iterator, Tuple
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from ..signatures.compile import boolean_regex, literal_probe
 from ..signatures.conditions import render_condition
@@ -61,11 +63,12 @@ YARA_STRUCT = pa.struct(
         pa.field("matched_strings", pa.list_(pa.string())),
     ]
 )
-
-MATCH_COLS_DDL = (
-    "_m_fname array<struct<pattern:string,score:int,description:string>>, "
-    "_m_yara array<struct<rule:string,score:int,description:string,"
-    "author:string,reference:string,matched_strings:array<string>>>"
+C2_STRUCT = pa.struct(
+    [
+        pa.field("host", pa.string()),
+        pa.field("score", pa.int32()),
+        pa.field("description", pa.string()),
+    ]
 )
 
 
@@ -78,13 +81,11 @@ def _mask(arr, pattern: str, *, regex: bool, ignore_case: bool = False) -> np.nd
 
 
 class _CompactCol:
-    """Candidate-proportional kernel evaluation for one string column.
+    """Unique-value kernel evaluation for one string column.
 
-    The pipeline's JVM gates blank every non-candidate row to '' before
-    the bridge, so a typical batch is >90% empty strings — yet each of the
-    ~O(100) per-signature kernels still walked the full batch. Two
-    batch-local reductions make kernel cost proportional to CANDIDATE
-    bytes instead:
+    Each of the ~O(100) per-signature kernels would otherwise walk the
+    full batch. Two batch-local reductions make kernel cost proportional
+    to the batch's UNIQUE non-blank bytes instead:
 
     * compaction — kernels run over only the non-blank rows plus one ''
       sentinel whose result is scattered to every blank row (byte-identical
@@ -197,17 +198,16 @@ def _list_struct_array(
     )
 
 
-def match_record_batch(
-    engine, batch: pa.RecordBatch
-) -> tuple[pa.Array, pa.Array, pa.Array]:
-    """Match one RecordBatch; returns (_m_fname, _m_yara, c2_gate) arrays.
-    `ext_bits` is the packed external-variable bitmask the pipeline
-    computed JVM-side (conditions.collect_ext_atoms ordering). Accepts
-    raw (ungated) text/tool: dict-encoded compaction keeps kernel cost
-    proportional to unique candidate bytes, so no JVM pre-blanking is
-    needed — and masks are then EXACT, not gated supersets."""
+def _batch_masks(engine, batch: pa.RecordBatch):
+    """The mask pass both matchers share: decode the JVM-packed ext_bits,
+    compact the text/tool columns, then run every filename-IOC kernel and
+    every YARA string kernel + condition. Returns (text_c, fname, yara):
+    `fname` is one (mask, ioc) per filename IOC and `yara` one
+    (fired, string masks, compiled rule) per rule, both in engine order.
+    `ext_bits` follows the conditions.collect_ext_atoms ordering. Text and
+    tool arrive raw: dict-encoded compaction keeps kernel cost
+    proportional to unique bytes, and the masks are exact."""
     text = batch.column("text")
-    tool = batch.column("tool")
     bits_np = (
         batch.column("ext_bits")
         .to_numpy(zero_copy_only=False)
@@ -215,37 +215,22 @@ def match_record_batch(
     )
     ext = ExtBits(bits_np, engine.atom_index)
     n = batch.num_rows
-    tool_c = _CompactCol(tool)
+    tool_c = _CompactCol(batch.column("tool"))
     text_c = _CompactCol(text)
 
     # ---- filename IOCs (J3)
-    fn_counts = np.zeros(n, dtype=np.int64)
-    fn_rows: dict[int, list[dict]] = {}
-    for _rx, _fp_rx, ioc in engine.fname:
+    fname = []
+    for ioc in engine.fname:
         mask = tool_c.mask(lambda a: _mask(a, ioc.pattern, regex=True))
         if ioc.fp_pattern:
             mask &= ~tool_c.mask(
                 lambda a: _mask(a, ioc.fp_pattern, regex=True)
             )
-        # one shared (read-only) struct dict per IOC — its fields are
-        # row-independent, so hit rows append the same object instead of
-        # building a fresh dict per hit
-        entry = {
-            "pattern": ioc.pattern,
-            "score": ioc.score,
-            "description": ioc.description,
-        }
-        for idx in np.nonzero(mask)[0]:
-            i = int(idx)
-            fn_rows.setdefault(i, []).append(entry)
-            fn_counts[i] += 1
-    fname_arr = _list_struct_array(FNAME_STRUCT, fn_counts, fn_rows)
+        fname.append((mask, ioc))
 
     # ---- YARA subset (P5)
-    ya_counts = np.zeros(n, dtype=np.int64)
-    ya_rows: dict[int, list[dict]] = {}
+    yara = []
     text_ops = None
-    row_u = None  # lazy row -> kernel-input index map (hit rows only)
     for compiled in engine.yara:
         masks = [
             text_c.mask(lambda a, _s=s: _string_mask(a, _s))
@@ -260,7 +245,40 @@ def match_record_batch(
             text_ops=text_ops,
             strings_by_ident=compiled.strings_by_ident,
         )
-        fired = render_condition(compiled.ast, backend)
+        fired = np.asarray(render_condition(compiled.ast, backend), dtype=bool)
+        yara.append((fired, masks, compiled))
+    return text_c, fname, yara
+
+
+def match_record_batch(
+    engine, batch: pa.RecordBatch
+) -> tuple[pa.Array, pa.Array, pa.Array]:
+    """Match one RecordBatch of (text, tool, ext_bits); returns the
+    per-row (fname, yara, c2) match-struct list arrays."""
+    text_c, fname, yara = _batch_masks(engine, batch)
+    n = batch.num_rows
+
+    fn_counts = np.zeros(n, dtype=np.int64)
+    fn_rows: dict[int, list[dict]] = {}
+    for mask, ioc in fname:
+        # one shared (read-only) struct dict per IOC — its fields are
+        # row-independent, so hit rows append the same object instead of
+        # building a fresh dict per hit
+        entry = {
+            "pattern": ioc.pattern,
+            "score": ioc.score,
+            "description": ioc.description,
+        }
+        for idx in np.nonzero(mask)[0]:
+            i = int(idx)
+            fn_rows.setdefault(i, []).append(entry)
+            fn_counts[i] += 1
+    fname_arr = _list_struct_array(FNAME_STRUCT, fn_counts, fn_rows)
+
+    ya_counts = np.zeros(n, dtype=np.int64)
+    ya_rows: dict[int, list[dict]] = {}
+    row_u = None  # lazy row -> kernel-input index map (hit rows only)
+    for fired, masks, compiled in yara:
         fired_idx = np.nonzero(fired)[0]
         if len(fired_idx) == 0:
             continue
@@ -285,7 +303,7 @@ def match_record_batch(
                 row_text = text_c.kernel_input[u].as_py()
                 matched_strings: list[str] = []
                 for (identifier, rx), mask, s in zip(
-                    compiled.patterns, masks, compiled.rule.strings
+                    compiled.patterns, masks, rule.strings
                 ):
                     if not mask[i]:
                         continue
@@ -306,16 +324,13 @@ def match_record_batch(
     yara_arr = _list_struct_array(YARA_STRUCT, ya_counts, ya_rows)
 
     c2_counts, c2_rows = _c2_match_lists(text_c, engine)
-    return fname_arr, yara_arr, _c2_struct_array(c2_counts, c2_rows)
+    c2_entries = {
+        i: [{"host": h, "score": s, "description": d} for h, s, d in lst]
+        for i, lst in c2_rows.items()
+    }
+    c2_arr = _list_struct_array(C2_STRUCT, c2_counts, c2_entries)
+    return fname_arr, yara_arr, c2_arr
 
-
-C2_STRUCT = pa.struct(
-    [
-        pa.field("host", pa.string()),
-        pa.field("score", pa.int32()),
-        pa.field("description", pa.string()),
-    ]
-)
 
 # per-row cap on emitted C2 matches: the pipeline slices assembled
 # reasons to max_matches (100) anyway, so entries beyond that can never
@@ -382,209 +397,39 @@ def _c2_match_lists(
     return counts, rows
 
 
-def _c2_struct_array(
-    counts: np.ndarray, rows: dict[int, list[tuple[str, int, str]]]
+def _score_list_array(
+    n: int, per_source: list[tuple[np.ndarray, int]]
 ) -> pa.Array:
-    offsets = np.zeros(len(counts) + 1, dtype=np.int64)
+    """(mask, score) per source -> per-row list<int> of the scores of the
+    sources whose mask is set, source order preserved per row."""
+    counts = np.zeros(n, dtype=np.int64)
+    for mask, _ in per_source:
+        counts += mask
+    offsets = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(counts, out=offsets[1:])
-    flat: list[dict] = []
-    for i in sorted(rows):
-        flat.extend(
-            {"host": h, "score": s, "description": d} for h, s, d in rows[i]
-        )
+    values = np.zeros(int(offsets[-1]), dtype=np.int32)
+    cursor = offsets[:-1].copy()
+    for mask, score in per_source:
+        idx = np.nonzero(mask)[0]
+        values[cursor[idx]] = score
+        cursor[idx] += 1
     return pa.ListArray.from_arrays(
-        pa.array(offsets, type=pa.int32()), pa.array(flat, type=C2_STRUCT)
+        pa.array(offsets, type=pa.int32()), pa.array(values, type=pa.int32())
     )
-
-
-def match_gate_exprs(sigs: SignatureSet):
-    """Cheap JVM-side candidate gates for the UDF matcher: a superset
-    predicate over `text` built from every YARA string's cheapest
-    rendering, and one over `tool` from the filename-IOC patterns. Rows
-    failing a gate cannot match any string/IOC on that column, so the
-    pipeline blanks it before the Arrow UDF — the Python bridge then
-    carries only candidate bytes. External-variable conditions never see
-    these columns: they arrive as the JVM-computed `ext_bits` bitmask, so
-    gating cannot distort them.
-
-    This is the Spark rendering of the reference's cheap-predicates-before-
-    expensive-scan ordering (src/modules/filesystem_scan.rs:590-708), and
-    is REQUIRED at scale: Catalyst cannot push selectivity through an
-    opaque UDF, so we stage it ourselves.
-
-    Returns (text_gate | None, tool_gate). text_gate is None when blanking
-    text would be UNSOUND: a condition where a string reference sits under
-    `not` is no longer monotone in the masks, so a blanked row could
-    falsely FIRE. (Superset gating only ever turns masks False, which for
-    monotone conditions can only suppress.) The tool gate is always sound:
-    filename-IOC matching is monotone by construction — the fp_regex only
-    SUPPRESSES an existing main-pattern match."""
-    from pyspark.sql import functions as F
-
-    from ..signatures.compile import hex_to_regex, regex_literal, wide_interleave
-    from ..signatures.conditions import (
-        collect_size_nodes,
-        collect_uint_nodes,
-        condition_negates_strings,
-    )
-
-    tool_alts = [f"(?:{ioc.pattern})" for ioc in sigs.filename_iocs]
-    tool_gate = (
-        F.col("tool").rlike("|".join(tool_alts)) if tool_alts else F.lit(False)
-    )
-
-    for rule in sigs.yara_rules:
-        if condition_negates_strings(rule.condition_ast):
-            return None, tool_gate
-
-    # Literal ascii forms gate via contains() (JVM indexOf — much cheaper
-    # than a backtracking regex alternation over long text); regex/wide/hex
-    # forms collect into one rlike alternation. fullword is dropped from
-    # the gate (contains is a superset of the word-bounded match).
-    conds: list = []
-    alts: list[str] = []
-    for rule in sigs.yara_rules:
-        for s in rule.strings:
-            if s.is_hex:
-                alts.append(f"(?s:{hex_to_regex(s.pattern)})")
-                continue
-            if s.xor_min is not None or s.base64_mod or s.base64wide:
-                # variant-expanded strings: gate on the same alternation
-                # the matcher uses (raw literal would never appear)
-                alts.append(f"(?:{boolean_regex(s, 'lookaround')})")
-                continue
-            if s.is_regex:
-                alts.append(
-                    f"(?i:{s.pattern})" if s.nocase else f"(?:{s.pattern})"
-                )
-                continue
-            if s.ascii_form:
-                if s.nocase:
-                    conds.append(
-                        F.contains(
-                            F.lower(F.col("text")), F.lit(s.pattern.lower())
-                        )
-                    )
-                else:
-                    conds.append(F.contains(F.col("text"), F.lit(s.pattern)))
-            if s.wide:
-                body = regex_literal(wide_interleave(s.pattern))
-                alts.append(f"(?i:{body})" if s.nocase else f"(?:{body})")
-        # uint reads have no string literal covering them: add a superset
-        # probe per node so a uint-only firing row is never gated blank.
-        # For '==' the exact fixed-offset comparison; for '!=' a length
-        # probe (any text long enough to read could satisfy it).
-        for node in collect_uint_nodes(rule.condition_ast):
-            eq = (
-                F.substring(F.col("text"), node.offset + 1, node.size)
-                == node.needle
-            )
-            if node.op == "eq":
-                conds.append(eq)
-            else:
-                conds.append(
-                    F.length(F.col("text")) >= node.offset + node.size
-                )
-        # filesize reads likewise have no covering literal: the exact
-        # JVM-side comparison is its own (sound and tight) superset probe.
-        # A node under an odd number of `not`s must probe the COMPLEMENTED
-        # comparison — the rows that can satisfy the negated literal are
-        # exactly the ones failing the positive one (see
-        # collect_size_nodes docstring for the soundness argument).
-        complement = {
-            "eq": "ne", "ne": "eq",
-            "lt": "ge", "ge": "lt",
-            "le": "gt", "gt": "le",
-        }
-        for node, negated in collect_size_nodes(rule.condition_ast):
-            length = F.length(F.col("text"))
-            op = complement[node.op] if negated else node.op
-            conds.append(
-                {
-                    "eq": length == node.value,
-                    "ne": length != node.value,
-                    "gt": length > node.value,
-                    "ge": length >= node.value,
-                    "lt": length < node.value,
-                    "le": length <= node.value,
-                }[op]
-            )
-    if alts:
-        conds.append(F.col("text").rlike("|".join(alts)))
-
-    gate = F.lit(False)
-    for cond in conds:
-        gate = gate | cond
-    return gate, tool_gate
 
 
 def match_scores_record_batch(
     engine, batch: pa.RecordBatch
-) -> tuple[pa.Array, pa.Array]:
+) -> tuple[pa.Array, pa.Array, pa.Array]:
     """Score-only variant of match_record_batch: per row, the SCORE arrays
-    of matching filename IOCs and fired YARA rules (discovery order), with
-    no struct assembly and no matched-string offset extraction — the whole
-    batch is mask algebra + one ListArray construction, zero per-hit
-    Python. Used by aggregate-only consumers (severity counts, rollups)
-    where messages/offsets are never read; scoring semantics are identical
-    because reason scores do not depend on matched strings."""
-    text = batch.column("text")
-    tool = batch.column("tool")
-    bits_np = (
-        batch.column("ext_bits")
-        .to_numpy(zero_copy_only=False)
-        .astype("int64", copy=False)
-    )
-    ext = ExtBits(bits_np, engine.atom_index)
+    of matching filename IOCs, fired YARA rules and C2 hosts (discovery
+    order), with no struct assembly and no matched-string offset
+    extraction — the same mask pass plus ListArray construction, zero
+    per-hit Python. Used by aggregate-only consumers (severity counts,
+    rollups) where messages/offsets are never read; scoring semantics are
+    identical because reason scores do not depend on matched strings."""
+    text_c, fname, yara = _batch_masks(engine, batch)
     n = batch.num_rows
-    tool_c = _CompactCol(tool)
-    text_c = _CompactCol(text)
-
-    def score_list_array(per_source: list[tuple[np.ndarray, int]]) -> pa.Array:
-        """(mask, score) per source, source order preserved per row."""
-        counts = np.zeros(n, dtype=np.int64)
-        for mask, _ in per_source:
-            counts += mask
-        offsets = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(counts, out=offsets[1:])
-        values = np.zeros(int(offsets[-1]), dtype=np.int32)
-        cursor = offsets[:-1].copy()
-        for mask, score in per_source:
-            idx = np.nonzero(mask)[0]
-            values[cursor[idx]] = score
-            cursor[idx] += 1
-        return pa.ListArray.from_arrays(
-            pa.array(offsets, type=pa.int32()), pa.array(values, type=pa.int32())
-        )
-
-    fname_sources = []
-    for _rx, _fp_rx, ioc in engine.fname:
-        mask = tool_c.mask(lambda a: _mask(a, ioc.pattern, regex=True))
-        if ioc.fp_pattern:
-            mask &= ~tool_c.mask(
-                lambda a: _mask(a, ioc.fp_pattern, regex=True)
-            )
-        fname_sources.append((mask, ioc.score))
-
-    yara_sources = []
-    text_ops = None
-    for compiled in engine.yara:
-        masks = [
-            text_c.mask(lambda a, _s=s: _string_mask(a, _s))
-            for s in compiled.rule.strings
-        ]
-        if compiled.uses_text_ops and text_ops is None:
-            text_ops = TextOps(text)
-        backend = _MaskBackend(
-            [(ident, m) for (ident, _), m in zip(compiled.patterns, masks)],
-            n,
-            ext,
-            text_ops=text_ops,
-            strings_by_ident=compiled.strings_by_ident,
-        )
-        fired = render_condition(compiled.ast, backend)
-        yara_sources.append((np.asarray(fired, dtype=bool), compiled.rule.score))
-
     c2_counts, c2_rows = _c2_match_lists(text_c, engine)
     c2_offsets = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(c2_counts, out=c2_offsets[1:])
@@ -596,113 +441,82 @@ def match_scores_record_batch(
         ),
     )
     return (
-        score_list_array(fname_sources),
-        score_list_array(yara_sources),
+        _score_list_array(n, [(mask, ioc.score) for mask, ioc in fname]),
+        _score_list_array(
+            n, [(fired, c.rule.score) for fired, _m, c in yara]
+        ),
         c2_scores,
     )
+
+
+def _arrow_matcher_udf(
+    spark: SparkSession, sigs: SignatureSet, kernel, return_ddl: str, name: str
+):
+    """Scalar Arrow UDF (Spark 4.1 `arrow_udf`, iterator form) over
+    (text, tool, ext_bits) that runs `kernel(engine, batch)` per batch
+    and returns its three arrays as struct<fname, yara, c2>. The
+    signature payload is broadcast once; each executor process compiles
+    it once (`_engine_for`). `name` labels the UDF in query plans."""
+    from pyspark.sql.functions import arrow_udf
+
+    bc = spark.sparkContext.broadcast(sigs.to_payload())
+
+    def match(
+        it: Iterator[Tuple[pa.Array, pa.Array, pa.Array]],
+    ) -> Iterator[pa.Array]:
+        engine = _engine_for(bc.value)
+        for text, tool, ext_bits in it:
+            batch = pa.RecordBatch.from_arrays(
+                [_as_array(text), _as_array(tool), _as_array(ext_bits)],
+                names=["text", "tool", "ext_bits"],
+            )
+            yield pa.StructArray.from_arrays(
+                list(kernel(engine, batch)), names=["fname", "yara", "c2"]
+            )
+
+    match.__name__ = name
+    # The matcher is pure, but the non-deterministic marking is an
+    # optimizer fence: without it, the candidate-first routed filter —
+    # which references this UDF's output — is pushed below the
+    # projection by SUBSTITUTING the UDF call into the predicate, and the
+    # plan carries TWO ArrowEvalPython nodes (every row pays the matcher
+    # twice). Pinned for both matchers by tests/test_pipeline.py
+    # (test_scan_routed_plan_invariants, test_score_only_plan_invariants).
+    return arrow_udf(match, return_ddl).asNondeterministic()
 
 
 def make_arrow_score_matcher_udf(spark: SparkSession, sigs: SignatureSet):
     """arrow_udf wrapper for match_scores_record_batch: returns
     struct<fname:array<int>, yara:array<int>, c2:array<int>> — per-source
     score arrays including the J4 C2 matches (scores only)."""
-    from pyspark.sql.functions import arrow_udf
-
-    bc = spark.sparkContext.broadcast(sigs.to_payload())
-
-    @arrow_udf("struct<fname:array<int>,yara:array<int>,c2:array<int>>")
-    def match_scores_arrow(
-        it: Iterator[Tuple[pa.Array, pa.Array, pa.Array]],
-    ) -> Iterator[pa.Array]:
-        engine = _engine_for(bc.value)
-        for text, tool, ext_bits in it:
-            batch = pa.RecordBatch.from_arrays(
-                [_as_array(text), _as_array(tool), _as_array(ext_bits)],
-                names=["text", "tool", "ext_bits"],
-            )
-            fname_arr, yara_arr, c2_arr = match_scores_record_batch(
-                engine, batch
-            )
-            yield pa.StructArray.from_arrays(
-                [fname_arr, yara_arr, c2_arr], names=["fname", "yara", "c2"]
-            )
-
-    # The matcher is pure, but the non-deterministic marking is an
-    # optimizer fence (guide §4.4): without it, the candidate-first
-    # routed filter — which references this UDF's output — is pushed
-    # below the projection by SUBSTITUTING the UDF call into the
-    # predicate, and the plan carries TWO ArrowEvalPython nodes (every
-    # row pays the matcher twice). Pinned by
-    # tests/test_pipeline.py::test_scan_routed_plan_invariants.
-    return match_scores_arrow.asNondeterministic()
+    return _arrow_matcher_udf(
+        spark,
+        sigs,
+        match_scores_record_batch,
+        "struct<fname:array<int>,yara:array<int>,c2:array<int>>",
+        "match_scores_arrow",
+    )
 
 
 def make_arrow_matcher_udf(spark: SparkSession, sigs: SignatureSet):
-    """Scalar Arrow UDF (Spark 4.1 `arrow_udf`, iterator form): ONLY the
-    text and tool columns cross the Python bridge (unlike mapInArrow,
-    which round-trips every column), and the match computation runs on
-    Arrow buffers via pyarrow compute kernels. This is the production
-    matcher."""
-    from pyspark.sql.functions import arrow_udf
-
-    bc = spark.sparkContext.broadcast(sigs.to_payload())
-    return_ddl = (
+    """arrow_udf wrapper for match_record_batch — the production matcher:
+    ONLY the text, tool and ext_bits columns cross the Python bridge, and
+    the match computation runs on Arrow buffers via pyarrow compute
+    kernels."""
+    return _arrow_matcher_udf(
+        spark,
+        sigs,
+        match_record_batch,
         "struct<fname:array<struct<pattern:string,score:int,"
         "description:string>>,"
         "yara:array<struct<rule:string,score:int,description:string,"
         "author:string,reference:string,matched_strings:array<string>>>,"
-        "c2:array<struct<host:string,score:int,description:string>>>"
+        "c2:array<struct<host:string,score:int,description:string>>>",
+        "match_signatures_arrow",
     )
-
-    @arrow_udf(return_ddl)
-    def match_signatures_arrow(
-        it: Iterator[Tuple[pa.Array, pa.Array, pa.Array]],
-    ) -> Iterator[pa.Array]:
-        engine = _engine_for(bc.value)
-        for text, tool, ext_bits in it:
-            batch = pa.RecordBatch.from_arrays(
-                [_as_array(text), _as_array(tool), _as_array(ext_bits)],
-                names=["text", "tool", "ext_bits"],
-            )
-            fname_arr, yara_arr, c2_arr = match_record_batch(engine, batch)
-            yield pa.StructArray.from_arrays(
-                [fname_arr, yara_arr, c2_arr], names=["fname", "yara", "c2"]
-            )
-
-    # optimizer fence against duplicated evaluation under pushed-down
-    # candidate filters — see make_arrow_score_matcher_udf.
-    return match_signatures_arrow.asNondeterministic()
 
 
 def _as_array(arr):
     if isinstance(arr, pa.ChunkedArray):
         return arr.combine_chunks()
     return arr
-
-
-def with_matches_arrow(
-    spark: SparkSession, df: DataFrame, sigs: SignatureSet
-) -> DataFrame:
-    """Append `_m_fname` / `_m_yara` match columns via mapInArrow, passing
-    every input column through untouched. (Kept for comparison; the
-    arrow_udf path above ships less data across the bridge and is the
-    pipeline default.)"""
-    from .ext_bits import ext_bits_col
-
-    bc = spark.sparkContext.broadcast(sigs.to_payload())
-    df = df.withColumn("ext_bits", ext_bits_col(sigs))
-    out_ddl = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [MATCH_COLS_DDL]
-    )
-
-    def gen(batches):
-        engine = _engine_for(bc.value)
-        for batch in batches:
-            fname_arr, yara_arr, _c2 = match_record_batch(engine, batch)
-            yield pa.RecordBatch.from_arrays(
-                list(batch.columns) + [fname_arr, yara_arr],
-                names=[*batch.schema.names, "_m_fname", "_m_yara"],
-            )
-
-    return df.mapInArrow(gen, out_ddl).drop("ext_bits")

@@ -1,4 +1,4 @@
-"""The vectorized multi-pattern matcher (P5 + the scale path for J3).
+"""The compiled signature engine behind the Arrow matcher (P5 + J3/J4).
 
 The reference compiles all YARA rules into ONE shared automaton at startup
 and reuses it across threads (src/main.rs:780-851, fresh cheap Scanner per
@@ -6,13 +6,13 @@ row, src/modules/filesystem_scan.rs:1010-1011). The Spark analog:
 
 * the SignatureSet is pickled once on the driver and broadcast;
 * each executor PROCESS compiles it exactly once into a `CompiledEngine`
-  (module-level cache keyed by the payload's sha256) and reuses it for
-  every Arrow batch — the "compile-once shared automaton" pattern at
-  executor granularity;
-* matching is an Arrow-batched pandas UDF: per signature string, ONE
-  vectorized `Series.str.contains` over the whole batch (C-level regex
-  loop), then per-rule boolean algebra on the masks. Row-level work
-  (matched-string offsets) happens ONLY for the sparse set of hit rows.
+  (module-level cache keyed by the payload's sha256, `_engine_for`) and
+  reuses it for every Arrow batch — the "compile-once shared automaton"
+  pattern at executor granularity;
+* the batch kernels live in arrow_matcher.py; this module holds the
+  engine and the mask-algebra pieces they evaluate conditions with
+  (`ExtBits`, `TextOps`, `_MaskBackend`) plus the matched-string
+  formatting.
 
 Match semantics mirrored from src/modules/filesystem_scan.rs:1002-1136:
 * rule score from meta.score, default 75, valid iff 0 < s <= 100;
@@ -31,16 +31,6 @@ from dataclasses import dataclass
 from functools import reduce
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import SparkSession
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..signatures.compile import capture_regex, literal_probe
 from ..signatures.conditions import (
@@ -59,34 +49,6 @@ _HOST_RX = re.compile(HOST_PATTERN)
 _IPV4_RX = re.compile(IPV4_PATTERN)
 
 MAX_YARA_MATCHES = 100
-
-FNAME_MATCH_TYPE = ArrayType(
-    StructType(
-        [
-            StructField("pattern", StringType()),
-            StructField("score", IntegerType()),
-            StructField("description", StringType()),
-        ]
-    )
-)
-YARA_MATCH_TYPE = ArrayType(
-    StructType(
-        [
-            StructField("rule", StringType()),
-            StructField("score", IntegerType()),
-            StructField("description", StringType()),
-            StructField("author", StringType()),
-            StructField("reference", StringType()),
-            StructField("matched_strings", ArrayType(StringType())),
-        ]
-    )
-)
-MATCH_RESULT_TYPE = StructType(
-    [
-        StructField("fname", FNAME_MATCH_TYPE),
-        StructField("yara", YARA_MATCH_TYPE),
-    ]
-)
 
 _PRINTABLE_EXTRA = {"\t", "\n", "\r"}
 
@@ -110,7 +72,7 @@ def format_matched_data(value: str) -> str:
 
 def string_occurrence_lines(s, rx: re.Pattern, row_text: str) -> list[str]:
     """Formatted matched_strings entries ("$id: 'data' @ offset") for one
-    FIRED string on one row — shared by the arrow and pandas UDF paths.
+    FIRED string on one row (arrow_matcher.match_record_batch).
 
     Three yara-x output semantics live here:
     * `private` strings are suppressed from output (they still feed the
@@ -472,14 +434,7 @@ class CompiledEngine:
     """Per-executor compiled signature engine."""
 
     def __init__(self, sigs: SignatureSet) -> None:
-        self.fname = [
-            (
-                re.compile(ioc.pattern),
-                re.compile(ioc.fp_pattern) if ioc.fp_pattern else None,
-                ioc,
-            )
-            for ioc in sigs.filename_iocs
-        ]
+        self.fname = list(sigs.filename_iocs)
         from ..signatures.conditions import (
             collect_size_nodes,
             collect_string_op_nodes,
@@ -538,84 +493,6 @@ class CompiledEngine:
                 best = entry
         return best
 
-    def match_batch(
-        self, text: pd.Series, tool: pd.Series, ext_bits: pd.Series
-    ) -> pd.DataFrame:
-        n = len(text)
-        text = text.fillna("")
-        tool = tool.fillna("")
-        ext = ExtBits(
-            ext_bits.fillna(0).to_numpy(dtype="int64"), self.atom_index
-        )
-        fname_out: list[list[dict]] = [[] for _ in range(n)]
-        yara_out: list[list[dict]] = [[] for _ in range(n)]
-
-        # J3: filename IOCs — vectorized contains per pattern.
-        for rx, fp_rx, ioc in self.fname:
-            mask = tool.str.contains(rx, regex=True, na=False)
-            if fp_rx is not None:
-                mask &= ~tool.str.contains(fp_rx, regex=True, na=False)
-            for i in mask.to_numpy().nonzero()[0]:
-                fname_out[i].append(
-                    {
-                        "pattern": ioc.pattern,
-                        "score": ioc.score,
-                        "description": ioc.description,
-                    }
-                )
-
-        # P5: YARA subset — one vectorized pass per string pattern, then
-        # per-rule condition-AST algebra on the masks; offsets only for
-        # hit rows.
-        text_ops: TextOps | None = None
-        for compiled in self.yara:
-            masks = [
-                text.str.contains(rx, regex=True, na=False).to_numpy()
-                for _, rx in compiled.patterns
-            ]
-            if compiled.uses_text_ops and text_ops is None:
-                import pyarrow as pa
-
-                text_ops = TextOps(pa.Array.from_pandas(text))
-            backend = _MaskBackend(
-                [
-                    (ident, m)
-                    for (ident, _), m in zip(compiled.patterns, masks)
-                ],
-                n,
-                ext,
-                text_ops=text_ops,
-                strings_by_ident=compiled.strings_by_ident,
-            )
-            fired = render_condition(compiled.ast, backend)
-            hits = np.asarray(fired, dtype=bool).nonzero()[0]
-            for i in hits:
-                if len(yara_out[i]) >= MAX_YARA_MATCHES:
-                    continue
-                row_text = text.iat[i]
-                matched_strings: list[str] = []
-                for (identifier, rx), mask, s in zip(
-                    compiled.patterns, masks, compiled.rule.strings
-                ):
-                    if not mask[i]:
-                        continue
-                    matched_strings.extend(
-                        string_occurrence_lines(s, rx, row_text)
-                    )
-                rule = compiled.rule
-                yara_out[i].append(
-                    {
-                        "rule": rule.name,
-                        "score": rule.score,
-                        "description": rule.description,
-                        "author": rule.author,
-                        "reference": rule.reference,
-                        "matched_strings": matched_strings,
-                    }
-                )
-
-        return pd.DataFrame({"fname": fname_out, "yara": yara_out})
-
 
 _ENGINE_CACHE: dict[str, CompiledEngine] = {}
 
@@ -627,18 +504,3 @@ def _engine_for(payload: bytes) -> CompiledEngine:
         engine = CompiledEngine(SignatureSet.from_payload(payload))
         _ENGINE_CACHE[key] = engine
     return engine
-
-
-def make_matcher_udf(spark: SparkSession, sigs: SignatureSet):
-    """Build the Arrow-batched matcher UDF with the signature payload
-    broadcast to executors (torrent broadcast on a real cluster; the
-    compiled engine itself is cached per executor process)."""
-    bc = spark.sparkContext.broadcast(sigs.to_payload())
-
-    @pandas_udf(MATCH_RESULT_TYPE)
-    def match_signatures(
-        text: pd.Series, tool: pd.Series, ext_bits: pd.Series
-    ) -> pd.DataFrame:
-        return _engine_for(bc.value).match_batch(text, tool, ext_bits)
-
-    return match_signatures

@@ -42,7 +42,6 @@ from ..operators.ioc_join import (
     plain_relation_input,
     reason_struct,
 )
-from ..operators.matcher import make_matcher_udf
 from ..signatures.model import SignatureSet
 
 
@@ -100,15 +99,15 @@ def scan_transcripts(
     matcher: str = "arrow",
     source_kind: str = "file",
 ) -> ScanResult:
-    """`matcher` picks the P5/J3 implementation: 'arrow' (mapInArrow +
-    pyarrow compute kernels — the scale path), 'pandas' (Arrow-batched
-    pandas UDF), or 'catalyst' (static per-rule predicates, no
-    matched-string capture). All three are routed-row-equal (tests).
+    """`matcher` picks the P5/J3/J4 implementation: 'arrow' (one scalar
+    arrow_udf over pyarrow compute kernels — the production path) or
+    'catalyst' (static per-rule predicates, zero Python, no matched-string
+    capture). Both are routed-row-equal (tests).
 
     `source_kind` ('file' | 'process') selects the hash-IOC reason
     semantics: the reference's process scan emits only the first matching
     hash type, with a process-specific message (see hash_reason_array)."""
-    if matcher not in ("arrow", "pandas", "catalyst"):
+    if matcher not in ("arrow", "catalyst"):
         raise ValueError(f"unknown matcher impl: {matcher}")
     # literal hash-dim rendering only over stored-table inputs (the
     # production shape — see ioc_join.HASH_DIM_MAX_LITERALS): each
@@ -123,43 +122,20 @@ def scan_transcripts(
     df = with_hashes(df)
     df = anti_join_fp_hashes(spark, df, sigs, literal_dims=literal_dims)
 
-    if matcher in ("arrow", "pandas"):
-        from ..operators.arrow_matcher import (
-            make_arrow_matcher_udf,
-            match_gate_exprs,
-        )
+    if matcher == "arrow":
+        from ..operators.arrow_matcher import make_arrow_matcher_udf
         from ..operators.ext_bits import ext_bits_col
 
-        if matcher == "arrow":
-            # Raw text/tool cross the bridge ONCE, ungated: the Arrow
-            # matcher dict-encodes each batch so every kernel (YARA
-            # strings, filename IOCs, AND the J4 c2 candidate gate —
-            # struct field `c2`) runs over unique values only, which is
-            # strictly cheaper than maintaining JVM contains/rlike gate
-            # chains plus a second (blanked) copy of the text column.
-            # Masks are then EXACT, so no monotonicity caveats. External-
-            # variable truth still crosses as the packed `ext_bits`
-            # bigint computed in whole-stage codegen.
-            audf = make_arrow_matcher_udf(spark, sigs)
-            df = df.withColumn(
-                "_m", audf(F.col("text"), F.col("tool"), ext_bits_col(sigs))
-            )
-        else:
-            # pandas path keeps the JVM-side candidate gates: blank
-            # non-candidate strings so the Python bridge only carries
-            # candidate bytes (see match_gate_exprs docstring — text
-            # gating auto-disables for non-monotone conditions).
-            text_gate, tool_gate = match_gate_exprs(sigs)
-            gated_text = (
-                F.col("text")
-                if text_gate is None
-                else F.when(text_gate, F.col("text")).otherwise(F.lit(""))
-            )
-            gated_tool = F.when(tool_gate, F.col("tool")).otherwise(F.lit(""))
-            audf = make_matcher_udf(spark, sigs)
-            df = df.withColumn(
-                "_m", audf(gated_text, gated_tool, ext_bits_col(sigs))
-            )
+        # Raw text/tool cross the bridge ONCE: the Arrow matcher
+        # dict-encodes each batch so every kernel (YARA strings, filename
+        # IOCs, AND the J4 c2 candidate gate — struct field `c2`) runs
+        # over unique values only, and its masks are exact. External-
+        # variable truth crosses as the packed `ext_bits` bigint computed
+        # in whole-stage codegen.
+        audf = make_arrow_matcher_udf(spark, sigs)
+        df = df.withColumn(
+            "_m", audf(F.col("text"), F.col("tool"), ext_bits_col(sigs))
+        )
         fname_reasons = _fname_reasons_from(F.col("_m.fname"))
         yara_reasons = _yara_reasons_from(F.col("_m.yara"))
     else:
@@ -198,8 +174,8 @@ def scan_transcripts(
     # matches (struct field `c2`, host/score/description per host
     # occurrence, first-IOC-wins — _c2_match_lists is the scale path,
     # sub-linear in IOC count), so the JVM just renders reason structs
-    # and `_c2g` is the EXACT any-match bit. Pandas/catalyst paths keep
-    # the JVM contains-chain gate + per-host CASE chain (c2_reason_array,
+    # and `_c2g` is the EXACT any-match bit. The catalyst path keeps the
+    # JVM contains-chain gate + per-host CASE chain (c2_reason_array,
     # fine at bundled-corpus size, linear in IOC count).
     if matcher == "arrow":
         df = df.withColumn("_c2g", F.size(F.col("_m.c2")) > 0)
@@ -237,12 +213,11 @@ def scan_transcripts(
     # hit, or a C2 server literal present in the text (c2_text_gate — a
     # necessary condition for any C2 reason). Conservative — false
     # positives just take the slow branch.
-    candidate = hash_hit | F.col("_c2g")
-    if matcher in ("arrow", "pandas"):
+    if matcher == "arrow":
         candidate = (
             (F.size(F.col("_m.fname")) > 0)
             | (F.size(F.col("_m.yara")) > 0)
-            | candidate
+            | (hash_hit | F.col("_c2g"))
         )
     else:
         candidate = F.lit(True)  # catalyst path: no cheap precursors
@@ -291,12 +266,10 @@ def scan_transcripts(
     # precursors (matcher output sizes, hash-join hit, C2 gate bit) —
     # the same superset predicate that gates reason assembly — so the
     # expensive trees, substituted or not, only ever evaluate over the
-    # sparse candidate rows (measured -2.4s/M rows at local[8]).
-    if matcher in ("arrow", "pandas"):
-        routed_pre = df.filter(candidate)
-    else:
-        routed_pre = df  # catalyst path: no cheap precursors
-    routed = project(routed_pre).filter(
+    # sparse candidate rows (measured -2.4s/M rows at local[8]). On the
+    # catalyst path the candidate is the literal True, which the optimizer
+    # prunes.
+    routed = project(df.filter(candidate)).filter(
         (F.col("n_reasons") > 0) & F.col("level").isNotNull()
     ).withColumn(
         "reasons", F.slice(F.col("all_reasons"), 1, cfg.max_reasons)
@@ -421,7 +394,7 @@ class _CatalystCondBackend:
     Count/at/in operators render as JVM expressions on the (validated)
     plain-literal subset: regexp_count for #, substring equality for at,
     locate for in. @[i] (i-th occurrence offset) has no Catalyst
-    primitive and raises — rules using it route through the UDF matchers
+    primitive and raises — rules using it route through the arrow matcher
     only."""
 
     def __init__(self, rule) -> None:
@@ -481,7 +454,7 @@ class _CatalystCondBackend:
 
         raise YaraUnsupportedError(
             f"@{node.identifier[1:]}[{node.index}] has no Catalyst "
-            "rendering; use the arrow/pandas matcher for this rule set"
+            "rendering; use the arrow matcher for this rule set"
         )
 
     def uint_cmp(self, node) -> Column:

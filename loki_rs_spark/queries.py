@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from .config import DEFAULT_CONFIG, ScanConfig
 from .operators.hashes import with_hashes
 from .operators.ioc_join import c2_reason_array
-from .operators.matcher import make_matcher_udf
 from .plans.pipeline import (
     ScanResult,
     scan_transcripts,
@@ -160,6 +159,14 @@ def q_hash_ioc_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             continue
         types.append(hash_type)
         dim_rows += [(hash_type, h.hash_value, h.score) for h in iocs]
+    if not types:
+        # no hash IOCs: F.array() of zero structs would type as
+        # array<void>, so answer the (empty) result directly
+        return spark.createDataFrame(
+            [],
+            "conv_id string, turn_idx int, hash_type string, "
+            "hash_value string, ioc_score int",
+        )
     dim = spark.createDataFrame(
         dim_rows, "ht string, hash_value string, ioc_score int"
     )
@@ -185,11 +192,12 @@ def q_hash_ioc_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_filename_ioc_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 through the Arrow matcher UDF (the production path)."""
-    sigs = bundled_signatures()
-    df = load_transcripts(spark, sf_dir, rep=DEFAULT_REP)
+    from .operators.arrow_matcher import make_arrow_matcher_udf
     from .operators.ext_bits import ext_bits_col
 
-    matcher = make_matcher_udf(spark, sigs)
+    sigs = bundled_signatures()
+    df = load_transcripts(spark, sf_dir, rep=DEFAULT_REP)
+    matcher = make_arrow_matcher_udf(spark, sigs)
     return (
         df.withColumn(
             "_m", matcher(F.col("text"), F.col("tool"), ext_bits_col(sigs))
@@ -276,9 +284,9 @@ def q_yara_filesize_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the turn text's character length (signatures/conditions.py
     SizeCmp; the reference compiles full yara-x where filesize is the
     scanned file's byte size, src/main.rs:780-872). Bundled rules cover
-    the gate-safe >, >= (with KB suffix) and == directions, standalone
-    and AND-ed with string matches; the <-family is covered by
-    test-local sets (candidate-gate soundness, see filesize.yar)."""
+    the >, >= (with KB suffix) and == directions, standalone and AND-ed
+    with string matches; the <-family and negated forms are covered by
+    test-local sets (see filesize.yar)."""
     return _yara_rule_subset_hits(spark, sf_dir, FILESIZE_RULE_PREFIXES)
 
 
@@ -286,7 +294,7 @@ def q_yara_for_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5 'for' offset quantifiers in isolation: the canonical yara-x
     idiom `for any|all i in (1..#s) : (@s[i] CMP N)` desugared at parse
     time into at/in/exists-from primitives (conditions.py
-    _desugar_for_offset) — bundled rules cover the gate-safe `for any`
+    _desugar_for_offset) — bundled rules cover the `for any`
     direction; `for all` (vacuously true on zero occurrences) is
     exercised by test-local sets in tests/test_truth_tables.py."""
     return _yara_rule_subset_hits(spark, sf_dir, FOR_RULE_PREFIXES)
@@ -559,10 +567,14 @@ def _top_multiplicity(arr: F.Column) -> F.Column:
     rendering used, and ~n interpreted lambda steps instead of
     ~distinct x n (round 7; value identical by definition — multiplicity
     does not depend on how it is counted). NULL array -> NULL, matching
-    array_max-over-transform on a NULL input. Sole divergence from the
-    old rendering: an EMPTY array yields 0 where array_max([]) was NULL —
-    unreachable from q_repetition_stats, whose input is split(text, " ")
-    (always >= 1 element on non-NULL text); pinned by test."""
+    array_max-over-transform on a NULL input. Two divergences from the
+    old rendering, both unreachable from q_repetition_stats, whose input
+    is split(text, " ") (always >= 1 element, never a NULL element, on
+    non-NULL text), and both pinned by test:
+    * an EMPTY array yields 0 where array_max([]) was NULL;
+    * NULL ELEMENTS each start a run of 1 (NULL == NULL is NULL, never
+      extending a run), so an all-NULL-element array yields 1 where the
+      old per-distinct filter count yielded 0."""
     return F.aggregate(
         F.array_sort(arr),
         F.struct(

@@ -1,6 +1,6 @@
 """SparkSession factory with the scale-oriented defaults this pipeline
-assumes: AQE on (runtime re-plan + skew-join), Arrow for the pandas UDF
-matcher stage, UTC session time zone for reproducible timestamps."""
+assumes: AQE on (runtime re-plan + skew-join), Arrow for the Python UDF
+stages, UTC session time zone for reproducible timestamps."""
 
 from __future__ import annotations
 

@@ -75,7 +75,7 @@ non-overlapping counting — the only kind every backend (pyarrow kernels,
 Catalyst, DuckDB, Python str) can express — provably equals yara-x's
 occurrence semantics. Anything outside the subset raises
 YaraUnsupportedError at load time: loud rejection, never a silent count
-mismatch. ``@a[i]`` is evaluated by the mask/pandas/row backends only; the
+mismatch. ``@a[i]`` is evaluated by the mask and row backends only; the
 Catalyst matcher and the DuckDB oracle renderer reject rules that use it
 (no i-th-occurrence primitive in either engine).
 """
@@ -528,10 +528,8 @@ class _Parser:
             # yara-x '0 of them' / 'none of them' mean NONE-of (legacy
             # yara read '0 of' as 'at least 0' = always true and warns;
             # the reference compiles yara-x, src/main.rs:780-872):
-            # desugar to NOT(any of ...). The Not makes
-            # condition_negates_strings disable the text gate
-            # automatically — blank text firing a none-of would
-            # otherwise be a false positive.
+            # desugar to NOT(any of ...), which every backend renders
+            # with its ordinary `not`.
             none_of = (kind == "int" and int(val) == 0) or val == "none"
             if none_of:
                 val = "any"
@@ -804,8 +802,8 @@ def collect_string_op_nodes(node) -> list:
 
 
 def collect_uint_nodes(node) -> list:
-    """Every UintCmp node — the text gate needs a superset probe per
-    node, since no string literal covers them."""
+    """Every UintCmp node — its presence means the mask backend needs
+    fixed-offset reads of the text (TextOps.at_mask)."""
     if isinstance(node, UintCmp):
         return [node]
     if isinstance(node, Not):
@@ -815,25 +813,15 @@ def collect_uint_nodes(node) -> list:
     return []
 
 
-def collect_size_nodes(node, neg: bool = False) -> list:
-    """Every (SizeCmp, negated) pair — like uint reads, no string literal
-    covers them, so the text gate needs a superset probe per node. The
-    pair carries the node's EFFECTIVE polarity (odd enclosing `not`s):
-    for `not (filesize < 5)` the rows that can satisfy the literal are
-    the length >= 5 ones, so the gate must probe the COMPLEMENTED
-    comparison — emitting the positive probe there silently blanks every
-    row that fires via the negated branch (a false negative). The
-    complemented probe is sound exactly when condition_negates_strings
-    keeps the gate enabled: enabled + negated requires blank_fires True,
-    i.e. the node is True on blanked text, so `not node` is False on
-    blank — and rows failing the complemented probe have `not node`
-    False on the real text too."""
+def collect_size_nodes(node) -> list:
+    """Every SizeCmp node — its presence means the mask backend needs the
+    batch's text lengths (TextOps.lengths)."""
     if isinstance(node, SizeCmp):
-        return [(node, neg)]
+        return [node]
     if isinstance(node, Not):
-        return collect_size_nodes(node.operand, not neg)
+        return collect_size_nodes(node.operand)
     if isinstance(node, (AndExpr, OrExpr)):
-        return [t for x in node.items for t in collect_size_nodes(x, neg)]
+        return [t for x in node.items for t in collect_size_nodes(x)]
     return []
 
 
@@ -924,89 +912,6 @@ def collect_ext_atoms(sigs) -> list[ExtPred]:
             "63-bit ext-bits packing; split the rule set"
         )
     return atoms
-
-
-def blank_eval(node) -> bool | None:
-    """The condition's value on fully-BLANKED text (the pandas-path
-    non-candidate gate replaces text with ''), or None when it depends on
-    non-text inputs (external variables are computed from the real row
-    and are untouched by blanking)."""
-    if isinstance(
-        node, (StrRef, AtExpr, InExpr, OffsetCmp, UintCmp, ExistsFrom)
-    ):
-        return False  # nothing matches/reads inside ''
-    if isinstance(node, OfThem):
-        if node.n in ("any", "all"):
-            return False
-        return int(node.n) <= 0  # 0-of is vacuously true on blank
-    if isinstance(node, (CountCmp, SizeCmp)):
-        return cmp_int(node.op, 0, node.value)
-    if isinstance(node, BoolLit):
-        return node.value
-    if isinstance(node, Not):
-        inner = blank_eval(node.operand)
-        return None if inner is None else not inner
-    if isinstance(node, AndExpr):
-        vals = [blank_eval(x) for x in node.items]
-        if any(v is False for v in vals):
-            return False
-        if all(v is True for v in vals):
-            return True
-        return None
-    if isinstance(node, OrExpr):
-        vals = [blank_eval(x) for x in node.items]
-        if any(v is True for v in vals):
-            return True
-        if all(v is False for v in vals):
-            return False
-        return None
-    return None  # ExtPred and anything unknown: depends on the row
-
-
-def condition_negates_strings(node, neg: bool = False) -> bool:
-    """True if the condition is NOT monotone in the text content, i.e.
-    BLANKING a row's text (the pipeline's non-candidate gate, which can
-    only remove matches) could flip the condition from False to True —
-    the gate would then be unsound and must be disabled.
-
-    * StrRef/OfThem/AtExpr/InExpr/OffsetCmp evaluate False on blank text,
-      so they are unsafe exactly when under an odd number of `not`s.
-    * CountCmp evaluates to cmp(0, value) on blank text — a constant A.
-      Unsafe when the effective blanked value (A, flipped by odd nots) is
-      True: a row whose real count fails the comparison would falsely
-      fire once blanked (e.g. `#a < 5` with real count 7)."""
-    if isinstance(
-        node, (OfThem, StrRef, AtExpr, InExpr, OffsetCmp, UintCmp, ExistsFrom)
-    ):
-        return neg
-    if isinstance(node, BoolLit):
-        return False  # constant: blanking cannot flip it
-    if isinstance(node, (CountCmp, SizeCmp)):
-        # blank text has count 0 / length 0; the node evaluates to the
-        # constant cmp(0, value) on blanked rows
-        blank_fires = cmp_int(node.op, 0, node.value)
-        return blank_fires != neg
-    if isinstance(node, Not):
-        return condition_negates_strings(node.operand, not neg)
-    if isinstance(node, AndExpr):
-        # Under an EVEN number of nots this is a conjunction: it can only
-        # falsely fire on a blanked row if EVERY conjunct is true there,
-        # so one conjunct that is definitely False on blank text (e.g. a
-        # positive string ref) keeps the whole AND gate-safe no matter
-        # what the other conjuncts do (round-6 ADVICE: '$t and 0 of
-        # ($bad*)' must not disable the text gate bundle-wide).
-        if not neg and any(blank_eval(x) is False for x in node.items):
-            return False
-        return any(condition_negates_strings(x, neg) for x in node.items)
-    if isinstance(node, OrExpr):
-        # Dual: under an ODD number of nots the OR is effectively a
-        # conjunction of negated items; an item that is definitely True
-        # on blank text makes its negation False there, so the
-        # conjunction cannot fire on a blanked row.
-        if neg and any(blank_eval(x) is True for x in node.items):
-            return False
-        return any(condition_negates_strings(x, neg) for x in node.items)
-    return False
 
 
 def render_condition(node, backend):

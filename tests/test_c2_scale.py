@@ -107,15 +107,16 @@ def test_planted_5k_corpus_matches_reference_walk(spark, planted):
 
 def test_small_corpus_arrow_equals_case_chain(spark, planted):
     """<=64 IOCs: the arrow dict-probe path and the JVM per-host CASE
-    chain (pandas matcher path) must route identically."""
+    chain (c2_reason_array, the catalyst matcher path) must route
+    identically."""
     iocs = big_corpus()[:10]
     sigs = SignatureSet(c2_iocs=iocs)
     cfg = ScanConfig(notice_threshold=1)
     arrow = scan_transcripts(spark, planted, sigs, cfg, matcher="arrow")
-    pandas_ = scan_transcripts(spark, planted, sigs, cfg, matcher="pandas")
+    catalyst = scan_transcripts(spark, planted, sigs, cfg, matcher="catalyst")
     a = sorted(map(str, arrow.routed.drop("all_reasons").collect()))
-    p = sorted(map(str, pandas_.routed.drop("all_reasons").collect()))
-    assert a == p and a  # non-empty
+    c = sorted(map(str, catalyst.routed.drop("all_reasons").collect()))
+    assert a == c and a  # non-empty
 
 
 def test_c2_lookup_first_match_and_ip_semantics():

@@ -43,7 +43,7 @@ def _collect_routed(result):
     return {(r["conv_id"], r["turn_idx"]): r for r in result.routed.collect()}
 
 
-@pytest.mark.parametrize("impl", ["arrow", "pandas", "catalyst"])
+@pytest.mark.parametrize("impl", ["arrow", "catalyst"])
 def test_routed_row_equality(spark, transcripts, sigs, expected_rows, impl):
     result = scan_transcripts(spark, transcripts, sigs, CFG, matcher=impl)
     actual = _collect_routed(result)
@@ -175,6 +175,28 @@ def test_scan_routed_plan_invariants(spark, tmp_path):
     assert "LeftAnti" in plan  # FP anti-join upstream of the UDF
 
 
+def test_score_only_plan_invariants(spark, tmp_path):
+    """The score-only pipeline keeps the same plan shape over a stored
+    table, on both branches: exactly ONE python boundary (the
+    asNondeterministic fence keeps the candidate-first routed filter
+    from duplicating the matcher), one broadcast (the FP anti-join), and
+    no hash-partitioning shuffle."""
+    from loki_rs_spark.plans.pipeline import scan_transcripts_scores
+    from loki_rs_spark.queries import bundled_signatures
+    from loki_rs_spark.sources.transcripts import materialized_transcripts
+
+    t = materialized_transcripts(
+        spark, SF_SMALL, rep=4, base_dir=str(tmp_path)
+    )
+    result = scan_transcripts_scores(spark, t, bundled_signatures())
+    for name in ("routed", "evaluated"):
+        frame = getattr(result, name)
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1, name
+        assert plan.count("BroadcastExchange") == 1, name
+        assert "Exchange hashpartitioning" not in plan, name
+
+
 def test_literal_dims_equal_join_dims(spark, sigs, tmp_path):
     """The literal hash-dim rendering (stored-table input) must produce
     routed rows identical to the broadcast-join rendering (generator
@@ -199,3 +221,28 @@ def test_literal_dims_equal_join_dims(spark, sigs, tmp_path):
     assert sorted(map(tuple, s_join.collect())) == sorted(
         map(tuple, s_lit.collect())
     )
+
+
+@pytest.mark.parametrize("impl", ["pandas", "mapinarrow"])
+def test_unknown_matcher_rejected(spark, transcripts, sigs, impl):
+    """Only the arrow and catalyst matchers exist."""
+    with pytest.raises(ValueError, match="unknown matcher"):
+        scan_transcripts(spark, transcripts, sigs, CFG, matcher=impl)
+
+
+def test_hash_ioc_hits_without_hash_iocs(spark, monkeypatch):
+    """A signature set with no hash IOCs yields an empty result with the
+    five output columns instead of an analysis error."""
+    from loki_rs_spark import queries
+    from loki_rs_spark.signatures.model import SignatureSet
+
+    full = queries.q_hash_ioc_hits(spark, SF_SMALL)
+    monkeypatch.setattr(queries, "bundled_signatures", lambda: SignatureSet())
+    empty = queries.q_hash_ioc_hits(spark, SF_SMALL)
+    assert empty.columns == [
+        "conv_id", "turn_idx", "hash_type", "hash_value", "ioc_score"
+    ]
+    assert [f.dataType for f in empty.schema] == [
+        f.dataType for f in full.schema
+    ]
+    assert empty.collect() == []

@@ -170,8 +170,8 @@ def test_top_multiplicity_matches_brute_force(spark):
     """The round-7 sorted-run fold in q_repetition_stats must report the
     same max element multiplicity as the definitional per-distinct count
     (the round-6 rendering), including ties, all-same, all-distinct,
-    empty-string tokens, and NULL arrays; the empty-array divergence
-    (0 vs NULL) is pinned as unreachable-but-known."""
+    empty-string tokens, and NULL arrays; the empty-array (0 vs NULL)
+    and NULL-element divergences are pinned as unreachable-but-known."""
     from collections import Counter
 
     from pyspark.sql import functions as F
@@ -199,7 +199,7 @@ def test_top_multiplicity_matches_brute_force(spark):
     for i, c in enumerate(cases):
         expect = None if c is None else max(Counter(c).values())
         assert got[i] == expect, (i, c)
-    # the one divergence from array_max-over-transform: empty array -> 0
+    # first divergence from array_max-over-transform: empty array -> 0
     empty = spark.createDataFrame([(0,)], "i int").select(
         _top_multiplicity(F.array().cast("array<string>")).alias("m")
     ).collect()
@@ -210,3 +210,26 @@ def test_top_multiplicity_matches_brute_force(spark):
         F.size(F.split(F.lit(""), " ")).alias("n")
     ).collect()
     assert probe[0]["n"] == 1
+    # NULL elements: each starts a run of 1 (NULL == NULL is NULL), so
+    # [None, None] reads 1 where the per-distinct filter count read 0;
+    # split() never yields a NULL element either
+    nulls = spark.createDataFrame(
+        [(0, [None, None]), (1, ["a", None])], "i int, w array<string>"
+    )
+    got = {
+        r["i"]: r["m"]
+        for r in nulls.select(
+            "i", _top_multiplicity(F.col("w")).alias("m")
+        ).collect()
+    }
+    assert got == {0: 1, 1: 1}
+    old = F.array_max(
+        F.transform(
+            F.array_distinct("w"),
+            lambda d: F.size(F.filter("w", lambda y: y == d)),
+        )
+    )
+    got_old = {
+        r["i"]: r["m"] for r in nulls.select("i", old.alias("m")).collect()
+    }
+    assert got_old == {0: 0, 1: 1}

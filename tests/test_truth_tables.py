@@ -403,7 +403,7 @@ def test_extvar_truth_table(spark, text, tool, role, expected_rules):
         [r.message.split("rule ")[1] for r in ref.reasons] if ref else []
     )
     assert got_ref == expected_rules
-    for matcher in ("arrow", "pandas", "catalyst"):
+    for matcher in ("arrow", "catalyst"):
         result = scan_transcripts(
             spark,
             _turn_df_roles(spark, [(text, tool, role)]),
@@ -432,18 +432,14 @@ NEGATED_SIGS = _sigs(
 
 
 def test_negated_condition_disables_text_gate(spark):
-    """A `not $str` condition is non-monotone in the masks, so the
-    blank-non-candidate-text gate must be OFF (text gate -> None) and
-    the pipeline must still answer correctly."""
-    from loki_rs_spark.operators.arrow_matcher import match_gate_exprs
-
-    assert match_gate_exprs(NEGATED_SIGS)[0] is None
+    """A `not $str` condition fires on string ABSENCE (non-monotone in
+    the masks): both matchers must still answer like the reference."""
     rows = [
         ("clean text", "probe-tool", "user"),  # fires: no netcat, name hits
         ("ran netcat", "probe-tool", "user"),  # suppressed by not $nc
         ("clean text", "other", "user"),  # name miss
     ]
-    for matcher in ("arrow", "pandas", "catalyst"):
+    for matcher in ("arrow", "catalyst"):
         result = scan_transcripts(
             spark, _turn_df_roles(spark, rows), NEGATED_SIGS, CFG,
             matcher=matcher,
@@ -553,7 +549,7 @@ def test_of_set_truth_table(spark, text, tool, expected_rules):
         [r.message.split("rule ")[1] for r in ref.reasons] if ref else []
     )
     assert got_ref == expected_rules
-    for matcher in ("arrow", "pandas", "catalyst"):
+    for matcher in ("arrow", "catalyst"):
         result = scan_transcripts(
             spark,
             _turn_df_roles(spark, [(text, tool, "user")]),
@@ -677,13 +673,12 @@ OFFSET_SIGS = _yara_sigs([YaraString("$a", "zz-mark")], "@a[2] < 20")
 def test_offset_cmp_truth_table(spark, text, hit):
     ref = scan_turn("c0", 0, text, "t", OFFSET_SIGS, CFG)
     assert (ref is not None) == hit
-    # arrow + pandas matchers support @[i]; catalyst must reject loudly
-    for matcher in ("arrow", "pandas"):
-        result = scan_transcripts(
-            spark, _turn_df(spark, [(text, "t")]), OFFSET_SIGS, CFG,
-            matcher=matcher,
-        )
-        assert (len(result.routed.collect()) == 1) == hit, matcher
+    # the arrow matcher supports @[i]; catalyst must reject loudly
+    result = scan_transcripts(
+        spark, _turn_df(spark, [(text, "t")]), OFFSET_SIGS, CFG,
+        matcher="arrow",
+    )
+    assert (len(result.routed.collect()) == 1) == hit
 
 
 def test_offset_cmp_catalyst_rejects(spark):
@@ -735,19 +730,17 @@ def test_count_operator_rejections():
     assert len(rules) == 1
 
 
-def test_count_gate_monotonicity():
-    """'#a < N' fires on blank text, so the text gate must self-disable;
-    '#a >= N' (N>0) cannot fire on blank text, so the gate stays."""
-    from loki_rs_spark.operators.arrow_matcher import match_gate_exprs
-
+def test_count_gate_monotonicity(spark):
+    """'#a < N' fires on a row WITHOUT the string (count 0), in the
+    reference and through both matchers."""
     unsafe = _yara_sigs([YaraString("$a", "mk-tok")], "#a < 2")
-    safe = _yara_sigs([YaraString("$a", "mk-tok")], "#a >= 2")
-    assert match_gate_exprs(unsafe)[0] is None
-    assert match_gate_exprs(safe)[0] is not None
-    # blank-firing count rules still produce correct results with the
-    # gate disabled: a clean row fires '#a < 2' (count 0)
     ref = scan_turn("c0", 0, "clean text", "t", unsafe, CFG)
     assert ref is not None
+    for matcher in ("arrow", "catalyst"):
+        routed = _routed_reasons(
+            spark, [("clean text", "t")], unsafe, matcher=matcher
+        )
+        assert 0 in routed, matcher
 
 
 # ---- process-source hash semantics (process_check.rs:367-397) ------------
@@ -891,14 +884,13 @@ def test_uint16_truth_table(spark, text, eq_hit, ne_hit):
 
 
 def test_uint_with_string_and_gate(spark):
-    """A uint+string conjunction must survive the text gate (the uint term
-    contributes its own gate probe; a rule with ONLY a uint term must not
-    be gated blank either)."""
+    """A uint+string conjunction fires through the pipeline, and so does
+    a rule with ONLY a uint term (no string literal covers it)."""
     assert scan_turn("c0", 0, "MZ payload here", "t", UINT_MIX_SIGS, CFG)
     assert scan_turn("c0", 0, "MZ nothing", "t", UINT_MIX_SIGS, CFG) is None
     routed = _routed_levels(spark, [("MZ payload here", "t")], UINT_MIX_SIGS)
     assert 0 in routed
-    # uint-only rule through the full pipeline (gate soundness)
+    # uint-only rule through the full pipeline
     routed2 = _routed_levels(spark, [("MZ alone", "t")], UINT_SIGS)
     assert 0 in routed2
 
@@ -977,9 +969,8 @@ def test_filesize_truth_table_reference_row(spark, condition, length, hit):
 
 
 def test_filesize_lt_pipeline_matches_reference(spark):
-    """The < direction disables the candidate text gate (blank text has
-    length 0); the full pipeline must still agree row-by-row with the
-    reference scanner."""
+    """The < direction fires on SHORT rows; the full pipeline must agree
+    row-by-row with the reference scanner."""
     sigs = _size_rule("filesize < 10 and $s", [YaraString("$s", "hit")])
     rows = [
         ("hit ok", "tool-a"),  # 6 chars, marker -> fires
@@ -993,8 +984,8 @@ def test_filesize_lt_pipeline_matches_reference(spark):
 
 
 def test_filesize_and_string_pipeline_gate_safe(spark):
-    """> direction keeps the gate on; combined string+size condition must
-    prune by BOTH conjuncts through the gated pipeline."""
+    """A combined string+size condition must prune by BOTH conjuncts
+    through the pipeline."""
     sigs = _size_rule("$s and filesize > 20", [YaraString("$s", "marker")])
     rows = [
         ("marker plus enough padding here", "t0"),  # both -> fires
@@ -1005,61 +996,54 @@ def test_filesize_and_string_pipeline_gate_safe(spark):
     assert 0 in got and 1 not in got and 2 not in got
 
 
-def test_filesize_negation_soundness():
-    from loki_rs_spark.signatures.conditions import (
-        condition_negates_strings,
-        parse_condition,
+@pytest.mark.parametrize(
+    "condition",
+    [
+        "$t and not $bad",
+        "$t and 0 of ($bad1, $bad2)",
+        "not $bad",
+        "0 of ($bad1, $bad2)",
+        "$t or not $bad",
+    ],
+)
+def test_negated_conjunct_matches_reference(spark, condition):
+    """Round-6 ADVICE shapes: a negated string term alone, AND-ed with a
+    positive string, or OR-ed with one. Both matchers must route exactly
+    the rows the reference scanner routes."""
+    sigs = _yara_sigs(
+        [
+            YaraString("$t", "trig-tok"),
+            YaraString("$bad", "bad-tok"),
+            YaraString("$bad1", "bad1-tok"),
+            YaraString("$bad2", "bad2-tok"),
+        ],
+        condition,
     )
-
-    # blank length 0: lt/le/ne fire on blanked rows -> unsafe
-    assert condition_negates_strings(parse_condition("filesize < 10"))
-    assert condition_negates_strings(parse_condition("filesize <= 10"))
-    assert condition_negates_strings(parse_condition("filesize != 10"))
-    # gt/ge/eq(non-zero) are False on blanked rows -> safe
-    assert not condition_negates_strings(parse_condition("filesize > 10"))
-    assert not condition_negates_strings(parse_condition("filesize >= 10"))
-    assert not condition_negates_strings(parse_condition("filesize == 10"))
-    # negation flips safety
-    assert condition_negates_strings(parse_condition("not filesize > 10"))
-
-
-def test_and_with_positive_string_keeps_gate(sigs):
-    """Round-6 ADVICE (medium): an AND whose blanked value is pinned
-    False by a positive conjunct can never fire on a blanked row, so
-    bundling a '$t and 0 of ($bad*)' rule must NOT disable the text gate
-    bundle-wide — and the bundled corpus (which carries R6_Zero_Of)
-    must therefore keep a non-None text gate."""
-    from loki_rs_spark.operators.arrow_matcher import match_gate_exprs
-    from loki_rs_spark.signatures.conditions import (
-        condition_negates_strings,
-        parse_condition,
-    )
-
-    # '$t and <negated term>': the positive $t pins the blanked AND False
-    assert not condition_negates_strings(
-        parse_condition("$t and not $bad")
-    )
-    assert not condition_negates_strings(
-        parse_condition("$t and 0 of ($bad1, $bad2)")
-    )
-    # without the positive anchor the negation is still unsafe
-    assert condition_negates_strings(parse_condition("not $bad"))
-    assert condition_negates_strings(
-        parse_condition("0 of ($bad1, $bad2)")
-    )
-    # an OR is only as safe as its branches
-    assert condition_negates_strings(
-        parse_condition("$t or not $bad")
-    )
-    # the real bundled corpus keeps its text gate enabled
-    assert match_gate_exprs(sigs)[0] is not None
+    rows = [
+        ("trig-tok alone", "t"),
+        ("trig-tok with bad-tok", "t"),
+        ("trig-tok with bad1-tok", "t"),
+        ("bad-tok bad2-tok only", "t"),
+        ("perfectly clean text", "t"),
+    ]
+    expect = [
+        i
+        for i, (text, tool) in enumerate(rows)
+        if scan_turn("c0", i, text, tool, sigs, CFG)
+    ]
+    assert expect  # every shape fires on some row
+    for matcher in ("arrow", "catalyst"):
+        result = scan_transcripts(
+            spark, _turn_df(spark, rows), sigs, CFG, matcher=matcher
+        )
+        got = sorted(r["turn_idx"] for r in result.routed.collect())
+        assert got == expect, matcher
 
 
 @pytest.mark.parametrize(
     "condition,length,hit",
     [
-        # the four negated forms where blank_fires=True keeps the gate
-        # ENABLED — the gate must probe the complemented comparison
+        # negated size comparisons, OR-ed with a string the rows lack
         ("not (filesize < 10)", 100, True),
         ("not (filesize < 10)", 9, False),
         ("not (filesize <= 10)", 11, True),
@@ -1070,11 +1054,9 @@ def test_and_with_positive_string_keeps_gate(sigs):
     ],
 )
 def test_filesize_negated_gate_truth_table(spark, condition, length, hit):
-    """ADVICE r5 (high): for `$a or not (filesize < 5)` the gate stayed
-    enabled but appended the POSITIVE probe, so a long row without $a
-    failed every gate cond, was blanked, and evaluated not(0<5)=False — a
-    silent false negative. The probe must be complemented under odd
-    negation."""
+    """ADVICE r5 (high): `$a or not (filesize < 5)` once lost long rows
+    without $a (a silent false negative). Routed rows must match the
+    reference on both branches."""
     sigs = _sigs(
         yara_rules=[
             YaraRule(
@@ -1084,9 +1066,6 @@ def test_filesize_negated_gate_truth_table(spark, condition, length, hit):
             )
         ]
     )
-    from loki_rs_spark.operators.arrow_matcher import match_gate_exprs
-
-    assert match_gate_exprs(sigs)[0] is not None  # gate stays enabled
     text = "x" * length  # never contains the marker
     ref = scan_turn("c0", 0, text, "tool-x", sigs, CFG)
     assert (ref is not None) == hit
@@ -1096,24 +1075,6 @@ def test_filesize_negated_gate_truth_table(spark, condition, length, hit):
     routed2 = _routed_levels(spark, [("zz-marker-zz", "tool-x")], sigs)
     ref2 = scan_turn("c0", 0, "zz-marker-zz", "tool-x", sigs, CFG)
     assert (0 in routed2) == (ref2 is not None)
-
-
-def test_collect_size_nodes_polarity():
-    from loki_rs_spark.signatures.conditions import (
-        collect_size_nodes,
-        parse_condition,
-    )
-
-    nodes = collect_size_nodes(
-        parse_condition("filesize > 5 or not (filesize < 9)")
-    )
-    assert [(n.op, n.value, neg) for n, neg in nodes] == [
-        ("gt", 5, False),
-        ("lt", 9, True),
-    ]
-    # double negation cancels
-    nodes = collect_size_nodes(parse_condition("not (not (filesize > 5))"))
-    assert [neg for _, neg in nodes] == [False]
 
 
 def test_filesize_parse_rejections():
@@ -1171,8 +1132,7 @@ def test_for_quantifier_truth_table(spark, condition, text, hit):
 
 def test_for_all_pipeline_matches_reference(spark):
     """for-all through the full arrow pipeline (non-monotone: vacuous
-    truth means blanked rows could falsely fire, so the pandas gate is
-    disabled for such sets — arrow matches on raw text regardless)."""
+    truth fires on rows without any occurrence)."""
     sigs = _yara_sigs(
         [YaraString("$s", "mk")], "for all i in (1..#s) : ( @s[i] < 6 )"
     )
@@ -1242,8 +1202,7 @@ def _routed_reasons(spark, rows, sigs, matcher="arrow"):
 def test_zero_of_none_of_truth_table(spark, condition, text, hit):
     """yara-x '0 of ...' is NONE-of (legacy yara: always-true + warning;
     the reference compiles yara-x, src/main.rs:780-872). Desugared to
-    not-any-of; firing on string-absence means the text gate must be
-    auto-disabled (blank text satisfies none-of)."""
+    not-any-of, so it fires on string ABSENCE."""
     sigs = _sigs(
         yara_rules=[
             YaraRule(
@@ -1253,9 +1212,6 @@ def test_zero_of_none_of_truth_table(spark, condition, text, hit):
             )
         ]
     )
-    from loki_rs_spark.operators.arrow_matcher import match_gate_exprs
-
-    assert match_gate_exprs(sigs)[0] is None  # gate self-disables
     ref = scan_turn("c0", 0, text, "tool-x", sigs, CFG)
     assert (ref is not None) == hit
     routed = _routed_levels(spark, [(text, "tool-x")], sigs)
@@ -1322,7 +1278,7 @@ def test_overlapping_count_nocase_and_catalyst(spark):
     )
     text = "zzAaAa"  # folded 'aaaa': 3 overlapping 'aa'
     assert scan_turn("c0", 0, text, "t", sigs, CFG) is not None
-    for matcher in ("arrow", "pandas", "catalyst"):
+    for matcher in ("arrow", "catalyst"):
         routed = _routed_reasons(spark, [(text, "t")], sigs, matcher=matcher)
         assert 0 in routed, matcher
     assert scan_turn("c0", 0, "zzAaz", "t", sigs, CFG) is None
