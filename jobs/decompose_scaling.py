@@ -2,7 +2,7 @@
 8->32 ceiling the Arrow/Python bridge or the shared memory bus?
 
 Runs the SAME scan pipeline in two variants — 'arrow' (production: one
-mapInArrow UDF boundary) and 'catalyst' (pure JVM expression rendering,
+scalar arrow_udf boundary) and 'catalyst' (pure JVM expression rendering,
 zero Python boundary) — at local[8] and local[32], interleaved so all
 legs sample the same host window, via the credit-gated min-of-4
 `bench.py --scan-worker` (fresh JVM per leg). If catalyst-only scales

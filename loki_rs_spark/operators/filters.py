@@ -25,11 +25,12 @@ def exclusion_pattern(patterns: Iterable[str]) -> str | None:
 def apply_exclusions(df: DataFrame, patterns: Iterable[str]) -> DataFrame:
     """Config exclusions (F3, src/modules/filesystem_scan.rs:607-613).
     The reference tests each regex against the full path; `tool` is the
-    path analog of a transcript turn."""
+    path analog of a transcript turn. A NULL `tool` matches no exclusion;
+    coalesce (not `IS NULL OR`) inlines a computed `tool` only once."""
     combined = exclusion_pattern(patterns)
     if combined is None:
         return df
-    return df.filter(~F.col("tool").rlike(combined))
+    return df.filter(F.coalesce(~F.col("tool").rlike(combined), F.lit(True)))
 
 
 def apply_size_filter(df: DataFrame, max_text_chars: int) -> DataFrame:

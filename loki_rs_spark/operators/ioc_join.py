@@ -12,12 +12,15 @@ filesystem_scan.rs:824-846). Spark-first renderings:
   not reorder across an opaque UDF, so we do it ourselves);
 * J3 filename-IOC regex theta-join -> per-IOC static `rlike` predicates
   generated at plan-build time (whole-stage codegen'd; the pattern list is
-  broadcast implicitly as literals). The Arrow UDF matcher in matcher.py is
-  the scale path for very large pattern sets;
+  broadcast implicitly as literals);
 * J4 C2 suffix theta-join -> host extraction with `regexp_extract_all` +
   a generated first-match-wins CASE chain inside `transform` (higher-order
   function, no UDF, preserves per-host duplication semantics of
   src/modules/process_check.rs:546-567).
+
+The J3/J4 renderings here serve the zero-Python catalyst cross-check
+(`scan_transcripts(matcher="catalyst")`); the production Arrow matcher
+(arrow_matcher.py) resolves both inside its one UDF.
 
 All reason structs share REASON_TYPE and are assembled in the reference's
 discovery order by the pipeline (filename -> md5 -> sha1 -> sha256 -> YARA
@@ -72,10 +75,6 @@ def reason_struct(
             "matched_strings"
         ),
     )
-
-
-def empty_reason_array() -> Column:
-    return F.lit(None).cast(f"array<{REASON_TYPE}>")
 
 
 # Below this many entries a hash dim table MAY be rendered as literal

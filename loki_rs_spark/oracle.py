@@ -344,7 +344,9 @@ def _scan_filters(sigs: SignatureSet, cfg: ScanConfig) -> tuple[str, str]:
     cheap = [f"(text IS NULL OR length(text) <= {cfg.max_text_chars})"]
     if cfg.exclude_patterns:
         combined = "|".join(f"(?:{p})" for p in cfg.exclude_patterns)
-        cheap.append(f"NOT regexp_matches(tool, {_q(combined)})")
+        cheap.append(
+            f"(tool IS NULL OR NOT regexp_matches(tool, {_q(combined)}))"
+        )
     fp_conds = []
     for hash_type in ("md5", "sha1", "sha256"):
         for fp in sigs.hashes_of_type(hash_type, fp=True):

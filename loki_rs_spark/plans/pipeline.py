@@ -1,13 +1,13 @@
 """The scan pipeline — the reference's per-row dataflow
 (src/modules/filesystem_scan.rs:559-979, SURVEY.md §3.2) re-expressed as one
-declarative Spark plan:
+declarative Spark plan, built once by `_build_scan` for both output shapes:
 
     filters (F3/F7)
       -> hash projection (P1, JVM built-ins)
       -> FP broadcast ANTI join (J2, placed upstream of the UDF on purpose)
-      -> Arrow matcher UDF (J3 filename IOCs + P5 YARA subset)
-      -> hash-IOC broadcast joins (J1)
-      -> C2 host extraction + suffix match (J4, higher-order functions)
+      -> hash-IOC lookups (J1, broadcast joins or literal CASE lookups)
+      -> Arrow matcher UDF (J3 filename IOCs + P5 YARA subset + J4 C2 host
+         extraction and suffix match, all inside the one UDF)
       -> reason assembly in discovery order (A3: filename -> md5 -> sha1
          -> sha256 -> YARA -> C2), capped at 100 (O4)
       -> weighted score fold (A1, array fold, no shuffle) -> round (i16
@@ -30,6 +30,11 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, ScanConfig
 from ..functions.score import rounded_score_col, severity_col, weighted_score_col
+from ..operators.arrow_matcher import (
+    make_arrow_matcher_udf,
+    make_arrow_score_matcher_udf,
+)
+from ..operators.ext_bits import ext_bits_col
 from ..operators.filters import apply_exclusions, apply_size_filter
 from ..operators.hashes import with_hashes
 from ..operators.ioc_join import (
@@ -51,10 +56,13 @@ class ScanResult:
 
     * ``scanned``  — rows surviving the cheap filters (= the reference's
       "scanned" counter basis; FP-hash rows still count as scanned);
-    * ``evaluated`` — every scanned, non-FP row with its full reason array
-      and score (including matched-below-threshold rows, level NULL);
-    * ``routed``  — rows with level ALERT/WARNING/NOTICE and shown reasons
-      sliced to max_reasons: the JSONL-sink-equivalent fact rows.
+    * ``evaluated`` — every scanned, non-FP row with its score (including
+      matched-below-threshold rows, level NULL): (conv_id, turn_idx, role,
+      tool, ts, n_reasons, score, level), plus text_len, md5, sha1, sha256
+      and ``all_reasons`` in the reason shape (`scan_transcripts`);
+    * ``routed``  — the same columns for rows with level ALERT/WARNING/
+      NOTICE (the JSONL-sink-equivalent fact rows), plus in the reason
+      shape the shown ``reasons`` sliced to max_reasons.
     """
 
     scanned: DataFrame
@@ -66,13 +74,12 @@ def _nz(arr: Column) -> Column:
     return F.coalesce(arr, F.array().cast(f"array<{REASON_TYPE}>"))
 
 
-def _fname_reasons_from(col: Column) -> Column:
+def _ioc_reasons_from(col: Column, prefix: str, field: str) -> Column:
+    """Filename/C2 match structs -> reason structs ("{prefix}{field}")."""
     return F.transform(
         col,
         lambda m: reason_struct(
-            F.concat(F.lit("File Name IOC matched PATTERN: "), m["pattern"]),
-            m["score"],
-            m["description"],
+            F.concat(F.lit(prefix), m[field]), m["score"], m["description"]
         ),
     )
 
@@ -89,6 +96,183 @@ def _yara_reasons_from(col: Column) -> Column:
             F.when(F.size(m["matched_strings"]) > 0, m["matched_strings"]),
         ),
     )
+
+
+def _catalyst_yara_reasons(sigs: SignatureSet) -> Column:
+    """Catalyst fallback for the YARA subset: per-rule static predicates
+    rendered from the condition AST (external variables included).
+    matched_strings are not captured on this path (no offsets without the
+    UDF); everything else is identical."""
+    yara_items = [
+        F.when(
+            catalyst_rule_condition(rule),
+            reason_struct(
+                F.lit(f"YARA match with rule {rule.name}"),
+                F.lit(rule.score),
+                F.lit(rule.description or None),
+                F.lit(rule.author or None),
+                F.lit(rule.reference or None),
+            ),
+        )
+        for rule in sigs.yara_rules
+    ]
+    if not yara_items:
+        return F.array().cast(f"array<{REASON_TYPE}>")
+    return F.filter(F.array(*yara_items), lambda x: x.isNotNull())
+
+
+def _matcher_items(
+    spark: SparkSession,
+    df: DataFrame,
+    sigs: SignatureSet,
+    matcher: str,
+    hash_reasons: Column,
+    hash_hit: Column,
+) -> tuple[DataFrame, list[Column], Column]:
+    """The one matcher dispatch: adds the matcher's columns and returns
+    (df, the four per-source item arrays in discovery order filename ->
+    hash -> YARA -> C2, any-candidate predicate). 'arrow' and 'scores'
+    cross the bridge ONCE (reason structs from match_signatures_arrow,
+    int scores from match_scores_arrow); every kernel, J4 C2 included,
+    runs over each batch's unique text/tool values, and external-variable
+    truth crosses as the packed `ext_bits` bigint. 'catalyst' is zero
+    Python: rlike filename predicates, per-rule YARA predicates and the
+    JVM C2 gate + CASE chain, with no cheap precursors, so its candidate
+    is the literal True."""
+    if matcher == "catalyst":
+        df = df.withColumn(
+            "_c2g", c2_text_gate(F.col("text"), list(sigs.c2_iocs))
+        )
+        items = [
+            filename_reason_array(F.col("tool"), list(sigs.filename_iocs)),
+            hash_reasons,
+            _catalyst_yara_reasons(sigs),
+            c2_reason_array(
+                F.col("text"), list(sigs.c2_iocs), gate=F.col("_c2g")
+            ),
+        ]
+        return df, [_nz(c) for c in items], F.lit(True)
+
+    make_udf = (
+        make_arrow_score_matcher_udf if matcher == "scores"
+        else make_arrow_matcher_udf
+    )
+    audf = make_udf(spark, sigs)
+    df = df.withColumn(
+        "_m", audf(F.col("text"), F.col("tool"), ext_bits_col(sigs))
+    )
+    fname, yara, c2 = F.col("_m.fname"), F.col("_m.yara"), F.col("_m.c2")
+    candidate = (
+        (F.size(fname) > 0)
+        | (F.size(yara) > 0)
+        | hash_hit
+        | (F.size(c2) > 0)
+    )
+    if matcher == "scores":
+        hash_scores = F.transform(_nz(hash_reasons), lambda r: r["score"])
+        return df, [fname, hash_scores, yara, c2], candidate
+    items = [
+        _ioc_reasons_from(fname, "File Name IOC matched PATTERN: ", "pattern"),
+        hash_reasons,
+        _yara_reasons_from(yara),
+        _ioc_reasons_from(c2, "C2 IOC match in turn text HOST: ", "host"),
+    ]
+    return df, [_nz(c) for c in items], candidate
+
+
+def _build_scan(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    sigs: SignatureSet,
+    cfg: ScanConfig,
+    matcher: str,
+    source_kind: str,
+) -> ScanResult:
+    """The one scan builder behind `scan_transcripts` ('arrow' |
+    'catalyst', reason rows) and `scan_transcripts_scores` ('scores',
+    score-only rows)."""
+    # literal hash-dim rendering only over stored-table inputs (the
+    # production shape — see ioc_join.HASH_DIM_MAX_LITERALS): each
+    # avoided broadcast exchange saves ~0.25-0.4s of per-action latency;
+    # over the live generator frame the joins stay, doubling as pushdown
+    # fences for the generator's CASE trees.
+    literal_dims = plain_relation_input(transcripts)
+    df = apply_exclusions(transcripts, cfg.exclude_patterns)
+    df = apply_size_filter(df, cfg.max_text_chars)
+    scanned = df
+
+    df = with_hashes(df)
+    df = anti_join_fp_hashes(spark, df, sigs, literal_dims=literal_dims)
+    df, hash_reasons, hash_hit = hash_reason_array(
+        spark, df, sigs, source_kind=source_kind, literal_dims=literal_dims
+    )
+    df, items, candidate = _matcher_items(
+        spark, df, sigs, matcher, hash_reasons, hash_hit
+    )
+
+    # Sparse fast path: the overwhelming majority of turns match nothing,
+    # so gate the (allocation-heavy) assembly behind the cheap candidate
+    # predicate — codegen'd CASE WHEN evaluates the taken branch only, so
+    # clean rows cost a few comparisons instead of struct/array
+    # construction. False-positive candidates just take the slow branch.
+    reasons = matcher != "scores"
+    item_type = REASON_TYPE if reasons else "int"
+    all_items = F.when(
+        candidate, F.slice(F.concat(*items), 1, cfg.max_matches)
+    ).otherwise(F.array().cast(f"array<{item_type}>"))
+    key = "all_reasons" if reasons else "_scores"
+    extra = (
+        [F.length("text").alias("text_len"), "md5", "sha1", "sha256"]
+        if reasons else []
+    )
+
+    def project(frame: DataFrame) -> DataFrame:
+        # Staged projections so the heavy item tree evaluates ONCE per
+        # row: stage 1 aliases it (used 2x downstream — size + score
+        # fold — so CollapseProject keeps the alias materialized instead
+        # of re-inlining copies of the tree); stage 2 derives
+        # n_reasons/score from the attribute; stage 3 derives level from
+        # the score attribute (and drops the score-only `_scores`).
+        staged = frame.select(
+            "conv_id", "turn_idx", "role", "tool", "ts", *extra,
+            all_items.alias(key),
+        )
+        sub_scores = (
+            F.transform(F.col(key), lambda r: r["score"]) if reasons
+            else F.col(key)
+        )
+        staged = staged.select(
+            "*",
+            F.size(key).alias("n_reasons"),
+            rounded_score_col(weighted_score_col(sub_scores)).alias("score"),
+        )
+        return staged.select(
+            *[c for c in staged.columns if c != "_scores"],
+            severity_col(F.col("score"), cfg).alias("level"),
+        )
+
+    evaluated = project(df)
+
+    # Candidate-first routing: Catalyst's PushDownPredicates rewrites
+    # filter(project(x)) into project(filter(x)) by SUBSTITUTING the
+    # n_reasons/level expressions into the predicate (a non-deterministic
+    # barrier column does NOT stop it — only predicates referencing a
+    # non-deterministic alias are pinned), so filtering `evaluated` would
+    # re-evaluate the heavy reason/score trees up to 3x per row. Instead
+    # the routed branch filters FIRST on the cheap materialized candidate
+    # precursors (matcher output sizes, hash-join hit) — the same
+    # superset predicate that gates assembly — so the expensive trees,
+    # substituted or not, only ever evaluate over the sparse candidate
+    # rows (measured -2.4s/M rows at local[8]). On the catalyst path the
+    # candidate is the literal True, which the optimizer prunes.
+    routed = project(df.filter(candidate)).filter(
+        (F.col("n_reasons") > 0) & F.col("level").isNotNull()
+    )
+    if reasons:
+        routed = routed.withColumn(
+            "reasons", F.slice(F.col("all_reasons"), 1, cfg.max_reasons)
+        )
+    return ScanResult(scanned=scanned, evaluated=evaluated, routed=routed)
 
 
 def scan_transcripts(
@@ -109,173 +293,7 @@ def scan_transcripts(
     hash type, with a process-specific message (see hash_reason_array)."""
     if matcher not in ("arrow", "catalyst"):
         raise ValueError(f"unknown matcher impl: {matcher}")
-    # literal hash-dim rendering only over stored-table inputs (the
-    # production shape — see ioc_join.HASH_DIM_MAX_LITERALS): each
-    # avoided broadcast exchange saves ~0.25-0.4s of per-action latency;
-    # over the live generator frame the joins stay, doubling as pushdown
-    # fences for the generator's CASE trees.
-    literal_dims = plain_relation_input(transcripts)
-    df = apply_exclusions(transcripts, cfg.exclude_patterns)
-    df = apply_size_filter(df, cfg.max_text_chars)
-    scanned = df
-
-    df = with_hashes(df)
-    df = anti_join_fp_hashes(spark, df, sigs, literal_dims=literal_dims)
-
-    if matcher == "arrow":
-        from ..operators.arrow_matcher import make_arrow_matcher_udf
-        from ..operators.ext_bits import ext_bits_col
-
-        # Raw text/tool cross the bridge ONCE: the Arrow matcher
-        # dict-encodes each batch so every kernel (YARA strings, filename
-        # IOCs, AND the J4 c2 candidate gate — struct field `c2`) runs
-        # over unique values only, and its masks are exact. External-
-        # variable truth crosses as the packed `ext_bits` bigint computed
-        # in whole-stage codegen.
-        audf = make_arrow_matcher_udf(spark, sigs)
-        df = df.withColumn(
-            "_m", audf(F.col("text"), F.col("tool"), ext_bits_col(sigs))
-        )
-        fname_reasons = _fname_reasons_from(F.col("_m.fname"))
-        yara_reasons = _yara_reasons_from(F.col("_m.yara"))
-    else:
-        fname_reasons = filename_reason_array(
-            F.col("tool"), list(sigs.filename_iocs)
-        )
-        # Catalyst fallback for the YARA subset: per-rule static predicates
-        # rendered from the condition AST (external variables included).
-        # matched_strings are not captured on this path (no offsets without
-        # the UDF); everything else is identical.
-        yara_items = []
-        for rule in sigs.yara_rules:
-            fired = catalyst_rule_condition(rule)
-            yara_items.append(
-                F.when(
-                    fired,
-                    reason_struct(
-                        F.lit(f"YARA match with rule {rule.name}"),
-                        F.lit(rule.score),
-                        F.lit(rule.description or None),
-                        F.lit(rule.author or None),
-                        F.lit(rule.reference or None),
-                    ),
-                )
-            )
-        yara_reasons = (
-            F.filter(F.array(*yara_items), lambda x: x.isNotNull())
-            if yara_items
-            else F.array().cast(f"array<{REASON_TYPE}>")
-        )
-
-    df, hash_reasons, hash_hit = hash_reason_array(
-        spark, df, sigs, source_kind=source_kind, literal_dims=literal_dims
-    )
-    # J4 C2 enrichment. Arrow path: the matcher UDF already resolved the
-    # matches (struct field `c2`, host/score/description per host
-    # occurrence, first-IOC-wins — _c2_match_lists is the scale path,
-    # sub-linear in IOC count), so the JVM just renders reason structs
-    # and `_c2g` is the EXACT any-match bit. The catalyst path keeps the
-    # JVM contains-chain gate + per-host CASE chain (c2_reason_array,
-    # fine at bundled-corpus size, linear in IOC count).
-    if matcher == "arrow":
-        df = df.withColumn("_c2g", F.size(F.col("_m.c2")) > 0)
-        c2_reasons = F.transform(
-            F.col("_m.c2"),
-            lambda m: reason_struct(
-                F.concat(
-                    F.lit("C2 IOC match in turn text HOST: "), m["host"]
-                ),
-                m["score"],
-                m["description"],
-            ),
-        )
-    else:
-        df = df.withColumn(
-            "_c2g", c2_text_gate(F.col("text"), list(sigs.c2_iocs))
-        )
-        c2_reasons = c2_reason_array(
-            F.col("text"), list(sigs.c2_iocs), gate=F.col("_c2g")
-        )
-
-    # Sparse fast path: the overwhelming majority of turns match nothing,
-    # so gate the (allocation-heavy) reason assembly behind a cheap
-    # any-candidate predicate — codegen'd CASE WHEN evaluates the taken
-    # branch only, so clean rows cost a few comparisons instead of
-    # struct/array construction.
-    assembled = F.slice(
-        F.concat(
-            _nz(fname_reasons), _nz(hash_reasons), _nz(yara_reasons), _nz(c2_reasons)
-        ),
-        1,
-        cfg.max_matches,
-    )
-    # any-candidate predicate: matcher output non-empty, any hash-IOC join
-    # hit, or a C2 server literal present in the text (c2_text_gate — a
-    # necessary condition for any C2 reason). Conservative — false
-    # positives just take the slow branch.
-    if matcher == "arrow":
-        candidate = (
-            (F.size(F.col("_m.fname")) > 0)
-            | (F.size(F.col("_m.yara")) > 0)
-            | (hash_hit | F.col("_c2g"))
-        )
-    else:
-        candidate = F.lit(True)  # catalyst path: no cheap precursors
-    all_reasons = F.when(candidate, assembled).otherwise(
-        F.array().cast(f"array<{REASON_TYPE}>")
-    )
-
-    def project(frame: DataFrame) -> DataFrame:
-        # Staged projections so the heavy reason tree evaluates ONCE per
-        # row: stage 1 aliases `all_reasons` (used 2x downstream — size +
-        # score fold — so CollapseProject keeps the alias materialized
-        # instead of re-inlining four copies of the tree); stage 2 derives
-        # n_reasons/score from the attribute; stage 3 derives level from
-        # the score attribute.
-        staged = frame.select(
-            "conv_id",
-            "turn_idx",
-            "role",
-            "tool",
-            "ts",
-            F.length("text").alias("text_len"),
-            "md5",
-            "sha1",
-            "sha256",
-            all_reasons.alias("all_reasons"),
-        )
-        sub_scores = F.transform(F.col("all_reasons"), lambda r: r["score"])
-        staged = staged.select(
-            "*",
-            F.size("all_reasons").alias("n_reasons"),
-            rounded_score_col(weighted_score_col(sub_scores)).alias("score"),
-        )
-        return staged.select(
-            "*", severity_col(F.col("score"), cfg).alias("level")
-        )
-
-    evaluated = project(df)
-
-    # Candidate-first routing: Catalyst's PushDownPredicates rewrites
-    # filter(project(x)) into project(filter(x)) by SUBSTITUTING the
-    # n_reasons/level expressions into the predicate (a non-deterministic
-    # barrier column does NOT stop it — only predicates referencing a
-    # non-deterministic alias are pinned), so filtering `evaluated` would
-    # re-evaluate the heavy reason/score trees up to 3x per row. Instead
-    # the routed branch filters FIRST on the cheap materialized candidate
-    # precursors (matcher output sizes, hash-join hit, C2 gate bit) —
-    # the same superset predicate that gates reason assembly — so the
-    # expensive trees, substituted or not, only ever evaluate over the
-    # sparse candidate rows (measured -2.4s/M rows at local[8]). On the
-    # catalyst path the candidate is the literal True, which the optimizer
-    # prunes.
-    routed = project(df.filter(candidate)).filter(
-        (F.col("n_reasons") > 0) & F.col("level").isNotNull()
-    ).withColumn(
-        "reasons", F.slice(F.col("all_reasons"), 1, cfg.max_reasons)
-    )
-
-    return ScanResult(scanned=scanned, evaluated=evaluated, routed=routed)
+    return _build_scan(spark, transcripts, sigs, cfg, matcher, source_kind)
 
 
 def scan_transcripts_scores(
@@ -292,99 +310,8 @@ def scan_transcripts_scores(
     matched-string offset extraction, so the per-hit Python work and the
     wide reason projection disappear. Score equality with the full path is
     guaranteed by construction (reason scores never depend on matched
-    strings) and enforced by the shared oracle rows + a pytest.
-
-    `evaluated`/`routed` carry (conv_id, turn_idx, role, tool, ts,
-    n_reasons, score, level) only."""
-    from ..operators.arrow_matcher import make_arrow_score_matcher_udf
-    from ..operators.ext_bits import ext_bits_col
-
-    literal_dims = plain_relation_input(transcripts)
-    df = apply_exclusions(transcripts, cfg.exclude_patterns)
-    df = apply_size_filter(df, cfg.max_text_chars)
-    scanned = df
-
-    df = with_hashes(df)
-    df = anti_join_fp_hashes(spark, df, sigs, literal_dims=literal_dims)
-
-    sudf = make_arrow_score_matcher_udf(spark, sigs)
-    df = df.withColumn(
-        "_s", sudf(F.col("text"), F.col("tool"), ext_bits_col(sigs))
-    )
-
-    df, hash_reasons, hash_hit = hash_reason_array(
-        spark, df, sigs, source_kind=source_kind, literal_dims=literal_dims
-    )
-    hash_scores = F.transform(_nz(hash_reasons), lambda r: r["score"])
-
-    assembled = F.slice(
-        F.concat(
-            F.col("_s.fname"), hash_scores, F.col("_s.yara"), F.col("_s.c2")
-        ),
-        1,
-        cfg.max_matches,
-    )
-    candidate = (
-        hash_hit
-        | (F.size(F.col("_s.c2")) > 0)
-        | (F.size(F.col("_s.fname")) > 0)
-        | (F.size(F.col("_s.yara")) > 0)
-    )
-    sub_scores = F.when(candidate, assembled).otherwise(
-        F.array().cast("array<int>")
-    )
-
-    # staged projections: the sub_scores tree evaluates once (see
-    # scan_transcripts.project for the CollapseProject rationale)
-    staged = df.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "tool",
-        "ts",
-        sub_scores.alias("_scores"),
-    )
-    staged = staged.select(
-        "*",
-        F.size("_scores").alias("n_reasons"),
-        rounded_score_col(weighted_score_col(F.col("_scores"))).alias(
-            "score"
-        ),
-    )
-    def finish(frame: DataFrame) -> DataFrame:
-        return frame.select(
-            "conv_id",
-            "turn_idx",
-            "role",
-            "tool",
-            "ts",
-            "n_reasons",
-            "score",
-            severity_col(F.col("score"), cfg).alias("level"),
-        )
-
-    evaluated = finish(staged)
-    # candidate-first routing (see scan_transcripts): heavy score trees
-    # evaluate only over candidate rows on the routed branch
-    routed_staged = df.filter(candidate).select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "tool",
-        "ts",
-        sub_scores.alias("_scores"),
-    )
-    routed_staged = routed_staged.select(
-        "*",
-        F.size("_scores").alias("n_reasons"),
-        rounded_score_col(weighted_score_col(F.col("_scores"))).alias(
-            "score"
-        ),
-    )
-    routed = finish(routed_staged).filter(
-        (F.col("n_reasons") > 0) & F.col("level").isNotNull()
-    )
-    return ScanResult(scanned=scanned, evaluated=evaluated, routed=routed)
+    strings) and enforced by the shared oracle rows + a pytest."""
+    return _build_scan(spark, transcripts, sigs, cfg, "scores", source_kind)
 
 
 class _CatalystCondBackend:

@@ -343,7 +343,7 @@ def scan_turn(
     conv_id: str,
     turn_idx: int,
     text: str,
-    tool: str,
+    tool: str | None,
     sigs: SignatureSet,
     cfg: ScanConfig = DEFAULT_CONFIG,
     role: str = "user",
@@ -353,9 +353,10 @@ def scan_turn(
     unmatched / below the notice threshold. `source_kind='process'`
     applies the reference's process-scan hash semantics: first matching
     hash type only, message "Process Executable Hash Match HASH: {h}"
-    (src/modules/process_check.rs:367-397)."""
+    (src/modules/process_check.rs:367-397). A None `tool` matches no
+    exclusion and no filename IOC, and external variables read it as ''."""
     for pattern in cfg.exclude_patterns:
-        if re.search(pattern, tool):
+        if tool is not None and re.search(pattern, tool):
             return None
     if text is None:
         return None  # corrupt record: counted as error, matches nothing
@@ -370,7 +371,7 @@ def scan_turn(
 
     # 1. filename IOCs (path_display and filename are both `tool` here)
     for ioc in sigs.filename_iocs:
-        if re.search(ioc.pattern, tool):
+        if tool is not None and re.search(ioc.pattern, tool):
             if ioc.fp_pattern and re.search(ioc.fp_pattern, tool):
                 continue
             push(
@@ -414,7 +415,7 @@ def scan_turn(
 
     # 3. YARA subset, rules in definition order; condition AST evaluated
     # per row with external variables (filename/.../owner)
-    ext = _ext_vars(tool, role)
+    ext = _ext_vars(tool or "", role)
     for rule in sigs.yara_rules:
         per_string: list[tuple[str, list[tuple[int, str]]]] = []
         ident_fired: list[tuple[str, bool]] = []

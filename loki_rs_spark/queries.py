@@ -38,9 +38,12 @@ def bundled_signatures() -> SignatureSet:
 
 
 def _scan(spark: SparkSession, sf_dir: str, rep: int = DEFAULT_REP,
-          cfg: ScanConfig = DEFAULT_CONFIG) -> ScanResult:
+          cfg: ScanConfig = DEFAULT_CONFIG,
+          matcher: str = "arrow") -> ScanResult:
     transcripts = load_transcripts(spark, sf_dir, rep=rep)
-    return scan_transcripts(spark, transcripts, bundled_signatures(), cfg)
+    return scan_transcripts(
+        spark, transcripts, bundled_signatures(), cfg, matcher=matcher
+    )
 
 
 def _scan_scores(spark: SparkSession, sf_dir: str, rep: int = DEFAULT_REP,
@@ -67,8 +70,8 @@ def q_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_scan_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    routed = _scan(spark, sf_dir).routed
+def _scan_matches(spark: SparkSession, sf_dir: str, matcher: str) -> DataFrame:
+    routed = _scan(spark, sf_dir, matcher=matcher).routed
     r1 = F.get(F.col("all_reasons"), 0)
     r2 = F.get(F.col("all_reasons"), 1)
     return routed.select(
@@ -85,6 +88,10 @@ def q_scan_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         r2["message"].alias("reason2_msg"),
         r2["score"].alias("reason2_score"),
     )
+
+
+def q_scan_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _scan_matches(spark, sf_dir, "arrow")
 
 
 def q_scan_matches_catalyst(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,26 +99,7 @@ def q_scan_matches_catalyst(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-rule predicates, no Python at all) — shares scan_matches' oracle,
     so the two matcher implementations are cross-checked through the
     correctness gate."""
-    transcripts = load_transcripts(spark, sf_dir, rep=DEFAULT_REP)
-    routed = scan_transcripts(
-        spark, transcripts, bundled_signatures(), matcher="catalyst"
-    ).routed
-    r1 = F.get(F.col("all_reasons"), 0)
-    r2 = F.get(F.col("all_reasons"), 1)
-    return routed.select(
-        "conv_id",
-        "turn_idx",
-        "tool",
-        "md5",
-        "sha256",
-        "score",
-        "level",
-        "n_reasons",
-        r1["message"].alias("reason1_msg"),
-        r1["score"].alias("reason1_score"),
-        r2["message"].alias("reason2_msg"),
-        r2["score"].alias("reason2_score"),
-    )
+    return _scan_matches(spark, sf_dir, "catalyst")
 
 
 def q_severity_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

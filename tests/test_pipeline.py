@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 
 from loki_rs_spark.config import ScanConfig
-from loki_rs_spark.plans.pipeline import scan_transcripts
+from loki_rs_spark.plans.pipeline import scan_transcripts, scan_transcripts_scores
 from loki_rs_spark.plans.reference_scanner import scan_turn
 from loki_rs_spark.sources.transcripts import load_transcripts
 
@@ -24,6 +24,15 @@ CFG = ScanConfig()
 @pytest.fixture(scope="module")
 def transcripts(spark):
     return load_transcripts(spark, SF_SMALL, rep=REP).cache()
+
+
+@pytest.fixture(scope="module")
+def stored_transcripts(spark, tmp_path_factory):
+    from loki_rs_spark.sources.transcripts import materialized_transcripts
+
+    return materialized_transcripts(
+        spark, SF_SMALL, rep=REP, base_dir=str(tmp_path_factory.mktemp("t"))
+    )
 
 
 @pytest.fixture(scope="module")
@@ -70,21 +79,29 @@ def test_routed_row_equality(spark, transcripts, sigs, expected_rows, impl):
                 assert ar["matched_strings"] == er.matched_strings, key
 
 
-def test_score_only_path_equals_full(spark, transcripts, sigs):
+@pytest.mark.parametrize("source", ["generator", "stored"])
+@pytest.mark.parametrize("source_kind", ["file", "process"])
+def test_score_only_path_equals_full(
+    spark, transcripts, stored_transcripts, sigs, source_kind, source
+):
     """The lean score-only pipeline (scan_transcripts_scores) must agree
-    with the full pipeline row-for-row on (n_reasons, score, level)."""
-    from loki_rs_spark.plans.pipeline import scan_transcripts_scores
+    with the full pipeline row-for-row on (n_reasons, score, level), for
+    both hash-reason semantics and over both the generator frame (hash
+    dims as broadcast joins) and a stored table (literal hash dims)."""
+    frame = transcripts if source == "generator" else stored_transcripts
 
-    full = {
-        (r["conv_id"], r["turn_idx"]): (r["n_reasons"], r["score"], r["level"])
-        for r in scan_transcripts(spark, transcripts, sigs, CFG)
-        .evaluated.collect()
-    }
-    lean = {
-        (r["conv_id"], r["turn_idx"]): (r["n_reasons"], r["score"], r["level"])
-        for r in scan_transcripts_scores(spark, transcripts, sigs, CFG)
-        .evaluated.collect()
-    }
+    def scores(result):
+        return {
+            (r["conv_id"], r["turn_idx"]): (r["n_reasons"], r["score"], r["level"])
+            for r in result.evaluated.collect()
+        }
+
+    full = scores(
+        scan_transcripts(spark, frame, sigs, CFG, source_kind=source_kind)
+    )
+    lean = scores(
+        scan_transcripts_scores(spark, frame, sigs, CFG, source_kind=source_kind)
+    )
     assert full == lean
 
 
@@ -148,23 +165,21 @@ def test_below_threshold_dropped(spark, transcripts, sigs, expected_rows):
             assert (r["conv_id"], r["turn_idx"]) not in expected_rows
 
 
-def test_scan_routed_plan_invariants(spark, tmp_path):
-    """Pins the plan shape PLANS.md claims for the production scan: the
-    stored-table scan keeps filters pushed to parquet, exactly ONE
-    python boundary, every dimension side broadcast, and ZERO
-    hash-partitioning data shuffles between scan and routed."""
-    from loki_rs_spark.plans.pipeline import scan_transcripts
-    from loki_rs_spark.queries import bundled_signatures
-    from loki_rs_spark.sources.transcripts import materialized_transcripts
+def _executed_plan(frame) -> str:
+    return frame._jdf.queryExecution().executedPlan().toString()
 
-    t = materialized_transcripts(
-        spark, SF_SMALL, rep=4, base_dir=str(tmp_path)
+
+def test_scan_routed_plan_invariants(spark, stored_transcripts, sigs):
+    """Pins the plan shape PLANS.md claims for the production scan over a
+    stored table: exactly ONE python boundary, every dimension side
+    broadcast, ZERO hash-partitioning data shuffles between scan and
+    routed, and no NULL-`tool` drop (see test_null_tool_turns_are_scanned)."""
+    plan = _executed_plan(
+        scan_transcripts(spark, stored_transcripts, sigs).routed
     )
-    routed = scan_transcripts(spark, t, bundled_signatures()).routed
-    plan = routed._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan
     assert plan.count("ArrowEvalPython") == 1
-    assert "PushedFilters: [IsNotNull(tool)]" in plan
+    assert "IsNotNull(tool)" not in plan
     # round-7: over a stored-table input the tiny hash-IOC dims render as
     # literal InSet/CASE lookups (ioc_join.HASH_DIM_MAX_LITERALS), so
     # only the FP anti-join's broadcast remains (3 avoided broadcast
@@ -175,36 +190,38 @@ def test_scan_routed_plan_invariants(spark, tmp_path):
     assert "LeftAnti" in plan  # FP anti-join upstream of the UDF
 
 
-def test_score_only_plan_invariants(spark, tmp_path):
+def test_score_only_plan_invariants(spark, stored_transcripts, sigs):
     """The score-only pipeline keeps the same plan shape over a stored
     table, on both branches: exactly ONE python boundary (the
     asNondeterministic fence keeps the candidate-first routed filter
     from duplicating the matcher), one broadcast (the FP anti-join), and
     no hash-partitioning shuffle."""
-    from loki_rs_spark.plans.pipeline import scan_transcripts_scores
-    from loki_rs_spark.queries import bundled_signatures
-    from loki_rs_spark.sources.transcripts import materialized_transcripts
-
-    t = materialized_transcripts(
-        spark, SF_SMALL, rep=4, base_dir=str(tmp_path)
-    )
-    result = scan_transcripts_scores(spark, t, bundled_signatures())
+    result = scan_transcripts_scores(spark, stored_transcripts, sigs)
     for name in ("routed", "evaluated"):
-        frame = getattr(result, name)
-        plan = frame._jdf.queryExecution().executedPlan().toString()
+        plan = _executed_plan(getattr(result, name))
         assert plan.count("ArrowEvalPython") == 1, name
         assert plan.count("BroadcastExchange") == 1, name
         assert "Exchange hashpartitioning" not in plan, name
 
 
-def test_literal_dims_equal_join_dims(spark, sigs, tmp_path):
+def test_catalyst_plan_invariants(spark, stored_transcripts, sigs):
+    """The catalyst matcher over a stored table, on both branches: no
+    python boundary at all, one broadcast (the FP anti-join), and no
+    hash-partitioning shuffle."""
+    result = scan_transcripts(spark, stored_transcripts, sigs, matcher="catalyst")
+    for name in ("routed", "evaluated"):
+        plan = _executed_plan(getattr(result, name))
+        assert plan.count("ArrowEvalPython") == 0, name
+        assert plan.count("BroadcastExchange") == 1, name
+        assert "Exchange hashpartitioning" not in plan, name
+
+
+def test_literal_dims_equal_join_dims(spark, sigs, stored_transcripts):
     """The literal hash-dim rendering (stored-table input) must produce
     routed rows identical to the broadcast-join rendering (generator
     input) — same corpus, same rep."""
-    from loki_rs_spark.sources.transcripts import materialized_transcripts
-
-    gen = load_transcripts(spark, SF_SMALL, rep=4)
-    mat = materialized_transcripts(spark, SF_SMALL, rep=4, base_dir=str(tmp_path))
+    gen = load_transcripts(spark, SF_SMALL, rep=REP)
+    mat = stored_transcripts
     cols = ["conv_id", "turn_idx", "md5", "sha1", "sha256", "score",
             "level", "n_reasons"]
     r_join = scan_transcripts(spark, gen, sigs, CFG).routed.select(*cols)
@@ -213,8 +230,6 @@ def test_literal_dims_equal_join_dims(spark, sigs, tmp_path):
         map(tuple, r_lit.collect())
     )
     # and the score-only pipeline agrees with itself across the two paths
-    from loki_rs_spark.plans.pipeline import scan_transcripts_scores
-
     s_cols = ["conv_id", "turn_idx", "n_reasons", "score", "level"]
     s_join = scan_transcripts_scores(spark, gen, sigs, CFG).routed.select(*s_cols)
     s_lit = scan_transcripts_scores(spark, mat, sigs, CFG).routed.select(*s_cols)
@@ -223,11 +238,58 @@ def test_literal_dims_equal_join_dims(spark, sigs, tmp_path):
     )
 
 
-@pytest.mark.parametrize("impl", ["pandas", "mapinarrow"])
+@pytest.mark.parametrize("impl", ["pandas", "mapinarrow", "scores"])
 def test_unknown_matcher_rejected(spark, transcripts, sigs, impl):
-    """Only the arrow and catalyst matchers exist."""
+    """Only the arrow and catalyst matchers exist; the score-only shape
+    is reachable through scan_transcripts_scores alone."""
     with pytest.raises(ValueError, match="unknown matcher"):
         scan_transcripts(spark, transcripts, sigs, CFG, matcher=impl)
+
+
+@pytest.mark.parametrize("shape", ["arrow", "catalyst", "scores"])
+def test_null_tool_turns_are_scanned(spark, sigs, shape):
+    """A turn with a NULL `tool` matches no exclusion: it is counted as
+    scanned and matched on its text like any other turn (filename IOCs
+    cannot fire; external variables read '')."""
+    from pyspark.sql import functions as F
+
+    rows = [
+        ("EICAR-TEST-PAYLOAD-ALPHA", None),
+        ("beacon to evil-c2.example.com now", None),
+        ("", None),
+        ("a perfectly clean turn", None),
+        (None, None),
+        ("EICAR-TEST-PAYLOAD-ALPHA", "tool-1"),
+        ("EICAR-TEST-PAYLOAD-ALPHA", "debug-tool-7"),  # excluded
+    ]
+    df = spark.createDataFrame(
+        [(f"n{i}", i, "user", text, tool) for i, (text, tool) in enumerate(rows)],
+        "conv_id string, turn_idx int, role string, text string, tool string",
+    ).withColumn("ts", F.lit("2026-01-01").cast("timestamp"))
+    if shape == "scores":
+        result = scan_transcripts_scores(spark, df, sigs, CFG)
+    else:
+        result = scan_transcripts(spark, df, sigs, CFG, matcher=shape)
+    expected = {}
+    for i, (text, tool) in enumerate(rows):
+        routed = scan_turn(f"n{i}", i, text, tool, sigs, CFG)
+        if routed is not None:
+            expected[i] = routed
+    actual = {r["turn_idx"]: r for r in result.routed.collect()}
+
+    assert {0, 1} <= set(expected)
+    assert expected[0].level == expected[1].level == "ALERT"
+    assert set(actual) == set(expected)
+    for i, exp in expected.items():
+        act = actual[i]
+        assert (act["level"], act["score"], act["n_reasons"]) == (
+            exp.level, exp.score, exp.n_reasons
+        ), i
+        if shape != "scores":
+            assert [r["message"] for r in act["reasons"]] == [
+                r.message for r in exp.reasons
+            ], i
+    assert result.scanned.count() == len(rows) - 1
 
 
 def test_hash_ioc_hits_without_hash_iocs(spark, monkeypatch):
