@@ -14,8 +14,7 @@ Golden vector (src/helpers/score.rs:42-107, authoritative over the docs):
 [100,100,100]->100, []->0, [70,70,50,40,40]->84.195859375.
 
 The Spark rendering is a pure per-row array fold with higher-order functions
-(sort_array + zip_with + aggregate) — no UDF, no shuffle, whole-stage
-codegen'd.
+(filter + sort_array + aggregate) — no UDF, no shuffle.
 """
 
 from __future__ import annotations
@@ -52,44 +51,18 @@ def weighted_score_col(sub_scores: Column) -> Column:
     """Catalyst rendering of the fold over an ``array<int>`` column.
     Returns the raw double score (un-rounded).
 
-    Performance note: higher-order functions (filter/sort/zip_with/
-    aggregate) evaluate interpreted per row and dominated the pipeline's
-    CPU profile, so the 0/1/2-reason cases (virtually every matched turn
-    in practice) take closed forms behind lazily-evaluated CASE branches.
-    The 2-reason form is bit-identical to the fold (same operation order);
-    the 1-reason form differs by <=1 ulp (the fold computes
-    100*(1-(1-s/100)) which does not round-trip exactly in binary) — both
-    round to the same integer score, which is what the pipeline emits
-    (i16 parity with the reference)."""
-    empty = F.size(sub_scores) == 0
-    positive = F.filter(sub_scores, lambda s: s > F.lit(0))
-    n_pos = F.size(positive)
-    hi = F.array_max(positive).cast("double")
-    lo = F.array_min(positive).cast("double")
-    one_form = hi
-    two_form = F.lit(100.0) * (
-        F.lit(1.0)
-        - (F.lit(1.0) - hi / F.lit(100.0))
-        * (F.lit(1.0) - lo / F.lit(100.0) / F.lit(2.0))
-    )
-
-    ordered = F.sort_array(positive, asc=False)
-    ranks = F.sequence(F.lit(1), F.size(ordered))
-    terms = F.zip_with(
+    One `aggregate` over the positive sub-scores sorted descending,
+    carrying (product, 2^i) in the same operation order as
+    `weighted_score`, so the two agree bit for bit."""
+    ordered = F.sort_array(F.filter(sub_scores, lambda s: s > 0), asc=False)
+    return F.aggregate(
         ordered,
-        ranks,
-        lambda s, i: F.lit(1.0)
-        - s.cast("double") / F.lit(100.0) / F.pow(F.lit(2.0), i.cast("double") - 1),
-    )
-    product = F.aggregate(terms, F.lit(1.0), lambda acc, t: acc * t)
-    general = F.lit(100.0) * (F.lit(1.0) - product)
-
-    return (
-        F.when(empty, F.lit(0.0))
-        .when(n_pos == 0, F.lit(0.0))
-        .when(n_pos == 1, one_form)
-        .when(n_pos == 2, two_form)
-        .otherwise(general)
+        F.struct(F.lit(1.0).alias("p"), F.lit(1.0).alias("w")),
+        lambda acc, s: F.struct(
+            (acc["p"] * (F.lit(1.0) - s / F.lit(100.0) / acc["w"])).alias("p"),
+            (acc["w"] * F.lit(2.0)).alias("w"),
+        ),
+        lambda acc: F.lit(100.0) * (F.lit(1.0) - acc["p"]),
     )
 
 

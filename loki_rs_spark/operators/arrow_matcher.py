@@ -476,11 +476,11 @@ def _arrow_matcher_udf(
 
     match.__name__ = name
     # The matcher is pure, but the non-deterministic marking is an
-    # optimizer fence: without it, the candidate-first routed filter —
-    # which references this UDF's output — is pushed below the
-    # projection by SUBSTITUTING the UDF call into the predicate, and the
-    # plan carries TWO ArrowEvalPython nodes (every row pays the matcher
-    # twice). Pinned for both matchers by tests/test_pipeline.py
+    # optimizer fence: without it, the routed filter — whose substituted
+    # n_reasons/score trees reference this UDF's output — is pushed below
+    # the projection by SUBSTITUTING the UDF call into the predicate, and
+    # the plan carries TWO ArrowEvalPython nodes (every row pays the
+    # matcher twice). Pinned for both matchers by tests/test_pipeline.py
     # (test_scan_routed_plan_invariants, test_score_only_plan_invariants).
     return arrow_udf(match, return_ddl).asNondeterministic()
 

@@ -90,17 +90,19 @@ def _ext_var_sql(var: str) -> str:
         TOOL_TYPE_RULES,
     )
 
+    # NULL tool/role read as '' (ext_bits.catalyst_ext_var, scan_turn)
+    tool = "coalesce(tool, '')"
     if var in ("filename", "filepath"):
-        return "tool"
+        return tool
     if var == "owner":
-        return "role"
+        return "coalesce(role, '')"
     if var == "extension":
-        return f"regexp_extract(tool, {_q(EXTENSION_REGEX)}, 1)"
+        return f"regexp_extract({tool}, {_q(EXTENSION_REGEX)}, 1)"
     if var == "filetype":
         whens = []
         for op, arg, label in TOOL_TYPE_RULES:
             fn = "ends_with" if op == "endswith" else "starts_with"
-            whens.append(f"WHEN {fn}(tool, {_q(arg)}) THEN {_q(label)}")
+            whens.append(f"WHEN {fn}({tool}, {_q(arg)}) THEN {_q(label)}")
         return "CASE " + " ".join(whens) + f" ELSE {_q(TOOL_TYPE_DEFAULT)} END"
     raise ValueError(f"unknown external var {var}")  # pragma: no cover
 

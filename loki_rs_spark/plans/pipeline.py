@@ -226,47 +226,31 @@ def _build_scan(
         if reasons else []
     )
 
-    def project(frame: DataFrame) -> DataFrame:
-        # Staged projections so the heavy item tree evaluates ONCE per
-        # row: stage 1 aliases it (used 2x downstream — size + score
-        # fold — so CollapseProject keeps the alias materialized instead
-        # of re-inlining copies of the tree); stage 2 derives
-        # n_reasons/score from the attribute; stage 3 derives level from
-        # the score attribute (and drops the score-only `_scores`).
-        staged = frame.select(
-            "conv_id", "turn_idx", "role", "tool", "ts", *extra,
-            all_items.alias(key),
-        )
-        sub_scores = (
-            F.transform(F.col(key), lambda r: r["score"]) if reasons
-            else F.col(key)
-        )
-        staged = staged.select(
-            "*",
-            F.size(key).alias("n_reasons"),
-            rounded_score_col(weighted_score_col(sub_scores)).alias("score"),
-        )
-        return staged.select(
-            *[c for c in staged.columns if c != "_scores"],
-            severity_col(F.col("score"), cfg).alias("level"),
-        )
+    # Staged projections so the item tree evaluates once per row: its
+    # alias is read twice (size, score), so CollapseProject keeps it.
+    staged = df.select(
+        "conv_id", "turn_idx", "role", "tool", "ts", *extra,
+        all_items.alias(key),
+    )
+    sub_scores = (
+        F.transform(F.col(key), lambda r: r["score"]) if reasons
+        else F.col(key)
+    )
+    staged = staged.select(
+        "*",
+        F.size(key).alias("n_reasons"),
+        rounded_score_col(weighted_score_col(sub_scores)).alias("score"),
+    )
+    evaluated = staged.select(
+        *[c for c in staged.columns if c != "_scores"],
+        severity_col(F.col("score"), cfg).alias("level"),
+    )
 
-    evaluated = project(df)
-
-    # Candidate-first routing: Catalyst's PushDownPredicates rewrites
-    # filter(project(x)) into project(filter(x)) by SUBSTITUTING the
-    # n_reasons/level expressions into the predicate (a non-deterministic
-    # barrier column does NOT stop it — only predicates referencing a
-    # non-deterministic alias are pinned), so filtering `evaluated` would
-    # re-evaluate the heavy reason/score trees up to 3x per row. Instead
-    # the routed branch filters FIRST on the cheap materialized candidate
-    # precursors (matcher output sizes, hash-join hit) — the same
-    # superset predicate that gates assembly — so the expensive trees,
-    # substituted or not, only ever evaluate over the sparse candidate
-    # rows (measured -2.4s/M rows at local[8]). On the catalyst path the
-    # candidate is the literal True, which the optimizer prunes.
-    routed = project(df.filter(candidate)).filter(
-        (F.col("n_reasons") > 0) & F.col("level").isNotNull()
+    # `score >= notice_threshold` is `level IS NOT NULL` (ScanConfig
+    # validates alert >= warning >= notice), and substitutes one score
+    # tree into the pushed-down filter instead of severity_col's three.
+    routed = evaluated.filter(
+        (F.col("n_reasons") > 0) & (F.col("score") >= cfg.notice_threshold)
     )
     if reasons:
         routed = routed.withColumn(

@@ -346,7 +346,7 @@ def scan_turn(
     tool: str | None,
     sigs: SignatureSet,
     cfg: ScanConfig = DEFAULT_CONFIG,
-    role: str = "user",
+    role: str | None = "user",
     source_kind: str = "file",
 ) -> RoutedRow | None:
     """Returns the routed row, or None if the turn is excluded / FP /
@@ -415,7 +415,7 @@ def scan_turn(
 
     # 3. YARA subset, rules in definition order; condition AST evaluated
     # per row with external variables (filename/.../owner)
-    ext = _ext_vars(tool or "", role)
+    ext = _ext_vars(tool or "", role or "")
     for rule in sigs.yara_rules:
         per_string: list[tuple[str, list[tuple[int, str]]]] = []
         ident_fired: list[tuple[str, bool]] = []

@@ -79,6 +79,37 @@ def test_routed_row_equality(spark, transcripts, sigs, expected_rows, impl):
                 assert ar["matched_strings"] == er.matched_strings, key
 
 
+@pytest.mark.parametrize("shape", ["arrow", "catalyst", "scores"])
+def test_zero_thresholds_route_matched_rows_only(
+    spark, transcripts, sigs, expected_rows, shape
+):
+    """With every threshold at 0 every row's level is ALERT, so only the
+    `n_reasons > 0` conjunct of the routed filter keeps unmatched rows
+    out of `routed`."""
+    cfg = ScanConfig(alert_threshold=0, warning_threshold=0, notice_threshold=0)
+    expected = {}
+    for r in transcripts.collect():
+        row = scan_turn(
+            r["conv_id"], r["turn_idx"], r["text"], r["tool"], sigs, cfg,
+            role=r["role"],
+        )
+        if row is not None:
+            expected[(row.conv_id, row.turn_idx)] = (
+                row.level, row.score, row.n_reasons
+            )
+    if shape == "scores":
+        result = scan_transcripts_scores(spark, transcripts, sigs, cfg)
+    else:
+        result = scan_transcripts(spark, transcripts, sigs, cfg, matcher=shape)
+    actual = {
+        (r["conv_id"], r["turn_idx"]): (r["level"], r["score"], r["n_reasons"])
+        for r in result.routed.collect()
+    }
+    # the below-notice rows of the default config route here
+    assert len(expected) > len(expected_rows)
+    assert actual == expected
+
+
 @pytest.mark.parametrize("source", ["generator", "stored"])
 @pytest.mark.parametrize("source_kind", ["file", "process"])
 def test_score_only_path_equals_full(
@@ -173,10 +204,11 @@ def test_scan_routed_plan_invariants(spark, stored_transcripts, sigs):
     """Pins the plan shape PLANS.md claims for the production scan over a
     stored table: exactly ONE python boundary, every dimension side
     broadcast, ZERO hash-partitioning data shuffles between scan and
-    routed, and no NULL-`tool` drop (see test_null_tool_turns_are_scanned)."""
-    plan = _executed_plan(
-        scan_transcripts(spark, stored_transcripts, sigs).routed
-    )
+    routed, no NULL-`tool` drop (see test_null_tool_turns_are_scanned),
+    and a routed plan of the same order of size as `evaluated`'s."""
+    result = scan_transcripts(spark, stored_transcripts, sigs)
+    plan = _executed_plan(result.routed)
+    assert len(plan) <= 4 * len(_executed_plan(result.evaluated))
     assert "Exchange hashpartitioning" not in plan
     assert plan.count("ArrowEvalPython") == 1
     assert "IsNotNull(tool)" not in plan
@@ -193,10 +225,14 @@ def test_scan_routed_plan_invariants(spark, stored_transcripts, sigs):
 def test_score_only_plan_invariants(spark, stored_transcripts, sigs):
     """The score-only pipeline keeps the same plan shape over a stored
     table, on both branches: exactly ONE python boundary (the
-    asNondeterministic fence keeps the candidate-first routed filter
-    from duplicating the matcher), one broadcast (the FP anti-join), and
-    no hash-partitioning shuffle."""
+    asNondeterministic fence keeps the routed filter, which reads the
+    matcher's output, from duplicating the matcher), one broadcast (the
+    FP anti-join), no hash-partitioning shuffle, and a routed plan of the
+    same order of size as `evaluated`'s."""
     result = scan_transcripts_scores(spark, stored_transcripts, sigs)
+    assert len(_executed_plan(result.routed)) <= 4 * len(
+        _executed_plan(result.evaluated)
+    )
     for name in ("routed", "evaluated"):
         plan = _executed_plan(getattr(result, name))
         assert plan.count("ArrowEvalPython") == 1, name
@@ -206,9 +242,13 @@ def test_score_only_plan_invariants(spark, stored_transcripts, sigs):
 
 def test_catalyst_plan_invariants(spark, stored_transcripts, sigs):
     """The catalyst matcher over a stored table, on both branches: no
-    python boundary at all, one broadcast (the FP anti-join), and no
-    hash-partitioning shuffle."""
+    python boundary at all, one broadcast (the FP anti-join), no
+    hash-partitioning shuffle, and a routed plan of the same order of
+    size as `evaluated`'s."""
     result = scan_transcripts(spark, stored_transcripts, sigs, matcher="catalyst")
+    assert len(_executed_plan(result.routed)) <= 4 * len(
+        _executed_plan(result.evaluated)
+    )
     for name in ("routed", "evaluated"):
         plan = _executed_plan(getattr(result, name))
         assert plan.count("ArrowEvalPython") == 0, name

@@ -1,6 +1,6 @@
-"""Property-based checks (hypothesis): the Catalyst score fold agrees with
-the pure-Python reference implementation on arbitrary sub-score vectors,
-and severity classification is monotone in the score."""
+"""Property-based checks (hypothesis): the Catalyst score fold equals the
+pure-Python reference implementation on arbitrary sub-score vectors. Plus
+severity_col against its thresholds."""
 
 from __future__ import annotations
 
@@ -39,7 +39,7 @@ def test_spark_fold_property(spark, score_lists):
         ).collect()
     }
     for i, xs in enumerate(score_lists):
-        assert got[i] == pytest.approx(weighted_score(xs), abs=1e-9), xs
+        assert got[i] == weighted_score(xs), xs
 
 
 @given(subscores)
@@ -53,29 +53,39 @@ def test_score_bounds_and_monotonicity(xs):
     assert weighted_score(list(reversed(xs))) == pytest.approx(s, abs=1e-12)
 
 
-@given(st.integers(min_value=0, max_value=100))
-@settings(max_examples=101, deadline=None)
-def test_severity_thresholds(score):
-    cfg = ScanConfig()
-    if score >= 80:
-        expected = "ALERT"
-    elif score >= 60:
-        expected = "WARNING"
-    elif score >= 40:
-        expected = "NOTICE"
-    else:
-        expected = None
-    # mirror of severity_col's CASE — kept in lockstep by this test
-    got = (
-        "ALERT"
-        if score >= cfg.alert_threshold
-        else "WARNING"
-        if score >= cfg.warning_threshold
-        else "NOTICE"
-        if score >= cfg.notice_threshold
-        else None
-    )
-    assert got == expected
+def test_severity_thresholds(spark):
+    """severity_col evaluated in Spark: the default 80/60/40 labels, and
+    `level IS NOT NULL` <=> `score >= notice_threshold` (the routed filter
+    relies on it)."""
+    from pyspark.sql import functions as F
+
+    from loki_rs_spark.functions.score import severity_col
+
+    scores = spark.range(-1, 102).select(F.col("id").cast("int").alias("score"))
+
+    def levels(cfg):
+        return {
+            r["score"]: r["level"]
+            for r in scores.select(
+                "score", severity_col(F.col("score"), cfg).alias("level")
+            ).collect()
+        }
+
+    for cfg in (ScanConfig(), ScanConfig(0, 0, 0)):
+        got = levels(cfg)
+        assert sorted(got) == list(range(-1, 102))
+        for score, level in got.items():
+            assert (level is not None) == (score >= cfg.notice_threshold), (
+                cfg, score,
+            )
+    for score, level in levels(ScanConfig()).items():
+        expected = (
+            "ALERT" if score >= 80
+            else "WARNING" if score >= 60
+            else "NOTICE" if score >= 40
+            else None
+        )
+        assert level == expected, score
 
 
 def test_round_half_away_matches_rust_examples():

@@ -42,15 +42,19 @@ def test_round_half_away():
 
 
 def test_spark_fold_matches_golden(spark):
+    """The Catalyst fold equals the Python reference exactly (same
+    operation order), on the golden vector and every single-score list."""
     from pyspark.sql import functions as F
 
-    rows = [(i, scores) for i, (scores, _) in enumerate(GOLDEN)]
-    df = spark.createDataFrame(rows, "id int, subs array<int>")
+    lists = [scores for scores, _ in GOLDEN] + [[s] for s in range(1, 101)]
+    df = spark.createDataFrame(list(enumerate(lists)), "id int, subs array<int>")
     out = {
         r["id"]: r["w"]
         for r in df.select(
             "id", weighted_score_col(F.col("subs")).alias("w")
         ).collect()
     }
+    for i, scores in enumerate(lists):
+        assert out[i] == weighted_score(scores), scores
     for i, (scores, expected) in enumerate(GOLDEN):
         assert out[i] == pytest.approx(expected, abs=1e-9), scores

@@ -395,6 +395,8 @@ EXTVAR_SIGS = _sigs(
         ("clean", "c:/x/mimikatz.exe", "tool", ["ToolRoleMimi", "PathMatch"]),
         ("clean", "c:/x/mimikatz.exe", "user", ["PathMatch"]),  # owner
         ("clean", "c:/x/other.bin", "tool", []),  # BINARY != executable
+        ("clean", "c:/x/mimikatz.exe", None, ["PathMatch"]),  # NULL owner
+        ("ran netcat", None, None, []),  # NULL filename/extension
     ],
 )
 def test_extvar_truth_table(spark, text, tool, role, expected_rules):
@@ -418,6 +420,43 @@ def test_extvar_truth_table(spark, text, tool, role, expected_rules):
             else []
         )
         assert got == expected_rules, f"matcher={matcher}"
+
+
+def test_oracle_ext_preds_match_ext_bits_on_null_tool_role(spark, sigs):
+    """The DuckDB oracle's external-variable SQL reads a NULL tool/role as
+    '' like the Spark ext bits do: every bundled atom (e.g. `owner !=
+    "user"`, which fires on a NULL role) has the same truth in both."""
+    import duckdb
+
+    from loki_rs_spark.operators.ext_bits import ext_bits_col
+    from loki_rs_spark.oracle import _SqlCondBackend
+    from loki_rs_spark.signatures.conditions import collect_ext_atoms
+
+    atoms = collect_ext_atoms(sigs)
+    assert any(a.var == "owner" and a.op == "ne" for a in atoms)
+    rows = [
+        (0, None, None),
+        (1, None, "user"),
+        (2, "c:/x/mimikatz.exe", None),
+        (3, "c:/x/mimikatz.exe", "tool"),
+    ]
+    backend = _SqlCondBackend(sigs.yara_rules[0])
+    preds = ", ".join(
+        f"coalesce({backend.ext_pred(a)}, false)" for a in atoms
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INTEGER, tool VARCHAR, role VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
+    oracle = {
+        r[0]: list(r[1:])
+        for r in con.execute(f"SELECT i, {preds} FROM t").fetchall()
+    }
+    df = spark.createDataFrame(rows, "i int, tool string, role string")
+    bits = {
+        r["i"]: [bool(r["b"] >> k & 1) for k in range(len(atoms))]
+        for r in df.select("i", ext_bits_col(sigs).alias("b")).collect()
+    }
+    assert bits == oracle
 
 
 NEGATED_SIGS = _sigs(
