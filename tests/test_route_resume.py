@@ -153,6 +153,132 @@ def test_resume_skips_completed(spark, sigs, tmp_path):
     assert tot["n"] == len(expected)
 
 
+@pytest.fixture(scope="module")
+def stored(spark, tmp_path_factory):
+    from loki_rs_spark.sources.transcripts import materialized_transcripts
+
+    return materialized_transcripts(
+        spark, SF_SMALL, rep=REP, base_dir=str(tmp_path_factory.mktemp("t"))
+    )
+
+
+@pytest.fixture(scope="module")
+def clean_stored(spark, stored, result, tmp_path_factory):
+    """The stored rows the scan leaves unrouted, as a stored table."""
+    keys = result.routed.select("conv_id", "turn_idx")
+    path = str(tmp_path_factory.mktemp("clean") / "t")
+    stored.join(keys, ["conv_id", "turn_idx"], "left_anti").write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _sink_files(out: str) -> list[str]:
+    import glob
+
+    return sorted(glob.glob(f"{out}/routed/part_id=*/*.parquet"))
+
+
+LINEAGE_FIELDS = [
+    ("part_id", "bigint"), ("n_routed", "bigint"), ("n_alerts", "bigint"),
+    ("n_warnings", "bigint"), ("n_notices", "bigint"),
+    ("completed_at", "double"),
+]
+
+
+def _lineage(spark, out: str) -> dict[int, tuple]:
+    lineage = spark.read.parquet(f"{out}/lineage")
+    assert [
+        (f.name, f.dataType.simpleString()) for f in lineage.schema
+    ] == LINEAGE_FIELDS
+    rows = lineage.collect()
+    by_bucket = {r["part_id"]: tuple(r)[1:5] for r in rows}
+    assert len(by_bucket) == len(rows)  # one row per processed bucket
+    return by_bucket
+
+
+@pytest.mark.parametrize("source", ["generator", "stored"])
+def test_sink_files_sorted(spark, sigs, stored, tmp_path, source):
+    """Every bucket file of the routed sink is in (conv_id, turn_idx)
+    order, one file per bucket."""
+    import pyarrow.parquet as pq
+
+    frame = (
+        load_transcripts(spark, SF_SMALL, rep=REP) if source == "generator"
+        else stored
+    )
+    out = str(tmp_path / "out")
+    run_resumable_scan(spark, frame, sigs, out, CFG, n_buckets=8)
+    files = _sink_files(out)
+    assert len(files) == 8
+    for f in files:
+        rows = pq.read_table(f, columns=["conv_id", "turn_idx"]).to_pylist()
+        keys = [(r["conv_id"], r["turn_idx"]) for r in rows]
+        assert keys == sorted(keys), f
+
+
+def test_lineage_matches_sink(spark, sigs, stored, tmp_path):
+    """One lineage row per processed bucket; its counts equal the counts
+    of that bucket's rows in the routed sink, zeros where the bucket
+    routed nothing."""
+    from collections import Counter
+
+    out = str(tmp_path / "out")
+    n_buckets = 64
+    assert run_resumable_scan(
+        spark, stored, sigs, out, CFG, n_buckets=n_buckets
+    ) == set(range(n_buckets))
+    lineage = _lineage(spark, out)
+    assert set(lineage) == set(range(n_buckets))
+    sink = Counter(
+        (r["part_id"], r["level"])
+        for r in read_routed(spark, out).select("part_id", "level").collect()
+    )
+    for b, counts in lineage.items():
+        levels = [sink[(b, lvl)] for lvl in ("ALERT", "WARNING", "NOTICE")]
+        assert counts == (sum(levels), *levels), b
+    assert any(c == (0, 0, 0, 0) for c in lineage.values())
+
+
+def test_lineage_of_a_run_that_routes_nothing(
+    spark, sigs, clean_stored, tmp_path
+):
+    """A run whose input routes nothing writes one zero lineage row per
+    bucket and no sink file, and does not raise."""
+    out = str(tmp_path / "out")
+    assert run_resumable_scan(
+        spark, clean_stored, sigs, out, CFG, n_buckets=8
+    ) == set(range(8))
+    assert _lineage(spark, out) == {b: (0, 0, 0, 0) for b in range(8)}
+    assert _sink_files(out) == []
+
+
+def test_preclear_removes_stale_bucket(
+    spark, sigs, stored, clean_stored, tmp_path
+):
+    """A pending bucket's dir left over from a crashed run is removed even
+    when the bucket routes nothing this run; a completed bucket's dir is
+    left as it is."""
+    import shutil
+
+    out = str(tmp_path / "out")
+    run_resumable_scan(
+        spark, stored, sigs, out, CFG, n_buckets=8, only_buckets={0}
+    )
+    (done_file,) = _sink_files(out)
+    with open(done_file, "rb") as f:
+        done_bytes = f.read()
+    stale_dir = tmp_path / "out" / "routed" / "part_id=5"
+    stale_dir.mkdir()
+    shutil.copy(done_file, stale_dir / "part-00000-stale.parquet")
+
+    assert run_resumable_scan(
+        spark, clean_stored, sigs, out, CFG, n_buckets=8
+    ) == set(range(1, 8))
+    assert _sink_files(out) == [done_file]
+    with open(done_file, "rb") as f:
+        assert f.read() == done_bytes
+    assert read_routed(spark, out).filter("part_id = 5").count() == 0
+
+
 def test_observe_metrics(spark, result):
     from loki_rs_spark.operators.route import routed_with_observation
 
