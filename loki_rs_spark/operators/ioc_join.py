@@ -34,6 +34,7 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..signatures.model import C2IOC, FilenameIOC, SignatureSet
 
 REASON_TYPE = (
@@ -78,11 +79,10 @@ def reason_struct(
 
 
 # Below this many entries a hash dim table MAY be rendered as literal
-# expressions (InSet probe / CASE lookup) instead of a broadcast join:
-# in local mode every broadcast exchange costs ~0.25-0.4s of per-action
-# latency (build job + torrent registration) — measured round 7 — which
-# dwarfs any per-row cost at ANY data volume since both renderings are
-# O(1) per row. Above the threshold the broadcast-join path is kept: a
+# expressions (InSet probe / CASE lookup) instead of a broadcast join,
+# saving that join's broadcast: ~0.1s per action for a LocalRelation dim
+# (session.local_frame; warm, 4 cores, 40k probe rows). Both renderings
+# are O(1) per row. Above the threshold the broadcast-join path is kept: a
 # million-entry IOC table belongs in a hash relation, not a CASE chain.
 # Same dual-path spirit as C2_GATE_MAX_LITERALS below.
 #
@@ -125,16 +125,19 @@ def anti_join_fp_hashes(
     join-rendered: a literal NOT-IN filter here gets pushed below the
     hash projection by substituting md5(text) into the scan filter, and
     every row hashes twice (measured +20-30% on the big gate legs), so
-    `literal_dims` is accepted for signature symmetry but ignored. Three
-    broadcast anti-joins (each a BroadcastHashJoin, no shuffle); the
-    first also fences further predicate pushdown toward the scan."""
+    `literal_dims` is accepted for signature symmetry but ignored. One
+    broadcast anti-join per FP hash type present (each a
+    BroadcastHashJoin, no shuffle); the first also fences further
+    predicate pushdown toward the scan. Each FP dim is a LocalRelation
+    (session.local_frame), so its broadcast runs no Python job and costs
+    ~0.1s per action (warm, 4 cores, 40k probe rows)."""
     del literal_dims  # see docstring: filter rendering double-hashes
     for hash_type in HASH_TYPES:
         values = [h.hash_value for h in sigs.hashes_of_type(hash_type, fp=True)]
         if not values:
             continue
-        fp_df = spark.createDataFrame(
-            [(v,) for v in values], f"fp_{hash_type}_value string"
+        fp_df = local_frame(
+            spark, [(v,) for v in values], f"fp_{hash_type}_value string"
         )
         df = df.join(
             F.broadcast(fp_df),
@@ -217,7 +220,8 @@ def hash_reason_array(
                 )
             )
             continue
-        ioc_df = spark.createDataFrame(
+        ioc_df = local_frame(
+            spark,
             list(uniq.values()),
             f"ioc_{hash_type}_hash string, ioc_{hash_type}_score int, "
             f"ioc_{hash_type}_desc string",

@@ -193,9 +193,9 @@ def _build_scan(
     score-only rows)."""
     # literal hash-dim rendering only over stored-table inputs (the
     # production shape — see ioc_join.HASH_DIM_MAX_LITERALS): each
-    # avoided broadcast exchange saves ~0.25-0.4s of per-action latency;
-    # over the live generator frame the joins stay, doubling as pushdown
-    # fences for the generator's CASE trees.
+    # avoided broadcast exchange of a LocalRelation dim saves ~0.1s of
+    # per-action latency; over the live generator frame the joins stay,
+    # doubling as pushdown fences for the generator's CASE trees.
     literal_dims = plain_relation_input(transcripts)
     df = apply_exclusions(transcripts, cfg.exclude_patterns)
     df = apply_size_filter(df, cfg.max_text_chars)

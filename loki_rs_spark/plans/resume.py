@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
 from ..config import DEFAULT_CONFIG, ScanConfig
+from ..session import local_frame
 from ..signatures.model import SignatureSet
 from .pipeline import scan_transcripts
 
@@ -124,7 +125,6 @@ def run_resumable_scan(
     _clear_pending_partitions(spark, f"{out_dir}/routed", pending)
 
     started = time.time()
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # The write input, built once. An explicit partition count: AQE does
     # not coalesce a repartition-by-number shuffle, so up to `n` tasks
     # write the bucket files in parallel (still one file per bucket). The
@@ -167,7 +167,7 @@ def run_resumable_scan(
         (b, *counts.get(b, (0, 0, 0, 0)), started) for b in sorted(pending)
     ]
     write_partitioned(
-        spark.createDataFrame(lineage, LINEAGE_SCHEMA),
+        local_frame(spark, lineage, LINEAGE_SCHEMA),
         f"{out_dir}/lineage", (), mode="append",
     )
     return pending

@@ -21,6 +21,7 @@ from .plans.pipeline import (
     scan_transcripts_scores,
 )
 from .plans.skew import per_conv_rollup_salted
+from .session import local_frame
 from .signatures import load_signature_set
 from .signatures.model import SignatureSet
 from .sources.transcripts import DEFAULT_REP, load_transcripts
@@ -133,10 +134,11 @@ def q_hash_ioc_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     single union'd broadcast dim keyed on (type, value). The previous
     union-of-three-joins plan re-ran the whole generator subtree and
     paid a separate broadcast build per hash type (3 scans + 3
-    exchanges + 3 broadcast builds -> 1/1/1; per-action broadcast build
-    latency is ~0.25-0.4s in local mode). Row multiset proven identical
-    (exceptAll 0/0 both ways at sf0.1, 3962 rows); same oracle SQL.
-    Warm A/B at sf0.1: 1.8s -> 0.8s."""
+    exchanges + 3 broadcast builds -> 1/1/1). Row multiset proven
+    identical (exceptAll 0/0 both ways at sf0.1, 3962 rows); same oracle
+    SQL. Warm A/B at sf0.1: 1.8s -> 0.8s. The dim is a LocalRelation
+    (session.local_frame), so its broadcast runs no Python job and costs
+    ~0.1s per action (warm, 4 cores)."""
     sigs = bundled_signatures()
     df = with_hashes(load_transcripts(spark, sf_dir, rep=DEFAULT_REP))
     dim_rows: list[tuple[str, str, int]] = []
@@ -150,13 +152,14 @@ def q_hash_ioc_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not types:
         # no hash IOCs: F.array() of zero structs would type as
         # array<void>, so answer the (empty) result directly
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "conv_id string, turn_idx int, hash_type string, "
             "hash_value string, ioc_score int",
         )
-    dim = spark.createDataFrame(
-        dim_rows, "ht string, hash_value string, ioc_score int"
+    dim = local_frame(
+        spark, dim_rows, "ht string, hash_value string, ioc_score int"
     )
     stacked = df.select(
         "conv_id",

@@ -6,7 +6,24 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A small driver-side frame (`rows` in `ddl`'s column order) as an
+    Arrow-backed LocalRelation. `createDataFrame` over a Python list
+    builds a pickled RDD whose every scan is a Python-worker job; an
+    Arrow table crosses to the JVM once and plans as a LocalTableScan,
+    so the scan's one matcher UDF stays the only Python stage."""
+    import pyarrow as pa  # not needed on the session setup path
+
+    schema = DataType.fromDDL(ddl)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.table(
+        [pa.array(c) for c in columns], names=schema.fieldNames()
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def routed_to_jsonl_df(routed: DataFrame, hostname: str = "spark") -> DataFrame:
     """Shape routed rows as LogEvent JSON lines (event_type
@@ -77,8 +79,8 @@ def scan_bracket_events(
             f"Duration: {duration_sec:.1f}s",
         ),
     ]
-    df = spark.createDataFrame(
-        rows, "timestamp string, event_type string, message string"
+    df = local_frame(
+        spark, rows, "timestamp string, event_type string, message string"
     )
     ctx_col = (
         F.create_map(

@@ -60,7 +60,8 @@ def write_partitioned(
     table: str | None = None,
 ) -> None:
     """Write a (possibly partitioned) output table in the configured
-    format. parquet: plain partitioned directory write. iceberg:
+    format. parquet: plain partitioned directory write, a dynamic
+    partition overwrite for 'overwrite_partitions'. iceberg:
     DataFrameWriterV2 — createOrReplace for 'overwrite',
     overwritePartitions for 'overwrite_partitions' (the resume path's
     idempotent bucket rewrite), append for 'append'."""
@@ -68,9 +69,15 @@ def write_partitioned(
 
     fmt = fmt or default_format()
     if fmt == "parquet":
-        writer = df.write.mode(
-            "overwrite" if mode == "overwrite_partitions" else mode
-        )
+        if mode == "overwrite_partitions":
+            # a writer option, not the session conf: whatever the
+            # session's default, only the partitions this write holds are
+            # replaced, and later overwrites keep that default
+            writer = df.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            )
+        else:
+            writer = df.write.mode(mode)
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(path)

@@ -212,14 +212,14 @@ def test_scan_routed_plan_invariants(spark, stored_transcripts, sigs):
     assert "Exchange hashpartitioning" not in plan
     assert plan.count("ArrowEvalPython") == 1
     assert "IsNotNull(tool)" not in plan
-    # round-7: over a stored-table input the tiny hash-IOC dims render as
-    # literal InSet/CASE lookups (ioc_join.HASH_DIM_MAX_LITERALS), so
-    # only the FP anti-join's broadcast remains (3 avoided broadcast
-    # builds at ~0.25-0.4s of per-pass latency each; the FP drop stays a
-    # join because a literal filter would push md5(text) into the scan
-    # and hash every row twice)
+    # over a stored-table input the tiny hash-IOC dims render as literal
+    # InSet/CASE lookups (ioc_join.HASH_DIM_MAX_LITERALS), so only the FP
+    # anti-join's broadcast remains (each broadcast of a LocalRelation dim
+    # costs ~0.1s per pass; the FP drop stays a join because a literal
+    # filter would push md5(text) into the scan and hash every row twice)
     assert plan.count("BroadcastExchange") == 1
     assert "LeftAnti" in plan  # FP anti-join upstream of the UDF
+    assert "ExistingRDD" not in plan  # dims are LocalRelations
 
 
 def test_score_only_plan_invariants(spark, stored_transcripts, sigs):
@@ -238,6 +238,7 @@ def test_score_only_plan_invariants(spark, stored_transcripts, sigs):
         assert plan.count("ArrowEvalPython") == 1, name
         assert plan.count("BroadcastExchange") == 1, name
         assert "Exchange hashpartitioning" not in plan, name
+        assert "ExistingRDD" not in plan, name
 
 
 def test_catalyst_plan_invariants(spark, stored_transcripts, sigs):
@@ -254,6 +255,17 @@ def test_catalyst_plan_invariants(spark, stored_transcripts, sigs):
         assert plan.count("ArrowEvalPython") == 0, name
         assert plan.count("BroadcastExchange") == 1, name
         assert "Exchange hashpartitioning" not in plan, name
+        assert "ExistingRDD" not in plan, name
+
+
+def test_generator_plan_dims_are_local_relations(spark, transcripts, sigs):
+    """Over the generator frame the hash-IOC dims take the broadcast-join
+    path (FP anti-join plus one left join per hash type); every dim is a
+    LocalRelation, so the one Python stage is the matcher UDF."""
+    plan = _executed_plan(scan_transcripts(spark, transcripts, sigs).routed)
+    assert plan.count("BroadcastExchange") == 4
+    assert plan.count("ArrowEvalPython") == 1
+    assert "ExistingRDD" not in plan
 
 
 def test_literal_dims_equal_join_dims(spark, sigs, stored_transcripts):

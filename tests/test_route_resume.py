@@ -279,6 +279,39 @@ def test_preclear_removes_stale_bucket(
     assert read_routed(spark, out).filter("part_id = 5").count() == 0
 
 
+def test_partition_overwrite_ignores_session_conf(spark, sigs, stored, tmp_path):
+    """'overwrite_partitions' replaces only the partitions it writes with
+    the session's partitionOverwriteMode at STATIC (a static overwrite
+    would delete every other partition), and a resumable scan leaves that
+    session conf as it found it."""
+    from loki_rs_spark.session import local_frame
+    from loki_rs_spark.sources.table_format import write_partitioned
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        path = str(tmp_path / "t")
+        ddl = "v string, part_id bigint"
+        write_partitioned(
+            local_frame(spark, [("a", 0), ("b", 1)], ddl), path, ("part_id",)
+        )
+        write_partitioned(
+            local_frame(spark, [("c", 1)], ddl), path, ("part_id",),
+            mode="overwrite_partitions",
+        )
+        assert sorted(
+            tuple(r) for r in spark.read.parquet(path).collect()
+        ) == [("a", 0), ("c", 1)]
+
+        run_resumable_scan(
+            spark, stored, sigs, str(tmp_path / "out"), CFG, n_buckets=8
+        )
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.set(key, saved)
+
+
 def test_observe_metrics(spark, result):
     from loki_rs_spark.operators.route import routed_with_observation
 
