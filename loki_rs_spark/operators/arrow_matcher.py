@@ -8,9 +8,12 @@ The matcher stays in Arrow end to end:
   kernel call over the batch's unique values (C++-vectorized RE2 /
   literal scan, zero Python objects in the hot path);
 * per-rule condition algebra on numpy boolean masks;
-* Python-level work (matched-string offsets, struct building) happens only
+* Python-level work (matched-string offsets, reason building) happens only
   for the sparse hit rows, and the output list<struct> arrays are built
-  from offsets + flat values (no per-row Python lists for misses).
+  from offsets + flat values (no per-row Python lists for misses);
+* the reasons leave the kernel in the pipeline's final shape
+  (ioc_join.REASON_TYPE, messages included), so the Spark side only
+  concatenates them with the hash reasons.
 
 The full matcher (`match_record_batch`) and the score-only one
 (`match_scores_record_batch`) share one mask pass (`_batch_masks`) and
@@ -36,6 +39,13 @@ from pyspark.sql import SparkSession
 from ..signatures.compile import boolean_regex, literal_probe
 from ..signatures.conditions import render_condition
 from ..signatures.model import SignatureSet
+from .ioc_join import (
+    C2_GATE_MAX_LITERALS,
+    C2_MSG,
+    FNAME_MSG,
+    REASON_TYPE,
+    YARA_MSG,
+)
 from .matcher import (
     MAX_YARA_MATCHES,
     ExtBits,
@@ -46,28 +56,17 @@ from .matcher import (
     string_occurrence_lines,
 )
 
-FNAME_STRUCT = pa.struct(
+# REASON_TYPE (ioc_join.py) as a pyarrow type: executors have no JVM to
+# parse the DDL, so it is declared twice (tests/test_pipeline.py pins the
+# two equal).
+REASON_STRUCT = pa.struct(
     [
-        pa.field("pattern", pa.string()),
-        pa.field("score", pa.int32()),
-        pa.field("description", pa.string()),
-    ]
-)
-YARA_STRUCT = pa.struct(
-    [
-        pa.field("rule", pa.string()),
+        pa.field("message", pa.string()),
         pa.field("score", pa.int32()),
         pa.field("description", pa.string()),
         pa.field("author", pa.string()),
         pa.field("reference", pa.string()),
         pa.field("matched_strings", pa.list_(pa.string())),
-    ]
-)
-C2_STRUCT = pa.struct(
-    [
-        pa.field("host", pa.string()),
-        pa.field("score", pa.int32()),
-        pa.field("description", pa.string()),
     ]
 )
 
@@ -184,15 +183,15 @@ def _string_mask(arr, s) -> np.ndarray:
     return _mask(arr, boolean_regex(s, "re2"), regex=True)
 
 
-def _list_struct_array(
-    struct_type: pa.StructType, counts: np.ndarray, rows: dict[int, list[dict]]
+def _reason_list_array(
+    counts: np.ndarray, rows: dict[int, list[dict]]
 ) -> pa.Array:
     offsets = np.zeros(len(counts) + 1, dtype=np.int64)
     np.cumsum(counts, out=offsets[1:])
     flat: list[dict] = []
     for i in sorted(rows):
         flat.extend(rows[i])
-    values = pa.array(flat, type=struct_type)
+    values = pa.array(flat, type=REASON_STRUCT)  # absent keys are NULL
     return pa.ListArray.from_arrays(
         pa.array(offsets, type=pa.int32()), values
     )
@@ -254,18 +253,19 @@ def match_record_batch(
     engine, batch: pa.RecordBatch
 ) -> tuple[pa.Array, pa.Array, pa.Array]:
     """Match one RecordBatch of (text, tool, ext_bits); returns the
-    per-row (fname, yara, c2) match-struct list arrays."""
+    per-row (fname, yara, c2) reason lists, each a list<REASON_STRUCT>
+    array carrying the reasons exactly as the pipeline emits them."""
     text_c, fname, yara = _batch_masks(engine, batch)
     n = batch.num_rows
 
     fn_counts = np.zeros(n, dtype=np.int64)
     fn_rows: dict[int, list[dict]] = {}
     for mask, ioc in fname:
-        # one shared (read-only) struct dict per IOC — its fields are
+        # one shared (read-only) reason dict per IOC — its fields are
         # row-independent, so hit rows append the same object instead of
         # building a fresh dict per hit
         entry = {
-            "pattern": ioc.pattern,
+            "message": FNAME_MSG + ioc.pattern,
             "score": ioc.score,
             "description": ioc.description,
         }
@@ -273,7 +273,7 @@ def match_record_batch(
             i = int(idx)
             fn_rows.setdefault(i, []).append(entry)
             fn_counts[i] += 1
-    fname_arr = _list_struct_array(FNAME_STRUCT, fn_counts, fn_rows)
+    fname_arr = _reason_list_array(fn_counts, fn_rows)
 
     ya_counts = np.zeros(n, dtype=np.int64)
     ya_rows: dict[int, list[dict]] = {}
@@ -287,7 +287,7 @@ def match_record_batch(
         # Matched strings depend only on (rule, text VALUE): the string
         # masks scatter from per-unique kernel results, so rows sharing a
         # dict-encoded unique value fire with identical matched_strings.
-        # Compute the struct ONCE per unique value and append the shared
+        # Compute the reason ONCE per unique value and append the shared
         # (read-only) dict per hit row — on replicated corpora (the
         # rep-1600 bench table has ~7 distinct texts per 10k-row batch)
         # this removes ~all per-hit .as_py() + occurrence-walk work.
@@ -311,24 +311,19 @@ def match_record_batch(
                         string_occurrence_lines(s, rx, row_text)
                     )
                 entry = {
-                    "rule": rule.name,
+                    "message": YARA_MSG + rule.name,
                     "score": rule.score,
-                    "description": rule.description,
-                    "author": rule.author,
-                    "reference": rule.reference,
-                    "matched_strings": matched_strings,
+                    "description": rule.description or None,
+                    "author": rule.author or None,
+                    "reference": rule.reference or None,
+                    "matched_strings": matched_strings or None,
                 }
                 per_unique[u] = entry
             ya_rows.setdefault(i, []).append(entry)
             ya_counts[i] += 1
-    yara_arr = _list_struct_array(YARA_STRUCT, ya_counts, ya_rows)
+    yara_arr = _reason_list_array(ya_counts, ya_rows)
 
-    c2_counts, c2_rows = _c2_match_lists(text_c, engine)
-    c2_entries = {
-        i: [{"host": h, "score": s, "description": d} for h, s, d in lst]
-        for i, lst in c2_rows.items()
-    }
-    c2_arr = _list_struct_array(C2_STRUCT, c2_counts, c2_entries)
+    c2_arr = _reason_list_array(*_c2_match_lists(text_c, engine))
     return fname_arr, yara_arr, c2_arr
 
 
@@ -340,7 +335,7 @@ _MAX_C2_MATCHES = 100
 
 def _c2_match_lists(
     text_c: "_CompactCol", engine
-) -> tuple[np.ndarray, dict[int, list[tuple[str, int, str]]]]:
+) -> tuple[np.ndarray, dict[int, list[dict]]]:
     """J4 C2 matching, the arrow scale path. Two stages, both over the
     dict-encoded UNIQUE text values:
 
@@ -354,13 +349,13 @@ def _c2_match_lists(
        LENGTH, so cost is sub-linear in IOC count (matcher.py
        CompiledEngine docs; reference walk: src/main.rs:614-635).
 
-    Returns (per-row match counts, {row: [(host, score, desc), ...]}) —
-    per-host-occurrence duplication and first-match-wins preserved."""
+    Returns (per-row match counts, {row: [reason dict, ...]}) — one
+    reason per host occurrence, first match wins; rows sharing a text
+    value share its (read-only) list."""
     n = text_c.n
     counts = np.zeros(n, dtype=np.int64)
     if not engine.c2:
         return counts, {}
-    from .ioc_join import C2_GATE_MAX_LITERALS
 
     ki = text_c.kernel_input
     if len(engine.c2) > C2_GATE_MAX_LITERALS:
@@ -370,22 +365,28 @@ def _c2_match_lists(
         for ioc in engine.c2:
             gate |= _mask(ki, ioc.server, regex=False, ignore_case=True)
 
-    uniq_lists: dict[int, list[tuple[str, int, str]]] = {}
+    uniq_lists: dict[int, list[dict]] = {}
     for u in np.nonzero(gate)[0]:
         value = ki[int(u)].as_py()
         if not value:
             continue
-        out: list[tuple[str, int, str]] = []
+        out: list[dict] = []
         for host in _HOST_RX.findall(value.lower()):
             hit = engine.c2_lookup(host)
             if hit is not None:
-                out.append((host, hit[1], hit[2]))
+                out.append(
+                    {
+                        "message": C2_MSG + host,
+                        "score": hit[1],
+                        "description": hit[2],
+                    }
+                )
                 if len(out) >= _MAX_C2_MATCHES:
                     break
         if out:
             uniq_lists[int(u)] = out
 
-    rows: dict[int, list[tuple[str, int, str]]] = {}
+    rows: dict[int, list[dict]] = {}
     if uniq_lists:
         row_idx = text_c.row_to_kernel_index()
         hit_uniques = np.array(sorted(uniq_lists), dtype=np.int64)
@@ -436,7 +437,7 @@ def match_scores_record_batch(
     c2_scores = pa.ListArray.from_arrays(
         pa.array(c2_offsets, type=pa.int32()),
         pa.array(
-            [s for i in sorted(c2_rows) for _h, s, _d in c2_rows[i]],
+            [r["score"] for i in sorted(c2_rows) for r in c2_rows[i]],
             type=pa.int32(),
         ),
     )
@@ -454,7 +455,8 @@ def _arrow_matcher_udf(
 ):
     """Scalar Arrow UDF (Spark 4.1 `arrow_udf`, iterator form) over
     (text, tool, ext_bits) that runs `kernel(engine, batch)` per batch
-    and returns its three arrays as struct<fname, yara, c2>. The
+    and returns its three arrays as struct<fname, yara, c2>, typed by
+    `return_ddl` (reason arrays or score arrays). The
     signature payload is broadcast once; each executor process compiles
     it once (`_engine_for`). `name` labels the UDF in query plans."""
     from pyspark.sql.functions import arrow_udf
@@ -502,16 +504,14 @@ def make_arrow_matcher_udf(spark: SparkSession, sigs: SignatureSet):
     """arrow_udf wrapper for match_record_batch — the production matcher:
     ONLY the text, tool and ext_bits columns cross the Python bridge, and
     the match computation runs on Arrow buffers via pyarrow compute
-    kernels."""
+    kernels. Returns struct<fname, yara, c2>, each an array<REASON_TYPE>
+    in the pipeline's reason shape (the catalyst renderings' shape)."""
     return _arrow_matcher_udf(
         spark,
         sigs,
         match_record_batch,
-        "struct<fname:array<struct<pattern:string,score:int,"
-        "description:string>>,"
-        "yara:array<struct<rule:string,score:int,description:string,"
-        "author:string,reference:string,matched_strings:array<string>>>,"
-        "c2:array<struct<host:string,score:int,description:string>>>",
+        f"struct<fname:array<{REASON_TYPE}>,yara:array<{REASON_TYPE}>,"
+        f"c2:array<{REASON_TYPE}>>",
         "match_signatures_arrow",
     )
 

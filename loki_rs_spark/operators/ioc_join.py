@@ -22,9 +22,10 @@ The J3/J4 renderings here serve the zero-Python catalyst cross-check
 (`scan_transcripts(matcher="catalyst")`); the production Arrow matcher
 (arrow_matcher.py) resolves both inside its one UDF.
 
-All reason structs share REASON_TYPE and are assembled in the reference's
-discovery order by the pipeline (filename -> md5 -> sha1 -> sha256 -> YARA
--> C2; SURVEY.md §2.5 A3).
+All reason structs share REASON_TYPE and the message prefixes below
+(*_MSG), whether built here in Catalyst or by the Arrow matcher kernel,
+and are assembled in the reference's discovery order by the pipeline
+(filename -> md5 -> sha1 -> sha256 -> YARA -> C2; SURVEY.md §2.5 A3).
 """
 
 from __future__ import annotations
@@ -147,7 +148,14 @@ def anti_join_fp_hashes(
     return df
 
 
+# Reason message prefixes, shared by the Arrow matcher kernel and the
+# Catalyst renderings (the oracle and the reference scanner keep their own
+# literals, being the independent references).
+FNAME_MSG = "File Name IOC matched PATTERN: "
+FILE_HASH_MSG = "HASH match with IOC HASH: "
 PROCESS_HASH_MSG = "Process Executable Hash Match HASH: "
+YARA_MSG = "YARA match with rule "
+C2_MSG = "C2 IOC match in turn text HOST: "
 
 
 def hash_reason_array(
@@ -172,8 +180,7 @@ def hash_reason_array(
     if source_kind not in ("file", "process"):
         raise ValueError(f"unknown source_kind {source_kind!r}")
     msg_prefix = (
-        PROCESS_HASH_MSG if source_kind == "process"
-        else "HASH match with IOC HASH: "
+        PROCESS_HASH_MSG if source_kind == "process" else FILE_HASH_MSG
     )
     reason_cols: list[Column] = []
     hit_conds: list[Column] = []
@@ -272,7 +279,7 @@ def filename_reason_array(tool: Column, iocs: list[FilenameIOC]) -> Column:
             F.when(
                 cond,
                 reason_struct(
-                    F.lit(f"File Name IOC matched PATTERN: {ioc.pattern}"),
+                    F.lit(FNAME_MSG + ioc.pattern),
                     F.lit(ioc.score),
                     F.lit(ioc.description),
                 ),
@@ -361,7 +368,7 @@ def c2_reason_array(
             result = F.when(
                 cond,
                 reason_struct(
-                    F.concat(F.lit("C2 IOC match in turn text HOST: "), host),
+                    F.concat(F.lit(C2_MSG), host),
                     F.lit(ioc.score),
                     F.lit(ioc.description),
                 ),

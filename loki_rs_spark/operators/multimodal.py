@@ -19,9 +19,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-MEDIA_SCHEMA = (
-    "media_id bigint, kind string, width int, height int, content binary"
-)
 FEATURE_SCHEMA = (
     "media_id bigint, kind string, n_bytes int, feature array<float>"
 )

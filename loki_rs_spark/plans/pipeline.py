@@ -39,6 +39,7 @@ from ..operators.filters import apply_exclusions, apply_size_filter
 from ..operators.hashes import with_hashes
 from ..operators.ioc_join import (
     REASON_TYPE,
+    YARA_MSG,
     anti_join_fp_hashes,
     c2_reason_array,
     c2_text_gate,
@@ -74,30 +75,6 @@ def _nz(arr: Column) -> Column:
     return F.coalesce(arr, F.array().cast(f"array<{REASON_TYPE}>"))
 
 
-def _ioc_reasons_from(col: Column, prefix: str, field: str) -> Column:
-    """Filename/C2 match structs -> reason structs ("{prefix}{field}")."""
-    return F.transform(
-        col,
-        lambda m: reason_struct(
-            F.concat(F.lit(prefix), m[field]), m["score"], m["description"]
-        ),
-    )
-
-
-def _yara_reasons_from(col: Column) -> Column:
-    return F.transform(
-        col,
-        lambda m: reason_struct(
-            F.concat(F.lit("YARA match with rule "), m["rule"]),
-            m["score"],
-            F.nullif(m["description"], F.lit("")),
-            F.nullif(m["author"], F.lit("")),
-            F.nullif(m["reference"], F.lit("")),
-            F.when(F.size(m["matched_strings"]) > 0, m["matched_strings"]),
-        ),
-    )
-
-
 def _catalyst_yara_reasons(sigs: SignatureSet) -> Column:
     """Catalyst fallback for the YARA subset: per-rule static predicates
     rendered from the condition AST (external variables included).
@@ -107,7 +84,7 @@ def _catalyst_yara_reasons(sigs: SignatureSet) -> Column:
         F.when(
             catalyst_rule_condition(rule),
             reason_struct(
-                F.lit(f"YARA match with rule {rule.name}"),
+                F.lit(YARA_MSG + rule.name),
                 F.lit(rule.score),
                 F.lit(rule.description or None),
                 F.lit(rule.author or None),
@@ -132,13 +109,13 @@ def _matcher_items(
     """The one matcher dispatch: adds the matcher's columns and returns
     (df, the four per-source item arrays in discovery order filename ->
     hash -> YARA -> C2, any-candidate predicate). 'arrow' and 'scores'
-    cross the bridge ONCE (reason structs from match_signatures_arrow,
-    int scores from match_scores_arrow); every kernel, J4 C2 included,
-    runs over each batch's unique text/tool values, and external-variable
-    truth crosses as the packed `ext_bits` bigint. 'catalyst' is zero
-    Python: rlike filename predicates, per-rule YARA predicates and the
-    JVM C2 gate + CASE chain, with no cheap precursors, so its candidate
-    is the literal True."""
+    cross the bridge ONCE (REASON_TYPE arrays from match_signatures_arrow,
+    the shape catalyst builds, or int scores from match_scores_arrow);
+    every kernel, J4 C2 included, runs over each batch's unique text/tool
+    values, and external-variable truth crosses as the packed `ext_bits`
+    bigint. 'catalyst' is zero Python: rlike filename predicates, per-rule
+    YARA predicates and the JVM C2 gate + CASE chain, with no cheap
+    precursors, so its candidate is the literal True."""
     if matcher == "catalyst":
         df = df.withColumn(
             "_c2g", c2_text_gate(F.col("text"), list(sigs.c2_iocs))
@@ -171,13 +148,9 @@ def _matcher_items(
     if matcher == "scores":
         hash_scores = F.transform(_nz(hash_reasons), lambda r: r["score"])
         return df, [fname, hash_scores, yara, c2], candidate
-    items = [
-        _ioc_reasons_from(fname, "File Name IOC matched PATTERN: ", "pattern"),
-        hash_reasons,
-        _yara_reasons_from(yara),
-        _ioc_reasons_from(c2, "C2 IOC match in turn text HOST: ", "host"),
-    ]
-    return df, [_nz(c) for c in items], candidate
+    # _nz on the UDF's (never NULL) arrays too: it keeps `all_reasons`,
+    # `reasons` and `n_reasons` non-nullable, as the catalyst build's are
+    return df, [_nz(c) for c in (fname, hash_reasons, yara, c2)], candidate
 
 
 def _build_scan(

@@ -185,6 +185,7 @@ def q_filename_ioc_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 through the Arrow matcher UDF (the production path)."""
     from .operators.arrow_matcher import make_arrow_matcher_udf
     from .operators.ext_bits import ext_bits_col
+    from .operators.ioc_join import FNAME_MSG
 
     sigs = bundled_signatures()
     df = load_transcripts(spark, sf_dir, rep=DEFAULT_REP)
@@ -198,7 +199,7 @@ def q_filename_ioc_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             "conv_id",
             "turn_idx",
             "tool",
-            F.col("m.pattern").alias("pattern"),
+            F.expr(f"substr(m.message, {len(FNAME_MSG) + 1}) AS pattern"),
             F.col("m.score").alias("score"),
         )
     )
@@ -220,6 +221,7 @@ def _yara_rule_subset_hits(
     feature family for oracle checking."""
     from .operators.arrow_matcher import make_arrow_matcher_udf
     from .operators.ext_bits import ext_bits_col
+    from .operators.ioc_join import YARA_MSG
 
     sigs = bundled_signatures()
     df = load_transcripts(spark, sf_dir, rep=DEFAULT_REP)
@@ -232,14 +234,14 @@ def _yara_rule_subset_hits(
             "_m", audf(F.col("text"), F.col("tool"), ext_bits_col(sigs))
         )
         .select("conv_id", "turn_idx", "tool", F.explode("_m.yara").alias("m"))
-        .filter(F.col("m.rule").isin(rule_names))
         .select(
             "conv_id",
             "turn_idx",
             "tool",
-            F.col("m.rule").alias("rule"),
+            F.expr(f"substr(m.message, {len(YARA_MSG) + 1}) AS rule"),
             F.col("m.score").alias("score"),
         )
+        .filter(F.col("rule").isin(rule_names))
     )
 
 

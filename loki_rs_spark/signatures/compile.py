@@ -36,10 +36,6 @@ from .model import YaraString
 
 _WORD_CLASS = "[0-9A-Za-z]"
 
-KNOWN_MODIFIERS = (
-    "nocase", "wide", "ascii", "fullword", "xor", "base64", "base64wide"
-)
-
 
 def xor_variants(pattern: str, lo: int, hi: int) -> list[str]:
     """All single-byte-XOR transforms of an ASCII literal with keys in

@@ -35,12 +35,11 @@ def stored_transcripts(spark, tmp_path_factory):
     )
 
 
-@pytest.fixture(scope="module")
-def expected_rows(spark, transcripts, sigs):
+def _reference_rows(transcripts, sigs, cfg):
     rows = {}
     for r in transcripts.collect():
         routed = scan_turn(
-            r["conv_id"], r["turn_idx"], r["text"], r["tool"], sigs, CFG,
+            r["conv_id"], r["turn_idx"], r["text"], r["tool"], sigs, cfg,
             role=r["role"],
         )
         if routed is not None:
@@ -48,19 +47,40 @@ def expected_rows(spark, transcripts, sigs):
     return rows
 
 
+@pytest.fixture(scope="module")
+def expected_rows(spark, transcripts, sigs):
+    return _reference_rows(transcripts, sigs, CFG)
+
+
 def _collect_routed(result):
     return {(r["conv_id"], r["turn_idx"]): r for r in result.routed.collect()}
 
 
-@pytest.mark.parametrize("impl", ["arrow", "catalyst"])
-def test_routed_row_equality(spark, transcripts, sigs, expected_rows, impl):
-    result = scan_transcripts(spark, transcripts, sigs, CFG, matcher=impl)
+@pytest.mark.parametrize(
+    "impl, cfg",
+    [
+        ("arrow", CFG),
+        ("catalyst", CFG),
+        # every reason shown, so each one's description, author, reference
+        # and matched_strings is compared, not only the first two
+        ("arrow", ScanConfig(max_reasons=100)),
+        ("catalyst", ScanConfig(max_reasons=100)),
+    ],
+    ids=["arrow", "catalyst", "arrow-all-reasons", "catalyst-all-reasons"],
+)
+def test_routed_row_equality(
+    spark, transcripts, sigs, expected_rows, impl, cfg
+):
+    expected = (
+        expected_rows if cfg == CFG else _reference_rows(transcripts, sigs, cfg)
+    )
+    result = scan_transcripts(spark, transcripts, sigs, cfg, matcher=impl)
     actual = _collect_routed(result)
 
-    assert set(actual) == set(expected_rows)
+    assert set(actual) == set(expected)
     assert len(actual) > 0
 
-    for key, exp in expected_rows.items():
+    for key, exp in expected.items():
         act = actual[key]
         assert act["level"] == exp.level, key
         assert act["score"] == exp.score, key
@@ -134,6 +154,18 @@ def test_score_only_path_equals_full(
         scan_transcripts_scores(spark, frame, sigs, CFG, source_kind=source_kind)
     )
     assert full == lean
+
+
+def test_reason_struct_is_reason_type(spark):
+    # executors build reasons without a JVM to parse REASON_TYPE, so the
+    # matcher declares it again in pyarrow terms
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import DataType
+
+    from loki_rs_spark.operators.arrow_matcher import REASON_STRUCT
+    from loki_rs_spark.operators.ioc_join import REASON_TYPE
+
+    assert REASON_STRUCT == to_arrow_type(DataType.fromDDL(REASON_TYPE))
 
 
 def test_match_classes_present(expected_rows):
