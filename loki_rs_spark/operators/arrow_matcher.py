@@ -4,9 +4,11 @@ The matcher stays in Arrow end to end:
 
 * a scalar `arrow_udf` (iterator form) ships only the text, tool and
   packed ext_bits columns across the Python bridge;
-* per signature string, ONE `pyarrow.compute.match_substring[_regex]`
-  kernel call over the batch's unique values (C++-vectorized RE2 /
-  literal scan, zero Python objects in the hot path);
+* one pass of the engine's atom programs (the OR of every YARA string's
+  RE2 regex) over the batch's unique texts, then per signature string ONE
+  `pyarrow.compute.match_substring[_regex]` kernel call over the few
+  uniques that pass it (C++-vectorized RE2 / literal scan, zero Python
+  objects in the hot path);
 * per-rule condition algebra on numpy boolean masks;
 * Python-level work (matched-string offsets, reason building) happens only
   for the sparse hit rows, and the output list<struct> arrays are built
@@ -138,38 +140,52 @@ class _CompactCol:
                 )
                 kernel_input = uniques
         self.kernel_input = kernel_input
+        self._row_index = None
+
+    def expand(
+        self, values: np.ndarray, fill, at: np.ndarray | None = None
+    ) -> np.ndarray:
+        """Per-`kernel_input` values -> the full-batch array (NULL rows read
+        `fill`). With `at`, `values` covers only `kernel_input[at]` and
+        every other unique reads `fill`."""
+        if at is not None:
+            full = np.full(len(self.kernel_input), fill, dtype=values.dtype)
+            full[at] = values
+            values = full
+        if self.full and self.codes is None:
+            return values
+        out = values[self.row_to_kernel_index()]
+        if self.null_sel is not None:
+            out[self.null_sel] = fill
+        return out
 
     def mask(self, fn) -> np.ndarray:
         """fn(pa.Array) -> np bool mask over that array; returns the
         equivalent full-batch mask."""
-        small = fn(self.kernel_input)
-        if self.codes is not None:
-            small = small[self.codes]
-        if self.full:
-            return small
-        out = np.full(self.n, bool(small[-1]))
-        out[self.sel] = small[:-1]
-        if self.null_sel is not None:
-            out[self.null_sel] = False
-        return out
+        return self.expand(fn(self.kernel_input), False)
 
     def row_to_kernel_index(self) -> np.ndarray:
         """For each batch row, the index into `kernel_input` holding its
         value (blank/NULL rows point at the '' sentinel). Lets per-unique
         computations (e.g. C2 host extraction) expand to rows."""
+        if self._row_index is not None:
+            return self._row_index
         if self.full:
-            if self.codes is not None:
-                return self.codes
-            return np.arange(self.n, dtype=np.int64)
-        # sentinel '' cannot collide with a (non-blank) compacted value,
-        # so after dictionary_encode its code is always the LAST index
-        idx = np.full(self.n, len(self.kernel_input) - 1, dtype=np.int64)
-        small = (
-            self.codes[:-1]
-            if self.codes is not None
-            else np.arange(len(self.sel), dtype=np.int64)
-        )
-        idx[self.sel] = small
+            idx = (
+                self.codes if self.codes is not None
+                else np.arange(self.n, dtype=np.int64)
+            )
+        else:
+            # sentinel '' cannot collide with a (non-blank) compacted
+            # value, so after dictionary_encode its code is always the
+            # LAST index
+            idx = np.full(self.n, len(self.kernel_input) - 1, dtype=np.int64)
+            idx[self.sel] = (
+                self.codes[:-1]
+                if self.codes is not None
+                else np.arange(len(self.sel), dtype=np.int64)
+            )
+        self._row_index = idx
         return idx
 
 
@@ -205,7 +221,16 @@ def _batch_masks(engine, batch: pa.RecordBatch):
     (fired, string masks, compiled rule) per rule, both in engine order.
     `ext_bits` follows the conditions.collect_ext_atoms ordering. Text and
     tool arrive raw: dict-encoded compaction keeps kernel cost
-    proportional to unique bytes, and the masks are exact."""
+    proportional to unique bytes, and the masks are exact.
+
+    The YARA string kernels are gated: one pass of the engine's atom
+    programs (the OR of every string's RE2 regex) over the unique texts
+    picks the candidates, and the per-string kernels and the TextOps
+    string reads run on those alone, scattered back with False (0)
+    elsewhere. A text matches `A|B|...` iff it matches one of them, so
+    the result equals the ungated kernels'. Conditions still render over
+    every row, so negations, `0 of them` and string-free rules (filesize,
+    uint, external variables) fire on rows without any atom."""
     text = batch.column("text")
     bits_np = (
         batch.column("ext_bits")
@@ -227,16 +252,19 @@ def _batch_masks(engine, batch: pa.RecordBatch):
             )
         fname.append((mask, ioc))
 
-    # ---- YARA subset (P5)
+    # ---- YARA subset (P5): one atom pass, string kernels on candidates
+    values = text_c.kernel_input
+    hit = np.zeros(len(values), dtype=bool)
+    for program in engine.atom_programs:
+        hit |= _mask(values, program, regex=True)
+    cand = np.nonzero(hit)[0]
+    text_ops = TextOps(text_c, cand)
     yara = []
-    text_ops = None
     for compiled in engine.yara:
         masks = [
-            text_c.mask(lambda a, _s=s: _string_mask(a, _s))
+            text_c.expand(_string_mask(text_ops.sub, s), False, at=cand)
             for s in compiled.rule.strings
         ]
-        if compiled.uses_text_ops and text_ops is None:
-            text_ops = TextOps(text)
         backend = _MaskBackend(
             [(ident, m) for (ident, _), m in zip(compiled.patterns, masks)],
             n,
@@ -456,9 +484,10 @@ def _arrow_matcher_udf(
     """Scalar Arrow UDF (Spark 4.1 `arrow_udf`, iterator form) over
     (text, tool, ext_bits) that runs `kernel(engine, batch)` per batch
     and returns its three arrays as struct<fname, yara, c2>, typed by
-    `return_ddl` (reason arrays or score arrays). The
-    signature payload is broadcast once; each executor process compiles
-    it once (`_engine_for`). `name` labels the UDF in query plans."""
+    `return_ddl` (reason arrays or score arrays). Each call broadcasts
+    the signature payload, so the scan pipeline makes one per compiled
+    plan (plans.pipeline._scan_plan); each executor process compiles the
+    payload once (`_engine_for`). `name` labels the UDF in query plans."""
     from pyspark.sql.functions import arrow_udf
 
     bc = spark.sparkContext.broadcast(sigs.to_payload())

@@ -22,18 +22,24 @@ def exclusion_pattern(patterns: Iterable[str]) -> str | None:
     return "|".join(f"(?:{p})" for p in pats)
 
 
-def apply_exclusions(df: DataFrame, patterns: Iterable[str]) -> DataFrame:
-    """Config exclusions (F3, src/modules/filesystem_scan.rs:607-613).
-    The reference tests each regex against the full path; `tool` is the
-    path analog of a transcript turn. A NULL `tool` matches no exclusion;
-    coalesce (not `IS NULL OR`) inlines a computed `tool` only once."""
+def exclusion_predicate(patterns: Iterable[str]) -> Column | None:
+    """Config exclusions (F3, src/modules/filesystem_scan.rs:607-613) as
+    the keep-predicate, None without patterns. The reference tests each
+    regex against the full path; `tool` is the path analog of a
+    transcript turn. A NULL `tool` matches no exclusion; coalesce (not
+    `IS NULL OR`) inlines a computed `tool` only once."""
     combined = exclusion_pattern(patterns)
     if combined is None:
-        return df
-    return df.filter(F.coalesce(~F.col("tool").rlike(combined), F.lit(True)))
+        return None
+    return F.coalesce(~F.col("tool").rlike(combined), F.lit(True))
 
 
-def apply_size_filter(df: DataFrame, max_text_chars: int) -> DataFrame:
+def apply_exclusions(df: DataFrame, patterns: Iterable[str]) -> DataFrame:
+    keep = exclusion_predicate(patterns)
+    return df if keep is None else df.filter(keep)
+
+
+def size_predicate(max_text_chars: int) -> Column:
     """Size cap (F7): the reference drops files larger than
     --max-file-size (64 MB default, src/modules/filesystem_scan.rs:672-685);
     for turns the scanned content is `text`. NULL text (a corrupt record)
@@ -41,9 +47,11 @@ def apply_size_filter(df: DataFrame, max_text_chars: int) -> DataFrame:
     (tests/error_handling_tests/) rather than silently dropping them —
     scan_counters reports them via its `errors` column and they match
     nothing downstream."""
-    return df.filter(
-        F.col("text").isNull() | (F.length(F.col("text")) <= max_text_chars)
-    )
+    return F.col("text").isNull() | (F.length(F.col("text")) <= max_text_chars)
+
+
+def apply_size_filter(df: DataFrame, max_text_chars: int) -> DataFrame:
+    return df.filter(size_predicate(max_text_chars))
 
 
 # ---- F4/F5: path-taxonomy skips (cloud / system paths) --------------------

@@ -4,14 +4,18 @@ hex — src/modules/filesystem_scan.rs:849-851. All three are JVM built-ins
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_hashes(df: DataFrame, content_col: str = "text") -> DataFrame:
+def hash_columns(content_col: str = "text") -> dict[str, Column]:
     content = F.col(content_col).cast("binary")
-    return (
-        df.withColumn("md5", F.md5(content))
-        .withColumn("sha1", F.sha1(content))
-        .withColumn("sha256", F.sha2(content, 256))
-    )
+    return {
+        "md5": F.md5(content),
+        "sha1": F.sha1(content),
+        "sha256": F.sha2(content, 256),
+    }
+
+
+def with_hashes(df: DataFrame, content_col: str = "text") -> DataFrame:
+    return df.withColumns(hash_columns(content_col))

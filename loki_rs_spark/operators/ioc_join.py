@@ -30,7 +30,7 @@ and are assembled in the reference's discovery order by the pipeline
 
 from __future__ import annotations
 
-import re
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -115,24 +115,35 @@ def plain_relation_input(df: DataFrame) -> bool:
     )
 
 
-def anti_join_fp_hashes(
-    spark: SparkSession,
-    df: DataFrame,
-    sigs: SignatureSet,
-    literal_dims: bool = False,
-) -> DataFrame:
+@dataclass(frozen=True)
+class DimJoin:
+    """One join of the scan against a signature dim: `frame` (a
+    broadcast-hinted LocalRelation) joined `how` on `on`. Both refer to
+    columns by name only, so one DimJoin serves every scan input."""
+
+    frame: DataFrame
+    on: Column
+    how: str
+
+
+def join_dims(df: DataFrame, joins) -> DataFrame:
+    for j in joins:
+        df = df.join(j.frame, j.on, j.how)
+    return df
+
+
+def fp_antijoins(spark: SparkSession, sigs: SignatureSet) -> list[DimJoin]:
     """J2: drop any row whose md5/sha1/sha256 appears in the FP table —
     BEFORE matching, so the expensive stages never see the row. ALWAYS
     join-rendered: a literal NOT-IN filter here gets pushed below the
     hash projection by substituting md5(text) into the scan filter, and
-    every row hashes twice (measured +20-30% on the big gate legs), so
-    `literal_dims` is accepted for signature symmetry but ignored. One
+    every row hashes twice (measured +20-30% on the big gate legs). One
     broadcast anti-join per FP hash type present (each a
     BroadcastHashJoin, no shuffle); the first also fences further
     predicate pushdown toward the scan. Each FP dim is a LocalRelation
     (session.local_frame), so its broadcast runs no Python job and costs
     ~0.1s per action (warm, 4 cores, 40k probe rows)."""
-    del literal_dims  # see docstring: filter rendering double-hashes
+    joins = []
     for hash_type in HASH_TYPES:
         values = [h.hash_value for h in sigs.hashes_of_type(hash_type, fp=True)]
         if not values:
@@ -140,12 +151,27 @@ def anti_join_fp_hashes(
         fp_df = local_frame(
             spark, [(v,) for v in values], f"fp_{hash_type}_value string"
         )
-        df = df.join(
-            F.broadcast(fp_df),
-            df[hash_type] == fp_df[f"fp_{hash_type}_value"],
-            "left_anti",
+        joins.append(
+            DimJoin(
+                F.broadcast(fp_df),
+                F.col(hash_type) == F.col(f"fp_{hash_type}_value"),
+                "left_anti",
+            )
         )
-    return df
+    return joins
+
+
+def anti_join_fp_hashes(
+    spark: SparkSession,
+    df: DataFrame,
+    sigs: SignatureSet,
+    literal_dims: bool = False,
+) -> DataFrame:
+    """`df` with the FP anti-joins (fp_antijoins) applied. `literal_dims`
+    is accepted for signature symmetry but ignored: a literal filter
+    rendering double-hashes (see fp_antijoins)."""
+    del literal_dims
+    return join_dims(df, fp_antijoins(spark, sigs))
 
 
 # Reason message prefixes, shared by the Arrow matcher kernel and the
@@ -160,11 +186,10 @@ C2_MSG = "C2 IOC match in turn text HOST: "
 
 def hash_reason_array(
     spark: SparkSession,
-    df: DataFrame,
     sigs: SignatureSet,
     source_kind: str = "file",
     literal_dims: bool = False,
-) -> tuple[DataFrame, Column, Column]:
+) -> tuple[list[DimJoin], Column, Column]:
     """J1: broadcast left joins per hash type; at most one IOC fires per
     type and all three can fire (src/modules/filesystem_scan.rs:862-896).
     Message format "HASH match with IOC HASH: {hash}" (ibid.).
@@ -175,13 +200,16 @@ def hash_reason_array(
     message "Process Executable Hash Match HASH: {h}" — a real reason-
     multiplicity difference between the two sources in the U1 union.
 
-    Returns (joined df, array<reason> column in md5,sha1,sha256 discovery
-    order, cheap any-hit predicate)."""
+    Returns (the dim joins to apply, array<reason> column in
+    md5,sha1,sha256 discovery order, cheap any-hit predicate); the
+    columns read the hash and dim columns by name, so they hold for any
+    input the joins are applied to."""
     if source_kind not in ("file", "process"):
         raise ValueError(f"unknown source_kind {source_kind!r}")
     msg_prefix = (
         PROCESS_HASH_MSG if source_kind == "process" else FILE_HASH_MSG
     )
+    joins: list[DimJoin] = []
     reason_cols: list[Column] = []
     hit_conds: list[Column] = []
     for hash_type in HASH_TYPES:
@@ -198,7 +226,7 @@ def hash_reason_array(
             # join against a unique-keyed dim (see HASH_DIM_MAX_LITERALS):
             # at most one entry can match, NULL hashes match nothing,
             # exactly the broadcast path's semantics.
-            col = df[hash_type]
+            col = F.col(hash_type)
             hit_struct = None
             for hv, score, desc in uniq.values():
                 payload = F.struct(
@@ -233,12 +261,10 @@ def hash_reason_array(
             f"ioc_{hash_type}_hash string, ioc_{hash_type}_score int, "
             f"ioc_{hash_type}_desc string",
         )
-        df = df.join(
-            F.broadcast(ioc_df),
-            df[hash_type] == ioc_df[f"ioc_{hash_type}_hash"],
-            "left",
-        )
         hit = F.col(f"ioc_{hash_type}_hash")
+        joins.append(
+            DimJoin(F.broadcast(ioc_df), F.col(hash_type) == hit, "left")
+        )
         hit_conds.append(hit.isNotNull())
         reason_cols.append(
             F.when(
@@ -251,14 +277,14 @@ def hash_reason_array(
             )
         )
     if not reason_cols:
-        return df, F.array().cast(f"array<{REASON_TYPE}>"), F.lit(False)
+        return joins, F.array().cast(f"array<{REASON_TYPE}>"), F.lit(False)
     arr = F.filter(F.array(*reason_cols), lambda x: x.isNotNull())
     if source_kind == "process":
         arr = F.slice(arr, 1, 1)  # first-of-three only (process_check.rs)
     any_hit = hit_conds[0]
     for cond in hit_conds[1:]:
         any_hit = any_hit | cond
-    return df, arr, any_hit
+    return joins, arr, any_hit
 
 
 def filename_reason_array(tool: Column, iocs: list[FilenameIOC]) -> Column:

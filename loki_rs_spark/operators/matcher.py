@@ -126,7 +126,6 @@ class _CompiledYaraRule:
     patterns: list[tuple[str, re.Pattern]]  # (identifier, capture regex)
     ast: object  # parsed condition (signatures/conditions.py)
     strings_by_ident: dict  # identifier -> YaraString
-    uses_text_ops: bool  # condition contains count/at/in/offset nodes
 
 
 def _np_cmp(op: str, arr: np.ndarray, value: int) -> np.ndarray:
@@ -165,19 +164,35 @@ class ExtBits:
 
 
 class TextOps:
-    """Vectorized count/at/in/offset primitives over a batch's text column
-    for the yara count/offset operators (plain-ascii-literal subset,
-    guaranteed by conditions.validate_condition_ops). Offsets are
-    CHARACTER offsets — the matched_strings '@ {offset}' convention —
-    computed with codepoint-exact kernels (utf8_slice_codeunits slices by
-    codepoint; RE2 '.' consumes one codepoint)."""
+    """Vectorized count/at/in/offset primitives for the yara count/offset
+    operators (plain-ascii-literal subset, guaranteed by
+    conditions.validate_condition_ops), evaluated over a batch's UNIQUE
+    texts (`text_c.kernel_input`, see arrow_matcher._CompactCol) and
+    scattered back to rows by `text_c.expand`.
 
-    def __init__(self, arr) -> None:
+    The string operators run on the atom candidates `cand` only: a unique
+    outside them holds no occurrence of any string or needle
+    (CompiledEngine.atom_programs), so its counts are 0 and its at/in/from
+    reads False, exactly what the kernels would return. The one exception
+    is a nocase `at`: utf8_lower folds a few characters RE2's case folding
+    does not (U+0130), so it reads every unique, as the string-free reads
+    (uint, filesize) do.
+
+    Offsets are CHARACTER offsets — the matched_strings '@ {offset}'
+    convention — computed with codepoint-exact kernels
+    (utf8_slice_codeunits slices by codepoint; RE2 '.' consumes one
+    codepoint)."""
+
+    def __init__(self, text_c, cand: np.ndarray) -> None:
         import pyarrow as pa
 
-        if isinstance(arr, pa.ChunkedArray):
-            arr = arr.combine_chunks()
-        self.arr = arr
+        self.text_c = text_c
+        self.cand = cand
+        self.every = text_c.kernel_input
+        self.sub = self.every.take(pa.array(cand, type=pa.int64()))
+
+    def _gated(self, values: np.ndarray, fill) -> np.ndarray:
+        return self.text_c.expand(values, fill, at=self.cand)
 
     def counts(self, needle: str, nocase: bool) -> np.ndarray:
         import pyarrow.compute as pc
@@ -187,7 +202,7 @@ class TextOps:
             overlap_count,
         )
 
-        out = pc.count_substring(self.arr, needle, ignore_case=nocase)
+        out = pc.count_substring(self.sub, needle, ignore_case=nocase)
         counts = (
             pc.fill_null(out, 0)
             .to_numpy(zero_copy_only=False)
@@ -197,20 +212,19 @@ class TextOps:
         if _has_proper_border(needle_f):
             # yara-x counts ALL occurrences including overlapping ones;
             # pc.count_substring is non-overlapping. Recount only the
-            # sparse hit rows (the vectorized kernel is the prefilter)
-            # with the +1-step walk — same sparse-rows pattern as
-            # nth_offsets.
+            # sparse hit values (the vectorized kernel is the prefilter)
+            # with the +1-step walk — same sparse pattern as nth_offsets.
             for i in np.nonzero(counts > 0)[0]:
-                t = self.arr[int(i)].as_py()
+                t = self.sub[int(i)].as_py()
                 tf = t.lower() if nocase else t
                 counts[i] = overlap_count(tf, needle_f)
-        return counts
+        return self._gated(counts, 0)
 
-    def at_mask(self, needle: str, nocase: bool, offset: int) -> np.ndarray:
+    def _starts_with(self, values, needle: str, nocase: bool, offset: int):
         import pyarrow.compute as pc
 
         sliced = pc.utf8_slice_codeunits(
-            self.arr, offset, offset + len(needle)
+            values, offset, offset + len(needle)
         )
         if nocase:
             sliced = pc.utf8_lower(sliced)
@@ -219,6 +233,37 @@ class TextOps:
             pc.fill_null(pc.equal(sliced, needle), False)
             .to_numpy(zero_copy_only=False)
             .astype(bool)
+        )
+
+    def at_mask(self, needle: str, nocase: bool, offset: int) -> np.ndarray:
+        """`$s at offset` for a string `needle` (see the class docstring
+        for the nocase case)."""
+        if nocase:
+            return self.text_c.expand(
+                self._starts_with(self.every, needle, True, offset), False
+            )
+        return self._gated(
+            self._starts_with(self.sub, needle, False, offset), False
+        )
+
+    def uint_at_mask(self, needle: str, offset: int) -> np.ndarray:
+        """A uintN read: `needle` at character `offset` of every unique
+        text (no string involved, so no gate)."""
+        return self.text_c.expand(
+            self._starts_with(self.every, needle, False, offset), False
+        )
+
+    def _contains(self, sliced, needle: str, nocase: bool) -> np.ndarray:
+        import pyarrow.compute as pc
+
+        return self._gated(
+            pc.fill_null(
+                pc.match_substring(sliced, needle, ignore_case=nocase),
+                False,
+            )
+            .to_numpy(zero_copy_only=False)
+            .astype(bool),
+            False,
         )
 
     def in_mask(
@@ -232,15 +277,8 @@ class TextOps:
         so there is NO bounded-repetition cap on the window."""
         import pyarrow.compute as pc
 
-        sliced = pc.utf8_slice_codeunits(self.arr, lo, hi + len(needle))
-        return (
-            pc.fill_null(
-                pc.match_substring(sliced, needle, ignore_case=nocase),
-                False,
-            )
-            .to_numpy(zero_copy_only=False)
-            .astype(bool)
-        )
+        sliced = pc.utf8_slice_codeunits(self.sub, lo, hi + len(needle))
+        return self._contains(sliced, needle, nocase)
 
     def from_mask(self, needle: str, nocase: bool, lo: int) -> np.ndarray:
         """Some occurrence starts at character offset >= lo (the 'for'
@@ -249,26 +287,8 @@ class TextOps:
         bounded-repetition cap."""
         import pyarrow.compute as pc
 
-        sliced = pc.utf8_slice_codeunits(self.arr, lo)
-        return (
-            pc.fill_null(
-                pc.match_substring(sliced, needle, ignore_case=nocase),
-                False,
-            )
-            .to_numpy(zero_copy_only=False)
-            .astype(bool)
-        )
-
-    def length_at_least(self, n: int) -> np.ndarray:
-        import pyarrow.compute as pc
-
-        return (
-            pc.fill_null(
-                pc.greater_equal(pc.utf8_length(self.arr), n), False
-            )
-            .to_numpy(zero_copy_only=False)
-            .astype(bool)
-        )
+        sliced = pc.utf8_slice_codeunits(self.sub, lo)
+        return self._contains(sliced, needle, nocase)
 
     def lengths(self) -> np.ndarray:
         """Character lengths (codepoints; NULL -> 0) — the filesize
@@ -276,10 +296,11 @@ class TextOps:
         length() / Python len()."""
         import pyarrow.compute as pc
 
-        return (
-            pc.fill_null(pc.utf8_length(self.arr), 0)
+        return self.text_c.expand(
+            pc.fill_null(pc.utf8_length(self.every), 0)
             .to_numpy(zero_copy_only=False)
-            .astype("int64")
+            .astype("int64"),
+            0,
         )
 
     def nth_offsets(
@@ -287,24 +308,27 @@ class TextOps:
     ) -> dict[int, int]:
         """Character offset of the 1-based `index`-th occurrence for each
         row in `rows` (rows with fewer occurrences are omitted). Python
-        str.find walk — only runs on the sparse mask-true rows."""
+        str.find walk, once per unique text — only runs on the sparse
+        mask-true rows."""
         needle_f = needle.lower() if nocase else needle
+        row_u = self.text_c.row_to_kernel_index()
+        per_unique: dict[int, int] = {}
         out: dict[int, int] = {}
         for i in rows:
-            i = int(i)
-            t = self.arr[i].as_py()
-            if t is None:
-                continue
-            tf = t.lower() if nocase else t
-            pos, found, start = -1, 0, 0
-            while found < index:
-                pos = tf.find(needle_f, start)
-                if pos < 0:
-                    break
-                start = pos + 1  # +1: enumerate OVERLAPPING occurrences
-                found += 1
-            if found == index and pos >= 0:
-                out[i] = pos
+            u = int(row_u[int(i)])
+            if u not in per_unique:
+                t = self.every[u].as_py()
+                tf = t.lower() if nocase else t
+                pos, found, start = -1, 0, 0
+                while found < index:
+                    pos = tf.find(needle_f, start)
+                    if pos < 0:
+                        break
+                    start = pos + 1  # +1: OVERLAPPING occurrences
+                    found += 1
+                per_unique[u] = pos if found == index and pos >= 0 else -1
+            if per_unique[u] >= 0:
+                out[int(i)] = per_unique[u]
         return out
 
 
@@ -385,13 +409,11 @@ class _MaskBackend:
             raise RuntimeError(
                 "uint operator without text ops wired"
             )  # pragma: no cover - engine wires text_ops for these rules
-        eq = self.text_ops.at_mask(node.needle, False, node.offset)
+        eq = self.text_ops.uint_at_mask(node.needle, node.offset)
         if node.op == "eq":
             return eq
         # '!=' is false on out-of-bounds reads (yara undefined semantics)
-        long_enough = self.text_ops.length_at_least(
-            node.offset + node.size
-        )
+        long_enough = self.text_ops.lengths() >= node.offset + node.size
         return long_enough & ~eq
 
     def str_ref(self, ident: str) -> np.ndarray:
@@ -430,32 +452,74 @@ class _MaskBackend:
         return ~x
 
 
+# Size cap of one atom program, in pattern characters. RE2 runs an
+# alternation as one DFA; past some tens of thousands of characters of
+# xor-variant literals the DFA outgrows RE2's default memory budget and
+# falls back to the NFA, dozens of times slower (40 xor strings over the
+# 20k unique texts of a bulk_scan batch, one thread of a 4-core x86 host:
+# 7.0 s as three ~64k-character programs, 0.26 s as ten of at most 16k).
+ATOM_PROGRAM_MAX_CHARS = 16_384
+
+
+def atom_programs(rules) -> list[str]:
+    """The OR of every YARA string's RE2 boolean regex, flags scoped per
+    alternative, split into programs of at most ATOM_PROGRAM_MAX_CHARS
+    (one alternative longer than that is a program of its own). A string
+    that a count/at/in/for operator reads but whose own forms may lack its
+    plain literal (xor, base64) adds that literal too, since TextOps
+    searches for it. A text matches some program iff it holds an
+    occurrence of some string or needle, so every string mask and TextOps
+    string read is False (0) on a text that matches none."""
+    from ..signatures.compile import (
+        literal_probe,
+        regex_literal,
+        scoped_re2_regex,
+    )
+    from ..signatures.conditions import collect_string_op_nodes
+
+    atoms: dict[str, None] = {}
+    for rule in rules:
+        op_idents = {
+            n.identifier for n in collect_string_op_nodes(rule.condition_ast)
+        }
+        for s in rule.strings:
+            atoms.setdefault(scoped_re2_regex(s))
+            if s.identifier in op_idents and literal_probe(s) is None:
+                flag = "i" if s.nocase else ""
+                atoms.setdefault(f"(?{flag}:{regex_literal(s.pattern)})")
+    programs: list[str] = []
+    for atom in atoms:
+        if programs and (
+            len(programs[-1]) + 1 + len(atom) <= ATOM_PROGRAM_MAX_CHARS
+        ):
+            programs[-1] += "|" + atom
+        else:
+            programs.append(atom)
+    return programs
+
+
 class CompiledEngine:
-    """Per-executor compiled signature engine."""
+    """Per-executor compiled signature engine: the filename IOCs, the
+    YARA rules with their capture regexes and parsed conditions, the
+    atom programs that gate every YARA string kernel (`atom_programs`;
+    arrow_matcher._batch_masks runs them once per batch and the string
+    kernels only on the texts they match), the ext-bit atom order and
+    the C2 lookup table."""
 
     def __init__(self, sigs: SignatureSet) -> None:
         self.fname = list(sigs.filename_iocs)
-        from ..signatures.conditions import (
-            collect_size_nodes,
-            collect_string_op_nodes,
-            collect_uint_nodes,
-        )
-
+        self.atom_programs = atom_programs(sigs.yara_rules)
         self.yara: list[_CompiledYaraRule] = []
         for rule in sigs.yara_rules:
             patterns = [
                 (s.identifier, capture_regex(s)) for s in rule.strings
             ]
-            ast = rule.condition_ast
             self.yara.append(
                 _CompiledYaraRule(
                     rule,
                     patterns,
-                    ast,
+                    rule.condition_ast,
                     {s.identifier: s for s in rule.strings},
-                    bool(collect_string_op_nodes(ast))
-                    or bool(collect_uint_nodes(ast))
-                    or bool(collect_size_nodes(ast)),
                 )
             )
         self.atom_index = {

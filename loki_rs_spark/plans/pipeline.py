@@ -14,6 +14,11 @@ declarative Spark plan, built once by `_build_scan` for both output shapes:
          parity) -> severity classify (A2) -> below-notice drop
       -> shown-reason slice (A3, default 2)
 
+Like the reference's rule set, compiled once and reused for every file,
+every Column and dim of the plan is compiled once per session, signature
+set and build options (`_scan_plan`); a later build only applies the
+DataFrame steps to its input.
+
 Everything except the matcher UDF is whole-stage-codegen'd Catalyst; the
 entire pipeline is embarrassingly row-parallel — NO shuffle from scan to
 routed rows, so it scales linearly with executors (the north rule's
@@ -23,6 +28,9 @@ parquet/Iceberg scan itself plus the broadcast of the (small) IOC tables.
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -35,16 +43,19 @@ from ..operators.arrow_matcher import (
     make_arrow_score_matcher_udf,
 )
 from ..operators.ext_bits import ext_bits_col
-from ..operators.filters import apply_exclusions, apply_size_filter
-from ..operators.hashes import with_hashes
+from ..operators.filters import exclusion_predicate, size_predicate
+from ..operators.hashes import hash_columns
 from ..operators.ioc_join import (
+    HASH_TYPES,
     REASON_TYPE,
     YARA_MSG,
-    anti_join_fp_hashes,
+    DimJoin,
     c2_reason_array,
     c2_text_gate,
     filename_reason_array,
+    fp_antijoins,
     hash_reason_array,
+    join_dims,
     plain_relation_input,
     reason_struct,
 )
@@ -100,26 +111,24 @@ def _catalyst_yara_reasons(sigs: SignatureSet) -> Column:
 
 def _matcher_items(
     spark: SparkSession,
-    df: DataFrame,
     sigs: SignatureSet,
     matcher: str,
     hash_reasons: Column,
     hash_hit: Column,
-) -> tuple[DataFrame, list[Column], Column]:
-    """The one matcher dispatch: adds the matcher's columns and returns
-    (df, the four per-source item arrays in discovery order filename ->
-    hash -> YARA -> C2, any-candidate predicate). 'arrow' and 'scores'
-    cross the bridge ONCE (REASON_TYPE arrays from match_signatures_arrow,
-    the shape catalyst builds, or int scores from match_scores_arrow);
-    every kernel, J4 C2 included, runs over each batch's unique text/tool
-    values, and external-variable truth crosses as the packed `ext_bits`
-    bigint. 'catalyst' is zero Python: rlike filename predicates, per-rule
-    YARA predicates and the JVM C2 gate + CASE chain, with no cheap
-    precursors, so its candidate is the literal True."""
+) -> tuple[str, Callable[[], Column], list[Column], Column]:
+    """The one matcher dispatch: returns (the matcher column's name, a
+    maker of that column, the four per-source item arrays in discovery
+    order filename -> hash -> YARA -> C2, any-candidate predicate).
+    'arrow' and 'scores' cross the bridge ONCE (REASON_TYPE arrays from
+    match_signatures_arrow, the shape catalyst builds, or int scores from
+    match_scores_arrow); every kernel, J4 C2 included, runs over each
+    batch's unique text/tool values, and external-variable truth crosses
+    as the packed `ext_bits` bigint. 'catalyst' is zero Python: rlike
+    filename predicates, per-rule YARA predicates and the JVM C2 gate +
+    CASE chain, with no cheap precursors, so its candidate is the literal
+    True."""
     if matcher == "catalyst":
-        df = df.withColumn(
-            "_c2g", c2_text_gate(F.col("text"), list(sigs.c2_iocs))
-        )
+        gate = c2_text_gate(F.col("text"), list(sigs.c2_iocs))
         items = [
             filename_reason_array(F.col("tool"), list(sigs.filename_iocs)),
             hash_reasons,
@@ -128,16 +137,14 @@ def _matcher_items(
                 F.col("text"), list(sigs.c2_iocs), gate=F.col("_c2g")
             ),
         ]
-        return df, [_nz(c) for c in items], F.lit(True)
+        return "_c2g", lambda: gate, [_nz(c) for c in items], F.lit(True)
 
     make_udf = (
         make_arrow_score_matcher_udf if matcher == "scores"
         else make_arrow_matcher_udf
     )
     audf = make_udf(spark, sigs)
-    df = df.withColumn(
-        "_m", audf(F.col("text"), F.col("tool"), ext_bits_col(sigs))
-    )
+    args = (F.col("text"), F.col("tool"), ext_bits_col(sigs))
     fname, yara, c2 = F.col("_m.fname"), F.col("_m.yara"), F.col("_m.c2")
     candidate = (
         (F.size(fname) > 0)
@@ -147,40 +154,54 @@ def _matcher_items(
     )
     if matcher == "scores":
         hash_scores = F.transform(_nz(hash_reasons), lambda r: r["score"])
-        return df, [fname, hash_scores, yara, c2], candidate
-    # _nz on the UDF's (never NULL) arrays too: it keeps `all_reasons`,
-    # `reasons` and `n_reasons` non-nullable, as the catalyst build's are
-    return df, [_nz(c) for c in (fname, hash_reasons, yara, c2)], candidate
+        items = [fname, hash_scores, yara, c2]
+    else:
+        # _nz on the UDF's (never NULL) arrays too: it keeps
+        # `all_reasons`, `reasons` and `n_reasons` non-nullable, as the
+        # catalyst build's are
+        items = [_nz(c) for c in (fname, hash_reasons, yara, c2)]
+    # a fresh UDF call per build: a cached one would put one PythonUDF
+    # (and its result id) into every plan built from this key
+    return "_m", lambda: audf(*args), items, candidate
 
 
-def _build_scan(
+@dataclass(frozen=True)
+class _ScanPlan:
+    """Every Column and dim of one scan build, compiled once per key by
+    `_scan_plan`: the filter predicate (exclusions and size cap) and the
+    hash columns, the dim joins (FP anti-joins, then the hash-IOC left
+    joins the literal rendering does not replace), the matcher column
+    (the Arrow UDF with its payload broadcast and `ext_bits`, or the
+    catalyst C2 gate), the three projections, the routed predicate and
+    the shown-reasons slice. Every Column names its inputs by column
+    name, so a plan binds to no DataFrame."""
+
+    session: object  # pins the JVM session whose id() is in the key
+    scan_filter: Column
+    hashes: dict[str, Column]
+    joins: tuple[DimJoin, ...]
+    matcher_name: str
+    matcher_col: Callable[[], Column]
+    staged: tuple[Column, ...]
+    scored: tuple[Column, ...]
+    evaluated: tuple[Column, ...]
+    routed: Column
+    shown: Column | None
+
+
+def _compile_plan(
     spark: SparkSession,
-    transcripts: DataFrame,
     sigs: SignatureSet,
     cfg: ScanConfig,
     matcher: str,
     source_kind: str,
-) -> ScanResult:
-    """The one scan builder behind `scan_transcripts` ('arrow' |
-    'catalyst', reason rows) and `scan_transcripts_scores` ('scores',
-    score-only rows)."""
-    # literal hash-dim rendering only over stored-table inputs (the
-    # production shape — see ioc_join.HASH_DIM_MAX_LITERALS): each
-    # avoided broadcast exchange of a LocalRelation dim saves ~0.1s of
-    # per-action latency; over the live generator frame the joins stay,
-    # doubling as pushdown fences for the generator's CASE trees.
-    literal_dims = plain_relation_input(transcripts)
-    df = apply_exclusions(transcripts, cfg.exclude_patterns)
-    df = apply_size_filter(df, cfg.max_text_chars)
-    scanned = df
-
-    df = with_hashes(df)
-    df = anti_join_fp_hashes(spark, df, sigs, literal_dims=literal_dims)
-    df, hash_reasons, hash_hit = hash_reason_array(
-        spark, df, sigs, source_kind=source_kind, literal_dims=literal_dims
+    literal_dims: bool,
+) -> _ScanPlan:
+    hash_joins, hash_reasons, hash_hit = hash_reason_array(
+        spark, sigs, source_kind=source_kind, literal_dims=literal_dims
     )
-    df, items, candidate = _matcher_items(
-        spark, df, sigs, matcher, hash_reasons, hash_hit
+    name, matcher_col, items, candidate = _matcher_items(
+        spark, sigs, matcher, hash_reasons, hash_hit
     )
 
     # Sparse fast path: the overwhelming majority of turns match nothing,
@@ -194,41 +215,120 @@ def _build_scan(
         candidate, F.slice(F.concat(*items), 1, cfg.max_matches)
     ).otherwise(F.array().cast(f"array<{item_type}>"))
     key = "all_reasons" if reasons else "_scores"
-    extra = (
-        [F.length("text").alias("text_len"), "md5", "sha1", "sha256"]
-        if reasons else []
-    )
+    kept = ["conv_id", "turn_idx", "role", "tool", "ts"]
+    staged = [F.col(c) for c in kept]
+    if reasons:
+        # the reason shape also keeps the text length and the hashes
+        staged.append(F.length("text").alias("text_len"))
+        staged += [F.col(h) for h in HASH_TYPES]
+        kept += ["text_len", *HASH_TYPES, "all_reasons"]
+    staged.append(all_items.alias(key))
 
     # Staged projections so the item tree evaluates once per row: its
     # alias is read twice (size, score), so CollapseProject keeps it.
-    staged = df.select(
-        "conv_id", "turn_idx", "role", "tool", "ts", *extra,
-        all_items.alias(key),
-    )
     sub_scores = (
         F.transform(F.col(key), lambda r: r["score"]) if reasons
         else F.col(key)
     )
-    staged = staged.select(
-        "*",
-        F.size(key).alias("n_reasons"),
-        rounded_score_col(weighted_score_col(sub_scores)).alias("score"),
-    )
-    evaluated = staged.select(
-        *[c for c in staged.columns if c != "_scores"],
-        severity_col(F.col("score"), cfg).alias("level"),
+    evaluated = [F.col(c) for c in kept + ["n_reasons", "score"]]
+    evaluated.append(severity_col(F.col("score"), cfg).alias("level"))
+    keep = exclusion_predicate(cfg.exclude_patterns)
+    size = size_predicate(cfg.max_text_chars)
+    return _ScanPlan(
+        session=spark._jsparkSession,
+        scan_filter=size if keep is None else keep & size,
+        hashes=hash_columns(),
+        joins=tuple(fp_antijoins(spark, sigs) + hash_joins),
+        matcher_name=name,
+        matcher_col=matcher_col,
+        staged=tuple(staged),
+        scored=(
+            F.col("*"),
+            F.size(key).alias("n_reasons"),
+            rounded_score_col(weighted_score_col(sub_scores)).alias("score"),
+        ),
+        evaluated=tuple(evaluated),
+        # `score >= notice_threshold` is `level IS NOT NULL` (ScanConfig
+        # validates alert >= warning >= notice), and substitutes one score
+        # tree into the pushed-down filter instead of severity_col's three.
+        routed=(F.col("n_reasons") > 0)
+        & (F.col("score") >= cfg.notice_threshold),
+        shown=(
+            F.slice(F.col("all_reasons"), 1, cfg.max_reasons)
+            if reasons else None
+        ),
     )
 
-    # `score >= notice_threshold` is `level IS NOT NULL` (ScanConfig
-    # validates alert >= warning >= notice), and substitutes one score
-    # tree into the pushed-down filter instead of severity_col's three.
-    routed = evaluated.filter(
-        (F.col("n_reasons") > 0) & (F.col("score") >= cfg.notice_threshold)
+
+# Compiled plans kept per session: a handful of (matcher, source_kind,
+# ScanConfig, literal_dims) combinations per signature set in practice.
+_PLAN_CACHE_SIZE = 16
+_PLANS: OrderedDict[tuple, _ScanPlan] = OrderedDict()
+_PLANS_LOCK = threading.Lock()
+
+
+def _scan_plan(
+    spark: SparkSession,
+    sigs: SignatureSet,
+    cfg: ScanConfig,
+    matcher: str,
+    source_kind: str,
+    literal_dims: bool,
+) -> _ScanPlan:
+    """The compiled plan for this key, built on first use and kept in a
+    small LRU. The key is the JVM session (and so the SparkContext) by
+    identity, the signature set by content fingerprint, and the build
+    options; never the input data. Building one costs ~2,500 py4j round
+    trips; reusing one leaves a build only its DataFrame steps."""
+    key = (
+        id(spark._jsparkSession), sigs.fingerprint, cfg, matcher,
+        source_kind, literal_dims,
     )
-    if reasons:
-        routed = routed.withColumn(
-            "reasons", F.slice(F.col("all_reasons"), 1, cfg.max_reasons)
-        )
+    with _PLANS_LOCK:
+        plan = _PLANS.get(key)
+        if plan is None:
+            plan = _compile_plan(
+                spark, sigs, cfg, matcher, source_kind, literal_dims
+            )
+            _PLANS[key] = plan
+            if len(_PLANS) > _PLAN_CACHE_SIZE:
+                _PLANS.popitem(last=False)
+        else:
+            _PLANS.move_to_end(key)
+    return plan
+
+
+def _build_scan(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    sigs: SignatureSet,
+    cfg: ScanConfig,
+    matcher: str,
+    source_kind: str,
+) -> ScanResult:
+    """The one scan builder behind `scan_transcripts` ('arrow' |
+    'catalyst', reason rows) and `scan_transcripts_scores` ('scores',
+    score-only rows): the filters and hashes, then every
+    signature-derived step from the compiled `_ScanPlan` of this key
+    (`_scan_plan`) — dim joins, matcher column, the score, severity and
+    routed projections. A warm build only applies these DataFrame
+    steps."""
+    # literal hash-dim rendering only over stored-table inputs (the
+    # production shape — see ioc_join.HASH_DIM_MAX_LITERALS): each
+    # avoided broadcast exchange of a LocalRelation dim saves ~0.1s of
+    # per-action latency; over the live generator frame the joins stay,
+    # doubling as pushdown fences for the generator's CASE trees.
+    literal_dims = plain_relation_input(transcripts)
+    plan = _scan_plan(spark, sigs, cfg, matcher, source_kind, literal_dims)
+    scanned = transcripts.filter(plan.scan_filter)
+    df = join_dims(scanned.withColumns(plan.hashes), plan.joins)
+    df = df.withColumn(plan.matcher_name, plan.matcher_col())
+    evaluated = df.select(*plan.staged).select(*plan.scored).select(
+        *plan.evaluated
+    )
+    routed = evaluated.filter(plan.routed)
+    if plan.shown is not None:
+        routed = routed.withColumn("reasons", plan.shown)
     return ScanResult(scanned=scanned, evaluated=evaluated, routed=routed)
 
 

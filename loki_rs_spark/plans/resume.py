@@ -162,12 +162,15 @@ def run_resumable_scan(
         to_write.unpersist()
 
     # lineage: one row per completed bucket. Buckets with zero routed rows
-    # still get a (zero) row — completed != produced output.
+    # still get a (zero) row — completed != produced output. One file per
+    # run: each file create costs a permission call (a `chmod` process
+    # where Hadoop's native IO is missing), and the frame is <= n_buckets
+    # rows.
     lineage = [
         (b, *counts.get(b, (0, 0, 0, 0)), started) for b in sorted(pending)
     ]
     write_partitioned(
-        local_frame(spark, lineage, LINEAGE_SCHEMA),
+        local_frame(spark, lineage, LINEAGE_SCHEMA).coalesce(1),
         f"{out_dir}/lineage", (), mode="append",
     )
     return pending

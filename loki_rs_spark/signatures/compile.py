@@ -487,9 +487,7 @@ def _core_forms(s: YaraString) -> list[str]:
     return forms
 
 
-def boolean_regex(s: YaraString, engine: str) -> str:
-    """The full match-anywhere regex for one string under `engine`:
-    'lookaround' (Python re / Java regex) or 're2' (pyarrow / DuckDB)."""
+def _flags_and_core(s: YaraString, engine: str) -> tuple[str, str]:
     validate_string(s)
     cores = _core_forms(s)
     core = cores[0] if len(cores) == 1 else "(?:" + "|".join(cores) + ")"
@@ -498,10 +496,23 @@ def boolean_regex(s: YaraString, engine: str) -> str:
             core = f"(?:^|[^0-9A-Za-z])(?:{core})(?:$|[^0-9A-Za-z])"
         else:
             core = f"(?<!{_WORD_CLASS})(?:{core})(?!{_WORD_CLASS})"
+    return ("i" if s.nocase else "") + ("s" if s.is_hex else ""), core
+
+
+def boolean_regex(s: YaraString, engine: str) -> str:
+    """The full match-anywhere regex for one string under `engine`:
+    'lookaround' (Python re / Java regex) or 're2' (pyarrow / DuckDB)."""
+    flag_chars, core = _flags_and_core(s, engine)
     # one combined global-flags group (Python re requires global flags at
     # position 0, and only one group there)
-    flag_chars = ("i" if s.nocase else "") + ("s" if s.is_hex else "")
     return (f"(?{flag_chars})" if flag_chars else "") + core
+
+
+def scoped_re2_regex(s: YaraString) -> str:
+    """`boolean_regex(s, "re2")` with its flags scoped to one group, so
+    it can stand as one alternative of a larger RE2 alternation."""
+    flag_chars, core = _flags_and_core(s, "re2")
+    return f"(?{flag_chars}:{core})"
 
 
 def capture_regex(s: YaraString) -> re.Pattern:

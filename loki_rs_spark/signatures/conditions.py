@@ -801,30 +801,6 @@ def collect_string_op_nodes(node) -> list:
     return []
 
 
-def collect_uint_nodes(node) -> list:
-    """Every UintCmp node — its presence means the mask backend needs
-    fixed-offset reads of the text (TextOps.at_mask)."""
-    if isinstance(node, UintCmp):
-        return [node]
-    if isinstance(node, Not):
-        return collect_uint_nodes(node.operand)
-    if isinstance(node, (AndExpr, OrExpr)):
-        return [t for x in node.items for t in collect_uint_nodes(x)]
-    return []
-
-
-def collect_size_nodes(node) -> list:
-    """Every SizeCmp node — its presence means the mask backend needs the
-    batch's text lengths (TextOps.lengths)."""
-    if isinstance(node, SizeCmp):
-        return [node]
-    if isinstance(node, Not):
-        return collect_size_nodes(node.operand)
-    if isinstance(node, (AndExpr, OrExpr)):
-        return [t for x in node.items for t in collect_size_nodes(x)]
-    return []
-
-
 def _has_proper_border(needle: str) -> bool:
     """True if some proper prefix of `needle` is also a suffix — exactly
     the condition under which occurrences can overlap, making

@@ -392,3 +392,158 @@ def test_hash_ioc_hits_without_hash_iocs(spark, monkeypatch):
         f.dataType for f in full.schema
     ]
     assert empty.collect() == []
+
+
+# ---- one compiled scan plan per key ---------------------------------------
+
+
+def _fresh_plans(monkeypatch):
+    """An empty plan cache for this test, and a list that records every
+    payload broadcast."""
+    from collections import OrderedDict
+
+    from pyspark import SparkContext
+
+    from loki_rs_spark.plans import pipeline
+
+    monkeypatch.setattr(pipeline, "_PLANS", OrderedDict())
+    broadcasts = []
+    orig = SparkContext.broadcast
+
+    def counted(self, value):
+        broadcasts.append(len(value))
+        return orig(self, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", counted)
+    return broadcasts
+
+
+@pytest.mark.parametrize(
+    "build", [scan_transcripts, scan_transcripts_scores],
+    ids=["arrow", "scores"],
+)
+def test_warm_build_round_trips(spark, sigs, stored_transcripts, monkeypatch,
+                                build):
+    """Once its plan is compiled, a scan build makes a few dozen py4j round
+    trips instead of thousands (object releases not counted)."""
+    import py4j.clientserver as cs
+
+    _fresh_plans(monkeypatch)
+    build(spark, stored_transcripts, sigs).routed  # compiles the plan
+    calls = []
+    orig = cs.ClientServerConnection.send_command
+
+    def counted(self, command):
+        if not command.startswith("m\nd\n"):
+            calls.append(command)
+        return orig(self, command)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
+    build(spark, stored_transcripts, sigs).routed
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 400
+
+
+def test_one_payload_broadcast_per_plan(spark, sigs, stored_transcripts,
+                                        monkeypatch):
+    broadcasts = _fresh_plans(monkeypatch)
+    first = _collect_routed(scan_transcripts(spark, stored_transcripts, sigs))
+    second = _collect_routed(scan_transcripts(spark, stored_transcripts, sigs))
+    assert len(broadcasts) == 1
+    assert first == second
+
+
+def test_each_key_gets_its_own_plan(spark, sigs, stored_transcripts,
+                                    monkeypatch):
+    """Builds that differ in ScanConfig, source_kind or signature set each
+    compile their own plan, interleaved in one session, and route what the
+    reference scanner routes for that key."""
+    import dataclasses
+
+    broadcasts = _fresh_plans(monkeypatch)
+    rows = stored_transcripts.collect()
+    no_c2 = dataclasses.replace(sigs, c2_iocs=())
+    keys = [
+        (sigs, CFG, "file"),
+        (sigs, ScanConfig(max_reasons=100), "file"),
+        (sigs, CFG, "process"),
+        (no_c2, CFG, "file"),
+    ]
+    seen = []
+    for key in keys + keys[:1]:
+        key_sigs, cfg, kind = key
+        routed = scan_transcripts(
+            spark, stored_transcripts, key_sigs, cfg, source_kind=kind
+        ).routed
+        actual = {
+            (r["conv_id"], r["turn_idx"]): (
+                r["level"], r["score"], [x["message"] for x in r["reasons"]]
+            )
+            for r in routed.collect()
+        }
+        expected = {}
+        for r in rows:
+            ref = scan_turn(
+                r["conv_id"], r["turn_idx"], r["text"], r["tool"], key_sigs,
+                cfg, role=r["role"], source_kind=kind,
+            )
+            if ref is not None:
+                expected[(ref.conv_id, ref.turn_idx)] = (
+                    ref.level, ref.score, [x.message for x in ref.reasons]
+                )
+        assert actual == expected, key[1:]
+        seen.append(actual)
+    assert len(broadcasts) == len(keys)  # the repeated key reused its plan
+    assert seen[-1] == seen[0]
+    assert len({repr(sorted(s.items())) for s in seen}) == len(keys)
+
+
+def test_plan_cache_compiles_each_key_once_across_threads(monkeypatch):
+    """Concurrent builds of the same keys compile each plan once (the
+    cache's check-then-insert holds its lock), and the cache stays
+    within its bound."""
+    import sys
+    import threading
+    import time
+    from collections import Counter, OrderedDict
+    from types import SimpleNamespace
+
+    from loki_rs_spark.plans import pipeline
+
+    monkeypatch.setattr(pipeline, "_PLANS", OrderedDict())
+    compiled = Counter()
+
+    def fake_compile(spark, sigs, cfg, matcher, source_kind, literal_dims):
+        compiled[(sigs.fingerprint, matcher)] += 1
+        time.sleep(0.001)  # a real compile waits on the JVM
+        return object()
+
+    monkeypatch.setattr(pipeline, "_compile_plan", fake_compile)
+    spark = SimpleNamespace(_jsparkSession=object())
+    keys = [
+        (SimpleNamespace(fingerprint=f"fp{i}"), m)
+        for i in range(4) for m in ("arrow", "scores")
+    ]
+
+    start = threading.Barrier(8)
+
+    def worker():
+        start.wait(timeout=60)
+        for _ in range(200):
+            for sigs, matcher in keys:
+                pipeline._scan_plan(spark, sigs, CFG, matcher, "file", True)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(compiled) == len(keys)
+    assert set(compiled.values()) == {1}
+    assert len(pipeline._PLANS) == len(keys) <= pipeline._PLAN_CACHE_SIZE

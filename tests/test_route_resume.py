@@ -238,6 +238,28 @@ def test_lineage_matches_sink(spark, sigs, stored, tmp_path):
     assert any(c == (0, 0, 0, 0) for c in lineage.values())
 
 
+def test_lineage_is_one_file_per_run(spark, sigs, stored, tmp_path):
+    """Each run appends its lineage rows as one parquet file: one after a
+    partial run, two after the resumed one, and the rows are unchanged."""
+    import glob
+
+    out = str(tmp_path / "out")
+
+    def files():
+        return glob.glob(f"{out}/lineage/part-*.parquet")
+
+    run_resumable_scan(
+        spark, stored, sigs, out, CFG, n_buckets=8, only_buckets={0, 1, 2}
+    )
+    assert len(files()) == 1
+    assert set(_lineage(spark, out)) == {0, 1, 2}
+    assert run_resumable_scan(
+        spark, stored, sigs, out, CFG, n_buckets=8
+    ) == set(range(3, 8))
+    assert len(files()) == 2
+    assert set(_lineage(spark, out)) == set(range(8))
+
+
 def test_lineage_of_a_run_that_routes_nothing(
     spark, sigs, clean_stored, tmp_path
 ):

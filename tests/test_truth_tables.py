@@ -1558,3 +1558,254 @@ def test_backref_expansion_escape_pair_scan():
     assert out is not None
     assert "\\\\1" in out  # the literal pair survives verbatim
     assert out.count("'") >= 2  # genuine ref replaced by the class char
+
+
+# ---- the matcher kernel's atom gate ---------------------------------------
+
+GATE_RULES = r"""
+rule G_Nocase {
+    strings:
+        $a = "EvilToken" nocase
+    condition:
+        $a
+}
+rule G_Hex {
+    strings:
+        $h = { 4D 5A ?? 50 }
+    condition:
+        $h
+}
+rule G_Wide {
+    strings:
+        $w = "wideword" wide
+        $b = "bothforms" wide ascii
+    condition:
+        any of them
+}
+rule G_Xor_Count {
+    strings:
+        $x = "SECRET" xor(0x01-0x20)
+    condition:
+        $x or #x >= 1
+}
+rule G_B64_Count {
+    strings:
+        $b = "exfil-the-data" base64
+    condition:
+        $b or #b >= 2
+}
+rule G_Fullword {
+    strings:
+        $f = "fwtoken" fullword
+    condition:
+        $f
+}
+rule G_Private {
+    strings:
+        $p = "privmark" private
+        $v = "vismark"
+    condition:
+        all of them
+}
+rule G_Not {
+    strings:
+        $n = "neverthere"
+    condition:
+        not $n
+}
+rule G_Zero_Of {
+    strings:
+        $z1 = "zzone"
+        $z2 = "zztwo"
+    condition:
+        0 of them
+}
+rule G_Size {
+    condition:
+        filesize > 20
+}
+rule G_Ext {
+    condition:
+        extension == "exe"
+}
+rule G_Uint {
+    condition:
+        uint16(0) == 0x4241
+}
+rule G_At_Nocase {
+    strings:
+        $c = "Banner" nocase
+    condition:
+        $c at 0
+}
+rule G_At_Fold {
+    strings:
+        $k = "bit" nocase
+    condition:
+        $k at 0
+}
+rule G_In_Offset_For {
+    strings:
+        $t = "tok"
+        $m = "mark"
+    condition:
+        $t in (2..8) or @m[2] > 3 or for any i in (1..#m) : ( @m[i] > 30 )
+}
+"""
+
+# a regex that matches the empty string makes every non-NULL text a
+# candidate, so it is tested on its own
+EMPTY_MATCH_RULE = r"""
+rule G_Empty_Regex {
+    strings:
+        $e = /q*/
+    condition:
+        $e and filesize < 12
+}
+"""
+
+GATE_TEXTS = [
+    None,
+    "",
+    "a clean turn that holds no atom at all",
+    "AB clean",
+    "short",
+    "an eVILtoKEN here",
+    "MZxP header",
+    "w\x00i\x00d\x00e\x00w\x00o\x00r\x00d\x00",
+    "both bothforms",
+    "plain SECRET here",
+    "".join(chr(ord(c) ^ 0x05) for c in "SECRET"),
+    "exfil-the-data twice exfil-the-data",
+    "a fwtoken b",
+    "afwtokenb",
+    "privmark and vismark",
+    "vismark alone",
+    "qqq",
+    "zzone only",
+    "bannER at the start",
+    "xxtokxx",
+    "mark mark",
+    "a mark placed far beyond thirty chars: mark",
+    # utf8_lower folds U+0130 to 'i', RE2's case folding does not
+    "B\u0130T here",
+]
+
+
+def _gate_batch(engine, texts, copies=1):
+    import pyarrow as pa
+
+    texts = texts * copies
+    ext_bit = 1 << engine.atom_index[next(iter(engine.atom_index))]
+    bits = [ext_bit if i % 2 else 0 for i in range(len(texts))]
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(texts, type=pa.string()),
+            pa.array(["tool.exe"] * len(texts), type=pa.string()),
+            pa.array(bits, type=pa.int64()),
+        ],
+        names=["text", "tool", "ext_bits"],
+    )
+
+
+def _assert_gate_exact(engine, batch):
+    """Gated string masks equal `_string_mask` over the whole batch, and
+    every rule fires as under an ungated evaluation (all uniques
+    candidates)."""
+    import numpy as np
+
+    from loki_rs_spark.operators.arrow_matcher import (
+        _batch_masks,
+        _string_mask,
+    )
+    from loki_rs_spark.operators.matcher import ExtBits, TextOps, _MaskBackend
+    from loki_rs_spark.signatures.conditions import render_condition
+
+    text_c, _fname, yara = _batch_masks(engine, batch)
+    text = batch.column("text")
+    every = np.arange(len(text_c.kernel_input))
+    ext = ExtBits(batch.column("ext_bits").to_numpy(), engine.atom_index)
+    for fired, masks, compiled in yara:
+        whole = [_string_mask(text, s) for s in compiled.rule.strings]
+        for s, gated, ref in zip(compiled.rule.strings, masks, whole):
+            assert gated.tolist() == ref.tolist(), (compiled.rule.name, s)
+        backend = _MaskBackend(
+            [(s.identifier, m) for s, m in zip(compiled.rule.strings, whole)],
+            batch.num_rows,
+            ext,
+            text_ops=TextOps(text_c, every),
+            strings_by_ident=compiled.strings_by_ident,
+        )
+        ungated = np.asarray(render_condition(compiled.ast, backend), bool)
+        assert fired.tolist() == ungated.tolist(), compiled.rule.name
+    return {c.rule.name: fired for fired, _m, c in yara}
+
+
+@pytest.mark.parametrize("copies", [1, 40], ids=["plain", "dict-encoded"])
+def test_atom_gate_is_exact(copies):
+    from loki_rs_spark.operators.matcher import CompiledEngine
+    from loki_rs_spark.signatures.parsers import parse_yara_rules
+
+    engine = CompiledEngine(_sigs(yara_rules=parse_yara_rules(GATE_RULES)))
+    assert len(engine.atom_programs) == 1
+    fired = _assert_gate_exact(engine, _gate_batch(engine, GATE_TEXTS, copies))
+
+    row = {t: i for i, t in enumerate(GATE_TEXTS)}
+    clean = row["a clean turn that holds no atom at all"]
+    # conditions without (or against) strings fire on atom-free rows
+    assert fired["G_Not"][clean] and fired["G_Zero_Of"][clean]
+    assert fired["G_Size"][clean] and not fired["G_Size"][row["short"]]
+    # the ext bit is set on odd rows
+    assert fired["G_Ext"][row["AB clean"]] and not fired["G_Ext"][clean]
+    assert fired["G_Uint"][row["AB clean"]]
+    # count operators read the plain literal of xor/base64 strings
+    assert fired["G_Xor_Count"][row["plain SECRET here"]]
+    assert fired["G_B64_Count"][row["exfil-the-data twice exfil-the-data"]]
+    for name in ("G_Nocase", "G_Hex", "G_Wide", "G_Fullword", "G_Private",
+                 "G_At_Nocase", "G_In_Offset_For"):
+        assert fired[name].any(), name
+    assert not fired["G_Fullword"][row["afwtokenb"]]
+
+
+def test_atom_gate_with_an_empty_matching_regex():
+    from loki_rs_spark.operators.matcher import CompiledEngine
+    from loki_rs_spark.signatures.parsers import parse_yara_rules
+
+    rules = parse_yara_rules(GATE_RULES + EMPTY_MATCH_RULE)
+    engine = CompiledEngine(_sigs(yara_rules=rules))
+    fired = _assert_gate_exact(engine, _gate_batch(engine, GATE_TEXTS, 1))
+    row = {t: i for i, t in enumerate(GATE_TEXTS)}
+    assert fired["G_Empty_Regex"][row[""]]
+    assert fired["G_Empty_Regex"][row["short"]]
+    assert not fired["G_Empty_Regex"][row[None]]
+
+
+def test_atom_gate_chunks_past_the_size_cap():
+    """A signature set whose alternation passes ATOM_PROGRAM_MAX_CHARS is
+    split into several programs, and the gate stays exact."""
+    from loki_rs_spark.operators.matcher import (
+        ATOM_PROGRAM_MAX_CHARS,
+        CompiledEngine,
+    )
+    from loki_rs_spark.signatures.parsers import parse_yara_rules
+
+    wide_xor = "".join(
+        f"""
+rule G_Xor_{i} {{
+    strings:
+        $x = "xormarker-{i}" xor
+    condition:
+        $x
+}}"""
+        for i in range(12)
+    )
+    sigs = _sigs(yara_rules=parse_yara_rules(GATE_RULES + wide_xor))
+    engine = CompiledEngine(sigs)
+    assert len(engine.atom_programs) > 1
+    assert sum(map(len, engine.atom_programs)) > ATOM_PROGRAM_MAX_CHARS
+    key = 0x07
+    hidden = "".join(chr(ord(c) ^ key) for c in "xormarker-11")
+    fired = _assert_gate_exact(
+        engine, _gate_batch(engine, GATE_TEXTS + [f"a {hidden} b"], 1)
+    )
+    assert fired["G_Xor_11"][-1] and not fired["G_Xor_10"][-1]
