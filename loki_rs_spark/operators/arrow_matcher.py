@@ -4,8 +4,10 @@ The matcher stays in Arrow end to end:
 
 * a scalar `arrow_udf` (iterator form) ships only the text, tool and
   packed ext_bits columns across the Python bridge;
+* every kernel runs over the batch's dictionary-encoded unique values
+  and gathers back to rows through the codes (`_CompactCol`);
 * one pass of the engine's atom programs (the OR of every YARA string's
-  RE2 regex) over the batch's unique texts, then per signature string ONE
+  RE2 regex) over the unique texts, then per signature string ONE
   `pyarrow.compute.match_substring[_regex]` kernel call over the few
   uniques that pass it (C++-vectorized RE2 / literal scan, zero Python
   objects in the hot path);
@@ -17,9 +19,9 @@ The matcher stays in Arrow end to end:
   (ioc_join.REASON_TYPE, messages included), so the Spark side only
   concatenates them with the hash reasons.
 
-The full matcher (`match_record_batch`) and the score-only one
-(`match_scores_record_batch`) share one mask pass (`_batch_masks`) and
-differ only in how they render the fired masks.
+The full matcher (`match_record_batch`) renders the fired masks of one
+mask pass (`_batch_masks`) as reasons; the score-only one
+(`match_scores_record_batch`) is the projection of their `score` field.
 
 Pattern-dialect note: the batch kernels use RE2, the per-hit offset
 extraction uses Python `re`. The supported signature subset (literal
@@ -85,62 +87,26 @@ class _CompactCol:
     """Unique-value kernel evaluation for one string column.
 
     Each of the ~O(100) per-signature kernels would otherwise walk the
-    full batch. Two batch-local reductions make kernel cost proportional
-    to the batch's UNIQUE non-blank bytes instead:
-
-    * compaction — kernels run over only the non-blank rows plus one ''
-      sentinel whose result is scattered to every blank row (byte-identical
-      to evaluating the kernel on '' per blank row; NULL rows stay False,
-      matching pa boolean->numpy astype semantics);
-    * dictionary encoding — repeated texts (templated tool output, retry
-      loops, replayed logs) collapse to unique values before the kernel,
-      and masks gather back through the code indices. Skipped when the
-      batch is mostly unique (encode cost would exceed kernel savings).
+    full batch. The column is dictionary-encoded once: kernels run over
+    its unique non-NULL values (`kernel_input`; a blank text is one of
+    them) and their results gather back to rows through the codes, so
+    kernel cost follows the batch's unique bytes, and rows sharing a
+    value (templated tool output, retry loops, replayed logs) share its
+    result. NULL rows point one past the uniques and read the caller's
+    `fill`.
 
     Masks returned are full-batch-length and identical to running each
     kernel over the raw column, verified by the routed-row-equality tests.
     """
 
-    # dictionary-encode only when uniques shrink the kernel input enough
-    # to beat the one extra hash pass over the batch
-    _DICT_MAX_UNIQUE_FRACTION = 0.67
-
     def __init__(self, arr) -> None:
-        arr = _as_array(arr)
-        self.arr = arr
-        self.n = len(arr)
-        lens = pc.fill_null(pc.utf8_length(arr), 0).to_numpy(
+        enc = _as_array(arr).dictionary_encode()
+        self.kernel_input = enc.dictionary
+        self.n = len(enc)
+        # per row, its index into `kernel_input` (NULL rows: one past it)
+        self.codes = pc.fill_null(enc.indices, len(enc.dictionary)).to_numpy(
             zero_copy_only=False
         )
-        self.sel = np.nonzero(lens)[0]
-        self.full = len(self.sel) == self.n
-        self.null_sel = None
-        self.codes = None
-        if self.full:
-            kernel_input = arr
-        else:
-            if arr.null_count:
-                self.null_sel = np.nonzero(
-                    arr.is_null().to_numpy(zero_copy_only=False).astype(bool)
-                )[0]
-            kernel_input = pa.concat_arrays(
-                [
-                    arr.take(pa.array(self.sel, type=pa.int64())),
-                    pa.array([""], type=arr.type),
-                ]
-            )
-        if len(kernel_input) > 64:
-            enc = kernel_input.dictionary_encode()
-            uniques = enc.dictionary
-            if len(uniques) <= self._DICT_MAX_UNIQUE_FRACTION * len(
-                kernel_input
-            ):
-                self.codes = enc.indices.to_numpy(zero_copy_only=False).astype(
-                    np.int64, copy=False
-                )
-                kernel_input = uniques
-        self.kernel_input = kernel_input
-        self._row_index = None
 
     def expand(
         self, values: np.ndarray, fill, at: np.ndarray | None = None
@@ -148,45 +114,14 @@ class _CompactCol:
         """Per-`kernel_input` values -> the full-batch array (NULL rows read
         `fill`). With `at`, `values` covers only `kernel_input[at]` and
         every other unique reads `fill`."""
-        if at is not None:
-            full = np.full(len(self.kernel_input), fill, dtype=values.dtype)
-            full[at] = values
-            values = full
-        if self.full and self.codes is None:
-            return values
-        out = values[self.row_to_kernel_index()]
-        if self.null_sel is not None:
-            out[self.null_sel] = fill
-        return out
+        full = np.full(len(self.kernel_input) + 1, fill, dtype=values.dtype)
+        full[slice(None, -1) if at is None else at] = values
+        return full[self.codes]
 
     def mask(self, fn) -> np.ndarray:
         """fn(pa.Array) -> np bool mask over that array; returns the
         equivalent full-batch mask."""
         return self.expand(fn(self.kernel_input), False)
-
-    def row_to_kernel_index(self) -> np.ndarray:
-        """For each batch row, the index into `kernel_input` holding its
-        value (blank/NULL rows point at the '' sentinel). Lets per-unique
-        computations (e.g. C2 host extraction) expand to rows."""
-        if self._row_index is not None:
-            return self._row_index
-        if self.full:
-            idx = (
-                self.codes if self.codes is not None
-                else np.arange(self.n, dtype=np.int64)
-            )
-        else:
-            # sentinel '' cannot collide with a (non-blank) compacted
-            # value, so after dictionary_encode its code is always the
-            # LAST index
-            idx = np.full(self.n, len(self.kernel_input) - 1, dtype=np.int64)
-            idx[self.sel] = (
-                self.codes[:-1]
-                if self.codes is not None
-                else np.arange(len(self.sel), dtype=np.int64)
-            )
-        self._row_index = idx
-        return idx
 
 
 def _string_mask(arr, s) -> np.ndarray:
@@ -214,24 +149,24 @@ def _reason_list_array(
 
 
 def _batch_masks(engine, batch: pa.RecordBatch):
-    """The mask pass both matchers share: decode the JVM-packed ext_bits,
-    compact the text/tool columns, then run every filename-IOC kernel and
-    every YARA string kernel + condition. Returns (text_c, fname, yara):
+    """The matcher's mask pass: decode the JVM-packed ext_bits,
+    dictionary-encode the text/tool columns, then run every filename-IOC
+    kernel and every YARA string kernel + condition. Returns
+    (text_c, fname, yara):
     `fname` is one (mask, ioc) per filename IOC and `yara` one
     (fired, string masks, compiled rule) per rule, both in engine order.
     `ext_bits` follows the conditions.collect_ext_atoms ordering. Text and
-    tool arrive raw: dict-encoded compaction keeps kernel cost
-    proportional to unique bytes, and the masks are exact.
+    tool arrive raw: the encoding keeps kernel cost proportional to
+    unique bytes, and the masks are exact.
 
     The YARA string kernels are gated: one pass of the engine's atom
     programs (the OR of every string's RE2 regex) over the unique texts
-    picks the candidates, and the per-string kernels and the TextOps
-    string reads run on those alone, scattered back with False (0)
+    picks the candidates, and the per-string kernels and every TextOps
+    string read run on those alone, scattered back with False (0)
     elsewhere. A text matches `A|B|...` iff it matches one of them, so
     the result equals the ungated kernels'. Conditions still render over
     every row, so negations, `0 of them` and string-free rules (filesize,
     uint, external variables) fire on rows without any atom."""
-    text = batch.column("text")
     bits_np = (
         batch.column("ext_bits")
         .to_numpy(zero_copy_only=False)
@@ -240,7 +175,7 @@ def _batch_masks(engine, batch: pa.RecordBatch):
     ext = ExtBits(bits_np, engine.atom_index)
     n = batch.num_rows
     tool_c = _CompactCol(batch.column("tool"))
-    text_c = _CompactCol(text)
+    text_c = _CompactCol(batch.column("text"))
 
     # ---- filename IOCs (J3)
     fname = []
@@ -305,39 +240,34 @@ def match_record_batch(
 
     ya_counts = np.zeros(n, dtype=np.int64)
     ya_rows: dict[int, list[dict]] = {}
-    row_u = None  # lazy row -> kernel-input index map (hit rows only)
     for fired, masks, compiled in yara:
-        fired_idx = np.nonzero(fired)[0]
-        if len(fired_idx) == 0:
-            continue
-        if row_u is None:
-            row_u = text_c.row_to_kernel_index()
         # Matched strings depend only on (rule, text VALUE): the string
-        # masks scatter from per-unique kernel results, so rows sharing a
-        # dict-encoded unique value fire with identical matched_strings.
-        # Compute the reason ONCE per unique value and append the shared
-        # (read-only) dict per hit row — on replicated corpora (the
-        # rep-1600 bench table has ~7 distinct texts per 10k-row batch)
-        # this removes ~all per-hit .as_py() + occurrence-walk work.
+        # masks gather from per-unique kernel results, so rows sharing a
+        # unique value fire with identical matched_strings. Compute the
+        # reason ONCE per unique value and append the shared (read-only)
+        # dict per hit row — on replicated corpora (the rep-1600 bench
+        # table has ~7 distinct texts per 10k-row batch) this removes
+        # ~all per-hit .as_py() + occurrence-walk work.
         rule = compiled.rule
         per_unique: dict[int, dict] = {}
-        for idx in fired_idx:
+        for idx in np.nonzero(fired)[0]:
             i = int(idx)
             if ya_counts[i] >= MAX_YARA_MATCHES:
                 continue
-            u = int(row_u[i])
+            u = int(text_c.codes[i])
             entry = per_unique.get(u)
             if entry is None:
-                row_text = text_c.kernel_input[u].as_py()
-                matched_strings: list[str] = []
-                for (identifier, rx), mask, s in zip(
-                    compiled.patterns, masks, rule.strings
-                ):
-                    if not mask[i]:
-                        continue
-                    matched_strings.extend(
-                        string_occurrence_lines(s, rx, row_text)
+                # a NULL row (u past the uniques) has no string set
+                matched_strings = [
+                    line
+                    for (_ident, rx), mask, s in zip(
+                        compiled.patterns, masks, rule.strings
                     )
+                    if mask[i]
+                    for line in string_occurrence_lines(
+                        s, rx, text_c.kernel_input[u].as_py()
+                    )
+                ]
                 entry = {
                     "message": YARA_MSG + rule.name,
                     "score": rule.score,
@@ -395,11 +325,8 @@ def _c2_match_lists(
 
     uniq_lists: dict[int, list[dict]] = {}
     for u in np.nonzero(gate)[0]:
-        value = ki[int(u)].as_py()
-        if not value:
-            continue
         out: list[dict] = []
-        for host in _HOST_RX.findall(value.lower()):
+        for host in _HOST_RX.findall(ki[int(u)].as_py().lower()):
             hit = engine.c2_lookup(host)
             if hit is not None:
                 out.append(
@@ -416,7 +343,7 @@ def _c2_match_lists(
 
     rows: dict[int, list[dict]] = {}
     if uniq_lists:
-        row_idx = text_c.row_to_kernel_index()
+        row_idx = text_c.codes
         hit_uniques = np.array(sorted(uniq_lists), dtype=np.int64)
         hit_rows = np.nonzero(np.isin(row_idx, hit_uniques))[0]
         for r in hit_rows:
@@ -426,55 +353,18 @@ def _c2_match_lists(
     return counts, rows
 
 
-def _score_list_array(
-    n: int, per_source: list[tuple[np.ndarray, int]]
-) -> pa.Array:
-    """(mask, score) per source -> per-row list<int> of the scores of the
-    sources whose mask is set, source order preserved per row."""
-    counts = np.zeros(n, dtype=np.int64)
-    for mask, _ in per_source:
-        counts += mask
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(counts, out=offsets[1:])
-    values = np.zeros(int(offsets[-1]), dtype=np.int32)
-    cursor = offsets[:-1].copy()
-    for mask, score in per_source:
-        idx = np.nonzero(mask)[0]
-        values[cursor[idx]] = score
-        cursor[idx] += 1
-    return pa.ListArray.from_arrays(
-        pa.array(offsets, type=pa.int32()), pa.array(values, type=pa.int32())
-    )
-
-
 def match_scores_record_batch(
     engine, batch: pa.RecordBatch
 ) -> tuple[pa.Array, pa.Array, pa.Array]:
-    """Score-only variant of match_record_batch: per row, the SCORE arrays
-    of matching filename IOCs, fired YARA rules and C2 hosts (discovery
-    order), with no struct assembly and no matched-string offset
-    extraction — the same mask pass plus ListArray construction, zero
-    per-hit Python. Used by aggregate-only consumers (severity counts,
-    rollups) where messages/offsets are never read; scoring semantics are
-    identical because reason scores do not depend on matched strings."""
-    text_c, fname, yara = _batch_masks(engine, batch)
-    n = batch.num_rows
-    c2_counts, c2_rows = _c2_match_lists(text_c, engine)
-    c2_offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(c2_counts, out=c2_offsets[1:])
-    c2_scores = pa.ListArray.from_arrays(
-        pa.array(c2_offsets, type=pa.int32()),
-        pa.array(
-            [r["score"] for i in sorted(c2_rows) for r in c2_rows[i]],
-            type=pa.int32(),
-        ),
-    )
-    return (
-        _score_list_array(n, [(mask, ioc.score) for mask, ioc in fname]),
-        _score_list_array(
-            n, [(fired, c.rule.score) for fired, _m, c in yara]
-        ),
-        c2_scores,
+    """Score-only variant of match_record_batch: per row, the scores of
+    matching filename IOCs, fired YARA rules and C2 hosts (discovery
+    order), each a list<int32> array — the `score` field of
+    match_record_batch's reason lists, over the same offsets. Used by
+    aggregate-only consumers (severity counts, rollups) where messages
+    are never read."""
+    return tuple(
+        pa.ListArray.from_arrays(arr.offsets, arr.values.field("score"))
+        for arr in match_record_batch(engine, batch)
     )
 
 

@@ -36,6 +36,7 @@ from ..signatures.compile import capture_regex, literal_probe
 from ..signatures.conditions import (
     ExtPred,
     _has_proper_border,
+    cmp_int,
     collect_ext_atoms,
     render_condition,
 )
@@ -128,22 +129,6 @@ class _CompiledYaraRule:
     strings_by_ident: dict  # identifier -> YaraString
 
 
-def _np_cmp(op: str, arr: np.ndarray, value: int) -> np.ndarray:
-    if op == "eq":
-        return arr == value
-    if op == "ne":
-        return arr != value
-    if op == "gt":
-        return arr > value
-    if op == "ge":
-        return arr >= value
-    if op == "lt":
-        return arr < value
-    if op == "le":
-        return arr <= value
-    raise ValueError(f"unknown cmp op {op}")  # pragma: no cover
-
-
 class ExtBits:
     """External-variable atom truth for a batch, decoded from the packed
     int64 bitmask the pipeline computes JVM-side (see
@@ -164,19 +149,18 @@ class ExtBits:
 
 
 class TextOps:
-    """Vectorized count/at/in/offset primitives for the yara count/offset
+    """Vectorized count/in/offset primitives for the yara count/offset
     operators (plain-ascii-literal subset, guaranteed by
     conditions.validate_condition_ops), evaluated over a batch's UNIQUE
     texts (`text_c.kernel_input`, see arrow_matcher._CompactCol) and
     scattered back to rows by `text_c.expand`.
 
     The string operators run on the atom candidates `cand` only: a unique
-    outside them holds no occurrence of any string or needle
-    (CompiledEngine.atom_programs), so its counts are 0 and its at/in/from
-    reads False, exactly what the kernels would return. The one exception
-    is a nocase `at`: utf8_lower folds a few characters RE2's case folding
-    does not (U+0130), so it reads every unique, as the string-free reads
-    (uint, filesize) do.
+    outside them holds no occurrence of any string
+    (CompiledEngine.atom_programs), so its counts are 0 and its in/from
+    reads False, exactly what the kernels would return. A nocase read
+    folds case as the string's own mask does (RE2's `ignore_case`). Only
+    the string-free reads (uint, filesize) read every unique.
 
     Offsets are CHARACTER offsets — the matched_strings '@ {offset}'
     convention — computed with codepoint-exact kernels
@@ -220,37 +204,19 @@ class TextOps:
                 counts[i] = overlap_count(tf, needle_f)
         return self._gated(counts, 0)
 
-    def _starts_with(self, values, needle: str, nocase: bool, offset: int):
-        import pyarrow.compute as pc
-
-        sliced = pc.utf8_slice_codeunits(
-            values, offset, offset + len(needle)
-        )
-        if nocase:
-            sliced = pc.utf8_lower(sliced)
-            needle = needle.lower()
-        return (
-            pc.fill_null(pc.equal(sliced, needle), False)
-            .to_numpy(zero_copy_only=False)
-            .astype(bool)
-        )
-
-    def at_mask(self, needle: str, nocase: bool, offset: int) -> np.ndarray:
-        """`$s at offset` for a string `needle` (see the class docstring
-        for the nocase case)."""
-        if nocase:
-            return self.text_c.expand(
-                self._starts_with(self.every, needle, True, offset), False
-            )
-        return self._gated(
-            self._starts_with(self.sub, needle, False, offset), False
-        )
-
     def uint_at_mask(self, needle: str, offset: int) -> np.ndarray:
         """A uintN read: `needle` at character `offset` of every unique
         text (no string involved, so no gate)."""
+        import pyarrow.compute as pc
+
+        sliced = pc.utf8_slice_codeunits(
+            self.every, offset, offset + len(needle)
+        )
         return self.text_c.expand(
-            self._starts_with(self.every, needle, False, offset), False
+            pc.fill_null(pc.equal(sliced, needle), False)
+            .to_numpy(zero_copy_only=False)
+            .astype(bool),
+            False,
         )
 
     def _contains(self, sliced, needle: str, nocase: bool) -> np.ndarray:
@@ -274,7 +240,8 @@ class TextOps:
         [lo, hi+len(needle)) — a match inside the slice starts at slice
         position q <= hi-lo exactly when the original start is <= hi.
         Slice + substring kernels instead of an RE2 '^.{lo,hi}' anchor,
-        so there is NO bounded-repetition cap on the window."""
+        so there is NO bounded-repetition cap on the window. `$s at N` is
+        the window [N, N]."""
         import pyarrow.compute as pc
 
         sliced = pc.utf8_slice_codeunits(self.sub, lo, hi + len(needle))
@@ -311,7 +278,7 @@ class TextOps:
         str.find walk, once per unique text — only runs on the sparse
         mask-true rows."""
         needle_f = needle.lower() if nocase else needle
-        row_u = self.text_c.row_to_kernel_index()
+        row_u = self.text_c.codes
         per_unique: dict[int, int] = {}
         out: dict[int, int] = {}
         for i in rows:
@@ -342,41 +309,33 @@ class _MaskBackend:
         ident_masks: list[tuple[str, np.ndarray]],
         n_rows: int,
         ext,
-        text_ops: TextOps | None = None,
-        strings_by_ident: dict | None = None,
+        text_ops: TextOps,
+        strings_by_ident: dict,
     ) -> None:
         self.ident_masks = ident_masks
         self.masks = dict(ident_masks)
         self.n_rows = n_rows
         self.ext = ext
         self.text_ops = text_ops
-        self.strings_by_ident = strings_by_ident or {}
-
-    def _string(self, ident: str):
-        s = self.strings_by_ident.get(ident)
-        if s is None or self.text_ops is None:
-            raise RuntimeError(
-                f"count/offset operator on {ident} without text ops wired"
-            )  # pragma: no cover - validate_condition_ops guards this
-        return s
+        self.strings_by_ident = strings_by_ident
 
     def count_cmp(self, node) -> np.ndarray:
-        s = self._string(node.identifier)
+        s = self.strings_by_ident[node.identifier]
         counts = self.text_ops.counts(s.pattern, s.nocase)
-        return _np_cmp(node.op, counts, node.value)
+        return cmp_int(node.op, counts, node.value)
 
     def at_expr(self, node) -> np.ndarray:
-        s = self._string(node.identifier)
-        return self.text_ops.at_mask(s.pattern, s.nocase, node.offset)
+        s = self.strings_by_ident[node.identifier]
+        return self.text_ops.in_mask(
+            s.pattern, s.nocase, node.offset, node.offset
+        )
 
     def in_expr(self, node) -> np.ndarray:
-        s = self._string(node.identifier)
+        s = self.strings_by_ident[node.identifier]
         return self.text_ops.in_mask(s.pattern, s.nocase, node.lo, node.hi)
 
     def offset_cmp(self, node) -> np.ndarray:
-        from ..signatures.conditions import cmp_int
-
-        s = self._string(node.identifier)
+        s = self.strings_by_ident[node.identifier]
         base = self.masks[node.identifier]
         offsets = self.text_ops.nth_offsets(
             s.pattern, s.nocase, node.index, np.nonzero(base)[0]
@@ -387,28 +346,16 @@ class _MaskBackend:
         return out
 
     def exists_from(self, node) -> np.ndarray:
-        s = self.strings_by_ident.get(node.identifier)
-        if s is None or self.text_ops is None:
-            raise RuntimeError(
-                "exists_from without text ops wired"
-            )  # pragma: no cover - engine wires text_ops for these rules
+        s = self.strings_by_ident[node.identifier]
         return self.text_ops.from_mask(s.pattern, s.nocase, node.lo)
 
     def bool_lit(self, node) -> np.ndarray:
         return np.full(self.n_rows, node.value, dtype=bool)
 
     def size_cmp(self, node) -> np.ndarray:
-        if self.text_ops is None:
-            raise RuntimeError(
-                "filesize operator without text ops wired"
-            )  # pragma: no cover - engine wires text_ops for these rules
-        return _np_cmp(node.op, self.text_ops.lengths(), node.value)
+        return cmp_int(node.op, self.text_ops.lengths(), node.value)
 
     def uint_cmp(self, node) -> np.ndarray:
-        if self.text_ops is None:
-            raise RuntimeError(
-                "uint operator without text ops wired"
-            )  # pragma: no cover - engine wires text_ops for these rules
         eq = self.text_ops.uint_at_mask(node.needle, node.offset)
         if node.op == "eq":
             return eq
@@ -464,29 +411,17 @@ ATOM_PROGRAM_MAX_CHARS = 16_384
 def atom_programs(rules) -> list[str]:
     """The OR of every YARA string's RE2 boolean regex, flags scoped per
     alternative, split into programs of at most ATOM_PROGRAM_MAX_CHARS
-    (one alternative longer than that is a program of its own). A string
-    that a count/at/in/for operator reads but whose own forms may lack its
-    plain literal (xor, base64) adds that literal too, since TextOps
-    searches for it. A text matches some program iff it holds an
-    occurrence of some string or needle, so every string mask and TextOps
-    string read is False (0) on a text that matches none."""
-    from ..signatures.compile import (
-        literal_probe,
-        regex_literal,
-        scoped_re2_regex,
-    )
-    from ..signatures.conditions import collect_string_op_nodes
+    (one alternative longer than that is a program of its own). A text
+    matches some program iff it holds an occurrence of some string, so
+    every string mask is False on a text that matches none, and so is
+    every TextOps string read: count/at/in/offset operators read only
+    plain literals (conditions.validate_condition_ops), whose regex is
+    the literal itself."""
+    from ..signatures.compile import scoped_re2_regex
 
-    atoms: dict[str, None] = {}
-    for rule in rules:
-        op_idents = {
-            n.identifier for n in collect_string_op_nodes(rule.condition_ast)
-        }
-        for s in rule.strings:
-            atoms.setdefault(scoped_re2_regex(s))
-            if s.identifier in op_idents and literal_probe(s) is None:
-                flag = "i" if s.nocase else ""
-                atoms.setdefault(f"(?{flag}:{regex_literal(s.pattern)})")
+    atoms = dict.fromkeys(
+        scoped_re2_regex(s) for rule in rules for s in rule.strings
+    )
     programs: list[str] = []
     for atom in atoms:
         if programs and (

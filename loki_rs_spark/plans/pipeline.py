@@ -59,6 +59,7 @@ from ..operators.ioc_join import (
     plain_relation_input,
     reason_struct,
 )
+from ..signatures.conditions import cmp_int
 from ..signatures.model import SignatureSet
 
 
@@ -414,15 +415,7 @@ class _CatalystCondBackend:
             body = f"(?={body})"
         pat = ("(?i)" if s.nocase else "") + body
         counts = F.regexp_count(F.col("text"), F.lit(pat))
-        ops = {
-            "eq": counts == node.value,
-            "ne": counts != node.value,
-            "gt": counts > node.value,
-            "ge": counts >= node.value,
-            "lt": counts < node.value,
-            "le": counts <= node.value,
-        }
-        return ops[node.op]
+        return cmp_int(node.op, counts, node.value)
 
     def at_expr(self, node) -> Column:
         col, needle = self._folded(node.identifier)
@@ -458,15 +451,7 @@ class _CatalystCondBackend:
         return F.lit(node.value)
 
     def size_cmp(self, node) -> Column:
-        length = F.length(F.col("text"))
-        return {
-            "eq": length == node.value,
-            "ne": length != node.value,
-            "gt": length > node.value,
-            "ge": length >= node.value,
-            "lt": length < node.value,
-            "le": length <= node.value,
-        }[node.op]
+        return cmp_int(node.op, F.length(F.col("text")), node.value)
 
     def str_ref(self, ident: str) -> Column:
         return self.str_cols[ident]

@@ -14,9 +14,10 @@ from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, ScanConfig
 from .operators.hashes import with_hashes
-from .operators.ioc_join import c2_reason_array
+from .operators.ioc_join import c2_reason_array, plain_relation_input
 from .plans.pipeline import (
     ScanResult,
+    _scan_plan,
     scan_transcripts,
     scan_transcripts_scores,
 )
@@ -181,19 +182,25 @@ def q_hash_ioc_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("conv_id", "turn_idx", "hash_type", "hash_value", "ioc_score")
 
 
+def _matched_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The transcripts with the Arrow matcher UDF's output as `_m`. The
+    column comes from the compiled arrow scan plan of this input (the one
+    `_scan` builds too), so repeated query builds share its one payload
+    broadcast."""
+    df = load_transcripts(spark, sf_dir, rep=DEFAULT_REP)
+    plan = _scan_plan(
+        spark, bundled_signatures(), DEFAULT_CONFIG, "arrow", "file",
+        plain_relation_input(df),
+    )
+    return df.withColumn(plan.matcher_name, plan.matcher_col())
+
+
 def q_filename_ioc_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 through the Arrow matcher UDF (the production path)."""
-    from .operators.arrow_matcher import make_arrow_matcher_udf
-    from .operators.ext_bits import ext_bits_col
     from .operators.ioc_join import FNAME_MSG
 
-    sigs = bundled_signatures()
-    df = load_transcripts(spark, sf_dir, rep=DEFAULT_REP)
-    matcher = make_arrow_matcher_udf(spark, sigs)
     return (
-        df.withColumn(
-            "_m", matcher(F.col("text"), F.col("tool"), ext_bits_col(sigs))
-        )
+        _matched_transcripts(spark, sf_dir)
         .select("conv_id", "turn_idx", "tool", F.explode("_m.fname").alias("m"))
         .select(
             "conv_id",
@@ -219,20 +226,15 @@ def _yara_rule_subset_hits(
     """The Arrow matcher over raw transcripts, keeping only the rules
     whose names carry the given prefixes — isolates one condition-language
     feature family for oracle checking."""
-    from .operators.arrow_matcher import make_arrow_matcher_udf
-    from .operators.ext_bits import ext_bits_col
     from .operators.ioc_join import YARA_MSG
 
-    sigs = bundled_signatures()
-    df = load_transcripts(spark, sf_dir, rep=DEFAULT_REP)
-    audf = make_arrow_matcher_udf(spark, sigs)
     rule_names = [
-        r.name for r in sigs.yara_rules if r.name.startswith(prefixes)
+        r.name
+        for r in bundled_signatures().yara_rules
+        if r.name.startswith(prefixes)
     ]
     return (
-        df.withColumn(
-            "_m", audf(F.col("text"), F.col("tool"), ext_bits_col(sigs))
-        )
+        _matched_transcripts(spark, sf_dir)
         .select("conv_id", "turn_idx", "tool", F.explode("_m.yara").alias("m"))
         .select(
             "conv_id",

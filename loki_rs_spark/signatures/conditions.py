@@ -69,7 +69,7 @@ rules use, src/main.rs:780-872 compiles them all):
   yara); false when fewer than i occurrences. ``@a`` is ``@a[1]``.
 
 These operators are restricted to PLAIN ASCII LITERAL strings (nocase
-allowed; no fullword/wide/hex/regex), and for ``#``/``@`` the literal must
+allowed; no fullword/wide/hex/regex/xor/base64), and for ``#``/``@`` the literal must
 additionally be border-free (no proper prefix that is also a suffix), so
 non-overlapping counting — the only kind every backend (pyarrow kernels,
 Catalyst, DuckDB, Python str) can express — provably equals yara-x's
@@ -82,6 +82,7 @@ Catalyst matcher and the DuckDB oracle renderer reject rules that use it
 
 from __future__ import annotations
 
+import operator
 import re
 from dataclasses import dataclass
 from functools import lru_cache
@@ -243,16 +244,20 @@ INT_CMPS = {
 }
 
 
-def cmp_int(op: str, left: int, right: int) -> bool:
-    """Shared integer-comparison semantics for count/offset operators."""
-    return {
-        "eq": left == right,
-        "ne": left != right,
-        "gt": left > right,
-        "ge": left >= right,
-        "lt": left < right,
-        "le": left <= right,
-    }[op]
+_CMP_FUNCS = {
+    "eq": operator.eq,
+    "ne": operator.ne,
+    "gt": operator.gt,
+    "ge": operator.ge,
+    "lt": operator.lt,
+    "le": operator.le,
+}
+
+
+def cmp_int(op: str, left, right):
+    """Shared integer-comparison semantics for count/offset/filesize
+    operators, on ints, numpy arrays and Spark Columns alike."""
+    return _CMP_FUNCS[op](left, right)
 
 
 @dataclass(frozen=True)
@@ -828,7 +833,9 @@ def overlap_count(text: str, needle: str) -> int:
 def validate_condition_ops(rule_name: str, strings, ast) -> None:
     """Load-time validation of count/at/in/offset operators against the
     rule's string definitions (see module docstring for the subset):
-    plain ascii literals only; border-free for #/@. Raises
+    plain ascii literals only. Every backend reads the literal itself, so
+    a string whose forms may not contain it (xor, base64) is rejected
+    too: yara-x would count the string's own matches. Raises
     YaraUnsupportedError — loud rejection instead of a silent count or
     offset mismatch vs the reference's yara-x."""
     by_ident = {s.identifier: s for s in strings}
@@ -840,10 +847,14 @@ def validate_condition_ops(rule_name: str, strings, ast) -> None:
                 f"rule {rule_name}: {kind} references undefined string "
                 f"{node.identifier}"
             )
-        if s.is_regex or s.is_hex or s.wide or s.fullword:
+        if (
+            s.is_regex or s.is_hex or s.wide or s.fullword
+            or s.xor_min is not None or s.base64_mod or s.base64wide
+        ):
             raise YaraUnsupportedError(
                 f"rule {rule_name}: {kind} on {node.identifier} requires a "
-                "plain ascii literal string (no regex/hex/wide/fullword)"
+                "plain ascii literal string "
+                "(no regex/hex/wide/fullword/xor/base64)"
             )
         # Self-overlapping literals (proper border, e.g. 'xor eax, eax')
         # are SUPPORTED for #/@ as of round 6: every backend counts and

@@ -133,3 +133,29 @@ def test_c2_lookup_first_match_and_ip_semantics():
     # non-IP token gets domain rules, so '13.99' CAN fire
     assert eng.c2_lookup("999.0.113.99") == (3, 70, "ip-suffix-shaped domain entry")
     assert eng.c2_lookup("srv77.scale77.test") == (4 + 77, 75, "bulk-77")
+
+    # the kernel over the planted rows plus one host-stuffed row (past the
+    # per-row cap): the score kernel is the reasons' score projection
+    import pyarrow as pa
+
+    from loki_rs_spark.operators.arrow_matcher import (
+        _MAX_C2_MATCHES,
+        match_record_batch,
+        match_scores_record_batch,
+    )
+
+    stuffed = " ".join(f"srv{i}.scale{i % 97}.test" for i in range(150))
+    texts = [text for _conv, _idx, text in ROWS] + [stuffed, None, ""]
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array(texts),
+            pa.array(["tool-x"] * len(texts)),
+            pa.array([0] * len(texts), type=pa.int64()),
+        ],
+        names=["text", "tool", "ext_bits"],
+    )
+    c2 = match_record_batch(eng, batch)[2].to_pylist()
+    assert len(c2[-3]) == _MAX_C2_MATCHES and c2[-2:] == [[], []]
+    assert match_scores_record_batch(eng, batch)[2].to_pylist() == [
+        [r["score"] for r in row] for row in c2
+    ]

@@ -453,6 +453,19 @@ def test_one_payload_broadcast_per_plan(spark, sigs, stored_transcripts,
     assert first == second
 
 
+def test_matcher_queries_share_one_payload_broadcast(spark, monkeypatch):
+    """The queries that read the Arrow matcher UDF directly take it from
+    the compiled scan plan: building each twice makes one broadcast."""
+    from loki_rs_spark import queries
+
+    broadcasts = _fresh_plans(monkeypatch)
+    for _ in range(2):
+        queries.q_filename_ioc_hits(spark, SF_SMALL)
+        queries.q_yara_count_offset_hits(spark, SF_SMALL)
+        queries.q_yara_xor_base64_hits(spark, SF_SMALL)
+    assert len(broadcasts) == 1
+
+
 def test_each_key_gets_its_own_plan(spark, sigs, stored_transcripts,
                                     monkeypatch):
     """Builds that differ in ScanConfig, source_kind or signature set each

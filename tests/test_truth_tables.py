@@ -679,6 +679,33 @@ def test_at_truth_table(spark, text, at_hit):
     assert (0 in _routed_levels(spark, [(text, "t")], AT_SIGS)) == at_hit
 
 
+def test_nocase_at_folds_as_its_string():
+    """`$k at 0` on a nocase string folds case as `$k` does: U+0130
+    lowers to 'i' under a lower-casing fold but is outside RE2's case
+    fold of 'i', so the kernel agrees with the reference scanner."""
+    import pyarrow as pa
+
+    from loki_rs_spark.operators.arrow_matcher import match_record_batch
+    from loki_rs_spark.operators.matcher import CompiledEngine
+
+    sigs = _yara_sigs([YaraString("$k", "bit", nocase=True)], "$k at 0")
+    texts = ["B\u0130T here", "BiT here", "a bit here"]
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array(texts),
+            pa.array(["t"] * len(texts)),
+            pa.array([0] * len(texts), type=pa.int64()),
+        ],
+        names=["text", "tool", "ext_bits"],
+    )
+    _fname, yara, _c2 = match_record_batch(CompiledEngine(sigs), batch)
+    fired = [bool(r) for r in yara.to_pylist()]
+    assert fired == [False, True, False]
+    assert fired == [
+        scan_turn("c0", 0, t, "t", sigs, CFG) is not None for t in texts
+    ]
+
+
 @pytest.mark.parametrize(
     "text,in_hit",
     [
@@ -746,6 +773,17 @@ def test_count_operator_rejections():
         parse_yara_rules(rule("$a = { 41 42 }", "#a > 1"))
     with pytest.raises(YaraUnsupportedError):  # '#' on fullword
         parse_yara_rules(rule('$a = "x" fullword', "#a > 1"))
+    # xor/base64 strings: every backend would read the plain literal,
+    # which the string's own forms may not contain
+    for string in ('$a = "SECRET" xor(0x01-0x20)',
+                   '$a = "exfil-the-data" base64',
+                   '$a = "exfil-the-data" base64wide'):
+        for condition in ("$a or #a >= 1", "$a at 0", "$a in (0..8)",
+                          "@a[1] == 0",
+                          "for any i in (1..#a) : ( @a[i] > 3 )"):
+            with pytest.raises(YaraUnsupportedError):
+                parse_yara_rules(rule(string, condition))
+        assert len(parse_yara_rules(rule(string, "$a"))) == 1
     # self-overlapping literals (plain and under nocase fold) are
     # SUPPORTED as of round 6: every backend counts ALL occurrences
     # including overlapping ones (yara-x Aho-Corasick semantics)
@@ -1582,17 +1620,17 @@ rule G_Wide {
     condition:
         any of them
 }
-rule G_Xor_Count {
+rule G_Xor {
     strings:
         $x = "SECRET" xor(0x01-0x20)
     condition:
-        $x or #x >= 1
+        $x
 }
-rule G_B64_Count {
+rule G_B64 {
     strings:
         $b = "exfil-the-data" base64
     condition:
-        $b or #b >= 2
+        $b
 }
 rule G_Fullword {
     strings:
@@ -1677,6 +1715,7 @@ GATE_TEXTS = [
     "plain SECRET here",
     "".join(chr(ord(c) ^ 0x05) for c in "SECRET"),
     "exfil-the-data twice exfil-the-data",
+    "b64 ZXhmaWwtdGhlLWRhdGE= here",
     "a fwtoken b",
     "afwtokenb",
     "privmark and vismark",
@@ -1743,6 +1782,12 @@ def _assert_gate_exact(engine, batch):
 
 @pytest.mark.parametrize("copies", [1, 40], ids=["plain", "dict-encoded"])
 def test_atom_gate_is_exact(copies):
+    import pyarrow as pa
+
+    from loki_rs_spark.operators.arrow_matcher import (
+        match_record_batch,
+        match_scores_record_batch,
+    )
     from loki_rs_spark.operators.matcher import CompiledEngine
     from loki_rs_spark.signatures.parsers import parse_yara_rules
 
@@ -1758,13 +1803,31 @@ def test_atom_gate_is_exact(copies):
     # the ext bit is set on odd rows
     assert fired["G_Ext"][row["AB clean"]] and not fired["G_Ext"][clean]
     assert fired["G_Uint"][row["AB clean"]]
-    # count operators read the plain literal of xor/base64 strings
-    assert fired["G_Xor_Count"][row["plain SECRET here"]]
-    assert fired["G_B64_Count"][row["exfil-the-data twice exfil-the-data"]]
-    for name in ("G_Nocase", "G_Hex", "G_Wide", "G_Fullword", "G_Private",
-                 "G_At_Nocase", "G_In_Offset_For"):
+    # xor/base64 strings match their own forms, not the plain literal
+    assert not fired["G_Xor"][row["plain SECRET here"]]
+    assert fired["G_B64"][row["b64 ZXhmaWwtdGhlLWRhdGE= here"]]
+    assert not fired["G_B64"][row["exfil-the-data twice exfil-the-data"]]
+    for name in ("G_Nocase", "G_Hex", "G_Wide", "G_Xor", "G_Fullword",
+                 "G_Private", "G_At_Nocase", "G_In_Offset_For"):
         assert fired[name].any(), name
     assert not fired["G_Fullword"][row["afwtokenb"]]
+    assert not fired["G_At_Fold"][row["B\u0130T here"]]
+    # the score kernel is the `score` projection of the reason kernel
+    batch = _gate_batch(engine, GATE_TEXTS, copies)
+    scores = match_scores_record_batch(engine, batch)
+    for reasons, sc in zip(match_record_batch(engine, batch), scores):
+        assert sc.type == pa.list_(pa.int32())
+        assert sc.to_pylist() == [
+            [x["score"] for x in r] for r in reasons.to_pylist()
+        ]
+
+    # a batch of one value: blank texts are one unique, NULL texts none
+    for value in ("", None):
+        fired = _assert_gate_exact(
+            engine, _gate_batch(engine, [value] * 70, copies)
+        )
+        assert fired["G_Not"].all() and fired["G_Zero_Of"].all()
+        assert not fired["G_Nocase"].any() and not fired["G_Size"].any()
 
 
 def test_atom_gate_with_an_empty_matching_regex():
