@@ -19,9 +19,10 @@ The matcher stays in Arrow end to end:
   (ioc_join.REASON_TYPE, messages included), so the Spark side only
   concatenates them with the hash reasons.
 
-The full matcher (`match_record_batch`) renders the fired masks of one
-mask pass (`_batch_masks`) as reasons; the score-only one
-(`match_scores_record_batch`) is the projection of their `score` field.
+The matcher (`match_record_batch`) renders the fired masks of one mask
+pass (`_batch_masks`) as reasons, and `make_arrow_matcher_udf` is its one
+UDF: score-only scans project the reasons' `score` field on the Spark
+side. `match_scores_record_batch` is that projection at kernel level.
 
 Pattern-dialect note: the batch kernels use RE2, the per-hit offset
 extraction uses Python `re`. The supported signature subset (literal
@@ -356,33 +357,29 @@ def _c2_match_lists(
 def match_scores_record_batch(
     engine, batch: pa.RecordBatch
 ) -> tuple[pa.Array, pa.Array, pa.Array]:
-    """Score-only variant of match_record_batch: per row, the scores of
-    matching filename IOCs, fired YARA rules and C2 hosts (discovery
-    order), each a list<int32> array — the `score` field of
-    match_record_batch's reason lists, over the same offsets. Used by
-    aggregate-only consumers (severity counts, rollups) where messages
-    are never read."""
+    """The `score` field of match_record_batch's three reason lists, over
+    the same offsets (list<int32> arrays). No scan reads it: it is the
+    kernel-level measure of the reason-to-score projection
+    (perfbench/layers.py, `score_kernel_us_per_row`)."""
     return tuple(
         pa.ListArray.from_arrays(arr.offsets, arr.values.field("score"))
         for arr in match_record_batch(engine, batch)
     )
 
 
-def _arrow_matcher_udf(
-    spark: SparkSession, sigs: SignatureSet, kernel, return_ddl: str, name: str
-):
-    """Scalar Arrow UDF (Spark 4.1 `arrow_udf`, iterator form) over
-    (text, tool, ext_bits) that runs `kernel(engine, batch)` per batch
-    and returns its three arrays as struct<fname, yara, c2>, typed by
-    `return_ddl` (reason arrays or score arrays). Each call broadcasts
-    the signature payload, so the scan pipeline makes one per compiled
-    plan (plans.pipeline._scan_plan); each executor process compiles the
-    payload once (`_engine_for`). `name` labels the UDF in query plans."""
+def make_arrow_matcher_udf(spark: SparkSession, sigs: SignatureSet):
+    """Scalar Arrow UDF (Spark 4.1 `arrow_udf`, iterator form) running
+    `match_record_batch` per batch: ONLY text, tool and ext_bits cross
+    the Python bridge. Returns struct<fname, yara, c2>, each an
+    array<REASON_TYPE> (the catalyst renderings' shape). Each call
+    broadcasts the signature payload, so the scan pipeline makes one per
+    compiled plan (plans.pipeline._scan_plan); each executor process
+    compiles the payload once (`_engine_for`)."""
     from pyspark.sql.functions import arrow_udf
 
     bc = spark.sparkContext.broadcast(sigs.to_payload())
 
-    def match(
+    def match_signatures_arrow(
         it: Iterator[Tuple[pa.Array, pa.Array, pa.Array]],
     ) -> Iterator[pa.Array]:
         engine = _engine_for(bc.value)
@@ -392,47 +389,22 @@ def _arrow_matcher_udf(
                 names=["text", "tool", "ext_bits"],
             )
             yield pa.StructArray.from_arrays(
-                list(kernel(engine, batch)), names=["fname", "yara", "c2"]
+                list(match_record_batch(engine, batch)),
+                names=["fname", "yara", "c2"],
             )
 
-    match.__name__ = name
     # The matcher is pure, but the non-deterministic marking is an
     # optimizer fence: without it, the routed filter — whose substituted
     # n_reasons/score trees reference this UDF's output — is pushed below
     # the projection by SUBSTITUTING the UDF call into the predicate, and
     # the plan carries TWO ArrowEvalPython nodes (every row pays the
-    # matcher twice). Pinned for both matchers by tests/test_pipeline.py
+    # matcher twice). Pinned by tests/test_pipeline.py
     # (test_scan_routed_plan_invariants, test_score_only_plan_invariants).
-    return arrow_udf(match, return_ddl).asNondeterministic()
-
-
-def make_arrow_score_matcher_udf(spark: SparkSession, sigs: SignatureSet):
-    """arrow_udf wrapper for match_scores_record_batch: returns
-    struct<fname:array<int>, yara:array<int>, c2:array<int>> — per-source
-    score arrays including the J4 C2 matches (scores only)."""
-    return _arrow_matcher_udf(
-        spark,
-        sigs,
-        match_scores_record_batch,
-        "struct<fname:array<int>,yara:array<int>,c2:array<int>>",
-        "match_scores_arrow",
-    )
-
-
-def make_arrow_matcher_udf(spark: SparkSession, sigs: SignatureSet):
-    """arrow_udf wrapper for match_record_batch — the production matcher:
-    ONLY the text, tool and ext_bits columns cross the Python bridge, and
-    the match computation runs on Arrow buffers via pyarrow compute
-    kernels. Returns struct<fname, yara, c2>, each an array<REASON_TYPE>
-    in the pipeline's reason shape (the catalyst renderings' shape)."""
-    return _arrow_matcher_udf(
-        spark,
-        sigs,
-        match_record_batch,
+    return arrow_udf(
+        match_signatures_arrow,
         f"struct<fname:array<{REASON_TYPE}>,yara:array<{REASON_TYPE}>,"
         f"c2:array<{REASON_TYPE}>>",
-        "match_signatures_arrow",
-    )
+    ).asNondeterministic()
 
 
 def _as_array(arr):

@@ -35,9 +35,9 @@ import numpy as np
 from ..signatures.compile import capture_regex, literal_probe
 from ..signatures.conditions import (
     ExtPred,
-    _has_proper_border,
     cmp_int,
     collect_ext_atoms,
+    fold_case,
     render_condition,
 )
 from ..signatures.model import SignatureSet, YaraRule
@@ -81,8 +81,11 @@ def string_occurrence_lines(s, rx: re.Pattern, row_text: str) -> list[str]:
     * the lookbehind transpile's report_shift is added back: offset
       + shift, matched data minus the literal prefix (each prefix unit
       matches exactly one char, so shift chars = the prefix match);
-    * bordered plain literals enumerate ALL overlapping occurrences
-      (+1-step find walk; re.finditer is non-overlapping).
+    * plain literals enumerate ALL overlapping occurrences with a +1-step
+      find walk (re.finditer is non-overlapping), nocase ones over the
+      length-keeping `fold_case` of the text, so offsets and slices
+      follow the row text and case folds as the RE2 mask does (Python
+      `re`'s IGNORECASE folds U+0130 into 'i'; RE2 does not).
 
     Documented output-only divergence (round-6 ADVICE, low): REGEX
     strings — including lookbehind/backref transpiles — enumerate
@@ -99,19 +102,16 @@ def string_occurrence_lines(s, rx: re.Pattern, row_text: str) -> list[str]:
     probe = literal_probe(s)
     if probe is not None:
         needle, nocase = probe
-        pin = needle.lower() if nocase else needle
-        if _has_proper_border(pin):
-            hay = row_text.lower() if nocase else row_text
-            start = 0
-            while True:
-                pos = hay.find(pin, start)
-                if pos < 0:
-                    return out
-                data = row_text[pos : pos + len(pin)]
-                out.append(
-                    f"{s.identifier}: {format_matched_data(data)} @ {pos}"
-                )
-                start = pos + 1
+        pin = fold_case(needle) if nocase else needle
+        hay = fold_case(row_text) if nocase else row_text
+        start = 0
+        while True:
+            pos = hay.find(pin, start)
+            if pos < 0:
+                return out
+            data = row_text[pos : pos + len(pin)]
+            out.append(f"{s.identifier}: {format_matched_data(data)} @ {pos}")
+            start = pos + 1
     shift = s.report_shift
     for m in rx.finditer(row_text):
         out.append(
@@ -181,10 +181,7 @@ class TextOps:
     def counts(self, needle: str, nocase: bool) -> np.ndarray:
         import pyarrow.compute as pc
 
-        from ..signatures.conditions import (
-            _has_proper_border,
-            overlap_count,
-        )
+        from ..signatures.conditions import _has_proper_border, overlap_count
 
         out = pc.count_substring(self.sub, needle, ignore_case=nocase)
         counts = (
@@ -192,7 +189,7 @@ class TextOps:
             .to_numpy(zero_copy_only=False)
             .astype("int64")
         )
-        needle_f = needle.lower() if nocase else needle
+        needle_f = fold_case(needle) if nocase else needle
         if _has_proper_border(needle_f):
             # yara-x counts ALL occurrences including overlapping ones;
             # pc.count_substring is non-overlapping. Recount only the
@@ -200,7 +197,7 @@ class TextOps:
             # with the +1-step walk — same sparse pattern as nth_offsets.
             for i in np.nonzero(counts > 0)[0]:
                 t = self.sub[int(i)].as_py()
-                tf = t.lower() if nocase else t
+                tf = fold_case(t) if nocase else t
                 counts[i] = overlap_count(tf, needle_f)
         return self._gated(counts, 0)
 
@@ -277,7 +274,7 @@ class TextOps:
         row in `rows` (rows with fewer occurrences are omitted). Python
         str.find walk, once per unique text — only runs on the sparse
         mask-true rows."""
-        needle_f = needle.lower() if nocase else needle
+        needle_f = fold_case(needle) if nocase else needle
         row_u = self.text_c.codes
         per_unique: dict[int, int] = {}
         out: dict[int, int] = {}
@@ -285,7 +282,7 @@ class TextOps:
             u = int(row_u[int(i)])
             if u not in per_unique:
                 t = self.every[u].as_py()
-                tf = t.lower() if nocase else t
+                tf = fold_case(t) if nocase else t
                 pos, found, start = -1, 0, 0
                 while found < index:
                     pos = tf.find(needle_f, start)

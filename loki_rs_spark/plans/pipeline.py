@@ -1,6 +1,6 @@
 """The scan pipeline — the reference's per-row dataflow
 (src/modules/filesystem_scan.rs:559-979, SURVEY.md §3.2) re-expressed as one
-declarative Spark plan, built once by `_build_scan` for both output shapes:
+declarative Spark plan, built by `scan_transcripts`:
 
     filters (F3/F7)
       -> hash projection (P1, JVM built-ins)
@@ -17,7 +17,8 @@ declarative Spark plan, built once by `_build_scan` for both output shapes:
 Like the reference's rule set, compiled once and reused for every file,
 every Column and dim of the plan is compiled once per session, signature
 set and build options (`_scan_plan`); a later build only applies the
-DataFrame steps to its input.
+DataFrame steps to its input. `scan_transcripts_scores` projects the
+same frames, so it shares that plan, its matcher UDF and its broadcast.
 
 Everything except the matcher UDF is whole-stage-codegen'd Catalyst; the
 entire pipeline is embarrassingly row-parallel — NO shuffle from scan to
@@ -38,10 +39,7 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, ScanConfig
 from ..functions.score import rounded_score_col, severity_col, weighted_score_col
-from ..operators.arrow_matcher import (
-    make_arrow_matcher_udf,
-    make_arrow_score_matcher_udf,
-)
+from ..operators.arrow_matcher import make_arrow_matcher_udf
 from ..operators.ext_bits import ext_bits_col
 from ..operators.filters import exclusion_predicate, size_predicate
 from ..operators.hashes import hash_columns
@@ -59,7 +57,7 @@ from ..operators.ioc_join import (
     plain_relation_input,
     reason_struct,
 )
-from ..signatures.conditions import cmp_int
+from ..signatures.conditions import cmp_int, fold_case
 from ..signatures.model import SignatureSet
 
 
@@ -72,15 +70,19 @@ class ScanResult:
     * ``evaluated`` — every scanned, non-FP row with its score (including
       matched-below-threshold rows, level NULL): (conv_id, turn_idx, role,
       tool, ts, n_reasons, score, level), plus text_len, md5, sha1, sha256
-      and ``all_reasons`` in the reason shape (`scan_transcripts`);
+      and ``all_reasons`` (not in `scan_transcripts_scores`);
     * ``routed``  — the same columns for rows with level ALERT/WARNING/
-      NOTICE (the JSONL-sink-equivalent fact rows), plus in the reason
-      shape the shown ``reasons`` sliced to max_reasons.
+      NOTICE (the JSONL-sink-equivalent fact rows), plus the shown
+      ``reasons`` sliced to max_reasons (not in `scan_transcripts_scores`).
     """
 
     scanned: DataFrame
     evaluated: DataFrame
     routed: DataFrame
+
+
+_ROW_COLUMNS = ("conv_id", "turn_idx", "role", "tool", "ts")
+_SCORE_COLUMNS = (*_ROW_COLUMNS, "n_reasons", "score", "level")
 
 
 def _nz(arr: Column) -> Column:
@@ -118,16 +120,15 @@ def _matcher_items(
     hash_hit: Column,
 ) -> tuple[str, Callable[[], Column], list[Column], Column]:
     """The one matcher dispatch: returns (the matcher column's name, a
-    maker of that column, the four per-source item arrays in discovery
+    maker of that column, the four per-source reason arrays in discovery
     order filename -> hash -> YARA -> C2, any-candidate predicate).
-    'arrow' and 'scores' cross the bridge ONCE (REASON_TYPE arrays from
-    match_signatures_arrow, the shape catalyst builds, or int scores from
-    match_scores_arrow); every kernel, J4 C2 included, runs over each
-    batch's unique text/tool values, and external-variable truth crosses
-    as the packed `ext_bits` bigint. 'catalyst' is zero Python: rlike
-    filename predicates, per-rule YARA predicates and the JVM C2 gate +
-    CASE chain, with no cheap precursors, so its candidate is the literal
-    True."""
+    'arrow' crosses the bridge ONCE (REASON_TYPE arrays from
+    match_signatures_arrow, the shape catalyst builds); every kernel, J4
+    C2 included, runs over each batch's unique text/tool values, and
+    external-variable truth crosses as the packed `ext_bits` bigint.
+    'catalyst' is zero Python: rlike filename predicates, per-rule YARA
+    predicates and the JVM C2 gate + CASE chain, with no cheap
+    precursors, so its candidate is the literal True."""
     if matcher == "catalyst":
         gate = c2_text_gate(F.col("text"), list(sigs.c2_iocs))
         items = [
@@ -140,11 +141,7 @@ def _matcher_items(
         ]
         return "_c2g", lambda: gate, [_nz(c) for c in items], F.lit(True)
 
-    make_udf = (
-        make_arrow_score_matcher_udf if matcher == "scores"
-        else make_arrow_matcher_udf
-    )
-    audf = make_udf(spark, sigs)
+    audf = make_arrow_matcher_udf(spark, sigs)
     args = (F.col("text"), F.col("tool"), ext_bits_col(sigs))
     fname, yara, c2 = F.col("_m.fname"), F.col("_m.yara"), F.col("_m.c2")
     candidate = (
@@ -153,14 +150,9 @@ def _matcher_items(
         | hash_hit
         | (F.size(c2) > 0)
     )
-    if matcher == "scores":
-        hash_scores = F.transform(_nz(hash_reasons), lambda r: r["score"])
-        items = [fname, hash_scores, yara, c2]
-    else:
-        # _nz on the UDF's (never NULL) arrays too: it keeps
-        # `all_reasons`, `reasons` and `n_reasons` non-nullable, as the
-        # catalyst build's are
-        items = [_nz(c) for c in (fname, hash_reasons, yara, c2)]
+    # _nz on the UDF's (never NULL) arrays too: it keeps `all_reasons`,
+    # `reasons` and `n_reasons` non-nullable, as the catalyst build's are
+    items = [_nz(c) for c in (fname, hash_reasons, yara, c2)]
     # a fresh UDF call per build: a cached one would put one PythonUDF
     # (and its result id) into every plan built from this key
     return "_m", lambda: audf(*args), items, candidate
@@ -187,7 +179,7 @@ class _ScanPlan:
     scored: tuple[Column, ...]
     evaluated: tuple[Column, ...]
     routed: Column
-    shown: Column | None
+    shown: Column
 
 
 def _compile_plan(
@@ -210,29 +202,19 @@ def _compile_plan(
     # predicate — codegen'd CASE WHEN evaluates the taken branch only, so
     # clean rows cost a few comparisons instead of struct/array
     # construction. False-positive candidates just take the slow branch.
-    reasons = matcher != "scores"
-    item_type = REASON_TYPE if reasons else "int"
-    all_items = F.when(
+    all_reasons = F.when(
         candidate, F.slice(F.concat(*items), 1, cfg.max_matches)
-    ).otherwise(F.array().cast(f"array<{item_type}>"))
-    key = "all_reasons" if reasons else "_scores"
-    kept = ["conv_id", "turn_idx", "role", "tool", "ts"]
-    staged = [F.col(c) for c in kept]
-    if reasons:
-        # the reason shape also keeps the text length and the hashes
-        staged.append(F.length("text").alias("text_len"))
-        staged += [F.col(h) for h in HASH_TYPES]
-        kept += ["text_len", *HASH_TYPES, "all_reasons"]
-    staged.append(all_items.alias(key))
-
-    # Staged projections so the item tree evaluates once per row: its
-    # alias is read twice (size, score), so CollapseProject keeps it.
-    sub_scores = (
-        F.transform(F.col(key), lambda r: r["score"]) if reasons
-        else F.col(key)
+    ).otherwise(F.array().cast(f"array<{REASON_TYPE}>"))
+    staged = (
+        *map(F.col, _ROW_COLUMNS),
+        F.length("text").alias("text_len"),
+        *map(F.col, HASH_TYPES),
+        all_reasons.alias("all_reasons"),
     )
-    evaluated = [F.col(c) for c in kept + ["n_reasons", "score"]]
-    evaluated.append(severity_col(F.col("score"), cfg).alias("level"))
+
+    # Staged projections so the reason tree evaluates once per row: its
+    # alias is read twice (size, score), so CollapseProject keeps it.
+    sub_scores = F.transform(F.col("all_reasons"), lambda r: r["score"])
     keep = exclusion_predicate(cfg.exclude_patterns)
     size = size_predicate(cfg.max_text_chars)
     return _ScanPlan(
@@ -242,22 +224,21 @@ def _compile_plan(
         joins=tuple(fp_antijoins(spark, sigs) + hash_joins),
         matcher_name=name,
         matcher_col=matcher_col,
-        staged=tuple(staged),
+        staged=staged,
         scored=(
             F.col("*"),
-            F.size(key).alias("n_reasons"),
+            F.size("all_reasons").alias("n_reasons"),
             rounded_score_col(weighted_score_col(sub_scores)).alias("score"),
         ),
-        evaluated=tuple(evaluated),
+        evaluated=(
+            F.col("*"), severity_col(F.col("score"), cfg).alias("level")
+        ),
         # `score >= notice_threshold` is `level IS NOT NULL` (ScanConfig
         # validates alert >= warning >= notice), and substitutes one score
         # tree into the pushed-down filter instead of severity_col's three.
         routed=(F.col("n_reasons") > 0)
         & (F.col("score") >= cfg.notice_threshold),
-        shown=(
-            F.slice(F.col("all_reasons"), 1, cfg.max_reasons)
-            if reasons else None
-        ),
+        shown=F.slice(F.col("all_reasons"), 1, cfg.max_reasons),
     )
 
 
@@ -299,21 +280,30 @@ def _scan_plan(
     return plan
 
 
-def _build_scan(
+def scan_transcripts(
     spark: SparkSession,
     transcripts: DataFrame,
     sigs: SignatureSet,
-    cfg: ScanConfig,
-    matcher: str,
-    source_kind: str,
+    cfg: ScanConfig = DEFAULT_CONFIG,
+    matcher: str = "arrow",
+    source_kind: str = "file",
 ) -> ScanResult:
-    """The one scan builder behind `scan_transcripts` ('arrow' |
-    'catalyst', reason rows) and `scan_transcripts_scores` ('scores',
-    score-only rows): the filters and hashes, then every
+    """The one scan builder: the filters and hashes, then every
     signature-derived step from the compiled `_ScanPlan` of this key
     (`_scan_plan`) — dim joins, matcher column, the score, severity and
-    routed projections. A warm build only applies these DataFrame
-    steps."""
+    routed projections and the reasons slice. A warm build only applies
+    these DataFrame steps.
+
+    `matcher` picks the P5/J3/J4 implementation: 'arrow' (one scalar
+    arrow_udf over pyarrow compute kernels — the production path) or
+    'catalyst' (static per-rule predicates, zero Python, no matched-string
+    capture). Both are routed-row-equal (tests).
+
+    `source_kind` ('file' | 'process') selects the hash-IOC reason
+    semantics: the reference's process scan emits only the first matching
+    hash type, with a process-specific message (see hash_reason_array)."""
+    if matcher not in ("arrow", "catalyst"):
+        raise ValueError(f"unknown matcher impl: {matcher}")
     # literal hash-dim rendering only over stored-table inputs (the
     # production shape — see ioc_join.HASH_DIM_MAX_LITERALS): each
     # avoided broadcast exchange of a LocalRelation dim saves ~0.1s of
@@ -327,31 +317,8 @@ def _build_scan(
     evaluated = df.select(*plan.staged).select(*plan.scored).select(
         *plan.evaluated
     )
-    routed = evaluated.filter(plan.routed)
-    if plan.shown is not None:
-        routed = routed.withColumn("reasons", plan.shown)
+    routed = evaluated.filter(plan.routed).withColumn("reasons", plan.shown)
     return ScanResult(scanned=scanned, evaluated=evaluated, routed=routed)
-
-
-def scan_transcripts(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    sigs: SignatureSet,
-    cfg: ScanConfig = DEFAULT_CONFIG,
-    matcher: str = "arrow",
-    source_kind: str = "file",
-) -> ScanResult:
-    """`matcher` picks the P5/J3/J4 implementation: 'arrow' (one scalar
-    arrow_udf over pyarrow compute kernels — the production path) or
-    'catalyst' (static per-rule predicates, zero Python, no matched-string
-    capture). Both are routed-row-equal (tests).
-
-    `source_kind` ('file' | 'process') selects the hash-IOC reason
-    semantics: the reference's process scan emits only the first matching
-    hash type, with a process-specific message (see hash_reason_array)."""
-    if matcher not in ("arrow", "catalyst"):
-        raise ValueError(f"unknown matcher impl: {matcher}")
-    return _build_scan(spark, transcripts, sigs, cfg, matcher, source_kind)
 
 
 def scan_transcripts_scores(
@@ -361,15 +328,18 @@ def scan_transcripts_scores(
     cfg: ScanConfig = DEFAULT_CONFIG,
     source_kind: str = "file",
 ) -> ScanResult:
-    """Score-only rendering of the scan pipeline for aggregate consumers
-    (severity counts, per-conversation rollups, counters): identical
-    filters, gates, joins, score fold and severity semantics, but the
-    matcher UDF emits ONLY per-source score arrays — no reason structs, no
-    matched-string offset extraction, so the per-hit Python work and the
-    wide reason projection disappear. Score equality with the full path is
-    guaranteed by construction (reason scores never depend on matched
-    strings) and enforced by the shared oracle rows + a pytest."""
-    return _build_scan(spark, transcripts, sigs, cfg, "scores", source_kind)
+    """The arrow scan for aggregate consumers (severity counts,
+    per-conversation rollups, counters), with `evaluated` and `routed`
+    projected to `_SCORE_COLUMNS`: it shares the compiled plan, matcher
+    UDF and payload broadcast of `scan_transcripts`' build."""
+    full = scan_transcripts(
+        spark, transcripts, sigs, cfg, source_kind=source_kind
+    )
+    return ScanResult(
+        scanned=full.scanned,
+        evaluated=full.evaluated.select(*_SCORE_COLUMNS),
+        routed=full.routed.select(*_SCORE_COLUMNS),
+    )
 
 
 class _CatalystCondBackend:
@@ -393,11 +363,15 @@ class _CatalystCondBackend:
         self.strings_by_ident = {s.identifier: s for s in rule.strings}
 
     def _folded(self, ident: str) -> tuple[Column, str]:
-        """(text column, needle) with case folded for nocase strings."""
+        """(text column, needle) with case folded for nocase strings as
+        `fold_case` folds them: Spark's `lower` expands U+0130 to two
+        codepoints, so the text is lowered between its U+0130s."""
         s = self.strings_by_ident[ident]
-        if s.nocase:
-            return F.lower(F.col("text")), s.pattern.lower()
-        return F.col("text"), s.pattern
+        if not s.nocase:
+            return F.col("text"), s.pattern
+        parts = F.split(F.col("text"), "\u0130", -1)
+        text = F.array_join(F.transform(parts, F.lower), "\u0130")
+        return text, fold_case(s.pattern)
 
     def count_cmp(self, node) -> Column:
         from ..signatures.compile import regex_literal

@@ -19,6 +19,7 @@ from ..signatures.conditions import (
     TOOL_TYPE_DEFAULT,
     TOOL_TYPE_RULES,
     ExtPred,
+    fold_case,
     render_condition,
 )
 from ..signatures.model import SignatureSet, YaraString
@@ -75,8 +76,8 @@ def _literal_occurrences(
     right — deliberately regex-free (str.find walk + direct neighbor
     inspection for fullword), so agreement with the Spark matcher's
     rendering is a meaningful cross-check."""
-    hay = text.lower() if nocase else text
-    pin = needle.lower() if nocase else needle
+    hay = fold_case(text) if nocase else text
+    pin = fold_case(needle) if nocase else needle
     out: list[tuple[int, str]] = []
     pos = 0
     while True:
@@ -234,7 +235,7 @@ class _RowBackend:
     def _folded(self, ident: str) -> tuple[str, str]:
         s = self.strings_by_ident[ident]
         if s.nocase:
-            return self.text.lower(), s.pattern.lower()
+            return fold_case(self.text), fold_case(s.pattern)
         return self.text, s.pattern
 
     def count_cmp(self, node) -> bool:
@@ -272,9 +273,7 @@ class _RowBackend:
         return (window == node.needle) == (node.op == "eq")
 
     def exists_from(self, node) -> bool:
-        s = self.strings_by_ident[node.identifier]
-        hay = self.text.lower() if s.nocase else self.text
-        needle = s.pattern.lower() if s.nocase else s.pattern
+        hay, needle = self._folded(node.identifier)
         return hay.find(needle, node.lo) != -1
 
     def bool_lit(self, node) -> bool:

@@ -12,15 +12,10 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .config import DEFAULT_CONFIG, ScanConfig
+from .config import DEFAULT_CONFIG
 from .operators.hashes import with_hashes
 from .operators.ioc_join import c2_reason_array, plain_relation_input
-from .plans.pipeline import (
-    ScanResult,
-    _scan_plan,
-    scan_transcripts,
-    scan_transcripts_scores,
-)
+from .plans.pipeline import ScanResult, _scan_plan, scan_transcripts
 from .plans.skew import per_conv_rollup_salted
 from .session import local_frame
 from .signatures import load_signature_set
@@ -39,21 +34,12 @@ def bundled_signatures() -> SignatureSet:
     return load_signature_set(here)
 
 
-def _scan(spark: SparkSession, sf_dir: str, rep: int = DEFAULT_REP,
-          cfg: ScanConfig = DEFAULT_CONFIG,
+def _scan(spark: SparkSession, sf_dir: str,
           matcher: str = "arrow") -> ScanResult:
-    transcripts = load_transcripts(spark, sf_dir, rep=rep)
+    transcripts = load_transcripts(spark, sf_dir, rep=DEFAULT_REP)
     return scan_transcripts(
-        spark, transcripts, bundled_signatures(), cfg, matcher=matcher
+        spark, transcripts, bundled_signatures(), matcher=matcher
     )
-
-
-def _scan_scores(spark: SparkSession, sf_dir: str, rep: int = DEFAULT_REP,
-                 cfg: ScanConfig = DEFAULT_CONFIG) -> ScanResult:
-    """Score-only scan for aggregate consumers (same semantics, no reason
-    structs across the bridge — see scan_transcripts_scores)."""
-    transcripts = load_transcripts(spark, sf_dir, rep=rep)
-    return scan_transcripts_scores(spark, transcripts, bundled_signatures(), cfg)
 
 
 # ------------------------------------------------------------ loki core
@@ -105,14 +91,14 @@ def q_scan_matches_catalyst(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_severity_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    routed = _scan_scores(spark, sf_dir).routed
+    routed = _scan(spark, sf_dir).routed
     return routed.groupBy("level").agg(F.count("*").alias("n"))
 
 
 def q_scan_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.route import scan_counters
 
-    result = _scan_scores(spark, sf_dir)
+    result = _scan(spark, sf_dir)
     return scan_counters(result.scanned, result.evaluated)
 
 
@@ -349,7 +335,7 @@ def q_archive_child_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_per_conv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage SALTED rollup (explicit skew handling) — proven equal to
     the direct rollup by the oracle."""
-    evaluated = _scan_scores(spark, sf_dir).evaluated
+    evaluated = _scan(spark, sf_dir).evaluated
     return per_conv_rollup_salted(evaluated)
 
 
@@ -359,7 +345,7 @@ def q_conv_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     score per turn."""
     from pyspark.sql import Window
 
-    evaluated = _scan_scores(spark, sf_dir).evaluated
+    evaluated = _scan(spark, sf_dir).evaluated
     w = (
         Window.partitionBy("conv_id")
         .orderBy("turn_idx")
@@ -387,8 +373,8 @@ def q_union_severity_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.event_turns import load_event_turns
 
     sigs = bundled_signatures()
-    t_routed = _scan_scores(spark, sf_dir).routed
-    e_routed = scan_transcripts_scores(
+    t_routed = _scan(spark, sf_dir).routed
+    e_routed = scan_transcripts(
         spark, load_event_turns(spark, sf_dir), sigs, source_kind="process"
     ).routed
     t_counts = (
@@ -407,7 +393,7 @@ def q_union_severity_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_exit_code(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.route import exit_code, scan_counters
 
-    result = _scan_scores(spark, sf_dir)
+    result = _scan(spark, sf_dir)
     return exit_code(scan_counters(result.scanned, result.evaluated))
 
 

@@ -830,6 +830,14 @@ def overlap_count(text: str, needle: str) -> int:
         start = pos + 1
 
 
+def fold_case(text: str) -> str:
+    """`text` lower-cased codepoint by codepoint, for nocase find walks.
+    U+0130 is the one codepoint whose lower() is two codepoints, so it
+    stays as it is (RE2's case fold of 'i' excludes it too): the fold
+    keeps the length, and an offset in it is an offset in `text`."""
+    return "\u0130".join(part.lower() for part in text.split("\u0130"))
+
+
 def validate_condition_ops(rule_name: str, strings, ast) -> None:
     """Load-time validation of count/at/in/offset operators against the
     rule's string definitions (see module docstring for the subset):

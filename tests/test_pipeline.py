@@ -453,17 +453,33 @@ def test_one_payload_broadcast_per_plan(spark, sigs, stored_transcripts,
     assert first == second
 
 
-def test_matcher_queries_share_one_payload_broadcast(spark, monkeypatch):
+def test_matcher_queries_share_one_payload_broadcast(
+    spark, sigs, stored_transcripts, monkeypatch
+):
     """The queries that read the Arrow matcher UDF directly take it from
-    the compiled scan plan: building each twice makes one broadcast."""
+    the compiled scan plan, and a score-only scan is a projection of the
+    reason scan: building each twice compiles one plan and makes one
+    broadcast, over the generator frame and over a stored table."""
     from loki_rs_spark import queries
+    from loki_rs_spark.plans import pipeline
+    from loki_rs_spark.sources.transcripts import DEFAULT_REP
 
     broadcasts = _fresh_plans(monkeypatch)
+    generated = load_transcripts(spark, SF_SMALL, rep=DEFAULT_REP)
     for _ in range(2):
         queries.q_filename_ioc_hits(spark, SF_SMALL)
         queries.q_yara_count_offset_hits(spark, SF_SMALL)
         queries.q_yara_xor_base64_hits(spark, SF_SMALL)
+        queries.q_severity_counts(spark, SF_SMALL)
+        scan_transcripts_scores(spark, generated, queries.bundled_signatures())
     assert len(broadcasts) == 1
+    assert len(pipeline._PLANS) == 1
+
+    pipeline._PLANS.clear()
+    scan_transcripts(spark, stored_transcripts, sigs)
+    scan_transcripts_scores(spark, stored_transcripts, sigs)
+    assert len(pipeline._PLANS) == 1
+    assert len(broadcasts) == 2
 
 
 def test_each_key_gets_its_own_plan(spark, sigs, stored_transcripts,

@@ -679,31 +679,54 @@ def test_at_truth_table(spark, text, at_hit):
     assert (0 in _routed_levels(spark, [(text, "t")], AT_SIGS)) == at_hit
 
 
-def test_nocase_at_folds_as_its_string():
-    """`$k at 0` on a nocase string folds case as `$k` does: U+0130
-    lowers to 'i' under a lower-casing fold but is outside RE2's case
-    fold of 'i', so the kernel agrees with the reference scanner."""
+# (needle, condition, text, fires, the kernel's and the reference's
+# matched_strings for `$k`; None where the condition reads no string set)
+NOCASE_FOLD_CASES = [
+    # U+0130 lowers to 'i' + U+0307 under str.lower() and Spark's lower,
+    # but is outside RE2's case fold of 'i': no fold may match it
+    ("bit", "$k at 0", "B\u0130T here", False, None),
+    ("bit", "$k at 0", "BiT here", True, None),
+    ("bit", "$k at 0", "a bit here", False, None),
+    # ... and an offset after it is an offset in the text
+    ("abab", "$k", "\u0130x abab", True, ["$k: 'abab' @ 3"]),
+    ("evil", "@k[1] == 3", "\u0130x evil", True, None),
+    ("evil", "$k in (0..3)", "\u0130x evil", True, None),
+    # a nocase literal reports only what its RE2 mask matches
+    ("evil", "$k", "evil EV\u0130L", True, ["$k: 'evil' @ 0"]),
+]
+
+
+def test_nocase_at_folds_as_its_string(spark):
+    """Nocase string reads fold case as `$k`'s own RE2 mask does, and
+    keep offsets in the row text: the kernel, the reference scanner and,
+    where the operator has a Catalyst rendering, the catalyst scan
+    agree on every case of NOCASE_FOLD_CASES."""
     import pyarrow as pa
 
     from loki_rs_spark.operators.arrow_matcher import match_record_batch
     from loki_rs_spark.operators.matcher import CompiledEngine
 
-    sigs = _yara_sigs([YaraString("$k", "bit", nocase=True)], "$k at 0")
-    texts = ["B\u0130T here", "BiT here", "a bit here"]
-    batch = pa.RecordBatch.from_arrays(
-        [
-            pa.array(texts),
-            pa.array(["t"] * len(texts)),
-            pa.array([0] * len(texts), type=pa.int64()),
-        ],
-        names=["text", "tool", "ext_bits"],
-    )
-    _fname, yara, _c2 = match_record_batch(CompiledEngine(sigs), batch)
-    fired = [bool(r) for r in yara.to_pylist()]
-    assert fired == [False, True, False]
-    assert fired == [
-        scan_turn("c0", 0, t, "t", sigs, CFG) is not None for t in texts
-    ]
+    for needle, condition, text, fires, matched in NOCASE_FOLD_CASES:
+        case = (needle, condition, text)
+        sigs = _yara_sigs([YaraString("$k", needle, nocase=True)], condition)
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array([text]), pa.array(["t"]), pa.array([0], type=pa.int64())],
+            names=["text", "tool", "ext_bits"],
+        )
+        _fname, yara, _c2 = match_record_batch(CompiledEngine(sigs), batch)
+        [kernel] = yara.to_pylist()
+        ref = scan_turn("c0", 0, text, "t", sigs, CFG)
+        assert bool(kernel) == fires, case
+        assert (ref is not None) == fires, case
+        if matched is not None:
+            assert kernel[0]["matched_strings"] == matched, case
+            assert ref.reasons[0].matched_strings == matched, case
+        if "@" not in condition:  # @k[i] has no Catalyst rendering
+            routed = scan_transcripts(
+                spark, _turn_df(spark, [(text, "t")]), sigs, CFG,
+                matcher="catalyst",
+            ).routed
+            assert (routed.count() == 1) == fires, case
 
 
 @pytest.mark.parametrize(
