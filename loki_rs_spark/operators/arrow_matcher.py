@@ -7,14 +7,18 @@ The matcher stays in Arrow end to end:
 * every kernel runs over the batch's dictionary-encoded unique values
   and gathers back to rows through the codes (`_CompactCol`);
 * one pass of the engine's atom programs (the OR of every YARA string's
-  RE2 regex) over the unique texts, then per signature string ONE
-  `pyarrow.compute.match_substring[_regex]` kernel call over the few
-  uniques that pass it (C++-vectorized RE2 / literal scan, zero Python
-  objects in the hot path);
+  RE2 regex) over the unique texts picks the candidates, and each YARA
+  string is read ONCE over them (`_Candidates.read`): a string that is
+  not a plain literal as one `pyarrow.compute.match_substring_regex`
+  mask, a plain literal as one case-sensitive `match_substring` of its
+  needle (over the `fold_case`d candidates when nocase) and a +1-step
+  find walk on the candidates it hits — its occurrence offsets, from
+  which `$s`, `#s`, `at`, `in`, `@s[i]` and its matched strings all
+  derive, as yara-x reads them from one match list;
 * per-rule condition algebra on numpy boolean masks;
-* Python-level work (matched-string offsets, reason building) happens only
-  for the sparse hit rows, and the output list<struct> arrays are built
-  from offsets + flat values (no per-row Python lists for misses);
+* Python-level work (find walks, reason building) happens only for the
+  sparse hit values, and the output list<struct> arrays are built from
+  offsets + flat values (no per-row Python lists for misses);
 * the reasons leave the kernel in the pipeline's final shape
   (ioc_join.REASON_TYPE, messages included), so the Spark side only
   concatenates them with the hash reasons.
@@ -24,16 +28,17 @@ pass (`_batch_masks`) as reasons, and `make_arrow_matcher_udf` is its one
 UDF: score-only scans project the reasons' `score` field on the Spark
 side. `match_scores_record_batch` is that projection at kernel level.
 
-Pattern-dialect note: the batch kernels use RE2, the per-hit offset
-extraction uses Python `re`. The supported signature subset (literal
-strings + RE2-compatible regexes, no backreferences/lookaround) behaves
-identically under both; parity with the reference scanner is enforced by
-tests/test_pipeline.py.
+Pattern-dialect note: the batch kernels use RE2, the matched-string
+extraction of non-literal strings uses Python `re`. The supported
+signature subset (RE2-compatible regexes, no backreferences/lookaround)
+behaves identically under both; parity with the reference scanner is
+enforced by tests/test_pipeline.py and tests/test_truth_tables.py.
 
 Mirrors the reference's compile-once automaton sharing (src/main.rs:780-851)
 via the per-executor `matcher._engine_for` cache.
 """
 
+from functools import cached_property
 from typing import Iterator, Tuple
 
 import numpy as np
@@ -41,8 +46,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import SparkSession
 
-from ..signatures.compile import boolean_regex, literal_probe
-from ..signatures.conditions import render_condition
+from ..signatures.compile import literal_probe
+from ..signatures.conditions import fold_case, render_condition
 from ..signatures.model import SignatureSet
 from .ioc_join import (
     C2_GATE_MAX_LITERALS,
@@ -54,7 +59,6 @@ from .ioc_join import (
 from .matcher import (
     MAX_YARA_MATCHES,
     ExtBits,
-    TextOps,
     _engine_for,
     _HOST_RX,
     _MaskBackend,
@@ -125,14 +129,50 @@ class _CompactCol:
         return self.expand(fn(self.kernel_input), False)
 
 
-def _string_mask(arr, s) -> np.ndarray:
-    """Boolean mask for one YaraString: literal kernel when possible,
-    RE2 regex (modifier-aware, see signatures/compile.py) otherwise."""
-    probe = literal_probe(s)
-    if probe is not None:
+class _Candidates:
+    """The atom candidates of one batch — `at`, indices into the text
+    column's uniques — and the one read of each YARA string over them.
+    Their texts as `str`, and folded by `fold_case` (only when some
+    literal is nocase), are built once per batch, on first use."""
+
+    def __init__(self, text_c: "_CompactCol", at: np.ndarray) -> None:
+        self.at = at
+        self.texts = text_c.kernel_input.take(pa.array(at, type=pa.int64()))
+
+    @cached_property
+    def strs(self) -> list[str]:
+        return self.texts.to_pylist()
+
+    @cached_property
+    def folded(self) -> tuple[list[str], pa.Array]:
+        folded = [fold_case(t) for t in self.strs]
+        return folded, pa.array(folded, type=pa.string())
+
+    def read(self, s, regex: str | None):
+        """One YARA string over the candidates: (the uniques holding it,
+        offsets). A plain literal (`literal_probe`) runs one
+        case-sensitive substring kernel of its needle — over the folded
+        texts when nocase — and a +1-step find walk on the texts it hits:
+        `offsets` maps each hit unique to the ascending character offsets
+        of every occurrence, overlapping ones too (yara-x's
+        all-positions semantics). Any other string runs its RE2 `regex`
+        and has no offsets."""
+        probe = literal_probe(s)
+        if probe is None:
+            return self.at[_mask(self.texts, regex, regex=True)], None
         needle, nocase = probe
-        return _mask(arr, needle, regex=False, ignore_case=nocase)
-    return _mask(arr, boolean_regex(s, "re2"), regex=True)
+        if nocase:
+            needle = fold_case(needle)
+            strs, texts = self.folded
+        else:
+            strs, texts = self.strs, self.texts
+        offsets = {}
+        for k in np.nonzero(_mask(texts, needle, regex=False))[0]:
+            text, found, pos = strs[k], [], -1
+            while (pos := text.find(needle, pos + 1)) >= 0:
+                found.append(pos)
+            offsets[int(self.at[k])] = found
+        return np.fromiter(offsets, np.int64, len(offsets)), offsets
 
 
 def _reason_list_array(
@@ -152,29 +192,25 @@ def _reason_list_array(
 def _batch_masks(engine, batch: pa.RecordBatch):
     """The matcher's mask pass: decode the JVM-packed ext_bits,
     dictionary-encode the text/tool columns, then run every filename-IOC
-    kernel and every YARA string kernel + condition. Returns
-    (text_c, fname, yara):
-    `fname` is one (mask, ioc) per filename IOC and `yara` one
-    (fired, string masks, compiled rule) per rule, both in engine order.
-    `ext_bits` follows the conditions.collect_ext_atoms ordering. Text and
-    tool arrive raw: the encoding keeps kernel cost proportional to
-    unique bytes, and the masks are exact.
+    kernel and every YARA rule (`_yara_masks`). Returns
+    (text_c, fname, yara): `fname` is one (mask, ioc) per filename IOC
+    and `yara` one (fired, string reads, rule) per rule, both in engine
+    order. `ext_bits` follows the conditions.collect_ext_atoms ordering.
+    Text and tool arrive raw: the encoding keeps kernel cost proportional
+    to unique bytes, and the masks are exact.
 
-    The YARA string kernels are gated: one pass of the engine's atom
+    The YARA string reads are gated: one pass of the engine's atom
     programs (the OR of every string's RE2 regex) over the unique texts
-    picks the candidates, and the per-string kernels and every TextOps
-    string read run on those alone, scattered back with False (0)
-    elsewhere. A text matches `A|B|...` iff it matches one of them, so
-    the result equals the ungated kernels'. Conditions still render over
-    every row, so negations, `0 of them` and string-free rules (filesize,
-    uint, external variables) fire on rows without any atom."""
+    picks the candidates, and every string read runs on those alone. A
+    text matches `A|B|...` iff it matches one of them, and a nocase
+    literal's `(?i:...)` matches every text whose `fold_case` holds the
+    literal's fold, so the result equals an ungated pass's."""
     bits_np = (
         batch.column("ext_bits")
         .to_numpy(zero_copy_only=False)
         .astype("int64", copy=False)
     )
     ext = ExtBits(bits_np, engine.atom_index)
-    n = batch.num_rows
     tool_c = _CompactCol(batch.column("tool"))
     text_c = _CompactCol(batch.column("text"))
 
@@ -188,29 +224,32 @@ def _batch_masks(engine, batch: pa.RecordBatch):
             )
         fname.append((mask, ioc))
 
-    # ---- YARA subset (P5): one atom pass, string kernels on candidates
-    values = text_c.kernel_input
-    hit = np.zeros(len(values), dtype=bool)
+    # ---- YARA subset (P5): one atom pass, string reads on candidates
+    hit = np.zeros(len(text_c.kernel_input), dtype=bool)
     for program in engine.atom_programs:
-        hit |= _mask(values, program, regex=True)
-    cand = np.nonzero(hit)[0]
-    text_ops = TextOps(text_c, cand)
+        hit |= _mask(text_c.kernel_input, program, regex=True)
+    return text_c, fname, _yara_masks(engine, text_c, ext, np.nonzero(hit)[0])
+
+
+def _yara_masks(engine, text_c: "_CompactCol", ext, cand: np.ndarray):
+    """Every YARA rule over one batch, each string read once over the
+    uniques `cand` (`_Candidates.read`; every other unique holds no
+    match). Conditions render over every row, so negations, `0 of them`
+    and string-free rules (filesize, uint, external variables) fire on
+    rows without any candidate. Returns one (fired, reads, rule) per
+    rule; `reads` holds one (row mask, offsets) per string."""
+    candidates = _Candidates(text_c, cand)
     yara = []
-    for compiled in engine.yara:
-        masks = [
-            text_c.expand(_string_mask(text_ops.sub, s), False, at=cand)
-            for s in compiled.rule.strings
-        ]
-        backend = _MaskBackend(
-            [(ident, m) for (ident, _), m in zip(compiled.patterns, masks)],
-            n,
-            ext,
-            text_ops=text_ops,
-            strings_by_ident=compiled.strings_by_ident,
-        )
-        fired = np.asarray(render_condition(compiled.ast, backend), dtype=bool)
-        yara.append((fired, masks, compiled))
-    return text_c, fname, yara
+    for rule, ast in engine.yara:
+        reads = []
+        for s in rule.strings:
+            at, offsets = candidates.read(s, engine.mask_regexes.get(s))
+            mask = text_c.expand(np.ones(len(at), dtype=bool), False, at=at)
+            reads.append((mask, offsets))
+        backend = _MaskBackend(rule.strings, reads, text_c, ext)
+        fired = np.asarray(render_condition(ast, backend), dtype=bool)
+        yara.append((fired, reads, rule))
+    return yara
 
 
 def match_record_batch(
@@ -241,15 +280,14 @@ def match_record_batch(
 
     ya_counts = np.zeros(n, dtype=np.int64)
     ya_rows: dict[int, list[dict]] = {}
-    for fired, masks, compiled in yara:
+    for fired, reads, rule in yara:
         # Matched strings depend only on (rule, text VALUE): the string
-        # masks gather from per-unique kernel results, so rows sharing a
-        # unique value fire with identical matched_strings. Compute the
-        # reason ONCE per unique value and append the shared (read-only)
-        # dict per hit row — on replicated corpora (the rep-1600 bench
-        # table has ~7 distinct texts per 10k-row batch) this removes
-        # ~all per-hit .as_py() + occurrence-walk work.
-        rule = compiled.rule
+        # masks gather from per-unique reads, so rows sharing a unique
+        # value fire with identical matched_strings. Compute the reason
+        # ONCE per unique value and append the shared (read-only) dict
+        # per hit row — on replicated corpora (the rep-1600 bench table
+        # has ~7 distinct texts per 10k-row batch) this removes ~all
+        # per-hit .as_py() + occurrence-walk work.
         per_unique: dict[int, dict] = {}
         for idx in np.nonzero(fired)[0]:
             i = int(idx)
@@ -261,12 +299,13 @@ def match_record_batch(
                 # a NULL row (u past the uniques) has no string set
                 matched_strings = [
                     line
-                    for (_ident, rx), mask, s in zip(
-                        compiled.patterns, masks, rule.strings
-                    )
+                    for s, (mask, offsets) in zip(rule.strings, reads)
                     if mask[i]
                     for line in string_occurrence_lines(
-                        s, rx, text_c.kernel_input[u].as_py()
+                        s,
+                        text_c.kernel_input[u].as_py(),
+                        None if offsets is None else offsets[u],
+                        engine.capture_regexes.get(s),
                     )
                 ]
                 entry = {

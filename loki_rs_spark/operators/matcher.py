@@ -10,9 +10,12 @@ row, src/modules/filesystem_scan.rs:1010-1011). The Spark analog:
   reuses it for every Arrow batch — the "compile-once shared automaton"
   pattern at executor granularity;
 * the batch kernels live in arrow_matcher.py; this module holds the
-  engine and the mask-algebra pieces they evaluate conditions with
-  (`ExtBits`, `TextOps`, `_MaskBackend`) plus the matched-string
-  formatting.
+  engine, the condition algebra they evaluate rules with (`ExtBits`,
+  `_MaskBackend`) and the matched-string formatting. Every read of a
+  plain-literal string — `$s`, `#s`, `at`, `in`, `@s[i]` and its
+  matched strings — derives from one list per batch: the string's
+  occurrence offsets (arrow_matcher._Candidates.read), as yara-x reads
+  them all from one match list.
 
 Match semantics mirrored from src/modules/filesystem_scan.rs:1002-1136:
 * rule score from meta.score, default 75, valid iff 0 < s <= 100;
@@ -27,20 +30,15 @@ from __future__ import annotations
 
 import hashlib
 import re
-from dataclasses import dataclass
+from bisect import bisect_left
 from functools import reduce
 
 import numpy as np
+import pyarrow.compute as pc
 
-from ..signatures.compile import capture_regex, literal_probe
-from ..signatures.conditions import (
-    ExtPred,
-    cmp_int,
-    collect_ext_atoms,
-    fold_case,
-    render_condition,
-)
-from ..signatures.model import SignatureSet, YaraRule
+from ..signatures.compile import boolean_regex, capture_regex, literal_probe
+from ..signatures.conditions import ExtPred, cmp_int, collect_ext_atoms
+from ..signatures.model import SignatureSet
 
 # compiled forms of ioc_join's host/IPv4 patterns (identical subset in
 # Java regex / RE2 / Python re — see ioc_join.HOST_PATTERN)
@@ -71,21 +69,23 @@ def format_matched_data(value: str) -> str:
     return value.encode("utf-8").hex()
 
 
-def string_occurrence_lines(s, rx: re.Pattern, row_text: str) -> list[str]:
+def string_occurrence_lines(
+    s, row_text: str, offsets: list[int] | None, rx: re.Pattern | None
+) -> list[str]:
     """Formatted matched_strings entries ("$id: 'data' @ offset") for one
     FIRED string on one row (arrow_matcher.match_record_batch).
 
     Three yara-x output semantics live here:
     * `private` strings are suppressed from output (they still feed the
       condition — the caller only reaches this after the rule fired);
-    * the lookbehind transpile's report_shift is added back: offset
-      + shift, matched data minus the literal prefix (each prefix unit
-      matches exactly one char, so shift chars = the prefix match);
-    * plain literals enumerate ALL overlapping occurrences with a +1-step
-      find walk (re.finditer is non-overlapping), nocase ones over the
-      length-keeping `fold_case` of the text, so offsets and slices
-      follow the row text and case folds as the RE2 mask does (Python
-      `re`'s IGNORECASE folds U+0130 into 'i'; RE2 does not).
+    * a plain literal reports its `offsets`, the kernel's one +1-step
+      find walk (every overlapping occurrence; nocase ones over the
+      length-keeping `fold_case` of the text), each with the row text's
+      slice at that offset;
+    * every other string enumerates its capture regex `rx`, and the
+      lookbehind transpile's report_shift is added back: offset + shift,
+      matched data minus the literal prefix (each prefix unit matches
+      exactly one char, so shift chars = the prefix match).
 
     Documented output-only divergence (round-6 ADVICE, low): REGEX
     strings — including lookbehind/backref transpiles — enumerate
@@ -98,35 +98,19 @@ def string_occurrence_lines(s, rx: re.Pattern, row_text: str) -> list[str]:
     differently per engine — so the divergence is pinned here instead."""
     if s.private:
         return []
-    out: list[str] = []
-    probe = literal_probe(s)
-    if probe is not None:
-        needle, nocase = probe
-        pin = fold_case(needle) if nocase else needle
-        hay = fold_case(row_text) if nocase else row_text
-        start = 0
-        while True:
-            pos = hay.find(pin, start)
-            if pos < 0:
-                return out
-            data = row_text[pos : pos + len(pin)]
-            out.append(f"{s.identifier}: {format_matched_data(data)} @ {pos}")
-            start = pos + 1
-    shift = s.report_shift
-    for m in rx.finditer(row_text):
-        out.append(
-            f"{s.identifier}: {format_matched_data(m.group(0)[shift:])}"
-            f" @ {m.start() + shift}"
-        )
-    return out
-
-
-@dataclass
-class _CompiledYaraRule:
-    rule: YaraRule
-    patterns: list[tuple[str, re.Pattern]]  # (identifier, capture regex)
-    ast: object  # parsed condition (signatures/conditions.py)
-    strings_by_ident: dict  # identifier -> YaraString
+    if offsets is None:
+        shift = s.report_shift
+        found = [
+            (m.start() + shift, m.group(0)[shift:])
+            for m in rx.finditer(row_text)
+        ]
+    else:
+        width = len(literal_probe(s)[0])
+        found = [(pos, row_text[pos : pos + width]) for pos in offsets]
+    return [
+        f"{s.identifier}: {format_matched_data(data)} @ {pos}"
+        for pos, data in found
+    ]
 
 
 class ExtBits:
@@ -148,216 +132,109 @@ class ExtBits:
         return (self.bits >> idx) & 1 == 1
 
 
-class TextOps:
-    """Vectorized count/in/offset primitives for the yara count/offset
-    operators (plain-ascii-literal subset, guaranteed by
-    conditions.validate_condition_ops), evaluated over a batch's UNIQUE
-    texts (`text_c.kernel_input`, see arrow_matcher._CompactCol) and
-    scattered back to rows by `text_c.expand`.
-
-    The string operators run on the atom candidates `cand` only: a unique
-    outside them holds no occurrence of any string
-    (CompiledEngine.atom_programs), so its counts are 0 and its in/from
-    reads False, exactly what the kernels would return. A nocase read
-    folds case as the string's own mask does (RE2's `ignore_case`). Only
-    the string-free reads (uint, filesize) read every unique.
+class _MaskBackend:
+    """Condition evaluation over numpy boolean masks: every AST node maps
+    to array ops over the whole batch. `reads` holds one (row mask,
+    offsets) per string of the rule, from one read of each string
+    (arrow_matcher._Candidates.read); `offsets` maps each unique holding
+    a plain literal to its ascending occurrence offsets. The
+    count/at/in/offset operators read only plain literals
+    (conditions.validate_condition_ops) and derive from those offsets,
+    one Python read per hit unique, gathered to rows by `text_c.expand`.
+    The string-free reads (uint, filesize) read every unique of `text_c`.
 
     Offsets are CHARACTER offsets — the matched_strings '@ {offset}'
-    convention — computed with codepoint-exact kernels
-    (utf8_slice_codeunits slices by codepoint; RE2 '.' consumes one
-    codepoint)."""
+    convention."""
 
-    def __init__(self, text_c, cand: np.ndarray) -> None:
-        import pyarrow as pa
-
+    def __init__(self, strings, reads, text_c, ext) -> None:
+        self.ident_masks = [
+            (s.identifier, mask) for s, (mask, _) in zip(strings, reads)
+        ]
+        self.masks = dict(self.ident_masks)
+        self.offsets = {
+            s.identifier: offsets for s, (_, offsets) in zip(strings, reads)
+        }
         self.text_c = text_c
-        self.cand = cand
-        self.every = text_c.kernel_input
-        self.sub = self.every.take(pa.array(cand, type=pa.int64()))
-
-    def _gated(self, values: np.ndarray, fill) -> np.ndarray:
-        return self.text_c.expand(values, fill, at=self.cand)
-
-    def counts(self, needle: str, nocase: bool) -> np.ndarray:
-        import pyarrow.compute as pc
-
-        from ..signatures.conditions import _has_proper_border, overlap_count
-
-        out = pc.count_substring(self.sub, needle, ignore_case=nocase)
-        counts = (
-            pc.fill_null(out, 0)
-            .to_numpy(zero_copy_only=False)
-            .astype("int64")
-        )
-        needle_f = fold_case(needle) if nocase else needle
-        if _has_proper_border(needle_f):
-            # yara-x counts ALL occurrences including overlapping ones;
-            # pc.count_substring is non-overlapping. Recount only the
-            # sparse hit values (the vectorized kernel is the prefilter)
-            # with the +1-step walk — same sparse pattern as nth_offsets.
-            for i in np.nonzero(counts > 0)[0]:
-                t = self.sub[int(i)].as_py()
-                tf = fold_case(t) if nocase else t
-                counts[i] = overlap_count(tf, needle_f)
-        return self._gated(counts, 0)
-
-    def uint_at_mask(self, needle: str, offset: int) -> np.ndarray:
-        """A uintN read: `needle` at character `offset` of every unique
-        text (no string involved, so no gate)."""
-        import pyarrow.compute as pc
-
-        sliced = pc.utf8_slice_codeunits(
-            self.every, offset, offset + len(needle)
-        )
-        return self.text_c.expand(
-            pc.fill_null(pc.equal(sliced, needle), False)
-            .to_numpy(zero_copy_only=False)
-            .astype(bool),
-            False,
-        )
-
-    def _contains(self, sliced, needle: str, nocase: bool) -> np.ndarray:
-        import pyarrow.compute as pc
-
-        return self._gated(
-            pc.fill_null(
-                pc.match_substring(sliced, needle, ignore_case=nocase),
-                False,
-            )
-            .to_numpy(zero_copy_only=False)
-            .astype(bool),
-            False,
-        )
-
-    def in_mask(
-        self, needle: str, nocase: bool, lo: int, hi: int
-    ) -> np.ndarray:
-        """Some occurrence STARTS at a character offset in [lo, hi]:
-        equivalent to `needle` occurring in the codepoint slice
-        [lo, hi+len(needle)) — a match inside the slice starts at slice
-        position q <= hi-lo exactly when the original start is <= hi.
-        Slice + substring kernels instead of an RE2 '^.{lo,hi}' anchor,
-        so there is NO bounded-repetition cap on the window. `$s at N` is
-        the window [N, N]."""
-        import pyarrow.compute as pc
-
-        sliced = pc.utf8_slice_codeunits(self.sub, lo, hi + len(needle))
-        return self._contains(sliced, needle, nocase)
-
-    def from_mask(self, needle: str, nocase: bool, lo: int) -> np.ndarray:
-        """Some occurrence starts at character offset >= lo (the 'for'
-        quantifier's ExistsFrom atom): `needle` occurs in the open-ended
-        codepoint slice [lo, end) — slice + substring kernels, no RE2
-        bounded-repetition cap."""
-        import pyarrow.compute as pc
-
-        sliced = pc.utf8_slice_codeunits(self.sub, lo)
-        return self._contains(sliced, needle, nocase)
-
-    def lengths(self) -> np.ndarray:
-        """Character lengths (codepoints; NULL -> 0) — the filesize
-        analog's length convention, shared with F.length / DuckDB
-        length() / Python len()."""
-        import pyarrow.compute as pc
-
-        return self.text_c.expand(
-            pc.fill_null(pc.utf8_length(self.every), 0)
-            .to_numpy(zero_copy_only=False)
-            .astype("int64"),
-            0,
-        )
-
-    def nth_offsets(
-        self, needle: str, nocase: bool, index: int, rows: np.ndarray
-    ) -> dict[int, int]:
-        """Character offset of the 1-based `index`-th occurrence for each
-        row in `rows` (rows with fewer occurrences are omitted). Python
-        str.find walk, once per unique text — only runs on the sparse
-        mask-true rows."""
-        needle_f = fold_case(needle) if nocase else needle
-        row_u = self.text_c.codes
-        per_unique: dict[int, int] = {}
-        out: dict[int, int] = {}
-        for i in rows:
-            u = int(row_u[int(i)])
-            if u not in per_unique:
-                t = self.every[u].as_py()
-                tf = fold_case(t) if nocase else t
-                pos, found, start = -1, 0, 0
-                while found < index:
-                    pos = tf.find(needle_f, start)
-                    if pos < 0:
-                        break
-                    start = pos + 1  # +1: OVERLAPPING occurrences
-                    found += 1
-                per_unique[u] = pos if found == index and pos >= 0 else -1
-            if per_unique[u] >= 0:
-                out[int(i)] = per_unique[u]
-        return out
-
-
-class _MaskBackend:
-    """Condition evaluation over numpy boolean masks — fully vectorized:
-    every AST node maps to one array op over the whole batch (the @[i]
-    offset walk alone is per-row, on mask-true rows only)."""
-
-    def __init__(
-        self,
-        ident_masks: list[tuple[str, np.ndarray]],
-        n_rows: int,
-        ext,
-        text_ops: TextOps,
-        strings_by_ident: dict,
-    ) -> None:
-        self.ident_masks = ident_masks
-        self.masks = dict(ident_masks)
-        self.n_rows = n_rows
+        self.n_rows = text_c.n
         self.ext = ext
-        self.text_ops = text_ops
-        self.strings_by_ident = strings_by_ident
+
+    def _read(self, ident: str, read, fill) -> np.ndarray:
+        """`read(offsets)` on every unique holding literal `ident`,
+        `fill` on every other row."""
+        offsets = self.offsets[ident]
+        return self.text_c.expand(
+            np.array([read(o) for o in offsets.values()], dtype=type(fill)),
+            fill,
+            at=np.fromiter(offsets, np.int64, len(offsets)),
+        )
 
     def count_cmp(self, node) -> np.ndarray:
-        s = self.strings_by_ident[node.identifier]
-        counts = self.text_ops.counts(s.pattern, s.nocase)
+        counts = self._read(node.identifier, len, 0)
         return cmp_int(node.op, counts, node.value)
 
     def at_expr(self, node) -> np.ndarray:
-        s = self.strings_by_ident[node.identifier]
-        return self.text_ops.in_mask(
-            s.pattern, s.nocase, node.offset, node.offset
-        )
+        return self._window(node.identifier, node.offset, node.offset)
 
     def in_expr(self, node) -> np.ndarray:
-        s = self.strings_by_ident[node.identifier]
-        return self.text_ops.in_mask(s.pattern, s.nocase, node.lo, node.hi)
+        return self._window(node.identifier, node.lo, node.hi)
+
+    def _window(self, ident: str, lo: int, hi: int) -> np.ndarray:
+        """Some occurrence starts at a character offset in [lo, hi]."""
+
+        def starts_in(offsets: list[int]) -> bool:
+            k = bisect_left(offsets, lo)
+            return k < len(offsets) and offsets[k] <= hi
+
+        return self._read(ident, starts_in, False)
 
     def offset_cmp(self, node) -> np.ndarray:
-        s = self.strings_by_ident[node.identifier]
-        base = self.masks[node.identifier]
-        offsets = self.text_ops.nth_offsets(
-            s.pattern, s.nocase, node.index, np.nonzero(base)[0]
-        )
-        out = np.zeros(self.n_rows, dtype=bool)
-        for i, pos in offsets.items():
-            out[i] = cmp_int(node.op, pos, node.value)
-        return out
+        i = node.index
+
+        def nth(offsets: list[int]) -> bool:
+            return len(offsets) >= i and cmp_int(
+                node.op, offsets[i - 1], node.value
+            )
+
+        return self._read(node.identifier, nth, False)
 
     def exists_from(self, node) -> np.ndarray:
-        s = self.strings_by_ident[node.identifier]
-        return self.text_ops.from_mask(s.pattern, s.nocase, node.lo)
+        return self._read(
+            node.identifier, lambda offsets: offsets[-1] >= node.lo, False
+        )
 
     def bool_lit(self, node) -> np.ndarray:
         return np.full(self.n_rows, node.value, dtype=bool)
 
+    def _lengths(self) -> np.ndarray:
+        """Character lengths (codepoints; NULL -> 0) — the filesize
+        analog's length convention, shared with F.length / DuckDB
+        length() / Python len()."""
+        lengths = pc.fill_null(pc.utf8_length(self.text_c.kernel_input), 0)
+        return self.text_c.expand(
+            lengths.to_numpy(zero_copy_only=False).astype("int64"), 0
+        )
+
     def size_cmp(self, node) -> np.ndarray:
-        return cmp_int(node.op, self.text_ops.lengths(), node.value)
+        return cmp_int(node.op, self._lengths(), node.value)
 
     def uint_cmp(self, node) -> np.ndarray:
-        eq = self.text_ops.uint_at_mask(node.needle, node.offset)
+        """`node.needle` at character `node.offset` of every unique text
+        (utf8_slice_codeunits slices by codepoint)."""
+        sliced = pc.utf8_slice_codeunits(
+            self.text_c.kernel_input,
+            node.offset,
+            node.offset + len(node.needle),
+        )
+        eq = self.text_c.expand(
+            pc.fill_null(pc.equal(sliced, node.needle), False)
+            .to_numpy(zero_copy_only=False)
+            .astype(bool),
+            False,
+        )
         if node.op == "eq":
             return eq
         # '!=' is false on out-of-bounds reads (yara undefined semantics)
-        long_enough = self.text_ops.lengths() >= node.offset + node.size
+        long_enough = self._lengths() >= node.offset + node.size
         return long_enough & ~eq
 
     def str_ref(self, ident: str) -> np.ndarray:
@@ -410,10 +287,11 @@ def atom_programs(rules) -> list[str]:
     alternative, split into programs of at most ATOM_PROGRAM_MAX_CHARS
     (one alternative longer than that is a program of its own). A text
     matches some program iff it holds an occurrence of some string, so
-    every string mask is False on a text that matches none, and so is
-    every TextOps string read: count/at/in/offset operators read only
-    plain literals (conditions.validate_condition_ops), whose regex is
-    the literal itself."""
+    every string read is empty on a text that matches none: the
+    count/at/in/offset operators read only plain literals
+    (conditions.validate_condition_ops), whose regex is the literal
+    itself, and a nocase literal's `(?i:...)` matches every text whose
+    `fold_case` holds the literal's fold.""" 
     from ..signatures.compile import scoped_re2_regex
 
     atoms = dict.fromkeys(
@@ -432,28 +310,24 @@ def atom_programs(rules) -> list[str]:
 
 class CompiledEngine:
     """Per-executor compiled signature engine: the filename IOCs, the
-    YARA rules with their capture regexes and parsed conditions, the
-    atom programs that gate every YARA string kernel (`atom_programs`;
+    YARA rules with their parsed conditions, the RE2 mask and Python
+    capture regexes of every string that is not a plain literal, the
+    atom programs that gate every YARA string read (`atom_programs`;
     arrow_matcher._batch_masks runs them once per batch and the string
-    kernels only on the texts they match), the ext-bit atom order and
-    the C2 lookup table."""
+    reads only on the texts they match), the ext-bit atom order and the
+    C2 lookup table."""
 
     def __init__(self, sigs: SignatureSet) -> None:
         self.fname = list(sigs.filename_iocs)
         self.atom_programs = atom_programs(sigs.yara_rules)
-        self.yara: list[_CompiledYaraRule] = []
-        for rule in sigs.yara_rules:
-            patterns = [
-                (s.identifier, capture_regex(s)) for s in rule.strings
-            ]
-            self.yara.append(
-                _CompiledYaraRule(
-                    rule,
-                    patterns,
-                    rule.condition_ast,
-                    {s.identifier: s for s in rule.strings},
-                )
-            )
+        self.yara = [(rule, rule.condition_ast) for rule in sigs.yara_rules]
+        self.mask_regexes = {
+            s: boolean_regex(s, "re2")
+            for rule in sigs.yara_rules
+            for s in rule.strings
+            if literal_probe(s) is None
+        }
+        self.capture_regexes = {s: capture_regex(s) for s in self.mask_regexes}
         self.atom_index = {
             atom: i for i, atom in enumerate(collect_ext_atoms(sigs))
         }

@@ -307,16 +307,6 @@ def _yara_reason_cases(sigs: SignatureSet) -> list[str]:
     return cases
 
 
-def _base_reason_cases(sigs: SignatureSet) -> list[str]:
-    """Reason candidates in the reference's discovery order:
-    filename -> md5 -> sha1 -> sha256 -> YARA (rule definition order)."""
-    return (
-        _fname_reason_cases(sigs)
-        + _hash_reason_cases(sigs)
-        + _yara_reason_cases(sigs)
-    )
-
-
 def _c2_reason_list(sigs: SignatureSet) -> str:
     if not sigs.c2_iocs:
         return "[]"

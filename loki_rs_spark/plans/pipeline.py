@@ -346,57 +346,67 @@ class _CatalystCondBackend:
     """YARA condition AST -> Catalyst Column predicates (the pure-JVM
     matcher rendering; whole-stage codegen'd). One instance per rule.
 
-    Count/at/in operators render as JVM expressions on the (validated)
-    plain-literal subset: regexp_count for #, substring equality for at,
-    locate for in. @[i] (i-th occurrence offset) has no Catalyst
-    primitive and raises — rules using it route through the arrow matcher
-    only."""
+    A nocase plain literal (`literal_probe`) reads the text folded as
+    `fold_case` folds it, the Arrow kernel's and the reference's fold:
+    its mask is a `contains` of the folded needle, and its count/at/in
+    operators run case-sensitively over the same folded text. Other
+    strings render their regex (nocase as Java `(?i)`). Count/at/in
+    render on the (validated) plain-literal subset: regexp_count for #,
+    substring equality for at, locate for in. @[i] (i-th occurrence
+    offset) has no Catalyst primitive and raises — rules using it route
+    through the arrow matcher only."""
 
     def __init__(self, rule) -> None:
-        from ..signatures.compile import boolean_regex
+        from ..signatures.compile import boolean_regex, literal_probe
 
-        self.ident_cols = [
-            (s.identifier, F.col("text").rlike(boolean_regex(s, "lookaround")))
-            for s in rule.strings
-        ]
-        self.str_cols = dict(self.ident_cols)
         self.strings_by_ident = {s.identifier: s for s in rule.strings}
+        self.ident_cols = []
+        for s in rule.strings:
+            probe = literal_probe(s)
+            if probe is not None and s.nocase:
+                col, needle = self._folded(s, probe[0])
+                cond = col.contains(needle)
+            else:
+                cond = F.col("text").rlike(boolean_regex(s, "lookaround"))
+            self.ident_cols.append((s.identifier, cond))
+        self.str_cols = dict(self.ident_cols)
 
-    def _folded(self, ident: str) -> tuple[Column, str]:
+    def _folded(self, s, needle: str) -> tuple[Column, str]:
         """(text column, needle) with case folded for nocase strings as
         `fold_case` folds them: Spark's `lower` expands U+0130 to two
         codepoints, so the text is lowered between its U+0130s."""
-        s = self.strings_by_ident[ident]
         if not s.nocase:
-            return F.col("text"), s.pattern
+            return F.col("text"), needle
         parts = F.split(F.col("text"), "\u0130", -1)
         text = F.array_join(F.transform(parts, F.lower), "\u0130")
-        return text, fold_case(s.pattern)
+        return text, fold_case(needle)
+
+    def _literal(self, ident: str) -> tuple[Column, str]:
+        s = self.strings_by_ident[ident]
+        return self._folded(s, s.pattern)
 
     def count_cmp(self, node) -> Column:
         from ..signatures.compile import regex_literal
         from ..signatures.conditions import _has_proper_border
 
-        s = self.strings_by_ident[node.identifier]
-        body = regex_literal(s.pattern)
-        needle_f = s.pattern.lower() if s.nocase else s.pattern
-        if _has_proper_border(needle_f):
+        col, needle = self._literal(node.identifier)
+        body = regex_literal(needle)
+        if _has_proper_border(needle):
             # bordered literal: yara counts OVERLAPPING occurrences, and
             # regexp_count is non-overlapping — wrap in a zero-width
             # lookahead so each start position counts once (Java regex,
             # so lookahead is in-dialect here; RE2 backends use the
             # stepped-walk kernels instead)
             body = f"(?={body})"
-        pat = ("(?i)" if s.nocase else "") + body
-        counts = F.regexp_count(F.col("text"), F.lit(pat))
+        counts = F.regexp_count(col, F.lit(body))
         return cmp_int(node.op, counts, node.value)
 
     def at_expr(self, node) -> Column:
-        col, needle = self._folded(node.identifier)
+        col, needle = self._literal(node.identifier)
         return F.substring(col, node.offset + 1, len(needle)) == needle
 
     def in_expr(self, node) -> Column:
-        col, needle = self._folded(node.identifier)
+        col, needle = self._literal(node.identifier)
         pos = F.locate(needle, col, node.lo + 1)
         return (pos > 0) & (pos <= node.hi + 1)
 
@@ -418,7 +428,7 @@ class _CatalystCondBackend:
         return (F.length(F.col("text")) >= node.offset + node.size) & ~eq
 
     def exists_from(self, node) -> Column:
-        col, needle = self._folded(node.identifier)
+        col, needle = self._literal(node.identifier)
         return F.locate(needle, col, node.lo + 1) > 0
 
     def bool_lit(self, node) -> Column:

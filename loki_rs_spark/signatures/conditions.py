@@ -867,17 +867,18 @@ def validate_condition_ops(rule_name: str, strings, ast) -> None:
         # Self-overlapping literals (proper border, e.g. 'xor eax, eax')
         # are SUPPORTED for #/@ as of round 6: every backend counts and
         # enumerates ALL occurrences including overlapping ones, matching
-        # yara-x's Aho-Corasick all-positions semantics (bordered needles
-        # route to overlap-aware kernels; see TextOps.counts,
-        # _CatalystCondBackend.count_cmp, oracle count_cmp).
+        # yara-x's Aho-Corasick all-positions semantics (the Arrow kernel
+        # reads them from its +1-step find walk,
+        # arrow_matcher._Candidates.read; bordered needles route to
+        # overlap-aware renderings in _CatalystCondBackend.count_cmp and
+        # oracle count_cmp).
         if isinstance(node, (CountCmp, OffsetCmp)) and node.value < 0:
             raise YaraUnsupportedError(
                 f"rule {rule_name}: {kind} compares against a negative value"
             )
-        # ExistsFrom/InExpr offset windows carry no RE2 bounded-repetition
-        # cap anymore: the pyarrow kernels slice by codepoint
-        # (utf8_slice_codeunits) + match_substring instead of an
-        # '^.{lo,hi}' anchor, so any window bound is supported.
+        # ExistsFrom/InExpr offset windows carry no bounded-repetition
+        # cap: the Arrow kernel compares the occurrence offsets with the
+        # window, so any window bound is supported.
 
 
 def collect_ext_atoms(sigs) -> list[ExtPred]:

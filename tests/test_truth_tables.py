@@ -691,8 +691,15 @@ NOCASE_FOLD_CASES = [
     ("abab", "$k", "\u0130x abab", True, ["$k: 'abab' @ 3"]),
     ("evil", "@k[1] == 3", "\u0130x evil", True, None),
     ("evil", "$k in (0..3)", "\u0130x evil", True, None),
-    # a nocase literal reports only what its RE2 mask matches
+    # a nocase literal reports only what its `fold_case` read matches
     ("evil", "$k", "evil EV\u0130L", True, ["$k: 'evil' @ 0"]),
+    # RE2 folds U+017F (long s) into 's', `fold_case` does not: the
+    # nocase reads fold as `fold_case` folds, so none matches it
+    ("best", "$k", "be\u017ft", False, None),
+    ("test", "$k", "te\u017ft", False, None),
+    # non-ASCII folds: every backend folds U+00C9 and the Kelvin sign
+    ("caf\u00e9", "$k", "CAF\u00c9", True, ["$k: 'CAF\u00c9' @ 0"]),
+    ("key", "$k", "\u212aey", True, ["$k: '\u212aey' @ 0"]),
 ]
 
 
@@ -1770,37 +1777,48 @@ def _gate_batch(engine, texts, copies=1):
     )
 
 
+def _row_mask(engine, text, s):
+    """One string's mask computed row by row over the raw column, with
+    no encoding and no gate: a literal by `in` over the (folded) text,
+    any other string by its RE2 regex."""
+    import pyarrow.compute as pc
+
+    from loki_rs_spark.signatures.compile import literal_probe
+    from loki_rs_spark.signatures.conditions import fold_case
+
+    probe = literal_probe(s)
+    if probe is None:
+        regex = engine.mask_regexes[s]
+        mask = pc.fill_null(pc.match_substring_regex(text, regex), False)
+        return mask.to_pylist()
+    needle, nocase = probe
+    fold = fold_case if nocase else (lambda t: t)
+    return [t is not None and fold(needle) in fold(t) for t in text.to_pylist()]
+
+
 def _assert_gate_exact(engine, batch):
-    """Gated string masks equal `_string_mask` over the whole batch, and
-    every rule fires as under an ungated evaluation (all uniques
-    candidates)."""
+    """The gated pass equals an ungated one (every unique a candidate):
+    per string its row mask (also against `_row_mask`) and literal
+    occurrence offsets, and per rule its fired mask."""
     import numpy as np
 
-    from loki_rs_spark.operators.arrow_matcher import (
-        _batch_masks,
-        _string_mask,
-    )
-    from loki_rs_spark.operators.matcher import ExtBits, TextOps, _MaskBackend
-    from loki_rs_spark.signatures.conditions import render_condition
+    from loki_rs_spark.operators.arrow_matcher import _batch_masks, _yara_masks
+    from loki_rs_spark.operators.matcher import ExtBits
 
     text_c, _fname, yara = _batch_masks(engine, batch)
     text = batch.column("text")
-    every = np.arange(len(text_c.kernel_input))
     ext = ExtBits(batch.column("ext_bits").to_numpy(), engine.atom_index)
-    for fired, masks, compiled in yara:
-        whole = [_string_mask(text, s) for s in compiled.rule.strings]
-        for s, gated, ref in zip(compiled.rule.strings, masks, whole):
-            assert gated.tolist() == ref.tolist(), (compiled.rule.name, s)
-        backend = _MaskBackend(
-            [(s.identifier, m) for s, m in zip(compiled.rule.strings, whole)],
-            batch.num_rows,
-            ext,
-            text_ops=TextOps(text_c, every),
-            strings_by_ident=compiled.strings_by_ident,
-        )
-        ungated = np.asarray(render_condition(compiled.ast, backend), bool)
-        assert fired.tolist() == ungated.tolist(), compiled.rule.name
-    return {c.rule.name: fired for fired, _m, c in yara}
+    every = np.arange(len(text_c.kernel_input))
+    ungated = _yara_masks(engine, text_c, ext, every)
+    for (fired, reads, rule), (whole, whole_reads, _) in zip(yara, ungated):
+        for s, (mask, offsets), (ref, ref_offsets) in zip(
+            rule.strings, reads, whole_reads
+        ):
+            assert mask.tolist() == ref.tolist(), (rule.name, s)
+            assert mask.tolist() == _row_mask(engine, text, s), (rule.name, s)
+            assert offsets == ref_offsets, (rule.name, s)
+        assert fired.tolist() == whole.tolist(), rule.name
+    return {rule.name: fired for fired, _r, rule in yara}
 
 
 @pytest.mark.parametrize("copies", [1, 40], ids=["plain", "dict-encoded"])
@@ -1851,6 +1869,125 @@ def test_atom_gate_is_exact(copies):
         )
         assert fired["G_Not"].all() and fired["G_Zero_Of"].all()
         assert not fired["G_Nocase"].any() and not fired["G_Size"].any()
+
+
+def test_atom_gate_covers_every_case_fold():
+    """A nocase literal's atom `(?i:...)` matches each codepoint that
+    `fold_case` folds into it. RE2's `(?i:x)` matches x's whole case
+    orbit, so a text whose fold holds a literal's fold always passes the
+    gate: the gated nocase reads are exact."""
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from loki_rs_spark.signatures.compile import scoped_re2_regex
+    from loki_rs_spark.signatures.conditions import fold_case
+
+    folded = [
+        chr(c)
+        for c in range(sys.maxunicode + 1)
+        if not 0xD800 <= c <= 0xDFFF and fold_case(chr(c)) != chr(c)
+    ]
+    assert len(folded) > 1400
+    missed = [
+        c
+        for c in folded
+        if not pc.match_substring_regex(
+            pa.array([c]),
+            scoped_re2_regex(YaraString("$k", fold_case(c), nocase=True)),
+        )[0].as_py()
+    ]
+    assert missed == []
+
+
+# needle -> the codepoints each of its letters may be written with
+LITERAL_DIFF_NEEDLES = {
+    "abab": ["aA", "bB", "aA", "bB"],
+    "aa": ["aA", "aA"],
+    "sk": ["sS\u017f", "kK\u212a"],
+    "\u00e9": ["\u00e9\u00c9"],
+}
+LITERAL_DIFF_CONDITIONS = [
+    "$s",
+    "#s == 2",
+    "$s at 2",
+    "$s in (1..4)",
+    "@s[2] == 2",
+    "for any i in (1..#s) : ( @s[i] > 5 )",
+]
+
+
+def _literal_diff_texts(n):
+    """`n` seeded texts over a small alphabet holding U+0130, U+017F,
+    the Kelvin sign and U+00C9; about half carry 1-3 spellings of a
+    needle (half of them as written) at random offsets, adjacent ones
+    overlapping the bordered needles."""
+    import random
+
+    rng = random.Random(14)
+    alphabet = "aabbABsSkK \u0130\u017f\u212a\u00c9\u00e9"
+    texts = [None, ""]
+    while len(texts) < n:
+        text = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 12)))
+        if rng.random() < 0.5:
+            needle = rng.choice(list(LITERAL_DIFF_NEEDLES))
+            for _ in range(rng.randint(1, 3)):
+                spelled = needle if rng.random() < 0.5 else "".join(
+                    rng.choice(forms) for forms in LITERAL_DIFF_NEEDLES[needle]
+                )
+                at = rng.randint(0, len(text))
+                text = text[:at] + spelled + text[at:]
+        texts.append(text)
+    return texts
+
+
+def test_literal_reads_agree_with_the_reference():
+    """Every literal read (`$s`, `#s`, `at`, `in`, `@s[i]`, the `for`
+    quantifier), nocase and plain, over seeded texts: the Arrow kernel
+    and the reference scanner fire the same rules with the same
+    matched_strings on every row."""
+    import itertools
+
+    import pyarrow as pa
+
+    from loki_rs_spark.operators.arrow_matcher import match_record_batch
+    from loki_rs_spark.operators.matcher import CompiledEngine
+
+    rules = [
+        YaraRule(
+            f"R{k}", 80, "", "", "",
+            (YaraString("$s", needle, nocase=nocase),), condition,
+        )
+        for k, (needle, nocase, condition) in enumerate(
+            itertools.product(
+                LITERAL_DIFF_NEEDLES, (False, True), LITERAL_DIFF_CONDITIONS
+            )
+        )
+    ]
+    sigs = _sigs(yara_rules=rules)
+    cfg = ScanConfig(exclude_patterns=(), max_reasons=len(rules))
+    texts = _literal_diff_texts(2000)
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array(texts, type=pa.string()),
+            pa.array(["t"] * len(texts)),
+            pa.array([0] * len(texts), type=pa.int64()),
+        ],
+        names=["text", "tool", "ext_bits"],
+    )
+    _fname, yara, _c2 = match_record_batch(CompiledEngine(sigs), batch)
+    fired_rules = set()
+    for i, (text, reasons) in enumerate(zip(texts, yara.to_pylist())):
+        kernel = [(r["message"], r["matched_strings"]) for r in reasons]
+        ref = scan_turn("c0", i, text, "t", sigs, cfg)
+        expected = [] if ref is None else [
+            (r.message, r.matched_strings) for r in ref.reasons
+        ]
+        assert kernel == expected, text
+        fired_rules.update(message for message, _ in kernel)
+    # every read of every needle fires somewhere, nocase and plain
+    assert len(fired_rules) == len(rules)
 
 
 def test_atom_gate_with_an_empty_matching_regex():
