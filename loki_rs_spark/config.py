@@ -1,8 +1,7 @@
 """Scan configuration, mirroring the reference's CLI defaults.
 
 Reference defaults: severity thresholds 80/60/40 (src/main.rs:98-108),
-max_reasons 2 (src/main.rs:110-112), per-row match cap 100
-(src/modules/filesystem_scan.rs:822), max file size 64 MB
+max_reasons 2 (src/main.rs:110-112), max file size 64 MB
 (src/main.rs:115-116). Threshold ordering alert >= warning >= notice is
 validated like src/main.rs:1215-1219.
 """
@@ -11,6 +10,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+# Per-row match cap (src/modules/filesystem_scan.rs:822, the reference's
+# `ArrayVec<GenMatch, 100>`): a constant there, so one here too. The
+# pipeline's reason slice, both Arrow kernel caps, `scan_turn` and the
+# oracle SQL read it.
+MAX_MATCHES = 100
+
 
 @dataclass(frozen=True)
 class ScanConfig:
@@ -18,7 +23,6 @@ class ScanConfig:
     warning_threshold: int = 60
     notice_threshold: int = 40
     max_reasons: int = 2
-    max_matches: int = 100
     max_text_chars: int = 64_000_000
     # Regexes applied to the `tool` column (the path analog of a turn);
     # mirrors config/excludes.cfg (src/main.rs:909-942).
@@ -33,8 +37,8 @@ class ScanConfig:
                 f"(got {self.alert_threshold}/{self.warning_threshold}/"
                 f"{self.notice_threshold})"
             )
-        if self.max_reasons < 0 or self.max_matches <= 0:
-            raise ValueError("max_reasons must be >= 0 and max_matches > 0")
+        if self.max_reasons < 0:
+            raise ValueError("max_reasons must be >= 0")
 
 
 DEFAULT_CONFIG = ScanConfig()

@@ -7,18 +7,19 @@ The matcher stays in Arrow end to end:
 * every kernel runs over the batch's dictionary-encoded unique values
   and gathers back to rows through the codes (`_CompactCol`);
 * one pass of the engine's atom programs (the OR of every YARA string's
-  RE2 regex) over the unique texts picks the candidates, and each YARA
-  string is read ONCE over them (`_Candidates.read`): a string that is
-  not a plain literal as one `pyarrow.compute.match_substring_regex`
-  mask, a plain literal as one case-sensitive `match_substring` of its
-  needle (over the `fold_case`d candidates when nocase) and a +1-step
-  find walk on the candidates it hits — its occurrence offsets, from
-  which `$s`, `#s`, `at`, `in`, `@s[i]` and its matched strings all
-  derive, as yara-x reads them from one match list;
+  RE2 mask) over the unique texts picks the candidates, and each YARA
+  string is read ONCE over them (`_Candidates.read`): one
+  `pyarrow.compute.match_substring_regex` of its RE2 mask, then its
+  occurrence walk (matcher.occurrence_walk: a +1-step find walk of each
+  literal form, a capture-regex walk of a regex or hex string) on the
+  candidates the mask hits. A string holds on a row iff the walk finds
+  an occurrence there, and `#s`, `at`, `in`, `@s[i]` and its matched
+  strings all derive from the same list, as yara-x reads them from one
+  match list;
 * per-rule condition algebra on numpy boolean masks;
-* Python-level work (find walks, reason building) happens only for the
-  sparse hit values, and the output list<struct> arrays are built from
-  offsets + flat values (no per-row Python lists for misses);
+* Python-level work (occurrence walks, reason building) happens only for
+  the sparse hit values, and the output list<struct> arrays are built
+  from offsets + flat values (no per-row Python lists for misses);
 * the reasons leave the kernel in the pipeline's final shape
   (ioc_join.REASON_TYPE, messages included), so the Spark side only
   concatenates them with the hash reasons.
@@ -28,11 +29,15 @@ pass (`_batch_masks`) as reasons, and `make_arrow_matcher_udf` is its one
 UDF: score-only scans project the reasons' `score` field on the Spark
 side. `match_scores_record_batch` is that projection at kernel level.
 
-Pattern-dialect note: the batch kernels use RE2, the matched-string
-extraction of non-literal strings uses Python `re`. The supported
-signature subset (RE2-compatible regexes, no backreferences/lookaround)
-behaves identically under both; parity with the reference scanner is
-enforced by tests/test_pipeline.py and tests/test_truth_tables.py.
+Pattern-dialect note: the masks run in RE2, and the occurrence walks of
+regex and hex strings in Python `re`; a row holds a string only where
+the walk finds it, so RE2 is only the filter in front of it. The walk
+finds nothing RE2 misses on the supported subset (RE2-compatible
+regexes, no backreferences/lookaround) except one case fold: Python
+`re` folds U+0130 into a nocase regex's `i`, RE2 does not. Literal kinds
+never reach Python `re`: their walk is `str.find` over the `fold_case`d
+text, which RE2's `(?i)` mask covers. Parity with the reference scanner
+is enforced by tests/test_pipeline.py and tests/test_truth_tables.py.
 
 Mirrors the reference's compile-once automaton sharing (src/main.rs:780-851)
 via the per-executor `matcher._engine_for` cache.
@@ -46,8 +51,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import SparkSession
 
-from ..signatures.compile import literal_probe
-from ..signatures.conditions import fold_case, render_condition
+from ..config import MAX_MATCHES
+from ..signatures.conditions import render_condition
 from ..signatures.model import SignatureSet
 from .ioc_join import (
     C2_GATE_MAX_LITERALS,
@@ -57,7 +62,6 @@ from .ioc_join import (
     YARA_MSG,
 )
 from .matcher import (
-    MAX_YARA_MATCHES,
     ExtBits,
     _engine_for,
     _HOST_RX,
@@ -132,8 +136,7 @@ class _CompactCol:
 class _Candidates:
     """The atom candidates of one batch — `at`, indices into the text
     column's uniques — and the one read of each YARA string over them.
-    Their texts as `str`, and folded by `fold_case` (only when some
-    literal is nocase), are built once per batch, on first use."""
+    Their texts as `str` are built once per batch, on first use."""
 
     def __init__(self, text_c: "_CompactCol", at: np.ndarray) -> None:
         self.at = at
@@ -143,36 +146,17 @@ class _Candidates:
     def strs(self) -> list[str]:
         return self.texts.to_pylist()
 
-    @cached_property
-    def folded(self) -> tuple[list[str], pa.Array]:
-        folded = [fold_case(t) for t in self.strs]
-        return folded, pa.array(folded, type=pa.string())
-
-    def read(self, s, regex: str | None):
-        """One YARA string over the candidates: (the uniques holding it,
-        offsets). A plain literal (`literal_probe`) runs one
-        case-sensitive substring kernel of its needle — over the folded
-        texts when nocase — and a +1-step find walk on the texts it hits:
-        `offsets` maps each hit unique to the ascending character offsets
-        of every occurrence, overlapping ones too (yara-x's
-        all-positions semantics). Any other string runs its RE2 `regex`
-        and has no offsets."""
-        probe = literal_probe(s)
-        if probe is None:
-            return self.at[_mask(self.texts, regex, regex=True)], None
-        needle, nocase = probe
-        if nocase:
-            needle = fold_case(needle)
-            strs, texts = self.folded
-        else:
-            strs, texts = self.strs, self.texts
-        offsets = {}
-        for k in np.nonzero(_mask(texts, needle, regex=False))[0]:
-            text, found, pos = strs[k], [], -1
-            while (pos := text.find(needle, pos + 1)) >= 0:
-                found.append(pos)
-            offsets[int(self.at[k])] = found
-        return np.fromiter(offsets, np.int64, len(offsets)), offsets
+    def read(self, regex: str, walk):
+        """One YARA string over the candidates: its RE2 mask `regex`, then
+        its occurrence `walk` (matcher.occurrence_walk) on the texts the
+        mask hits. Returns (the uniques holding it, occurrences):
+        `occurrences` maps each unique where the walk finds a match to
+        its (offset, data) list."""
+        occurrences = {}
+        for k in np.nonzero(_mask(self.texts, regex, regex=True))[0]:
+            if found := walk(self.strs[k]):
+                occurrences[int(self.at[k])] = found
+        return np.fromiter(occurrences, np.int64, len(occurrences)), occurrences
 
 
 def _reason_list_array(
@@ -200,11 +184,11 @@ def _batch_masks(engine, batch: pa.RecordBatch):
     to unique bytes, and the masks are exact.
 
     The YARA string reads are gated: one pass of the engine's atom
-    programs (the OR of every string's RE2 regex) over the unique texts
+    programs (the OR of every string's RE2 mask) over the unique texts
     picks the candidates, and every string read runs on those alone. A
-    text matches `A|B|...` iff it matches one of them, and a nocase
-    literal's `(?i:...)` matches every text whose `fold_case` holds the
-    literal's fold, so the result equals an ungated pass's."""
+    text matches `A|B|...` iff it matches one of them, and each mask
+    matches every text its walk finds a match in (matcher.atom_programs),
+    so the result equals an ungated pass's."""
     bits_np = (
         batch.column("ext_bits")
         .to_numpy(zero_copy_only=False)
@@ -237,15 +221,17 @@ def _yara_masks(engine, text_c: "_CompactCol", ext, cand: np.ndarray):
     match). Conditions render over every row, so negations, `0 of them`
     and string-free rules (filesize, uint, external variables) fire on
     rows without any candidate. Returns one (fired, reads, rule) per
-    rule; `reads` holds one (row mask, offsets) per string."""
+    rule; `reads` holds one (row mask, occurrences) per string."""
     candidates = _Candidates(text_c, cand)
     yara = []
     for rule, ast in engine.yara:
         reads = []
         for s in rule.strings:
-            at, offsets = candidates.read(s, engine.mask_regexes.get(s))
+            at, occurrences = candidates.read(
+                engine.mask_regexes[s], engine.walks[s]
+            )
             mask = text_c.expand(np.ones(len(at), dtype=bool), False, at=at)
-            reads.append((mask, offsets))
+            reads.append((mask, occurrences))
         backend = _MaskBackend(rule.strings, reads, text_c, ext)
         fired = np.asarray(render_condition(ast, backend), dtype=bool)
         yara.append((fired, reads, rule))
@@ -282,30 +268,25 @@ def match_record_batch(
     ya_rows: dict[int, list[dict]] = {}
     for fired, reads, rule in yara:
         # Matched strings depend only on (rule, text VALUE): the string
-        # masks gather from per-unique reads, so rows sharing a unique
-        # value fire with identical matched_strings. Compute the reason
-        # ONCE per unique value and append the shared (read-only) dict
-        # per hit row — on replicated corpora (the rep-1600 bench table
-        # has ~7 distinct texts per 10k-row batch) this removes ~all
-        # per-hit .as_py() + occurrence-walk work.
+        # reads are per unique, so rows sharing a unique value fire with
+        # identical matched_strings. Compute the reason ONCE per unique
+        # value and append the shared (read-only) dict per hit row — on
+        # replicated corpora (the rep-1600 bench table has ~7 distinct
+        # texts per 10k-row batch) this formats each reason once.
         per_unique: dict[int, dict] = {}
         for idx in np.nonzero(fired)[0]:
             i = int(idx)
-            if ya_counts[i] >= MAX_YARA_MATCHES:
+            if ya_counts[i] >= MAX_MATCHES:
                 continue
             u = int(text_c.codes[i])
             entry = per_unique.get(u)
             if entry is None:
-                # a NULL row (u past the uniques) has no string set
+                # a NULL row (u past the uniques) has no occurrences
                 matched_strings = [
                     line
-                    for s, (mask, offsets) in zip(rule.strings, reads)
-                    if mask[i]
+                    for s, (_, occurrences) in zip(rule.strings, reads)
                     for line in string_occurrence_lines(
-                        s,
-                        text_c.kernel_input[u].as_py(),
-                        None if offsets is None else offsets[u],
-                        engine.capture_regexes.get(s),
+                        s, occurrences.get(u, ())
                     )
                 ]
                 entry = {
@@ -323,12 +304,6 @@ def match_record_batch(
 
     c2_arr = _reason_list_array(*_c2_match_lists(text_c, engine))
     return fname_arr, yara_arr, c2_arr
-
-
-# per-row cap on emitted C2 matches: the pipeline slices assembled
-# reasons to max_matches (100) anyway, so entries beyond that can never
-# be observed — this bounds memory on pathological host-stuffed rows
-_MAX_C2_MATCHES = 100
 
 
 def _c2_match_lists(
@@ -376,7 +351,10 @@ def _c2_match_lists(
                         "description": hit[2],
                     }
                 )
-                if len(out) >= _MAX_C2_MATCHES:
+                # the pipeline slices assembled reasons to MAX_MATCHES,
+                # so later entries are never seen: this bounds memory on
+                # pathological host-stuffed rows
+                if len(out) >= MAX_MATCHES:
                     break
         if out:
             uniq_lists[int(u)] = out

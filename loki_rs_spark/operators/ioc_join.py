@@ -343,9 +343,7 @@ def c2_text_gate(text: Column, iocs: list[C2IOC]) -> Column:
     return gate
 
 
-def c2_reason_array(
-    text: Column, iocs: list[C2IOC], gate: Column | None = None
-) -> Column:
+def c2_reason_array(text: Column, iocs: list[C2IOC], gate: Column) -> Column:
     """J4: extract host-like tokens from the lowercased turn text (the
     transcript analog of a process's remote connections), then match each
     host against the C2 list — first matching IOC wins per host, one
@@ -366,18 +364,15 @@ def c2_reason_array(
             "whose dict-probe C2 resolution is sub-linear in IOC count "
             "(operators/arrow_matcher._c2_match_lists)."
         )
-    # Gate on the IOC server literals (c2_text_gate): only rows that could
-    # possibly yield a C2 reason pay for the host-extraction regex —
-    # measured ~5x cheaper over the bench corpus than the previous
-    # '.'-based structural gate (most natural text contains a dot).
-    # Callers that evaluate the gate elsewhere too (the scan pipeline's
-    # candidate predicate) pass it as a pre-aliased `gate` column so the
-    # OR-of-contains chain runs ONCE per row — duplicated instantiations
-    # inside one projection defeat codegen subexpression elimination
-    # (conditional branches are excluded from CSE) and measurably regress
-    # the scan (+9s/4M rows at local[8]).
-    if gate is None:
-        gate = c2_text_gate(text, iocs)
+    # `gate` is the pre-aliased column of c2_text_gate over the IOC server
+    # literals: only rows that could possibly yield a C2 reason pay for
+    # the host-extraction regex — measured ~5x cheaper over the bench
+    # corpus than the previous '.'-based structural gate (most natural
+    # text contains a dot). The catalyst scan evaluates the gate once per
+    # row as its own column: duplicated instantiations inside one
+    # projection defeat codegen subexpression elimination (conditional
+    # branches are excluded from CSE) and measurably regress the scan
+    # (+9s/4M rows at local[8]).
     hosts = F.when(
         gate,
         F.regexp_extract_all(F.lower(text), F.lit(HOST_PATTERN), 0),

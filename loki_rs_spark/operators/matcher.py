@@ -11,11 +11,12 @@ row, src/modules/filesystem_scan.rs:1010-1011). The Spark analog:
   pattern at executor granularity;
 * the batch kernels live in arrow_matcher.py; this module holds the
   engine, the condition algebra they evaluate rules with (`ExtBits`,
-  `_MaskBackend`) and the matched-string formatting. Every read of a
-  plain-literal string — `$s`, `#s`, `at`, `in`, `@s[i]` and its
-  matched strings — derives from one list per batch: the string's
-  occurrence offsets (arrow_matcher._Candidates.read), as yara-x reads
-  them all from one match list.
+  `_MaskBackend`), the per-string occurrence walks and the
+  matched-string formatting. Every read of every YARA string — `$s`,
+  `#s`, `at`, `in`, `@s[i]` and its matched strings — derives from one
+  list per batch: the string's occurrences (`occurrence_walk`, run by
+  arrow_matcher._Candidates.read), as yara-x reads them all from one
+  match list.
 
 Match semantics mirrored from src/modules/filesystem_scan.rs:1002-1136:
 * rule score from meta.score, default 75, valid iff 0 < s <= 100;
@@ -30,14 +31,16 @@ from __future__ import annotations
 
 import hashlib
 import re
+import string
 from bisect import bisect_left
 from functools import reduce
+from operator import itemgetter
 
 import numpy as np
 import pyarrow.compute as pc
 
-from ..signatures.compile import boolean_regex, capture_regex, literal_probe
-from ..signatures.conditions import ExtPred, cmp_int, collect_ext_atoms
+from ..signatures.compile import capture_regex, literal_needles, scoped_re2_regex
+from ..signatures.conditions import ExtPred, cmp_int, collect_ext_atoms, fold_case
 from ..signatures.model import SignatureSet
 
 # compiled forms of ioc_join's host/IPv4 patterns (identical subset in
@@ -46,8 +49,6 @@ from .ioc_join import HOST_PATTERN, IPV4_PATTERN
 
 _HOST_RX = re.compile(HOST_PATTERN)
 _IPV4_RX = re.compile(IPV4_PATTERN)
-
-MAX_YARA_MATCHES = 100
 
 _PRINTABLE_EXTRA = {"\t", "\n", "\r"}
 
@@ -69,48 +70,62 @@ def format_matched_data(value: str) -> str:
     return value.encode("utf-8").hex()
 
 
-def string_occurrence_lines(
-    s, row_text: str, offsets: list[int] | None, rx: re.Pattern | None
-) -> list[str]:
+def string_occurrence_lines(s, occurrences) -> list[str]:
     """Formatted matched_strings entries ("$id: 'data' @ offset") for one
-    FIRED string on one row (arrow_matcher.match_record_batch).
-
-    Three yara-x output semantics live here:
-    * `private` strings are suppressed from output (they still feed the
-      condition — the caller only reaches this after the rule fired);
-    * a plain literal reports its `offsets`, the kernel's one +1-step
-      find walk (every overlapping occurrence; nocase ones over the
-      length-keeping `fold_case` of the text), each with the row text's
-      slice at that offset;
-    * every other string enumerates its capture regex `rx`, and the
-      lookbehind transpile's report_shift is added back: offset + shift,
-      matched data minus the literal prefix (each prefix unit matches
-      exactly one char, so shift chars = the prefix match).
-
-    Documented output-only divergence (round-6 ADVICE, low): REGEX
-    strings — including lookbehind/backref transpiles — enumerate
-    occurrences with non-overlapping finditer, so a rewritten pattern
-    that can self-overlap (e.g. '(?<=ab)ab' on 'ababab') reports fewer
-    matched_strings entries than yara-x would. Rule FIRING is unaffected
-    (the boolean kernels test containment, not counts), and a stepped
-    re-enumeration for arbitrary regexes would have to answer
-    leftmost-longest-vs-all-starts questions yara-x itself answers
-    differently per engine — so the divergence is pinned here instead."""
+    string's `occurrences` on one row of a FIRED rule; `private` strings
+    are suppressed from output (they still feed the condition)."""
     if s.private:
         return []
-    if offsets is None:
-        shift = s.report_shift
-        found = [
-            (m.start() + shift, m.group(0)[shift:])
-            for m in rx.finditer(row_text)
-        ]
-    else:
-        width = len(literal_probe(s)[0])
-        found = [(pos, row_text[pos : pos + width]) for pos in offsets]
     return [
         f"{s.identifier}: {format_matched_data(data)} @ {pos}"
-        for pos, data in found
+        for pos, data in occurrences
     ]
+
+
+_WORD_CHARS = frozenset(string.ascii_letters + string.digits)
+
+
+def occurrence_walk(s):
+    """The one occurrence read of YARA string `s`: a function from a row
+    text to the (character offset, matched data) of its every match,
+    ascending by offset, which `$s`, `#s`, `at`, `in`, `@s[i]` and the
+    matched strings all derive from.
+
+    * A literal kind (not regex or hex) walks each of its
+      `literal_needles` with `str.find` and a +1 step, so overlapping
+      occurrences count too (yara-x's all-positions semantics); a nocase
+      one over the length-keeping `fold_case` of the text. A fullword
+      hit needs a non-[0-9A-Za-z] border on both sides in the row text.
+      Hits of several forms merge by offset, in form order at a tie.
+    * A regex or hex string enumerates its capture regex, with the
+      lookbehind transpile's report_shift added back: offset + shift,
+      matched data minus the literal prefix (one char per prefix unit).
+      Documented divergence (round-6 ADVICE, low): finditer does not
+      overlap, so a self-overlapping rewrite ('(?<=ab)ab' on 'ababab')
+      reports fewer matches than yara-x, whose engines answer
+      leftmost-longest-vs-all-starts differently per engine."""
+    if s.is_regex or s.is_hex:
+        rx, shift = capture_regex(s), s.report_shift
+        return lambda text: [
+            (m.start() + shift, m.group(0)[shift:]) for m in rx.finditer(text)
+        ]
+    fold = fold_case if s.nocase else str
+    needles = [fold(n) for n in literal_needles(s)]
+
+    def walk(text: str) -> list[tuple[int, str]]:
+        hay, found = fold(text), []
+        for needle in needles:
+            width, pos = len(needle), -1
+            while (pos := hay.find(needle, pos + 1)) >= 0:
+                if s.fullword and (
+                    text[pos - 1 : pos] in _WORD_CHARS
+                    or text[pos + width : pos + width + 1] in _WORD_CHARS
+                ):
+                    continue
+                found.append((pos, text[pos : pos + width]))
+        return sorted(found, key=itemgetter(0)) if len(needles) > 1 else found
+
+    return walk
 
 
 class ExtBits:
@@ -135,13 +150,12 @@ class ExtBits:
 class _MaskBackend:
     """Condition evaluation over numpy boolean masks: every AST node maps
     to array ops over the whole batch. `reads` holds one (row mask,
-    offsets) per string of the rule, from one read of each string
-    (arrow_matcher._Candidates.read); `offsets` maps each unique holding
-    a plain literal to its ascending occurrence offsets. The
-    count/at/in/offset operators read only plain literals
-    (conditions.validate_condition_ops) and derive from those offsets,
-    one Python read per hit unique, gathered to rows by `text_c.expand`.
-    The string-free reads (uint, filesize) read every unique of `text_c`.
+    occurrences) per string of the rule, from one read of each string
+    (arrow_matcher._Candidates.read); `occurrences` maps each unique
+    holding the string to its (offset, data) list, ascending by offset.
+    The count/at/in/offset operators derive from those lists, one Python
+    read per hit unique, gathered to rows by `text_c.expand`. The
+    string-free reads (uint, filesize) read every unique of `text_c`.
 
     Offsets are CHARACTER offsets — the matched_strings '@ {offset}'
     convention."""
@@ -151,21 +165,21 @@ class _MaskBackend:
             (s.identifier, mask) for s, (mask, _) in zip(strings, reads)
         ]
         self.masks = dict(self.ident_masks)
-        self.offsets = {
-            s.identifier: offsets for s, (_, offsets) in zip(strings, reads)
+        self.occurrences = {
+            s.identifier: occ for s, (_, occ) in zip(strings, reads)
         }
         self.text_c = text_c
         self.n_rows = text_c.n
         self.ext = ext
 
     def _read(self, ident: str, read, fill) -> np.ndarray:
-        """`read(offsets)` on every unique holding literal `ident`,
+        """`read(occurrences)` on every unique holding string `ident`,
         `fill` on every other row."""
-        offsets = self.offsets[ident]
+        occ = self.occurrences[ident]
         return self.text_c.expand(
-            np.array([read(o) for o in offsets.values()], dtype=type(fill)),
+            np.array([read(o) for o in occ.values()], dtype=type(fill)),
             fill,
-            at=np.fromiter(offsets, np.int64, len(offsets)),
+            at=np.fromiter(occ, np.int64, len(occ)),
         )
 
     def count_cmp(self, node) -> np.ndarray:
@@ -181,25 +195,23 @@ class _MaskBackend:
     def _window(self, ident: str, lo: int, hi: int) -> np.ndarray:
         """Some occurrence starts at a character offset in [lo, hi]."""
 
-        def starts_in(offsets: list[int]) -> bool:
-            k = bisect_left(offsets, lo)
-            return k < len(offsets) and offsets[k] <= hi
+        def starts_in(occ: list[tuple[int, str]]) -> bool:
+            k = bisect_left(occ, lo, key=itemgetter(0))
+            return k < len(occ) and occ[k][0] <= hi
 
         return self._read(ident, starts_in, False)
 
     def offset_cmp(self, node) -> np.ndarray:
         i = node.index
 
-        def nth(offsets: list[int]) -> bool:
-            return len(offsets) >= i and cmp_int(
-                node.op, offsets[i - 1], node.value
-            )
+        def nth(occ: list[tuple[int, str]]) -> bool:
+            return len(occ) >= i and cmp_int(node.op, occ[i - 1][0], node.value)
 
         return self._read(node.identifier, nth, False)
 
     def exists_from(self, node) -> np.ndarray:
         return self._read(
-            node.identifier, lambda offsets: offsets[-1] >= node.lo, False
+            node.identifier, lambda occ: occ[-1][0] >= node.lo, False
         )
 
     def bool_lit(self, node) -> np.ndarray:
@@ -282,23 +294,18 @@ class _MaskBackend:
 ATOM_PROGRAM_MAX_CHARS = 16_384
 
 
-def atom_programs(rules) -> list[str]:
-    """The OR of every YARA string's RE2 boolean regex, flags scoped per
-    alternative, split into programs of at most ATOM_PROGRAM_MAX_CHARS
-    (one alternative longer than that is a program of its own). A text
-    matches some program iff it holds an occurrence of some string, so
-    every string read is empty on a text that matches none: the
-    count/at/in/offset operators read only plain literals
-    (conditions.validate_condition_ops), whose regex is the literal
-    itself, and a nocase literal's `(?i:...)` matches every text whose
-    `fold_case` holds the literal's fold.""" 
-    from ..signatures.compile import scoped_re2_regex
-
-    atoms = dict.fromkeys(
-        scoped_re2_regex(s) for rule in rules for s in rule.strings
-    )
+def atom_programs(mask_regexes) -> list[str]:
+    """The OR of the distinct RE2 masks of every YARA string (each with
+    its flags scoped, `scoped_re2_regex`), split into programs of at most
+    ATOM_PROGRAM_MAX_CHARS (one alternative longer than that is a program
+    of its own). A text matches some program iff it matches some
+    string's mask, and a mask matches every text on which its string's
+    occurrence walk finds a match, so every string read is empty on a
+    text that matches none: a literal's mask is its forms without
+    fullword borders, and a nocase literal's `(?i:...)` matches every
+    text whose `fold_case` holds the literal's fold."""
     programs: list[str] = []
-    for atom in atoms:
+    for atom in dict.fromkeys(mask_regexes):
         if programs and (
             len(programs[-1]) + 1 + len(atom) <= ATOM_PROGRAM_MAX_CHARS
         ):
@@ -310,24 +317,19 @@ def atom_programs(rules) -> list[str]:
 
 class CompiledEngine:
     """Per-executor compiled signature engine: the filename IOCs, the
-    YARA rules with their parsed conditions, the RE2 mask and Python
-    capture regexes of every string that is not a plain literal, the
-    atom programs that gate every YARA string read (`atom_programs`;
-    arrow_matcher._batch_masks runs them once per batch and the string
-    reads only on the texts they match), the ext-bit atom order and the
-    C2 lookup table."""
+    YARA rules with their parsed conditions, the RE2 mask and occurrence
+    walk of every string, the atom programs that gate every YARA string
+    read (`atom_programs`; arrow_matcher._batch_masks runs them once per
+    batch and the string reads only on the texts they match), the
+    ext-bit atom order and the C2 lookup table."""
 
     def __init__(self, sigs: SignatureSet) -> None:
         self.fname = list(sigs.filename_iocs)
-        self.atom_programs = atom_programs(sigs.yara_rules)
         self.yara = [(rule, rule.condition_ast) for rule in sigs.yara_rules]
-        self.mask_regexes = {
-            s: boolean_regex(s, "re2")
-            for rule in sigs.yara_rules
-            for s in rule.strings
-            if literal_probe(s) is None
-        }
-        self.capture_regexes = {s: capture_regex(s) for s in self.mask_regexes}
+        strings = [s for rule in sigs.yara_rules for s in rule.strings]
+        self.mask_regexes = {s: scoped_re2_regex(s) for s in strings}
+        self.walks = {s: occurrence_walk(s) for s in strings}
+        self.atom_programs = atom_programs(self.mask_regexes.values())
         self.atom_index = {
             atom: i for i, atom in enumerate(collect_ext_atoms(sigs))
         }

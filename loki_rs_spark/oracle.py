@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import hashlib
 
-from .config import DEFAULT_CONFIG, ScanConfig
+from .config import DEFAULT_CONFIG, MAX_MATCHES, ScanConfig
 from .operators.ioc_join import HOST_PATTERN, IPV4_PATTERN
 from .signatures.model import SignatureSet
 from .sources.transcripts import (
@@ -66,18 +66,18 @@ def _fname_condition(ioc) -> str:
 
 
 def _yara_string_sql(s) -> str:
-    """One YARA string as a DuckDB boolean. Plain literals use contains();
-    anything modifier-bearing (fullword/wide/hex/regex) uses the RE2
-    rendering from signatures/compile.py (DuckDB's regex engine is RE2,
-    same dialect as the pyarrow kernels)."""
-    from .signatures.compile import boolean_regex, literal_probe
+    """One YARA string as a DuckDB boolean. A plain literal (its one form
+    is its pattern) uses contains(); anything modifier-bearing
+    (fullword/wide/xor/base64/hex/regex) uses the RE2 rendering from
+    signatures/compile.py (DuckDB's regex engine is RE2, same dialect as
+    the pyarrow kernels)."""
+    from .signatures.compile import boolean_regex, literal_needles
 
-    probe = literal_probe(s)
-    if probe is not None and "\x00" not in probe[0]:
-        needle, nocase = probe
-        if nocase:
-            return f"contains(lower(text), {_q(needle.lower())})"
-        return f"contains(text, {_q(needle)})"
+    plain = not (s.is_regex or s.is_hex or s.fullword)
+    if plain and literal_needles(s) == [s.pattern] and "\x00" not in s.pattern:
+        if s.nocase:
+            return f"contains(lower(text), {_q(s.pattern.lower())})"
+        return f"contains(text, {_q(s.pattern)})"
     return f"regexp_matches(text, {_q(boolean_regex(s, 're2'))})"
 
 
@@ -391,7 +391,7 @@ def scan_ctes(
       {yara_cases}
         ], x -> x IS NOT NULL)),
         {c2}),
-      1, {cfg.max_matches}) AS reasons
+      1, {MAX_MATCHES}) AS reasons
   FROM {p}scanned
   WHERE {fp}
 ),

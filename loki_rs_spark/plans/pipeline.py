@@ -9,7 +9,7 @@ declarative Spark plan, built by `scan_transcripts`:
       -> Arrow matcher UDF (J3 filename IOCs + P5 YARA subset + J4 C2 host
          extraction and suffix match, all inside the one UDF)
       -> reason assembly in discovery order (A3: filename -> md5 -> sha1
-         -> sha256 -> YARA -> C2), capped at 100 (O4)
+         -> sha256 -> YARA -> C2), capped at MAX_MATCHES (O4)
       -> weighted score fold (A1, array fold, no shuffle) -> round (i16
          parity) -> severity classify (A2) -> below-notice drop
       -> shown-reason slice (A3, default 2)
@@ -32,12 +32,12 @@ from __future__ import annotations
 import threading
 from collections import OrderedDict
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, ScanConfig
+from ..config import DEFAULT_CONFIG, MAX_MATCHES, ScanConfig
 from ..functions.score import rounded_score_col, severity_col, weighted_score_col
 from ..operators.arrow_matcher import make_arrow_matcher_udf
 from ..operators.ext_bits import ext_bits_col
@@ -203,7 +203,7 @@ def _compile_plan(
     # clean rows cost a few comparisons instead of struct/array
     # construction. False-positive candidates just take the slow branch.
     all_reasons = F.when(
-        candidate, F.slice(F.concat(*items), 1, cfg.max_matches)
+        candidate, F.slice(F.concat(*items), 1, MAX_MATCHES)
     ).otherwise(F.array().cast(f"array<{REASON_TYPE}>"))
     staged = (
         *map(F.col, _ROW_COLUMNS),
@@ -346,28 +346,33 @@ class _CatalystCondBackend:
     """YARA condition AST -> Catalyst Column predicates (the pure-JVM
     matcher rendering; whole-stage codegen'd). One instance per rule.
 
-    A nocase plain literal (`literal_probe`) reads the text folded as
-    `fold_case` folds it, the Arrow kernel's and the reference's fold:
-    its mask is a `contains` of the folded needle, and its count/at/in
-    operators run case-sensitively over the same folded text. Other
-    strings render their regex (nocase as Java `(?i)`). Count/at/in
-    render on the (validated) plain-literal subset: regexp_count for #,
-    substring equality for at, locate for in. @[i] (i-th occurrence
-    offset) has no Catalyst primitive and raises — rules using it route
-    through the arrow matcher only."""
+    A nocase literal kind reads the text folded as `fold_case` folds it,
+    the Arrow kernel's and the reference's fold: its mask is the
+    case-sensitive regex of the string with its pattern folded (so its
+    `literal_needles` forms are folded, fullword borders around them),
+    and its count/at/in operators run case-sensitively over the same
+    folded text. Other strings render
+    their regex, a nocase one with Java's Unicode case folding (`(?u)`:
+    Java's `(?i)` alone folds ASCII only). Count/at/in render on the
+    (validated) plain-literal subset: regexp_count for #, substring
+    equality for at, locate for in. @[i] (i-th occurrence offset) has no
+    Catalyst primitive and raises — rules using it route through the
+    arrow matcher only."""
 
     def __init__(self, rule) -> None:
-        from ..signatures.compile import boolean_regex, literal_probe
+        from ..signatures.compile import boolean_regex
 
         self.strings_by_ident = {s.identifier: s for s in rule.strings}
         self.ident_cols = []
         for s in rule.strings:
-            probe = literal_probe(s)
-            if probe is not None and s.nocase:
-                col, needle = self._folded(s, probe[0])
-                cond = col.contains(needle)
+            if s.nocase and not s.is_regex:
+                col, needle = self._folded(s, s.pattern)
+                folded = replace(s, pattern=needle, nocase=False)
+                cond = col.rlike(boolean_regex(folded, "lookaround"))
             else:
-                cond = F.col("text").rlike(boolean_regex(s, "lookaround"))
+                flags = "(?u)" if s.nocase else ""
+                regex = flags + boolean_regex(s, "lookaround")
+                cond = F.col("text").rlike(regex)
             self.ident_cols.append((s.identifier, cond))
         self.str_cols = dict(self.ident_cols)
 

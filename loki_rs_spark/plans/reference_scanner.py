@@ -11,7 +11,7 @@ import hashlib
 import re
 from dataclasses import dataclass, field
 
-from ..config import DEFAULT_CONFIG, ScanConfig
+from ..config import DEFAULT_CONFIG, MAX_MATCHES, ScanConfig
 from ..functions.score import round_half_away, weighted_score
 from ..operators.ioc_join import HOST_PATTERN
 from ..operators.matcher import format_matched_data
@@ -365,7 +365,7 @@ def scan_turn(
     reasons: list[Reason] = []
 
     def push(reason: Reason) -> None:
-        if len(reasons) < cfg.max_matches:
+        if len(reasons) < MAX_MATCHES:
             reasons.append(reason)
 
     # 1. filename IOCs (path_display and filename are both `tool` here)

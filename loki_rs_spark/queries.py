@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG
 from .operators.hashes import with_hashes
-from .operators.ioc_join import c2_reason_array, plain_relation_input
+from .operators.ioc_join import plain_relation_input
 from .plans.pipeline import ScanResult, _scan_plan, scan_transcripts
 from .plans.skew import per_conv_rollup_salted
 from .session import local_frame
@@ -294,11 +294,10 @@ def q_yara_r6_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_c2_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sigs = bundled_signatures()
-    df = load_transcripts(spark, sf_dir, rep=DEFAULT_REP)
-    reasons = c2_reason_array(F.col("text"), list(sigs.c2_iocs))
+    """J4 through the Arrow matcher UDF (the production path)."""
     return (
-        df.select("conv_id", "turn_idx", F.explode(reasons).alias("r"))
+        _matched_transcripts(spark, sf_dir)
+        .select("conv_id", "turn_idx", F.explode("_m.c2").alias("r"))
         .select(
             "conv_id",
             "turn_idx",

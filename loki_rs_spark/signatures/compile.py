@@ -459,6 +459,30 @@ def validate_string(s: YaraString) -> None:
         validate_shared_regex(s.pattern, ctx)
 
 
+def literal_needles(s: YaraString) -> list[str]:
+    """The literal forms of a string that is not regex or hex, as they
+    occur in the text: ascii and/or wide, one per xor key, or the base64
+    alignments (each as base64 and/or base64wide). The one source of a
+    literal's forms: `_core_forms` renders them as regexes, and the
+    Arrow kernel's occurrence walk (matcher.occurrence_walk) finds them."""
+    if s.xor_min is not None:
+        return xor_variants(s.pattern, s.xor_min, s.xor_max)
+    if s.base64_mod or s.base64wide:  # custom alphabet handled inside
+        forms = []
+        for v in base64_variants(s.pattern, s.base64_alphabet):
+            if s.base64_mod:
+                forms.append(v)
+            if s.base64wide:
+                forms.append(wide_interleave(v))
+        return forms
+    forms = []
+    if s.ascii_form:
+        forms.append(s.pattern)
+    if s.wide:
+        forms.append(wide_interleave(s.pattern))
+    return forms
+
+
 def _core_forms(s: YaraString) -> list[str]:
     """Regex core(s) before fullword wrapping / flags: one entry per
     encoding form (ascii and/or wide, xor key, base64 alignment)."""
@@ -466,36 +490,19 @@ def _core_forms(s: YaraString) -> list[str]:
         return [hex_to_regex(s.pattern, f" (string {s.identifier})")]
     if s.is_regex:
         return [f"(?:{s.pattern})"]
-    if s.xor_min is not None:
-        return [
-            regex_literal(v)
-            for v in xor_variants(s.pattern, s.xor_min, s.xor_max)
-        ]
-    if s.base64_mod or s.base64wide:  # custom alphabet handled inside
-        forms = []
-        for v in base64_variants(s.pattern, s.base64_alphabet):
-            if s.base64_mod:
-                forms.append(regex_literal(v))
-            if s.base64wide:
-                forms.append(regex_literal(wide_interleave(v)))
-        return forms
-    forms = []
-    if s.ascii_form:
-        forms.append(regex_literal(s.pattern))
-    if s.wide:
-        forms.append(regex_literal(wide_interleave(s.pattern)))
-    return forms
+    return [regex_literal(v) for v in literal_needles(s)]
 
 
-def _flags_and_core(s: YaraString, engine: str) -> tuple[str, str]:
+def _flags_and_core(s: YaraString, engine: str | None) -> tuple[str, str]:
+    """(flag chars, regex core) of `s` under `engine`; with no engine,
+    the core is the string's forms alone, without fullword borders."""
     validate_string(s)
     cores = _core_forms(s)
     core = cores[0] if len(cores) == 1 else "(?:" + "|".join(cores) + ")"
-    if s.fullword:
-        if engine == "re2":
-            core = f"(?:^|[^0-9A-Za-z])(?:{core})(?:$|[^0-9A-Za-z])"
-        else:
-            core = f"(?<!{_WORD_CLASS})(?:{core})(?!{_WORD_CLASS})"
+    if s.fullword and engine == "re2":
+        core = f"(?:^|[^0-9A-Za-z])(?:{core})(?:$|[^0-9A-Za-z])"
+    elif s.fullword and engine == "lookaround":
+        core = f"(?<!{_WORD_CLASS})(?:{core})(?!{_WORD_CLASS})"
     return ("i" if s.nocase else "") + ("s" if s.is_hex else ""), core
 
 
@@ -509,9 +516,14 @@ def boolean_regex(s: YaraString, engine: str) -> str:
 
 
 def scoped_re2_regex(s: YaraString) -> str:
-    """`boolean_regex(s, "re2")` with its flags scoped to one group, so
-    it can stand as one alternative of a larger RE2 alternation."""
-    flag_chars, core = _flags_and_core(s, "re2")
+    """The RE2 mask of one string in the Arrow kernel, flags scoped to one
+    group so it can stand as one alternative of a larger alternation:
+    `boolean_regex(s, "re2")`, but for a literal kind only its forms. The
+    kernel's occurrence walk tests fullword borders on the row text, and
+    under `(?i)` RE2 folds U+017F and the Kelvin sign into the border's
+    word class, so a bordered mask would miss a hit next to them."""
+    literal = not (s.is_regex or s.is_hex)
+    flag_chars, core = _flags_and_core(s, None if literal else "re2")
     return f"(?{flag_chars}:{core})"
 
 
@@ -520,19 +532,3 @@ def capture_regex(s: YaraString) -> re.Pattern:
     lookaround form, so the captured data excludes boundary chars just as
     yara-x reports it)."""
     return re.compile(boolean_regex(s, "lookaround"))
-
-
-def literal_probe(s: YaraString) -> tuple[str, bool] | None:
-    """If the string reduces to plain substring search, return
-    (needle, ignore_case) for the fast literal kernels; else None.
-    Multi-form (wide+ascii, xor, base64) and fullword strings need the
-    regex-alternation path."""
-    if s.is_hex or s.is_regex or s.fullword:
-        return None
-    if s.xor_min is not None or s.base64_mod or s.base64wide:
-        return None
-    if s.wide and s.ascii_form:
-        return None
-    if s.wide:
-        return wide_interleave(s.pattern), s.nocase
-    return s.pattern, s.nocase

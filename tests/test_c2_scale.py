@@ -138,8 +138,8 @@ def test_c2_lookup_first_match_and_ip_semantics():
     # per-row cap): the score kernel is the reasons' score projection
     import pyarrow as pa
 
+    from loki_rs_spark.config import MAX_MATCHES
     from loki_rs_spark.operators.arrow_matcher import (
-        _MAX_C2_MATCHES,
         match_record_batch,
         match_scores_record_batch,
     )
@@ -155,7 +155,7 @@ def test_c2_lookup_first_match_and_ip_semantics():
         names=["text", "tool", "ext_bits"],
     )
     c2 = match_record_batch(eng, batch)[2].to_pylist()
-    assert len(c2[-3]) == _MAX_C2_MATCHES and c2[-2:] == [[], []]
+    assert len(c2[-3]) == MAX_MATCHES and c2[-2:] == [[], []]
     assert match_scores_record_batch(eng, batch)[2].to_pylist() == [
         [r["score"] for r in row] for row in c2
     ]

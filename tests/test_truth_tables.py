@@ -679,43 +679,62 @@ def test_at_truth_table(spark, text, at_hit):
     assert (0 in _routed_levels(spark, [(text, "t")], AT_SIGS)) == at_hit
 
 
-# (needle, condition, text, fires, the kernel's and the reference's
+def _nocase(needle, **modifiers):
+    return YaraString("$k", needle, nocase=True, **modifiers)
+
+
+# (string, condition, text, fires, the kernel's and the reference's
 # matched_strings for `$k`; None where the condition reads no string set)
 NOCASE_FOLD_CASES = [
     # U+0130 lowers to 'i' + U+0307 under str.lower() and Spark's lower,
     # but is outside RE2's case fold of 'i': no fold may match it
-    ("bit", "$k at 0", "B\u0130T here", False, None),
-    ("bit", "$k at 0", "BiT here", True, None),
-    ("bit", "$k at 0", "a bit here", False, None),
+    (_nocase("bit"), "$k at 0", "B\u0130T here", False, None),
+    (_nocase("bit"), "$k at 0", "BiT here", True, None),
+    (_nocase("bit"), "$k at 0", "a bit here", False, None),
     # ... and an offset after it is an offset in the text
-    ("abab", "$k", "\u0130x abab", True, ["$k: 'abab' @ 3"]),
-    ("evil", "@k[1] == 3", "\u0130x evil", True, None),
-    ("evil", "$k in (0..3)", "\u0130x evil", True, None),
+    (_nocase("abab"), "$k", "\u0130x abab", True, ["$k: 'abab' @ 3"]),
+    (_nocase("evil"), "@k[1] == 3", "\u0130x evil", True, None),
+    (_nocase("evil"), "$k in (0..3)", "\u0130x evil", True, None),
     # a nocase literal reports only what its `fold_case` read matches
-    ("evil", "$k", "evil EV\u0130L", True, ["$k: 'evil' @ 0"]),
+    (_nocase("evil"), "$k", "evil EV\u0130L", True, ["$k: 'evil' @ 0"]),
     # RE2 folds U+017F (long s) into 's', `fold_case` does not: the
-    # nocase reads fold as `fold_case` folds, so none matches it
-    ("best", "$k", "be\u017ft", False, None),
-    ("test", "$k", "te\u017ft", False, None),
-    # non-ASCII folds: every backend folds U+00C9 and the Kelvin sign
-    ("caf\u00e9", "$k", "CAF\u00c9", True, ["$k: 'CAF\u00c9' @ 0"]),
-    ("key", "$k", "\u212aey", True, ["$k: '\u212aey' @ 0"]),
+    # nocase literal reads fold as `fold_case` folds, so none matches it
+    (_nocase("best"), "$k", "be\u017ft", False, None),
+    (_nocase("test"), "$k", "te\u017ft", False, None),
+    (_nocase("best", fullword=True), "$k", "be\u017ft", False, None),
+    # non-ASCII folds: every backend folds U+00C9 and the Kelvin sign,
+    # for plain, fullword and regex strings alike (catalyst renders a
+    # nocase regex with Java's Unicode case folding)
+    (_nocase("caf\u00e9"), "$k", "CAF\u00c9", True, ["$k: 'CAF\u00c9' @ 0"]),
+    (_nocase("key"), "$k", "\u212aey", True, ["$k: '\u212aey' @ 0"]),
+    (
+        _nocase("caf\u00e9", fullword=True), "$k", "CAF\u00c9", True,
+        ["$k: 'CAF\u00c9' @ 0"],
+    ),
+    (
+        _nocase("caf\u00e9", is_regex=True), "$k", "CAF\u00c9", True,
+        ["$k: 'CAF\u00c9' @ 0"],
+    ),
+    (
+        _nocase("key", is_regex=True), "$k", "\u212aey", True,
+        ["$k: '\u212aey' @ 0"],
+    ),
 ]
 
 
 def test_nocase_at_folds_as_its_string(spark):
-    """Nocase string reads fold case as `$k`'s own RE2 mask does, and
-    keep offsets in the row text: the kernel, the reference scanner and,
-    where the operator has a Catalyst rendering, the catalyst scan
+    """Nocase string reads fold case as the reference scanner folds them,
+    and keep offsets in the row text: the kernel, the reference scanner
+    and, where the operator has a Catalyst rendering, the catalyst scan
     agree on every case of NOCASE_FOLD_CASES."""
     import pyarrow as pa
 
     from loki_rs_spark.operators.arrow_matcher import match_record_batch
     from loki_rs_spark.operators.matcher import CompiledEngine
 
-    for needle, condition, text, fires, matched in NOCASE_FOLD_CASES:
-        case = (needle, condition, text)
-        sigs = _yara_sigs([YaraString("$k", needle, nocase=True)], condition)
+    for string, condition, text, fires, matched in NOCASE_FOLD_CASES:
+        case = (string, condition, text)
+        sigs = _yara_sigs([string], condition)
         batch = pa.RecordBatch.from_arrays(
             [pa.array([text]), pa.array(["t"]), pa.array([0], type=pa.int64())],
             names=["text", "tool", "ext_bits"],
@@ -1777,29 +1796,21 @@ def _gate_batch(engine, texts, copies=1):
     )
 
 
-def _row_mask(engine, text, s):
-    """One string's mask computed row by row over the raw column, with
-    no encoding and no gate: a literal by `in` over the (folded) text,
-    any other string by its RE2 regex."""
-    import pyarrow.compute as pc
+def _row_occurrences(text, s):
+    """One string's occurrences computed row by row over the raw column,
+    with no encoding, no gate and no kernel code: the reference
+    scanner's (offset, data) list of each row, empty on NULL rows."""
+    from loki_rs_spark.plans.reference_scanner import _string_occurrences
 
-    from loki_rs_spark.signatures.compile import literal_probe
-    from loki_rs_spark.signatures.conditions import fold_case
-
-    probe = literal_probe(s)
-    if probe is None:
-        regex = engine.mask_regexes[s]
-        mask = pc.fill_null(pc.match_substring_regex(text, regex), False)
-        return mask.to_pylist()
-    needle, nocase = probe
-    fold = fold_case if nocase else (lambda t: t)
-    return [t is not None and fold(needle) in fold(t) for t in text.to_pylist()]
+    return [[] if t is None else _string_occurrences(s, t) for t in text.to_pylist()]
 
 
 def _assert_gate_exact(engine, batch):
     """The gated pass equals an ungated one (every unique a candidate):
-    per string its row mask (also against `_row_mask`) and literal
-    occurrence offsets, and per rule its fired mask."""
+    per string its row mask and occurrences, and per rule its fired mask.
+    Each string's row mask is "at least one occurrence", and its
+    occurrences, gathered to rows, are the reference scanner's
+    (`_row_occurrences`)."""
     import numpy as np
 
     from loki_rs_spark.operators.arrow_matcher import _batch_masks, _yara_masks
@@ -1811,12 +1822,14 @@ def _assert_gate_exact(engine, batch):
     every = np.arange(len(text_c.kernel_input))
     ungated = _yara_masks(engine, text_c, ext, every)
     for (fired, reads, rule), (whole, whole_reads, _) in zip(yara, ungated):
-        for s, (mask, offsets), (ref, ref_offsets) in zip(
+        for s, (mask, occ), (ref, ref_occ) in zip(
             rule.strings, reads, whole_reads
         ):
+            rows = _row_occurrences(text, s)
             assert mask.tolist() == ref.tolist(), (rule.name, s)
-            assert mask.tolist() == _row_mask(engine, text, s), (rule.name, s)
-            assert offsets == ref_offsets, (rule.name, s)
+            assert mask.tolist() == [bool(r) for r in rows], (rule.name, s)
+            assert occ == ref_occ, (rule.name, s)
+            assert [occ.get(u, []) for u in text_c.codes] == rows, (rule.name, s)
         assert fired.tolist() == whole.tolist(), rule.name
     return {rule.name: fired for fired, _r, rule in yara}
 
@@ -1901,13 +1914,15 @@ def test_atom_gate_covers_every_case_fold():
     assert missed == []
 
 
-# needle -> the codepoints each of its letters may be written with
-LITERAL_DIFF_NEEDLES = {
-    "abab": ["aA", "bB", "aA", "bB"],
-    "aa": ["aA", "aA"],
-    "sk": ["sS\u017f", "kK\u212a"],
-    "\u00e9": ["\u00e9\u00c9"],
+# the codepoints each letter of a nocase needle may be written with
+LITERAL_DIFF_SPELLINGS = {
+    "a": "aA",
+    "b": "bB",
+    "s": "sS\u017f",
+    "k": "kK\u212a",
+    "\u00e9": "\u00e9\u00c9",
 }
+LITERAL_DIFF_NEEDLES = ["abab", "aa", "sk", "\u00e9"]
 LITERAL_DIFF_CONDITIONS = [
     "$s",
     "#s == 2",
@@ -1916,26 +1931,51 @@ LITERAL_DIFF_CONDITIONS = [
     "@s[2] == 2",
     "for any i in (1..#s) : ( @s[i] > 5 )",
 ]
+# the other literal kinds, each read as `$s` (the count/at/in/offset
+# operators take plain literals only), nocase where the modifier allows
+LITERAL_DIFF_KINDS = [
+    YaraString("$s", needle, nocase=nocase, fullword=True)
+    for needle in ("abab", "sk", "\u00e9")
+    for nocase in (False, True)
+] + [
+    YaraString("$s", "ab", nocase=nocase, wide=True, ascii_form=ascii_form)
+    for ascii_form in (False, True)
+    for nocase in (False, True)
+] + [
+    YaraString("$s", "aa", xor_min=0x00, xor_max=0x01),
+    YaraString("$s", "abab", base64_mod=True),
+    YaraString("$s", "abab", base64wide=True),
+]
 
 
 def _literal_diff_texts(n):
     """`n` seeded texts over a small alphabet holding U+0130, U+017F,
-    the Kelvin sign and U+00C9; about half carry 1-3 spellings of a
-    needle (half of them as written) at random offsets, adjacent ones
-    overlapping the bordered needles."""
+    the Kelvin sign, U+00C9, NUL and '`' (the 0x01 xor of 'a'); about
+    half carry 1-3 spellings of a plain needle, and about half 1-3 forms
+    of another literal kind (half of the nocase ones re-spelled), at
+    random offsets, adjacent ones overlapping the bordered needles."""
     import random
 
+    from loki_rs_spark.signatures.compile import literal_needles
+
     rng = random.Random(14)
-    alphabet = "aabbABsSkK \u0130\u017f\u212a\u00c9\u00e9"
+    alphabet = "aabbABsSkK \u0130\u017f\u212a\u00c9\u00e9\x00`"
+
+    def spell(form):
+        return "".join(rng.choice(LITERAL_DIFF_SPELLINGS.get(c, c)) for c in form)
+
     texts = [None, ""]
     while len(texts) < n:
         text = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 12)))
-        if rng.random() < 0.5:
-            needle = rng.choice(list(LITERAL_DIFF_NEEDLES))
+        kind = rng.choice(LITERAL_DIFF_KINDS)
+        for forms, nocase in (
+            (LITERAL_DIFF_NEEDLES, True), (literal_needles(kind), kind.nocase)
+        ):
+            if rng.random() < 0.5:
+                continue
+            form = rng.choice(forms)
             for _ in range(rng.randint(1, 3)):
-                spelled = needle if rng.random() < 0.5 else "".join(
-                    rng.choice(forms) for forms in LITERAL_DIFF_NEEDLES[needle]
-                )
+                spelled = spell(form) if nocase and rng.random() < 0.5 else form
                 at = rng.randint(0, len(text))
                 text = text[:at] + spelled + text[at:]
         texts.append(text)
@@ -1944,9 +1984,10 @@ def _literal_diff_texts(n):
 
 def test_literal_reads_agree_with_the_reference():
     """Every literal read (`$s`, `#s`, `at`, `in`, `@s[i]`, the `for`
-    quantifier), nocase and plain, over seeded texts: the Arrow kernel
-    and the reference scanner fire the same rules with the same
-    matched_strings on every row."""
+    quantifier), nocase and plain, and `$s` of every other literal kind
+    (fullword, wide, ascii+wide, xor, base64), over seeded texts: the
+    Arrow kernel and the reference scanner fire the same rules with the
+    same matched_strings on every row."""
     import itertools
 
     import pyarrow as pa
@@ -1954,20 +1995,19 @@ def test_literal_reads_agree_with_the_reference():
     from loki_rs_spark.operators.arrow_matcher import match_record_batch
     from loki_rs_spark.operators.matcher import CompiledEngine
 
+    strings = [
+        (YaraString("$s", needle, nocase=nocase), condition)
+        for needle, nocase, condition in itertools.product(
+            LITERAL_DIFF_NEEDLES, (False, True), LITERAL_DIFF_CONDITIONS
+        )
+    ] + [(s, "$s") for s in LITERAL_DIFF_KINDS]
     rules = [
-        YaraRule(
-            f"R{k}", 80, "", "", "",
-            (YaraString("$s", needle, nocase=nocase),), condition,
-        )
-        for k, (needle, nocase, condition) in enumerate(
-            itertools.product(
-                LITERAL_DIFF_NEEDLES, (False, True), LITERAL_DIFF_CONDITIONS
-            )
-        )
+        YaraRule(f"R{k}", 80, "", "", "", (s,), condition)
+        for k, (s, condition) in enumerate(strings)
     ]
     sigs = _sigs(yara_rules=rules)
     cfg = ScanConfig(exclude_patterns=(), max_reasons=len(rules))
-    texts = _literal_diff_texts(2000)
+    texts = _literal_diff_texts(3000)
     batch = pa.RecordBatch.from_arrays(
         [
             pa.array(texts, type=pa.string()),
@@ -1986,8 +2026,50 @@ def test_literal_reads_agree_with_the_reference():
         ]
         assert kernel == expected, text
         fired_rules.update(message for message, _ in kernel)
-    # every read of every needle fires somewhere, nocase and plain
+    # every read of every string fires somewhere
     assert len(fired_rules) == len(rules)
+
+
+def _kernel_and_reference(string, text):
+    """`$s`'s matched_strings on `text` from the Arrow kernel and from
+    the reference scanner (None where the rule does not fire)."""
+    import pyarrow as pa
+
+    from loki_rs_spark.operators.arrow_matcher import match_record_batch
+    from loki_rs_spark.operators.matcher import CompiledEngine
+
+    sigs = _yara_sigs([string], "$s")
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([text]), pa.array(["t"]), pa.array([0], type=pa.int64())],
+        names=["text", "tool", "ext_bits"],
+    )
+    [kernel] = match_record_batch(CompiledEngine(sigs), batch)[1].to_pylist()
+    ref = scan_turn("c0", 0, text, "t", sigs, CFG)
+    return (
+        kernel[0]["matched_strings"] if kernel else None,
+        ref.reasons[0].matched_strings if ref else None,
+    )
+
+
+def test_nocase_fullword_folds_as_the_reference():
+    """A nocase fullword literal folds as `fold_case` folds: it does not
+    fire on "be\u017ft" (RE2's `(?i)` folds U+017F into 's'), and U+017F
+    or the Kelvin sign next to it is a border, as in the reference."""
+    best = YaraString("$s", "best", nocase=True, fullword=True)
+    assert _kernel_and_reference(best, "be\u017ft") == (None, None)
+    for text, matched in [
+        ("\u017fbest", ["$s: 'best' @ 1"]),
+        ("BEST\u212a", ["$s: 'BEST' @ 0"]),
+    ]:
+        assert _kernel_and_reference(best, text) == (matched, matched), text
+
+
+def test_xor_string_reports_overlapping_occurrences():
+    """An xor string reports every occurrence of its forms, overlapping
+    ones too: "aa" xor(0x00-0x01) on "aaa" matches at 0 and at 1."""
+    xor = YaraString("$s", "aa", xor_min=0x00, xor_max=0x01)
+    matched = ["$s: 'aa' @ 0", "$s: 'aa' @ 1"]
+    assert _kernel_and_reference(xor, "aaa") == (matched, matched)
 
 
 def test_atom_gate_with_an_empty_matching_regex():
