@@ -24,7 +24,7 @@ Match semantics mirrored from src/modules/filesystem_scan.rs:1002-1136:
   printable text quoted/escaped and non-printable hex-encoded
   (format_yara_matched_data, ibid.:986-1000). Offsets here are character
   offsets; for the ASCII corpus these equal the reference's byte offsets;
-* rules report in definition order; per-row YARA match cap 100.
+* rules report in definition order; per-row match cap config.MAX_MATCHES.
 """
 
 from __future__ import annotations
