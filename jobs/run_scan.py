@@ -8,9 +8,10 @@ Packaging (the reference ships one binary; we ship one zip):
         --sf-dir /root/testdata/sf0.01 --sig-dir signatures \
         --out /tmp/scan_out --rep 20 --resume
 
-Runs the resumable scan, which writes the routed rows to `{out}/routed`
-(partitioned by bucket) and one lineage row per bucket to
-`{out}/lineage`, prints the A4/A5 counter roll-up, and exits 2 iff
+Runs the resumable scan, which writes the run's routed rows as one file
+set to `{out}/routed/run=<run_id>/` (`part_id`, the bucket, a column) and
+then commits them with one lineage row per bucket in `{out}/lineage`,
+prints the A4/A5 counter roll-up, and exits 2 iff
 alerts+warnings > 0 (src/main.rs:1568-1575) — so shell pipelines can
 gate on findings exactly as with the reference binary.
 """

@@ -1,15 +1,22 @@
-"""Checkpoint/resume with per-partition lineage + metrics (north_rule).
+"""Checkpoint/resume with per-bucket lineage + metrics (north_rule).
 
 The reference only has pause/skip/abort atomics (src/helpers/
 interrupt.rs:91-160); resumability here is NEW design, not ported:
 
 * the transcript table is bucketed by `part_id = pmod(xxhash64(conv_id),
-  n_buckets)` — conversation-aligned so a bucket is self-contained;
-* each completed bucket appends one lineage row (part_id, routed/alert/
-  warning/notice counts, the run's start stamp `completed_at`) to
-  `{out}/lineage`;
-* output is written with dynamic partition overwrite on part_id, so
-  re-running a bucket is idempotent;
+  n_buckets)` — conversation-aligned so a bucket is self-contained. The
+  bucket is the unit of resume, not of file layout;
+* each run writes its routed rows as one file set in a dir of its own,
+  `{out}/routed/run=<run_id>/`: at most one file per write task,
+  `part_id` a column, each file in (part_id, conv_id, turn_idx) order;
+* the lineage append is the commit. Each run appends one lineage row per
+  bucket it completed (part_id, routed/alert/warning/notice counts, the
+  run's start stamp `completed_at`, `run_id`) to `{out}/lineage`, and a
+  run's routed rows are visible iff its lineage rows exist — the
+  snapshot-commit model of a table format such as Iceberg, with the
+  lineage as the manifest. A run killed between its sink write and its
+  lineage append leaves an uncommitted run dir: readers skip it, and the
+  next run's start-of-run sweep deletes it;
 * resume = anti-select of completed buckets: ONE filtered job over the
   pending buckets, not a per-bucket driver loop — at 10^12 turns the
   pending filter prunes whole partitions at the scan;
@@ -22,11 +29,11 @@ interrupt.rs:91-160); resumability here is NEW design, not ported:
 from __future__ import annotations
 
 import time
+import uuid
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
 from ..config import DEFAULT_CONFIG, ScanConfig
 from ..session import local_frame
@@ -37,7 +44,7 @@ DEFAULT_BUCKETS = 64
 
 LINEAGE_SCHEMA = (
     "part_id bigint, n_routed bigint, n_alerts bigint, n_warnings bigint, "
-    "n_notices bigint, completed_at double"
+    "n_notices bigint, completed_at double, run_id string"
 )
 
 
@@ -54,39 +61,56 @@ def _hadoop_path(spark: SparkSession, path: str):
     return jpath.getFileSystem(hconf), jpath
 
 
-def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
-    """Distinct part_ids recorded in the lineage table. A missing lineage
-    dir (fresh run) is the empty set — checked with one `exists` before
-    any read, so a fresh out dir pays no failed read; any OTHER failure
-    (corrupt footer, transient FS error) propagates — treating it as
-    'nothing completed' would silently trigger a full re-scan instead of
-    surfacing the fault."""
+def _run_dir(out_dir: str, run_id: str) -> str:
+    return f"{out_dir}/routed/run={run_id}"
+
+
+def _lineage_values(spark: SparkSession, out_dir: str, column: str) -> set:
+    """The values of a lineage column. A missing lineage dir (fresh run)
+    has none — checked with one `exists` before any read, so a fresh out
+    dir pays no failed read. The schema is given, so the read runs no
+    schema-inference job and an empty lineage dir reads as no rows; any
+    OTHER failure (corrupt footer, transient FS error) propagates —
+    treating it as 'nothing completed' would silently trigger a full
+    re-scan instead of surfacing the fault. A bucket is committed once,
+    so there are at most n_buckets rows to collect."""
     lineage = f"{out_dir}/lineage"
     fs, path = _hadoop_path(spark, lineage)
     if not fs.exists(path):
         return set()
-    try:
-        rows = (
-            spark.read.parquet(lineage).select("part_id").distinct().collect()
-        )
-        return {r["part_id"] for r in rows}
-    except AnalysisException:  # an existing but empty lineage dir
-        return set()
+    rows = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage).select(column)
+    return {r[0] for r in rows.collect()}
 
 
-def _clear_pending_partitions(
-    spark: SparkSession, routed_dir: str, pending: set[int]
-) -> None:
-    """Delete the `part_id=<b>` dirs of the pending buckets under
-    `routed_dir`: one `exists` and one `listStatus`, whatever the bucket
-    count. Dirs of other (completed) buckets are left alone."""
-    fs, path = _hadoop_path(spark, routed_dir)
+def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
+    """The buckets of the committed runs, as recorded in the lineage."""
+    return _lineage_values(spark, out_dir, "part_id")
+
+
+def committed_runs(spark: SparkSession, out_dir: str) -> set[str]:
+    """The runs whose lineage rows exist: the runs whose routed rows are
+    visible."""
+    return _lineage_values(spark, out_dir, "run_id")
+
+
+def _sweep_uncommitted(spark: SparkSession, out_dir: str) -> None:
+    """Delete the `run=<id>` dirs under `{out}/routed` that no lineage row
+    commits: the sink writes of runs killed before their lineage append.
+    One `exists` and one `listStatus`; the lineage is read only when
+    there is a run dir to judge."""
+    fs, path = _hadoop_path(spark, f"{out_dir}/routed")
     if not fs.exists(path):
         return
-    stale = {f"part_id={int(b)}" for b in pending}
-    for status in fs.listStatus(path):
-        if status.getPath().getName() in stale:
-            fs.delete(status.getPath(), True)
+    runs = [
+        status.getPath() for status in fs.listStatus(path)
+        if status.getPath().getName().startswith("run=")
+    ]
+    if not runs:
+        return
+    committed = {f"run={r}" for r in committed_runs(spark, out_dir)}
+    for run in runs:
+        if run.getName() not in committed:
+            fs.delete(run, True)
 
 
 def run_resumable_scan(
@@ -105,6 +129,7 @@ def run_resumable_scan(
 
     bucketed = with_part_id(transcripts, n_buckets)
     done = completed_buckets(spark, out_dir)
+    _sweep_uncommitted(spark, out_dir)
     pending = set(range(n_buckets)) - done
     if only_buckets is not None:
         pending &= only_buckets
@@ -117,34 +142,19 @@ def run_resumable_scan(
     # frame (the pipeline projects a fixed output schema)
     routed = with_part_id(result.routed.drop("all_reasons"), n_buckets)
 
-    # Any on-disk partition for a PENDING bucket is leftover from a crashed
-    # run (completed buckets are in lineage and excluded above). Clear them
-    # up front: dynamic partition overwrite only replaces partitions present
-    # in THIS write, so a pending bucket that routes zero rows this run
-    # would otherwise keep stale data while lineage marks it complete.
-    _clear_pending_partitions(spark, f"{out_dir}/routed", pending)
-
+    run_id = uuid.uuid4().hex
     started = time.time()
-    # The write input, built once. An explicit partition count: AQE does
-    # not coalesce a repartition-by-number shuffle, so up to `n` tasks
-    # write the bucket files in parallel (still one file per bucket). The
-    # sort leads with part_id, the order the partitioned write needs, so
-    # Spark adds no sort of its own and each file is in (conv_id,
-    # turn_idx) order.
-    n = min(len(pending), int(spark.conf.get("spark.sql.shuffle.partitions")))
-    to_write = (
-        routed.repartition(n, "part_id")
-        .sortWithinPartitions("part_id", "conv_id", "turn_idx")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    # The write input, built once. No shuffle: each write task (a split of
+    # the scan) writes one file, and the sort puts it in (part_id,
+    # conv_id, turn_idx) order.
+    to_write = routed.sortWithinPartitions(
+        "part_id", "conv_id", "turn_idx"
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        # 'overwrite_partitions': parquet = dynamic partition overwrite
-        # (with the pre-clear above); iceberg = overwritePartitions(), an
-        # atomic REPLACE snapshot that subsumes the pre-clear
-        # (table_format.py)
+        # a fresh dir of this run's own: 'errorifexists' never clobbers
+        # another run's files
         write_partitioned(
-            to_write, f"{out_dir}/routed", ("part_id",),
-            mode="overwrite_partitions",
+            to_write, _run_dir(out_dir, run_id), (), mode="errorifexists"
         )
         # per-bucket counts from the persisted input of the write — the
         # scan (matcher UDF included) runs once, and the output is never
@@ -161,13 +171,15 @@ def run_resumable_scan(
     finally:
         to_write.unpersist()
 
-    # lineage: one row per completed bucket. Buckets with zero routed rows
+    # The commit: one lineage row per completed bucket, and the run's
+    # routed rows become visible with them. Buckets with zero routed rows
     # still get a (zero) row — completed != produced output. One file per
     # run: each file create costs a permission call (a `chmod` process
     # where Hadoop's native IO is missing), and the frame is <= n_buckets
     # rows.
     lineage = [
-        (b, *counts.get(b, (0, 0, 0, 0)), started) for b in sorted(pending)
+        (b, *counts.get(b, (0, 0, 0, 0)), started, run_id)
+        for b in sorted(pending)
     ]
     write_partitioned(
         local_frame(spark, lineage, LINEAGE_SCHEMA).coalesce(1),
@@ -177,4 +189,9 @@ def run_resumable_scan(
 
 
 def read_routed(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/routed")
+    """The routed rows of the committed runs, read from their run dirs by
+    name, so an uncommitted run dir is never read. With no committed run
+    there is nothing to infer a schema from, and the read raises."""
+    return spark.read.parquet(
+        *(_run_dir(out_dir, r) for r in sorted(committed_runs(spark, out_dir)))
+    )

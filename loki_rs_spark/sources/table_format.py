@@ -2,18 +2,22 @@
 
 The sandbox ships no ``iceberg-spark-runtime`` jar (verified: neither the
 pyspark jars dir nor the filesystem has one, and there is no network to
-fetch it), so the default format is partitioned parquet with dynamic
-partition overwrite. The Iceberg branch below is the real code path a
-deployment flips on with ``SPARK_GRAFT_TABLE_FORMAT=iceberg`` (or the
-``fmt=`` argument) once the runtime jar + catalog are on the classpath:
+fetch it), so the default format is parquet. The Iceberg branch below is
+the real code path a deployment flips on with
+``SPARK_GRAFT_TABLE_FORMAT=iceberg`` (or the ``fmt=`` argument) once the
+runtime jar + catalog are on the classpath:
 
 * partitioned parquet dir        -> Iceberg table with identity/bucket
                                     partitioning (DataFrameWriterV2)
-* pre-clear + dynamic overwrite  -> ``overwritePartitions()`` (an atomic
-                                    REPLACE snapshot; no manual pre-clear
-                                    needed — Iceberg's snapshot isolation
-                                    subsumes resume.py's delete loop)
+* ``overwrite_partitions``       -> ``overwritePartitions()`` (an atomic
+                                    REPLACE snapshot)
 * append lineage rows            -> ``append()``
+
+The resumable scan (plans/resume.py) commits on parquet the way an
+Iceberg table commits a snapshot: each run writes a fresh
+``run=<id>`` dir with 'errorifexists', and its lineage append is the
+commit. The Iceberg branch has no 'errorifexists' mode; a run-per-snapshot
+Iceberg rendering waits for a runtime jar to test it with.
 
 tests/test_table_format.py exercises the Iceberg branch and is skipped
 automatically when the runtime jar is absent.
@@ -60,24 +64,16 @@ def write_partitioned(
     table: str | None = None,
 ) -> None:
     """Write a (possibly partitioned) output table in the configured
-    format. parquet: plain partitioned directory write, a dynamic
-    partition overwrite for 'overwrite_partitions'. iceberg:
+    format. parquet: a directory write in Spark save mode `mode`
+    ('overwrite', 'append', 'errorifexists'). iceberg:
     DataFrameWriterV2 — createOrReplace for 'overwrite',
-    overwritePartitions for 'overwrite_partitions' (the resume path's
-    idempotent bucket rewrite), append for 'append'."""
+    overwritePartitions for 'overwrite_partitions', append for
+    'append'."""
     from pyspark.sql import functions as F
 
     fmt = fmt or default_format()
     if fmt == "parquet":
-        if mode == "overwrite_partitions":
-            # a writer option, not the session conf: whatever the
-            # session's default, only the partitions this write holds are
-            # replaced, and later overwrites keep that default
-            writer = df.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            )
-        else:
-            writer = df.write.mode(mode)
+        writer = df.write.mode(mode)
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(path)

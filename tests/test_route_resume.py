@@ -8,6 +8,7 @@ import pytest
 from loki_rs_spark.config import ScanConfig
 from loki_rs_spark.plans.pipeline import scan_transcripts
 from loki_rs_spark.plans.resume import (
+    committed_runs,
     completed_buckets,
     read_routed,
     run_resumable_scan,
@@ -174,13 +175,19 @@ def clean_stored(spark, stored, result, tmp_path_factory):
 def _sink_files(out: str) -> list[str]:
     import glob
 
-    return sorted(glob.glob(f"{out}/routed/part_id=*/*.parquet"))
+    return sorted(glob.glob(f"{out}/routed/run=*/*.parquet"))
+
+
+def _run_dirs(out: str) -> set[str]:
+    import os
+
+    return {d for d in os.listdir(f"{out}/routed") if d.startswith("run=")}
 
 
 LINEAGE_FIELDS = [
     ("part_id", "bigint"), ("n_routed", "bigint"), ("n_alerts", "bigint"),
     ("n_warnings", "bigint"), ("n_notices", "bigint"),
-    ("completed_at", "double"),
+    ("completed_at", "double"), ("run_id", "string"),
 ]
 
 
@@ -195,10 +202,30 @@ def _lineage(spark, out: str) -> dict[int, tuple]:
     return by_bucket
 
 
+def _routed_rows(spark, out: str) -> list[str]:
+    """Every committed routed row, all columns, in a canonical order."""
+    return sorted(repr(r) for r in read_routed(spark, out).collect())
+
+
+def _sink_writes(monkeypatch) -> list:
+    """Record the frame and path of every `write_partitioned` call; the
+    first is the sink write."""
+    from loki_rs_spark.sources import table_format
+
+    calls, real = [], table_format.write_partitioned
+
+    def recording(df, path, *args, **kwargs):
+        calls.append((df, path))
+        return real(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(table_format, "write_partitioned", recording)
+    return calls
+
+
 @pytest.mark.parametrize("source", ["generator", "stored"])
-def test_sink_files_sorted(spark, sigs, stored, tmp_path, source):
-    """Every bucket file of the routed sink is in (conv_id, turn_idx)
-    order, one file per bucket."""
+def test_sink_files_sorted(spark, sigs, stored, tmp_path, monkeypatch, source):
+    """The run writes at most one routed file per write task, each in
+    (part_id, conv_id, turn_idx) order."""
     import pyarrow.parquet as pq
 
     frame = (
@@ -206,20 +233,51 @@ def test_sink_files_sorted(spark, sigs, stored, tmp_path, source):
         else stored
     )
     out = str(tmp_path / "out")
+    writes = _sink_writes(monkeypatch)
     run_resumable_scan(spark, frame, sigs, out, CFG, n_buckets=8)
+    write_tasks = writes[0][0].rdd.getNumPartitions()
     files = _sink_files(out)
-    assert len(files) == 8
+    assert 1 <= len(files) <= write_tasks
     for f in files:
-        rows = pq.read_table(f, columns=["conv_id", "turn_idx"]).to_pylist()
-        keys = [(r["conv_id"], r["turn_idx"]) for r in rows]
+        rows = pq.read_table(
+            f, columns=["part_id", "conv_id", "turn_idx"]
+        ).to_pylist()
+        keys = [(r["part_id"], r["conv_id"], r["turn_idx"]) for r in rows]
         assert keys == sorted(keys), f
+
+
+def test_sink_write_plan_and_job_count(spark, sigs, stored, tmp_path,
+                                       monkeypatch):
+    """A fresh run over a stored table: the sink write's plan has no
+    shuffle Exchange (broadcasts only), and the run takes at most six
+    Spark jobs (the FP broadcast build, the sink write, the counts
+    collect's stages and the lineage append)."""
+    import re
+
+    writes = _sink_writes(monkeypatch)
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-jobs", "resume-jobs")
+    try:
+        run_resumable_scan(
+            spark, stored, sigs, str(tmp_path / "out"), CFG, n_buckets=64
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup("resume-jobs")
+    assert 0 < len(jobs) <= 6, len(jobs)
+    plan = writes[0][0]._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" in plan  # the cached scan plan is shown
+    assert not re.search(r"(?<![A-Za-z])Exchange |ShuffleQueryStage", plan)
 
 
 def test_lineage_matches_sink(spark, sigs, stored, tmp_path):
     """One lineage row per processed bucket; its counts equal the counts
     of that bucket's rows in the routed sink, zeros where the bucket
-    routed nothing."""
+    routed nothing. The sink read back is the scan's routed frame, column
+    for column and row for row."""
     from collections import Counter
+
+    from loki_rs_spark.plans.resume import with_part_id
 
     out = str(tmp_path / "out")
     n_buckets = 64
@@ -236,6 +294,16 @@ def test_lineage_matches_sink(spark, sigs, stored, tmp_path):
         levels = [sink[(b, lvl)] for lvl in ("ALERT", "WARNING", "NOTICE")]
         assert counts == (sum(levels), *levels), b
     assert any(c == (0, 0, 0, 0) for c in lineage.values())
+
+    want = with_part_id(
+        scan_transcripts(spark, stored, sigs, CFG).routed.drop("all_reasons"),
+        n_buckets,
+    )
+    got = read_routed(spark, out)
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want.schema
+    ]
+    assert _routed_rows(spark, out) == sorted(repr(r) for r in want.collect())
 
 
 def test_lineage_is_one_file_per_run(spark, sigs, stored, tmp_path):
@@ -258,80 +326,103 @@ def test_lineage_is_one_file_per_run(spark, sigs, stored, tmp_path):
     ) == set(range(3, 8))
     assert len(files()) == 2
     assert set(_lineage(spark, out)) == set(range(8))
+    assert len(committed_runs(spark, out)) == 2
 
 
 def test_lineage_of_a_run_that_routes_nothing(
     spark, sigs, clean_stored, tmp_path
 ):
     """A run whose input routes nothing writes one zero lineage row per
-    bucket and no sink file, and does not raise."""
+    bucket and no routed row (Spark may leave one schema-only file), and
+    does not raise."""
     out = str(tmp_path / "out")
     assert run_resumable_scan(
         spark, clean_stored, sigs, out, CFG, n_buckets=8
     ) == set(range(8))
     assert _lineage(spark, out) == {b: (0, 0, 0, 0) for b in range(8)}
-    assert _sink_files(out) == []
+    assert len(_sink_files(out)) <= 1
+    assert read_routed(spark, out).count() == 0
 
 
-def test_preclear_removes_stale_bucket(
+def test_sweep_removes_uncommitted_run(
     spark, sigs, stored, clean_stored, tmp_path
 ):
-    """A pending bucket's dir left over from a crashed run is removed even
-    when the bucket routes nothing this run; a completed bucket's dir is
-    left as it is."""
+    """A run dir no lineage row commits (a crashed run's sink write) is
+    never read, and the next run deletes it; a committed run's files are
+    left as they are."""
     import shutil
+    from pathlib import Path
 
     out = str(tmp_path / "out")
     run_resumable_scan(
         spark, stored, sigs, out, CFG, n_buckets=8, only_buckets={0}
     )
-    (done_file,) = _sink_files(out)
-    with open(done_file, "rb") as f:
-        done_bytes = f.read()
-    stale_dir = tmp_path / "out" / "routed" / "part_id=5"
+    done_files = _sink_files(out)
+    done_bytes = [Path(f).read_bytes() for f in done_files]
+    done_rows = _routed_rows(spark, out)
+    assert done_rows
+    stale_dir = tmp_path / "out" / "routed" / ("run=" + "0" * 32)
     stale_dir.mkdir()
-    shutil.copy(done_file, stale_dir / "part-00000-stale.parquet")
+    shutil.copy(done_files[0], stale_dir / "part-00000-stale.parquet")
+    assert _routed_rows(spark, out) == done_rows
 
     assert run_resumable_scan(
         spark, clean_stored, sigs, out, CFG, n_buckets=8
     ) == set(range(1, 8))
-    assert _sink_files(out) == [done_file]
-    with open(done_file, "rb") as f:
-        assert f.read() == done_bytes
-    assert read_routed(spark, out).filter("part_id = 5").count() == 0
+    assert not stale_dir.exists()
+    assert _run_dirs(out) == {
+        f"run={r}" for r in committed_runs(spark, out)
+    }
+    assert [Path(f).read_bytes() for f in done_files] == done_bytes
+    assert _routed_rows(spark, out) == done_rows
 
 
-def test_partition_overwrite_ignores_session_conf(spark, sigs, stored, tmp_path):
-    """'overwrite_partitions' replaces only the partitions it writes with
-    the session's partitionOverwriteMode at STATIC (a static overwrite
-    would delete every other partition), and a resumable scan leaves that
-    session conf as it found it."""
-    from loki_rs_spark.session import local_frame
-    from loki_rs_spark.sources.table_format import write_partitioned
+def test_kill_between_sink_write_and_lineage_append(
+    spark, sigs, stored, tmp_path, monkeypatch
+):
+    """The lineage append is the commit. A run killed after its sink
+    write and before its lineage append is invisible: neither
+    `read_routed` nor `completed_buckets` sees it. Resumed, the out dir
+    holds exactly the rows of an uninterrupted run, and no uncommitted
+    run dir is left."""
+    from loki_rs_spark.sources import table_format
 
-    key = "spark.sql.sources.partitionOverwriteMode"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, "STATIC")
-    try:
-        path = str(tmp_path / "t")
-        ddl = "v string, part_id bigint"
-        write_partitioned(
-            local_frame(spark, [("a", 0), ("b", 1)], ddl), path, ("part_id",)
-        )
-        write_partitioned(
-            local_frame(spark, [("c", 1)], ddl), path, ("part_id",),
-            mode="overwrite_partitions",
-        )
-        assert sorted(
-            tuple(r) for r in spark.read.parquet(path).collect()
-        ) == [("a", 0), ("c", 1)]
+    ref_out = str(tmp_path / "oneshot")
+    run_resumable_scan(spark, stored, sigs, ref_out, CFG, n_buckets=8)
+    expected = _routed_rows(spark, ref_out)
 
-        run_resumable_scan(
-            spark, stored, sigs, str(tmp_path / "out"), CFG, n_buckets=8
-        )
-        assert spark.conf.get(key) == "STATIC"
-    finally:
-        spark.conf.set(key, saved)
+    out = str(tmp_path / "out")
+    run_resumable_scan(
+        spark, stored, sigs, out, CFG, n_buckets=8, only_buckets={0, 1, 2}
+    )
+    committed = _routed_rows(spark, out)
+    real = table_format.write_partitioned
+
+    def killed_at_lineage(df, path, *args, **kwargs):
+        if path.endswith("/lineage"):
+            raise RuntimeError("killed before the lineage append")
+        return real(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(table_format, "write_partitioned", killed_at_lineage)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_resumable_scan(spark, stored, sigs, out, CFG, n_buckets=8)
+    monkeypatch.setattr(table_format, "write_partitioned", real)
+
+    (uncommitted,) = _run_dirs(out) - {
+        f"run={r}" for r in committed_runs(spark, out)
+    }
+    assert any(f"/{uncommitted}/" in f for f in _sink_files(out))
+    assert completed_buckets(spark, out) == {0, 1, 2}
+    assert _routed_rows(spark, out) == committed
+
+    assert run_resumable_scan(
+        spark, stored, sigs, out, CFG, n_buckets=8
+    ) == set(range(3, 8))
+    assert _routed_rows(spark, out) == expected
+    assert _run_dirs(out) == {
+        f"run={r}" for r in committed_runs(spark, out)
+    }
+    assert set(_lineage(spark, out)) == set(range(8))
 
 
 def test_observe_metrics(spark, result):
