@@ -40,7 +40,11 @@ text, which RE2's `(?i)` mask covers. Parity with the reference scanner
 is enforced by tests/test_pipeline.py and tests/test_truth_tables.py.
 
 Mirrors the reference's compile-once automaton sharing (src/main.rs:780-851)
-via the per-executor `matcher._engine_for` cache.
+via the per-executor `matcher._engine_for` cache. Its first build in a
+Python worker process also makes the `importlib.invalidate_caches()` that
+PySpark runs at the start of every task cheap
+(`matcher._stamped_zip_invalidation`), so the worker's later tasks no
+longer re-read its zip archives (pyspark.zip, the spark-core jar, py4j).
 """
 
 from functools import cached_property

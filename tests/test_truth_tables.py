@@ -2064,6 +2064,62 @@ def test_nocase_fullword_folds_as_the_reference():
         assert _kernel_and_reference(best, text) == (matched, matched), text
 
 
+# Open Unicode case-fold divergences between the YARA renderings (each a
+# FOUND: line of CHANGES.md, ROADMAP item 3). Each test asserts that its
+# rendering agrees with `scan_turn`; strict, so the fix flips them.
+BEST_NOCASE_FULLWORD = YaraString("$s", "best", nocase=True, fullword=True)
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="CHANGES.md FOUND: _CatalystCondBackend tests a nocase fullword "
+    "literal's borders on the fold_case'd text, where the Kelvin sign "
+    "reads as 'k'",
+)
+def test_catalyst_nocase_fullword_border_agrees_with_the_reference(spark):
+    text = "BEST\u212a"
+    sigs = _yara_sigs([BEST_NOCASE_FULLWORD], "$s")
+    assert scan_turn("c0", 0, text, "t", sigs, CFG) is not None
+    routed = scan_transcripts(
+        spark, _turn_df(spark, [(text, "t")]), sigs, CFG, matcher="catalyst",
+    ).routed
+    assert routed.count() == 1
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="CHANGES.md FOUND: arrow_matcher masks a nocase regex with RE2, "
+    "which does not fold U+0130 into 'i'",
+)
+def test_kernel_nocase_regex_folds_dotted_capital_i_as_the_reference():
+    bit = YaraString("$s", "bit", is_regex=True, nocase=True)
+    kernel, ref = _kernel_and_reference(bit, "B\u0130T")
+    assert ref == ["$s: 'B\u0130T' @ 0"]
+    assert kernel == ref
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="CHANGES.md FOUND: oracle._yara_string_sql's RE2 (?i) folds "
+    "U+017F and the Kelvin sign into a nocase fullword's consuming "
+    "[^0-9A-Za-z] borders",
+)
+@pytest.mark.parametrize("text", ["\u017fbest", "BEST\u212a"])
+def test_oracle_nocase_fullword_sql_agrees_with_the_reference(text):
+    import duckdb
+
+    from loki_rs_spark.oracle import _yara_string_sql
+
+    sigs = _yara_sigs([BEST_NOCASE_FULLWORD], "$s")
+    assert scan_turn("c0", 0, text, "t", sigs, CFG) is not None
+    [(hit,)] = duckdb.connect().execute(
+        f"SELECT {_yara_string_sql(BEST_NOCASE_FULLWORD)} "
+        "FROM (SELECT ?::VARCHAR AS text)",
+        [text],
+    ).fetchall()
+    assert hit
+
+
 def test_xor_string_reports_overlapping_occurrences():
     """An xor string reports every occurrence of its forms, overlapping
     ones too: "aa" xor(0x00-0x01) on "aaa" matches at 0 and at 1."""
